@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Benchmark main — emits, in order: a per-query CPU line, a
@@ -16,104 +16,42 @@ import org.apache.spark.sql.functions._
   * `$SPARK_GRAFT_BENCH_COPY` (round-stamped committed archive) so a
   * later run can never destroy the evidence.
   *
-  * A warmup pass (parquet footers + one full execution of a small
-  * query) runs before timing so per-query numbers measure the query,
-  * not session/classloader/codegen bootstrap.
+  * [[Harness.warmup]] runs before timing so per-query numbers measure
+  * the query, not session/classloader/codegen bootstrap.
   *
-  * Env knobs: SPARK_GRAFT_ONLY (comma-separated query names) restricts
-  * the sweep for local iteration; absent → full sweep.
+  * Env knobs: SPARK_GRAFT_SF_DIR (scale-factor dir); SPARK_GRAFT_ONLY
+  * (comma-separated query names) restricts the sweep for local
+  * iteration, absent → full sweep; SPARK_GRAFT_CPUS sets the
+  * parallelism (default: processor count); SPARK_GRAFT_BENCH_COPY
+  * names the extra archive copy.
   */
-/** Shared per-query timing harness for [[Bench]] and [[SlopeBench]]. */
-object BenchHarness {
-  import org.apache.spark.sql.DataFrame
-
-  /** Min of `runs` timed executions. Times full materialization:
-    * xxhash64 every column of every row and fold — a count() alone
-    * lets Spark prune the projection on narrow queries and
-    * understates the real cost. Failures are NOT wall-timed: a query
-    * that throws reports -1, never a fast-looking elapsed time.
-    *
-    * Between queries, drops everything the query pinned in the block
-    * manager (`.cache()` inside operators, `localCheckpoint` blocks
-    * from iterative ones). Without this the storage pool grows
-    * monotonically across ~100 queries × runs and the LRU-eviction /
-    * GC churn makes a random subset of queries 5–10× slower from
-    * round to round (r3 vs r4 swings on identical code). clearCache
-    * drops cached relations but NOT broadcast blocks — those are
-    * reclaimed by the ContextCleaner only after a driver GC collects
-    * their references, hence the System.gc() nudge (q89 measured
-    * 5.1 s in a full sweep vs 1.0 s isolated without it). */
-  def minOfRuns(spark: SparkSession,
-      fn: (SparkSession, String) => DataFrame,
-      sfDir: String, runs: Int): Double =
-    minOfRunsCpu(spark, fn, sfDir, runs)._1
-
-  /** As [[minOfRuns]], but also returns this JVM's CPU-clock delta for
-    * the winning (min-wall) run — a steal-throttled outlier then
-    * self-diagnoses in the bench JSON: wall far above cpu/ncpu with a
-    * LOW cpu says the host, not the query, owned the window
-    * (round-11 verdict #3). */
-  def minOfRunsCpu(spark: SparkSession,
-      fn: (SparkSession, String) => DataFrame,
-      sfDir: String, runs: Int): (Double, Double) = {
-    def procCpu(): Double =
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-        case b: com.sun.management.OperatingSystemMXBean =>
-          b.getProcessCpuTime / 1e9
-        case _ => -1.0
-      }
-    def once(): (Double, Double) = {
-      val c0 = procCpu()
-      val t0 = System.nanoTime()
-      val ok =
-        try {
-          val d = fn(spark, sfDir)
-          d.select(xxhash64(d.columns.toIndexedSeq.map(col): _*).as("h"))
-            .agg(expr("bit_xor(h)")).collect()
-          true
-        } catch { case _: Throwable => false }
-      if (ok) ((System.nanoTime() - t0) / 1e9, procCpu() - c0) else (-1.0, -1.0)
-    }
-    val times = Seq.fill(runs)(once())
-    spark.catalog.clearCache()
-    // blocking unpersist: with blocking=false the block removal is
-    // async and races into the NEXT query's timed runs — measured as
-    // 1.5–3× sweep-vs-isolated inflation on adjacent storage-heavy
-    // queries (q86–q89, q159 swung 2.2→6.8 s between two otherwise
-    // idle sweeps). This runs in the UNTIMED gap between queries, so
-    // it changes no timed methodology — it only stops cleanup debt
-    // from leaking across query boundaries.
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
-    System.gc()
-    val good = times.filter(_._1 >= 0)
-    if (good.isEmpty) (-1.0, -1.0) else good.minBy(_._1)
-  }
-}
-
 object Bench {
+
+  /** `runs` timed executions of one query, then [[Harness.release]].
+    * Times full materialization: xxhash64 every column of every row
+    * and fold — a count() alone lets Spark prune the projection on
+    * narrow queries and understates the real cost. */
+  def timeRuns(spark: SparkSession, fn: (SparkSession, String) => DataFrame,
+      sfDir: String, runs: Int): Seq[RunRecord] = {
+    val records = Seq.fill(runs)(Harness.timed {
+      val d = fn(spark, sfDir)
+      d.select(xxhash64(d.columns.toIndexedSeq.map(col): _*).as("h"))
+        .agg(expr("bit_xor(h)")).collect()
+    })
+    Harness.release(spark)
+    records
+  }
+
+  /** The min-wall successful run, if any run succeeded. */
+  def fastest(records: Seq[RunRecord]): Option[RunRecord] =
+    records.filter(_.ok).minByOption(_.wallSec)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Warmup: touch every table (footer + first row group) and push one
-    // query through the whole pipeline (codegen, shuffle service).
-    Tables.names.foreach { t =>
-      try Tables.load(spark, sfDir, t).limit(1).count()
-      catch { case _: Throwable => }
-    }
-    try SparkEntry.queries("q1_agg")(spark, sfDir).count()
-    catch { case _: Throwable => }
+    val spark = Harness.session()
+    Harness.warmup(spark, sfDir)
 
     // Load evidence: min-of-3 defends against a transient pause, not
     // against sustained external load across the whole sweep (the r8
@@ -128,47 +66,43 @@ object Bench {
       try scala.io.Source.fromFile("/proc/loadavg").getLines()
         .next().split(" ")(0).toDouble
       catch { case _: Throwable => -1.0 }
-    def procCpuSec(): Double =
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-        case b: com.sun.management.OperatingSystemMXBean =>
-          b.getProcessCpuTime / 1e9
-        case _ => -1.0
-      }
     val load1Before = load1()
-    val cpuBefore = procCpuSec()
+    val cpuBefore = Harness.procCpuSec()
     val wallStart = System.nanoTime()
 
     // min of three timed runs per query: run 1 is cold (codegen
     // compile, no broadcast reuse); runs 2–3 are warm, so a single
-    // GC/compilation pause cannot inflate the reported number.
-    //
-    // Between queries, drop everything the query pinned in the block
-    // manager (`.cache()` inside operators, `localCheckpoint` blocks
-    // from iterative ones). Without this the storage pool grows
-    // monotonically across ~100 queries × 3 runs and the LRU-eviction /
-    // GC churn makes a random subset of queries 5–10× slower from
-    // round to round (r3 vs r4 swings on identical code).
+    // GC/compilation pause cannot inflate the reported number. A query
+    // whose every run fails reports -1.
     val sweep = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     val timed = sweep.map { case (name, fn) =>
-      name -> BenchHarness.minOfRunsCpu(spark, fn, sfDir, runs = 3)
+      name -> timeRuns(spark, fn, sfDir, runs = 3)
     }
+    val best = timed.map { case (k, rs) => k -> fastest(rs) }
     def r3(x: Double) = math.rint(x * 1000) / 1000
-    val results = timed.map { case (k, (w, _)) => k -> w }
+    val results = best.map { case (k, b) =>
+      k -> b.flatMap(_.wallSec).getOrElse(-1.0)
+    }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // per-query CPU clock of the winning run (steal self-diagnosis):
     // a query whose wall >> cpu/ncpu with LOW cpu was throttled by the
     // host, not slow — full record only (target/bench.json + full line)
-    val qcpu = timed.map { case (k, (_, c)) => "\"" + k + "\":" + r3(c) }
-      .mkString("{", ",", "}")
+    val qcpu = best.map { case (k, b) =>
+      "\"" + k + "\":" + r3(b.flatMap(_.cpuSec).getOrElse(-1.0))
+    }.mkString("{", ",", "}")
+    // every query with a run that threw, with its first error
+    val failures = timed.flatMap { case (k, rs) =>
+      rs.flatMap(_.error).headOption.map(k -> _)
+    }
     val failed = results.count(_._2 < 0)
     val total = results.map(_._2).filter(_ >= 0).sum
     val wallSec = (System.nanoTime() - wallStart) / 1e9
     val ncpu = Runtime.getRuntime.availableProcessors
     val loadFields =
       s""""load1_before":${load1Before},"load1_after":${load1()},""" +
-        s""""proc_cpu_sec":${r3(procCpuSec() - cpuBefore)},""" +
+        s""""proc_cpu_sec":${r3(Harness.procCpuSec() - cpuBefore)},""" +
         s""""wall_sec":${r3(wallSec)},"ncpu":$ncpu"""
     // Two SEPARATELY-LABELED per-query lines (r14 verdict item 2): the
     // driver captures the log TAIL, and in BENCH_r14 that capture
@@ -186,14 +120,17 @@ object Bench {
     // post-close sweep destroyed r14's closing idle record — so
     // SPARK_GRAFT_BENCH_COPY names an additional round-stamped,
     // COMMITTED copy (bench/bench_rNN_idle.json) that survives it.
-    val record = cpuJson + "\n" + wallJson + "\n"
+    val record = cpuJson + "\n" + wallJson + "\n" +
+      s"""{"metric":"failures","failures":${Harness.jsonObject(failures)}}""" + "\n"
     def writeRecord(path: java.nio.file.Path): Unit =
       try {
         if (path.getParent != null)
           java.nio.file.Files.createDirectories(path.getParent)
         java.nio.file.Files.write(path,
           record.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      } catch { case _: Throwable => }
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] cannot write $path: $e")
+      }
     writeRecord(java.nio.file.Paths.get("target", "bench.json"))
     sys.env.get("SPARK_GRAFT_BENCH_COPY")
       .foreach(p => writeRecord(java.nio.file.Paths.get(p)))

@@ -63,15 +63,7 @@ object CrossPlan {
     val names =
       if (args.length > 1) args.drop(1).toSeq.sorted
       else alternates.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     val results = names.map { name =>
       val t0 = System.nanoTime()
@@ -80,8 +72,7 @@ object CrossPlan {
       val ok = p == a
       println(f"[crossplan] $name%-22s ${if (ok) "MATCH" else "MISMATCH"}%-8s " +
         f"rows=${p.rows}/${a.rows} $sec%.1f s")
-      spark.sharedState.cacheManager.clearCache()
-      spark.catalog.clearCache()
+      Harness.release(spark)
       (name, p, a, ok, sec)
     }
     val qs = results.map { case (n, p, a, ok, sec) =>

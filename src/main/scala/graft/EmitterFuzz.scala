@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions => TF}
 import graft.operators.Num
@@ -70,12 +70,7 @@ object EmitterFuzz {
     val outDir = args.lift(1).filterNot(_.startsWith("--"))
       .getOrElse("/tmp/emitter_fuzz")
     val probe = args.contains("--probe")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session()
     spark.sparkContext.setLogLevel("ERROR")
     val docs = Tables.load(spark, sfDir, "documents")
 
@@ -126,18 +121,9 @@ object EmitterFuzz {
       docs.select(col("doc_id"), c.as("x")).orderBy(col("doc_id"))
         .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = all.map { case (name, _, sql) =>
-      s"${q(name)}: ${q(s"SELECT doc_id, $sql AS x FROM documents ORDER BY doc_id")}"
-    }.mkString("{", ",", "}")
+    val json = Harness.jsonObject(all.map { case (name, _, sql) =>
+      name -> s"SELECT doc_id, $sql AS x FROM documents ORDER BY doc_id"
+    })
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     println(s"[emitterfuzz] ${all.size} cases -> $outDir (probe=$probe)")
     spark.stop()

@@ -258,13 +258,7 @@ object GenData {
     val srcDir = rest.headOption.getOrElse("/root/testdata/sf0.1")
     val dstDir = rest.lift(1).getOrElse("localdata/sf1")
     val copies = rest.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     if (!gateOnly) {
       val unit = globalUnit(spark, srcDir)
       println(s"[gendata] global key-offset unit = $unit")

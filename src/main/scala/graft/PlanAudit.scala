@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan audit — prints formatted physical plans for representative
   * queries so scan pushdown, broadcast choices, and codegen spans can
   * be reviewed (and regression-checked by PlanSpec).
@@ -33,12 +31,7 @@ object PlanAudit {
         "q158_rfm", "q159_basket", "q161_sliding_distinct",
         "q163_skyline", "q171_table_diff", "q173_auc", "q175_gini",
         "q176_als_round")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -262,12 +262,7 @@ object PlanGate {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session()
     spark.sparkContext.setLogLevel("ERROR")
     var bad = 0
     val t0 = System.nanoTime()
@@ -285,9 +280,7 @@ object PlanGate {
       }
       // caches pinned during construction (MMR candidates, …) must not
       // accumulate across the 190-query walk
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Harness.release(spark)
     }
     val sec = (System.nanoTime() - t0) / 1e9
     println(f"""{"plan_gate":"${if (bad == 0) "PASS" else "FAIL"}","queries":${SparkEntry.queries.size},"violating":$bad,"allowlisted":${Allowed.size + AllowedFunnel.size},"sec":$sec%.1f}""")

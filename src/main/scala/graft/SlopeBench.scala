@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-slope sweep — runs every SparkEntry query at each SF in
   * SPARK_GRAFT_SLOPE_DIRS (default sf0.001,sf0.01,sf0.1) inside ONE
   * JVM and reports, per query, the time ratio between the two largest
@@ -62,17 +60,9 @@ object SlopeBench {
     val dirs = sys.env.getOrElse("SPARK_GRAFT_SLOPE_DIRS",
       "/root/testdata/sf0.001,/root/testdata/sf0.01,/root/testdata/sf0.1")
       .split(',').map(_.trim).filter(_.nonEmpty).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     def sfOf(dir: String): Double =
       "sf([0-9.]+)".r.findFirstMatchIn(dir).map(_.group(1).toDouble)
@@ -80,14 +70,11 @@ object SlopeBench {
 
     val sweep = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    // smallest SF first: its pass doubles as the codegen/session warmup
     val byDir = dirs.sortBy(sfOf).map { dir =>
-      Tables.names.foreach { t =>
-        try Tables.load(spark, dir, t).limit(1).count()
-        catch { case _: Throwable => }
-      }
+      Harness.warmup(spark, dir)
       dir -> sweep.map { case (name, fn) =>
-        val t = BenchHarness.minOfRuns(spark, fn, dir, runs = 2)
+        val t = Bench.fastest(Bench.timeRuns(spark, fn, dir, runs = 2))
+          .flatMap(_.wallSec).getOrElse(-1.0)
         // progress line per (dir, query): a hung sweep self-locates
         System.err.println(f"[slope] $dir $name $t%.2f s")
         name -> t
@@ -138,7 +125,9 @@ object SlopeBench {
       java.nio.file.Files.createDirectories(out.getParent)
       java.nio.file.Files.write(out,
         (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: Throwable => }
+    } catch { case e: Throwable =>
+      System.err.println(s"[slope] cannot write record: $e")
+    }
     println(json)
     // the one-line gate: non-empty superlinear list is the red flag
     println(s"""{"metric":"slope_gate","superlinear_count":${superlinear.size},"superlinear":[${superlinear.map("\"" + _ + "\"").mkString(",")}],"annotated_count":${annotated.size}}""")

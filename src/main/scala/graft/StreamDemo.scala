@@ -79,14 +79,7 @@ object StreamDemo {
     val sfDir = positional.headOption.getOrElse("/root/testdata/sf0.001")
     val outRoot = if (positional.length > 1) positional(1)
       else java.nio.file.Files.createTempDirectory("graft-demo").toString
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     EventGenerator.writeAll(spark, sfDir, s"$outRoot/events", slices = 4)
     val nEvents = Seq("orders", "items", "payments")

@@ -1,8 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Each query's
+  * outcome (`ok` or its error) also lands in target/verify_status.json. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query-name prefixes to run
@@ -10,14 +10,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Seq[String]] =
       if (args.length > 2) Some(args(2).split(",").toSeq) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_PROBES=1 adds the q189a–e decimal-rendering probes
     // (diagnosis-only, retired from the graded inventory — r14 verdict
@@ -35,44 +28,27 @@ object Verify {
       sys.env.get("SPARK_GRAFT_SKIP")
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
         .getOrElse(Set.empty)
-    queries
+    val status = queries.toSeq
       .filter { case (name, _) =>
         only.forall(_.exists(name.startsWith)) && !skip.contains(name)
       }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      .map { case (name, fn) =>
+        val run = Harness.timed(fn(spark, sfDir).coalesce(1).write
+          .mode("overwrite").parquet(s"$outDir/$name"))
+        run.error.foreach(e => System.err.println(s"[verify] $name failed: $e"))
+        // operator-internal cache()/localCheckpoint blocks are
+        // per-invocation state: drop them before the next query
+        Harness.release(spark)
+        name -> run.error.getOrElse("ok")
       }
-      // storage hygiene between queries (the Bench discipline, §5):
-      // operator-internal cache()/localCheckpoint blocks are
-      // per-invocation state — without this the storage pool grows
-      // monotonically across 197 queries in one session (and the
-      // CacheManager logs re-registration churn on every plan-keyed
-      // cache it still holds)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    Files.createDirectories(Paths.get("target"))
+    Files.writeString(Paths.get("target", "verify_status.json"),
+      Harness.jsonObject(status.sortBy(_._1)))
     val oracles =
       if (probes) SparkEntry.oracleSql ++ SparkEntry.probeOracleSql
       else SparkEntry.oracleSql
-    val json = oracles
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Harness.jsonObject(oracles))
     spark.stop()
   }
 }

@@ -28,6 +28,12 @@ final case class SinkConfig(
 
 object MetricsSink {
 
+  /** The trigger of every sink query: drain the backlog and stop under
+    * `availableNow`, else fire every `triggerInterval`. */
+  def trigger(cfg: SinkConfig): Trigger =
+    if (cfg.availableNow) Trigger.AvailableNow()
+    else Trigger.ProcessingTime(cfg.triggerInterval)
+
   /** Wire a metric stream to a foreachBatch writer — the per-query
     * topology of stream_processor.py:175-231. */
   def start(df: DataFrame, queryName: String, cfg: SinkConfig)(
@@ -35,8 +41,7 @@ object MetricsSink {
     df.writeStream
       .outputMode("update")
       .queryName(s"sink_$queryName")
-      .trigger(if (cfg.availableNow) Trigger.AvailableNow()
-        else Trigger.ProcessingTime(cfg.triggerInterval))
+      .trigger(trigger(cfg))
       .option("checkpointLocation", s"${cfg.checkpointRoot}/$queryName")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Similarity, TextDedup}
 
@@ -40,22 +40,14 @@ object ReplayScale {
     val sfDir = args.headOption.getOrElse("/root/repo/localdata/sf1")
     val slices = if (args.length > 1) args(1).toInt else 8
     val twin = if (args.length > 2) args(2) else "dedup"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-replay-scale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.Harness.session(
       // micro_batches and state_rows_max below are read from
       // recentProgress, which retains only the LAST N progress events
       // (default 100) — a run with more triggers than that would
       // under-count batches and could miss an early nonzero
       // stateOperators row count, passing state_rows_max == 0 falsely.
       // Retain far more events than any slices argument produces.
-      .config("spark.sql.streaming.numRecentProgressUpdates", "100000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.streaming.numRecentProgressUpdates" -> "100000")
     val out = Files.createTempDirectory("graft-replay-scale").toString
 
     // 90% static corpus, 10% arriving stream — the production split

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import scala.collection.mutable.ArrayBuffer
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -32,14 +32,9 @@ object SoakMain {
 
   def main(args: Array[String]): Unit = {
     val soakSec = sys.env.getOrElse("SPARK_GRAFT_SOAK_SEC", "630").toInt
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
+    val spark = graft.Harness.session(
+      "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val ckpt = java.nio.file.Files.createTempDirectory("graft-soakmain").toString

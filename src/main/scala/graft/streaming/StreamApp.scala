@@ -150,8 +150,7 @@ object StreamApp {
     val ordersQuery = fine.writeStream
       .outputMode("append")
       .queryName("sink_orders_shared")
-      .trigger(org.apache.spark.sql.streaming.Trigger
-        .ProcessingTime(sink.triggerInterval))
+      .trigger(MetricsSink.trigger(sink))
       .option("checkpointLocation", s"${sink.checkpointRoot}/orders_shared")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {

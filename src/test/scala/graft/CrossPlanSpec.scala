@@ -32,9 +32,7 @@ class CrossPlanSpec extends SparkSpec {
       val (p, a) = CrossPlan.compare(spark, sf, name)
       assert(p.rows > 0, s"$name produced no rows — vacuous cross-check")
       assert(p == a, s"$name: primary $p != alternate $a")
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Harness.release(spark)
     }
   }
 }

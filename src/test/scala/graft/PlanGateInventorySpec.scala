@@ -23,9 +23,7 @@ class PlanGateInventorySpec extends SparkSpec {
         }
       // construction-time caches (MMR candidates, …) must not pile up
       // across the 190-query walk
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Harness.release(spark)
       if (v.isEmpty) Nil else Seq(s"$name: ${v.mkString("; ")}")
     }
     assert(bad.isEmpty, bad.mkString("\n"))

@@ -8,12 +8,6 @@ import org.apache.spark.sql.functions._
   * queries with the noop sink (guide §1.4) so CPU can be attributed to
   * stages. Usage: runMain graft.Scratch <sfDir> <case> */
 object Scratch {
-  def procCpu(): Double =
-    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-      case b: com.sun.management.OperatingSystemMXBean => b.getProcessCpuTime / 1e9
-      case _ => -1.0
-    }
-
   /** Per-Spark-stage metrics listener: accumulates (stage name → cpu,
     * runtime, tasks) while a timed region runs. */
   class StageMetrics extends org.apache.spark.scheduler.SparkListener {
@@ -56,12 +50,10 @@ object Scratch {
           .map(_.getCollectionTime).sum
       }
       val g0 = gcMs()
-      val c0 = procCpu(); val t0 = System.nanoTime()
       spark.sparkContext.setJobDescription(name)
-      df.write.format("noop").mode("overwrite").save()
-      val r = ((System.nanoTime() - t0) / 1e9, procCpu() - c0)
+      val r = Harness.timed(df.write.format("noop").mode("overwrite").save())
       if (sys.env.contains("SCRATCH_STAGES"))
-        println(f"    [run $i] wall=${r._1}%6.2f cpu=${r._2}%6.1f gcWall=${(gcMs() - g0) / 1e3}%6.2f")
+        println(s"    [run $i] $r gcWall=${(gcMs() - g0) / 1e3}")
       lst.foreach { l =>
         Thread.sleep(500) // let the listener bus drain
         spark.sparkContext.removeSparkListener(l)
@@ -69,33 +61,18 @@ object Scratch {
       }
       r
     }
-    val (w, c) = times.minBy(_._1)
-    println(f"STAGE $name%-40s wall=$w%7.2f cpu=$c%7.1f")
-  }
-
-  def clear(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    System.gc()
+    Bench.fastest(times) match {
+      case Some(RunRecord(_, Some(w), Some(c))) =>
+        println(f"STAGE $name%-40s wall=$w%7.2f cpu=$c%7.1f")
+      case _ => println(f"STAGE $name%-40s ${times.flatMap(_.error).head}")
+    }
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val which = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warmup
-    Tables.names.foreach { t =>
-      try Tables.load(spark, sfDir, t).limit(1).count() catch { case _: Throwable => }
-    }
-    try SparkEntry.queries("q1_agg")(spark, sfDir).count() catch { case _: Throwable => }
+    val spark = Harness.session()
+    Harness.warmup(spark, sfDir)
 
     which match {
       case "q105" => ScratchCases.q105(spark, sfDir)

@@ -7,7 +7,8 @@ import graft.functions.{TextFunctions => TF}
 
 /** Stage bodies for [[Scratch]] — r17 optimization round attribution. */
 object ScratchCases {
-  import Scratch.{time, clear}
+  import Scratch.time
+  import Harness.release
 
   private def docs(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "documents")
@@ -16,7 +17,7 @@ object ScratchCases {
     // stage 1: the shared tokenized+scored base
     val base = graft.queries.CorpusStatsQueries.pipelineBase(docs(spark, dir))
     time(spark, "base(tokenize+quality)", base)
-    clear(spark)
+    release(spark)
     // stage 2: base cached + edges (prefix-Jaccard pairs)
     val baseC = graft.queries.CorpusStatsQueries.pipelineBase(docs(spark, dir)).cache()
     baseC.write.format("noop").mode("overwrite").save()
@@ -29,7 +30,7 @@ object ScratchCases {
     // stage 4: full verdicts
     time(spark, "verdicts(full)",
       graft.queries.CorpusStatsQueries.canonicalVerdictsFromBase(baseC))
-    clear(spark)
+    release(spark)
     // stage 5: incremental tail pieces
     val base2 = graft.queries.CorpusStatsQueries.pipelineBase(docs(spark, dir)).cache()
     val kept = graft.queries.CorpusStatsQueries.canonicalVerdictsFromBase(base2)
@@ -47,7 +48,7 @@ object ScratchCases {
       .select(col("pos"), col("doc_id"), col("lang"))
     time(spark, "train+globalorder", ordered)
     time(spark, "train+globalorder+sort", ordered.orderBy(col("pos")))
-    clear(spark)
+    release(spark)
     // stage 6: the whole query, Bench-style (3 runs)
     time(spark, "q105 full", SparkEntry.queries("q105_corpus_pipeline")(spark, dir), runs = 3)
   }
@@ -102,14 +103,14 @@ object ScratchCases {
       .groupBy(col("p.ia").as("ia"), col("p.ib").as("ib"))
       .agg(sum(col("n")).as("cnt_ab"))
     time(spark, "pairs(bitmask)", maskPairs)
-    clear(spark)
+    release(spark)
     time(spark, "q159 full", SparkEntry.queries("q159_basket")(spark, dir), runs = 3)
   }
 
   def q148(spark: SparkSession, dir: String): Unit = {
     val fp0 = Winnowing.fingerprints(docs(spark, dir), 3, 4)
     time(spark, "fingerprints(window form)", fp0)
-    clear(spark)
+    release(spark)
     val fp = Winnowing.fingerprints(docs(spark, dir), 3, 4)
       .select(col("doc_id"), col("fp_hash")).distinct().cache()
     fp.write.format("noop").mode("overwrite").save()
@@ -122,7 +123,7 @@ object ScratchCases {
     val joined = a.join(b, Seq("fp_hash")).filter(col("doc_a") < col("doc_b"))
       .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("shared"))
     time(spark, "pair join (fp cached)", joined)
-    clear(spark)
+    release(spark)
     time(spark, "q148 full", SparkEntry.queries("q148_winnow_pairs")(spark, dir), runs = 3)
   }
 
@@ -135,7 +136,7 @@ object ScratchCases {
       .groupBy(col("o_custkey").as("u"), col("p_brand").as("item"))
       .agg(count(lit(1)).cast("double").as("r"))
     time(spark, "ratings(3-way join + agg)", ratings)
-    clear(spark)
+    release(spark)
     time(spark, "q176 full", SparkEntry.queries("q176_als_round")(spark, dir), runs = 3)
   }
 
@@ -172,7 +173,7 @@ object ScratchCases {
       .agg(count(lit(1)).as("po"),
         max(col("a.rnk")).as("pa"), max(col("b.rnk")).as("pb"))
     time(spark, "cand(prefix self-join, prefix cached)", cand)
-    clear(spark)
+    release(spark)
     time(spark, "q86 full", SparkEntry.queries("q86_prefix_jaccard")(spark, dir), runs = 3)
   }
 
@@ -186,7 +187,7 @@ object ScratchCases {
       .groupBy(col("doc_id"), col("dl"), col("term"))
       .agg(count(lit(1)).as("tf"))
     time(spark, "postings(explode+groupBy)", postings)
-    clear(spark)
+    release(spark)
     time(spark, "q150 full", SparkEntry.queries("q150_bm25")(spark, dir), runs = 3)
   }
 }

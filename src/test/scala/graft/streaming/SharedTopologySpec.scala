@@ -76,16 +76,21 @@ class SharedTopologySpec extends SparkSpec {
     }
   }
 
-  test("e2e shared topology writes all three sinks from two sources") {
-    val root = Files.createTempDirectory("graft-shared-e2e").toString
+  /** Generated events under `root/ev`, run through the shared topology
+    * into `root/metrics`; `sink` gets `root/ckpt` as checkpoint root. */
+  private def runShared(root: String, sink: SinkConfig) = {
     EventGenerator.writeAll(spark, "/root/testdata/sf0.001", s"$root/ev", 2)
-    val queries = StreamApp.runShared(spark,
+    StreamApp.runShared(spark,
       FileEventSource(s"$root/ev/orders"),
       FileEventSource(s"$root/ev/items"),
       FileEventSource(s"$root/ev/payments"),
       s"$root/metrics",
-      sink = SinkConfig(triggerInterval = "1 seconds",
-        checkpointRoot = s"$root/ckpt"))
+      sink = sink.copy(checkpointRoot = s"$root/ckpt"))
+  }
+
+  test("e2e shared topology writes all three sinks from two sources") {
+    val root = Files.createTempDirectory("graft-shared-e2e").toString
+    val queries = runShared(root, SinkConfig(triggerInterval = "1 seconds"))
     try {
       queries.foreach(_.processAllAvailable())
       // watermark: append-mode rows materialize once the watermark
@@ -95,6 +100,15 @@ class SharedTopologySpec extends SparkSpec {
       val gmv = spark.read.parquet(s"$root/metrics/gmv_metrics")
       assert(funnel.count() > 0 && dropOff.count() > 0 && gmv.count() > 0)
       assert(funnel.filter($"orders_with_items" > $"total_orders").count() == 0)
+    } finally queries.foreach(_.stop())
+  }
+
+  test("availableNow shared run: all three queries end on their own") {
+    val root = Files.createTempDirectory("graft-shared-an").toString
+    val queries = runShared(root, SinkConfig(availableNow = true))
+    try {
+      val ended = queries.map(q => q.name -> q.awaitTermination(60000))
+      assert(ended.forall(_._2), s"still running after 60 s: $ended")
     } finally queries.foreach(_.stop())
   }
 }
