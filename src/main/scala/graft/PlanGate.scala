@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, Cartes
 
 /** Inventory-wide plan-shape gate: compiles EVERY SparkEntry query and
   * walks its physical plan — plus every pre-checkpoint subplan the
-  * query's construction truncates ([[graft.operators.Lineage]] capture)
+  * query's construction truncates (Pin capture, [[graft.operators.Pin]])
   * and every cached subplan behind an InMemoryTableScan — for the
   * scale anti-patterns the per-query PlanSpec pins catch only for the
   * ~30 pinned queries:
@@ -35,7 +35,7 @@ import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, Cartes
   *
   * What executes during the walk: compiling a plan is lazy, but a
   * query whose CONSTRUCTION path materializes bounded state — lineage
-  * cuts (`Lineage.cut`, still real checkpoints during the gate) and
+  * pins (`Pin`, still real materializations during the gate) and
   * driver-side model fits (BPE argmax, k-means centroids) — runs that
   * work at `sfDir` scale. Run the gate at sf0.001 (the default), where
   * that eager work is milliseconds per query; the capture hook is what
@@ -97,12 +97,12 @@ object PlanGate {
   private def walk(p: SparkPlan): Seq[SparkPlan] = p match {
     // the AQE wrappers are leaf nodes — their plans hang off fields;
     // QueryStageExec appears once a captured plan has EXECUTED (a
-    // Lineage.cut materializes, leaving Result/Broadcast query stages)
+    // a pin materializes, leaving Result/Broadcast query stages)
     case a: AdaptiveSparkPlanExec => p +: walk(a.executedPlan)
     case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
       p +: walk(q.plan)
     // a cached relation hides its build plan behind a table scan —
-    // descend, or a `.cache()`ed anti-pattern is invisible
+    // descend, or a Wide-pinned anti-pattern is invisible
     case m: InMemoryTableScanExec => p +: walk(m.relation.cachedPlan)
     case _ => (p +: p.children.flatMap(walk)) ++ p.subqueries.flatMap(walk)
   }
@@ -251,12 +251,12 @@ object PlanGate {
   private[graft] def violations(name: String, plan: SparkPlan): Seq[String] =
     violations(name, Seq(plan))
 
-  /** Compile `fn` under Lineage capture and gate the main plan plus
-    * every pre-checkpoint subplan. */
+  /** Compile `fn` under Pin capture and gate the main plan plus
+    * every pre-pin subplan. */
   private[graft] def gateQuery(name: String,
       fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
       spark: SparkSession, sfDir: String): Seq[String] = {
-    val (df, cuts) = graft.operators.Lineage.capturing(fn(spark, sfDir))
+    val (df, cuts) = graft.operators.Pin.capturing(fn(spark, sfDir))
     violations(name, df.queryExecution.executedPlan +: cuts)
   }
 

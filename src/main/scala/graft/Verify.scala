@@ -36,7 +36,7 @@ object Verify {
         val run = Harness.timed(fn(spark, sfDir).coalesce(1).write
           .mode("overwrite").parquet(s"$outDir/$name"))
         run.error.foreach(e => System.err.println(s"[verify] $name failed: $e"))
-        // operator-internal cache()/localCheckpoint blocks are
+        // operator-internal pin blocks are
         // per-invocation state: drop them before the next query
         Harness.release(spark)
         name -> run.error.getOrElse("ok")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.operators.Lineage.LineageOps
+import graft.operators.Pin._
 import java.util.regex.Pattern
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -45,7 +45,7 @@ object Bpe {
 
   /** The next merge: most frequent pair, ties by (a asc, b asc). */
   def topPair(toks: DataFrame, tokCol: String = "toks"): Option[(String, String)] =
-    Lineage.record(pairCounts(toks, tokCol)
+    Pin.record(pairCounts(toks, tokCol)
       .orderBy(col("cnt").desc, col("a"), col("b"))
       .limit(1)).collect().headOption
       .map(r => (r.getString(0), r.getString(1)))
@@ -76,7 +76,7 @@ object Bpe {
           cur = cur.withColumn(tokCol, applyMerge(col(tokCol), a, b))
             // each iteration re-reads the previous — truncate lineage
             // so iteration N doesn't replay N-1 regex passes
-            .cutLineage()
+            .pin(Narrow)
         case None => continue = false
       }
       i += 1

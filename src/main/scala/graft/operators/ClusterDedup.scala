@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.operators.Lineage.LineageOps
+import graft.operators.Pin._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -54,9 +54,9 @@ object ClusterDedup {
     // operator executes exactly ONCE: pin the raw projection, then
     // derive both the node set and the canonical edge set from it
     // (previously each derivation re-ran the upstream pipeline).
-    // cache() UNDER the checkpoint: the checkpoint truncates lineage
+    // a Wide pin UNDER the checkpoint: the checkpoint truncates lineage
     // (downstream CC rounds re-plan a tiny LogicalRDD, not the whole
-    // edge generator — replacing the cut with a bare cache() measurably
+    // edge generator — replacing the cut with a bare cache measurably
     // REGRESSED q98, every post-CC job re-planning the full subtree),
     // while the plan-keyed cache covers MULTI-INVOCATION pipelines:
     // composed queries (q105) call this operator more than once over
@@ -69,7 +69,7 @@ object ClusterDedup {
     // bare cut — a cache there has zero within-run benefit and doubles
     // the storage footprint.
     val raw = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      .cache().cutLineage()
+      .pin(Wide).pin(Narrow)
     // node set from the RAW edges (self-loops included) so a node with
     // only a self-loop still gets a singleton label
     val nodes = raw.select(col("a").as("id"))
@@ -80,7 +80,7 @@ object ClusterDedup {
       .where(col("a") =!= col("b"))
       .select(greatest(col("a"), col("b")).as("u"),
         least(col("a"), col("b")).as("v"))
-      .distinct().cutLineage()
+      .distinct().pin(Narrow)
     // (count, xor of xxhash64(u,v)) over the canonical deduped edge
     // set — a one-job fingerprint used to SKIP the exact convergence
     // anti-join on rounds that visibly changed the edge set (xor, not
@@ -104,7 +104,7 @@ object ClusterDedup {
       // (min reachable id) by construction.
       if (integralIds && eFp._1 <= localFinishEdges) {
         val labels = localUnionFind(
-          Lineage.record(e.select(col("u").cast(LongType), col("v").cast(LongType)))
+          Pin.record(e.select(col("u").cast(LongType), col("v").cast(LongType)))
             .collect().map(r => (r.getLong(0), r.getLong(1))))
         val spark = edges.sparkSession
         import spark.implicits._
@@ -131,7 +131,7 @@ object ClusterDedup {
         .union(ssMin.select(col("u"), col("m").as("v")))
         .where(col("u") =!= col("v"))
         .distinct()
-        .cutLineage()
+        .pin(Narrow)
       // converged iff the canonical edge set is unchanged: equal
       // cardinality + empty difference (both sides are deduped sets).
       // The exact (anti-join) check only runs when the one-job

@@ -56,10 +56,9 @@ object EditDistanceJoin {
     require(maxDist >= 0 && q >= 1, "maxDist >= 0, q >= 1")
     val k = maxDist
     def bcast(d: DataFrame): DataFrame = if (broadcastIndex) broadcast(d) else d
-    val names = df.select(col(strCol).as("s"))
+    val names = Pin(df.select(col(strCol).as("s"))
       .filter(col("s").isNotNull).distinct()
-      .withColumn("len", length(col("s")))
-      .cache()
+      .withColumn("len", length(col("s"))), Pin.Wide)
     // padded positional q-grams: pos is 1-based into the padded string
     // (`substr(Column, Column)` is the dynamic-start variant —
     // `substring(Column, Int, Int)` only takes literal positions)

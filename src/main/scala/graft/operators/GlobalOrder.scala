@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Global total ordering at scale: assign every row its rank under a
@@ -19,11 +18,25 @@ import org.apache.spark.sql.functions._
   * (pass a tie-breaking column; with ties the rank of equal rows
   * would depend on partition placement).
   *
-  * The count pass re-evaluates the ranged frame, so it is cached
-  * across the two jobs — at 100 TB rely on shuffle reuse instead
-  * (both jobs read the same exchange output) or checkpoint.
+  * The count pass and the ranking both read the ranged frame, so
+  * [[rangeOffsets]] pins it between the two jobs — at 100 TB rely on
+  * shuffle reuse instead (both jobs read the same exchange output).
   */
 object GlobalOrder {
+
+  /** The shared range-offset scheme: range-partition `df` on `order`
+    * into ascending `_pid` ranges (`within` adds per-range columns), pin
+    * it, collect rows (`_pid`, `partAggs`…) in `_pid` order, and
+    * broadcast-join the per-`_pid` frame `scan` builds from them. */
+  def rangeOffsets(df: DataFrame, numPartitions: Int, order: Seq[Column],
+      partAggs: Seq[Column], within: DataFrame => DataFrame = identity)(
+      scan: Seq[Row] => DataFrame): DataFrame = {
+    val ranged = Pin(within(df.repartitionByRange(numPartitions, order: _*)
+      .withColumn("_pid", spark_partition_id().cast("long"))), Pin.Wide)
+    val parts = Pin.record(ranged.groupBy(col("_pid"))
+      .agg(partAggs.head, partAggs.tail: _*)).collect().sortBy(_.getLong(0))
+    ranged.join(broadcast(scan(parts.toSeq)), "_pid")
+  }
 
   /** Add `posCol` (1-based global rank under `order`) to `df`.
     *
@@ -41,19 +54,13 @@ object GlobalOrder {
     require(order.nonEmpty)
     val spark = df.sparkSession
     import spark.implicits._
-    val ranged = df.repartitionByRange(numPartitions, order: _*)
-      .sortWithinPartitions(order: _*)
-      .withColumn("_pid", spark_partition_id().cast("long"))
-      .withColumn("_local",
-        monotonically_increasing_id() - shiftleft(col("_pid"), 33))
-      .cache()
-    val sizes = Lineage.record(ranged.groupBy(col("_pid"))
-      .agg(count(lit(1)).as("n"))
-      .as[(Long, Long)]).collect().sortBy(_._1)
-    val offsets = sizes.map(_._1)
-      .zip(sizes.map(_._2).scanLeft(0L)(_ + _))
-    val offDf = offsets.toSeq.toDF("_pid", "_off")
-    ranged.join(broadcast(offDf), "_pid")
+    rangeOffsets(df, numPartitions, order, Seq(count(lit(1))),
+      _.sortWithinPartitions(order: _*).withColumn("_local",
+        monotonically_increasing_id() - shiftleft(col("_pid"), 33))) { sizes =>
+      sizes.map(_.getLong(0))
+        .zip(sizes.map(_.getLong(1)).scanLeft(0L)(_ + _))
+        .toDF("_pid", "_off")
+    }
       .withColumn(posCol, col("_local") + 1L + col("_off"))
       .drop("_pid", "_local", "_off")
   }

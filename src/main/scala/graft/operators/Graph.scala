@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.operators.Lineage.LineageOps
+import graft.operators.Pin._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -37,11 +37,11 @@ object Graph {
   def triangles(edges: DataFrame): DataFrame = {
     // the edge list feeds BOTH the degree aggregation and the keyed
     // join below — checkpoint it so the (usually expensive) upstream
-    // pair generation runs once, not twice. No cache() under the cut:
+    // pair generation runs once, not twice. No Wide pin under the cut:
     // the operator runs once per query execution, so the checkpoint
     // already materializes the generator exactly once; a cache only
     // doubled the storage footprint (checkpoint + cache blocks).
-    val e = edges.cutLineage()
+    val e = edges.pin(Narrow)
     val deg = e
       .select(explode(array(col("id_a"), col("id_b"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -61,7 +61,7 @@ object Graph {
       // closing edge is ALWAYS oriented e1.dst → e2.dst
       .select(col("e.src").as("src"), col("e.dst").as("dst"),
         struct(col("e.dk").as("d"), col("e.dst").as("i")).as("key"))
-      .cutLineage()
+      .pin(Narrow)
     oriented.as("e1")
       .join(oriented.as("e2"),
         col("e1.src") === col("e2.src") && col("e1.key") < col("e2.key"))
@@ -118,7 +118,7 @@ object Graph {
     // itself stays lazy: re-reading local checkpoint blocks is cheap,
     // while a second eager checkpoint materialization measurably
     // dominated this operator at small edge counts.
-    val e0 = edges.select(col("id_a"), col("id_b")).cutLineage()
+    val e0 = edges.select(col("id_a"), col("id_b")).pin(Narrow)
     val sym =
       if (directed) e0
       else e0.unionByName(
@@ -130,10 +130,10 @@ object Graph {
       else outdeg.select(col("id_a").as("node")))
         .join(outdeg.select(col("id_a").as("node"), col("deg")), Seq("node"), "left")
         .select(col("node"), coalesce(col("deg"), lit(0L)).as("deg"))
-        .cutLineage()
+        .pin(Narrow)
     val out = sym.join(outdeg, "id_a")
       .select(col("id_a").as("src"), col("id_b").as("dst"), col("deg"))
-      .cutLineage()
+      .pin(Narrow)
     val n = nodes.count()
     val base = (lit(1.0) - lit(damping)) / lit(n.toDouble)
     var pr = nodes.select(col("node"), (lit(1.0) / lit(n.toDouble)).as("pr"))
@@ -162,7 +162,7 @@ object Graph {
             // earlier round ~2× per level, exponential in iters. The
             // undirected branch reads pr once per round (linear chain)
             // and skips the eager materialization.
-            .cutLineage()
+            .pin(Narrow)
         } else {
           contrib.select(col("node"),
             Num.r(base + lit(damping) * col("m"), 8).as("pr"))

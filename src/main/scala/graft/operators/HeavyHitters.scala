@@ -112,31 +112,31 @@ object HeavyHitters {
     val head = df.agg(sketch(c, cap).as("mg"), count(c).as("n")).head()
     val cands = head.getMap[String, Long](0).keys.toSeq.sorted
     val n = head.getLong(1)
+    // the recount has <= cap rows: collect it whole, so it runs once
+    // and the certified top-k is a local table
     val recount = df.filter(c.isin(cands: _*))
       .groupBy(c.as("item"))
       .agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("item"))
-      .cache()
-    val counts = Lineage.record(recount.select(col("cnt"))).collect().map(_.getLong(0))
+    val rows = Pin.record(recount).collect()
+    val counts = rows.map(_.getLong(1))
     val covered = counts.sum == n
     val certified = covered ||
       (counts.length >= k && counts(k - 1) * (cap + 1).toLong > n)
     if (certified) {
-      // re-sort above the cache: a bare limit on a cached sorted relation
-      // is not guaranteed to take rows in sort order
-      (recount.orderBy(col("cnt").desc, col("item")).limit(k), true)
+      (df.sparkSession.createDataFrame(
+        java.util.Arrays.asList(rows.take(k).toSeq: _*), recount.schema), true)
     } else {
       System.err.println(
         s"[heavyhitters] exactTopK(k=$k, cap=$cap) sketch uncertified " +
           s"(k-th candidate count ${if (counts.length >= k) counts(k - 1).toString else "<missing>"} " +
           s"<= N/(cap+1) = ${n / (cap + 1)}, coverage ${counts.sum}/$n) — " +
           "falling back to the direct exact aggregation")
-      recount.unpersist()
       val full = df.groupBy(c.as("item"))
         .agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("item"))
         .limit(k)
-      (Lineage.record(full), false)
+      (Pin.record(full), false)
     }
   }
 }

@@ -46,7 +46,7 @@ object KMeans {
   /** Deterministic init: the first k vectors by id. */
   def initCentroids(emb: DataFrame, k: Int, idCol: String = "vec_id",
       vecCol: String = "embedding"): Array[Array[Double]] =
-    Lineage.record(emb.orderBy(col(idCol)).limit(k).select(col(vecCol))).collect()
+    Pin.record(emb.orderBy(col(idCol)).limit(k).select(col(vecCol))).collect()
       .map(_.getSeq[Float](0).map(_.toDouble).toArray)
 
   /** Cell assignment under the given centroids. The argmin struct is
@@ -72,7 +72,7 @@ object KMeans {
       idCol: String = "vec_id", vecCol: String = "embedding"):
       (Array[Array[Double]], Double) = {
     val assigned = assign(emb, centroids, idCol, vecCol)
-    val inertia = Lineage.record(assigned.agg(sum(col("dist")))).collect()(0).getDouble(0)
+    val inertia = Pin.record(assigned.agg(sum(col("dist")))).collect()(0).getDouble(0)
     (update(emb, centroids, idCol, vecCol), inertia)
   }
 
@@ -90,7 +90,7 @@ object KMeans {
       // r4-snap the mean: partial-agg order is partition-dependent in
       // the last ulps, and these feed back as next-round literals
       .agg(Num.r4(avg(col("x"))).as("m"))
-      .transform(Lineage.record(_))
+      .transform(Pin.record(_))
       .collect()
     val next = centroids.map(_.clone())
     means.foreach(r => next(r.getAs[Int]("cell"))(r.getAs[Int]("dim")) =

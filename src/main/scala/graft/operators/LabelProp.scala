@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.operators.Lineage.LineageOps
+import graft.operators.Pin._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * (node, label)-keyed count + one node-keyed argmax — all shuffles
   * on node ids, state is one label per node. Rounds are bounded and
   * the per-round label table is `localCheckpoint`ed — the same
-  * lineage-truncation ClusterDedup uses — because a `.cache()` alone
+  * lineage-truncation ClusterDedup uses — because a cache alone
   * measurably fails to stop growing-plan re-execution here (each
   * round referenced the previous label table twice and re-ran the
   * whole prefix — profiled at 4× per round on sf0.1 before the fix;
@@ -48,11 +48,11 @@ object LabelProp {
     // checkpoint BEFORE symmetrizing: the union reads `edges` twice,
     // so a cache/checkpoint above it would run the (usually expensive)
     // upstream pair generation twice on materialization
-    val e = edges.cutLineage()
+    val e = edges.pin(Narrow)
     val sym = e
       .select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionByName(e.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .cache()
+      .pin(Wide)
     // (id, seed, lbl): the label table carries the clamp column with it
     var lbl = nodes.select(col("id"), col("seed"), col("seed").as("lbl"))
     for (_ <- 1 to rounds) {
@@ -71,7 +71,7 @@ object LabelProp {
         .join(maj, Seq("id"), "left")
         .select(col("id"), col("seed"),
           coalesce(col("seed"), col("mlbl"), col("lbl")).as("lbl"))
-        .cutLineage()
+        .pin(Narrow)
     }
     lbl.select(col("id"), col("lbl").as("label"),
       col("seed").isNotNull.as("seeded"))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
-import graft.operators.Lineage.LineageOps
+import graft.operators.Pin._
 
 /** Corpus bigram language model with add-α (Laplace) smoothing, and
   * per-document cross-entropy scoring — the CCNet/Wikipedia-LM quality
@@ -40,7 +40,7 @@ object LanguageModel {
     docs
       .select(col(idCol).as("doc_id"),
         TextFunctions.tokens(col(textCol)).as("ts"))
-      .cutLineage()
+      .pin(Narrow)
 
   /** (doc_id, a, b) adjacent-token pairs from a token table; documents
     * with fewer than two tokens contribute nothing. */
@@ -85,7 +85,7 @@ object LanguageModel {
     // (a,b) aggregation from the token table
     val cab = bigramsFromTs(ts).groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("cab"))
-      .cutLineage()
+      .pin(Narrow)
     val ca = cab.groupBy(col("a")).agg(sum(col("cab")).as("ca"))
     (cab, ca, vocabFromTs(ts))
   }
@@ -165,7 +165,7 @@ object LanguageModel {
     // materialize the model-sized table once instead of four
     // re-aggregations of the pinned token table
     val cab = bg.groupBy(col("a"), col("b")).agg(count(lit(1)).as("cab"))
-      .cutLineage()
+      .pin(Narrow)
     val ha = cab.groupBy(col("a"))
       .agg(sum(col("cab")).as("ca"), count(lit(1)).as("n1a"))
     val hb = cab.groupBy(col("b")).agg(count(lit(1)).as("n1b"))

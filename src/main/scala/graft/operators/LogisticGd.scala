@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * Scale: one aggregation job per round with map-side partials and d
   * doubles of aggregate state; the weight vector is bounded model
   * state on the driver (d ≪ data), exactly like KMeans' centroids.
-  * The feature frame is cached once — rounds rescan memory, never the
+  * The feature frame is pinned once — rounds rescan memory, never the
   * corpus.
   */
 object LogisticGd {
@@ -64,8 +64,8 @@ object LogisticGd {
     * intercept column; pre-snap real-valued features to 8 decimals
     * for cross-engine parity) against a {0.0, 1.0} label column. */
   def fit(feat: DataFrame, d: Int, yCol: String = "y",
-      iters: Int = 4, lr: Double = 2.0): Array[Double] = {
-    val f = feat.cache()
+      iters: Int = 4, lr: Double = 2.0): Array[Double] = Pin.scope {
+    val f = Pin(feat, Pin.Wide)
     var w = Array.fill(d)(0.0)
     for (_ <- 1 to iters) {
       val z = linearScore(w.toSeq)
@@ -74,7 +74,6 @@ object LogisticGd {
       val row = f.agg(gs.head, gs.tail: _*).head()
       w = Array.tabulate(d)(j => snap8(w(j) - lr * row.getDouble(j)))
     }
-    f.unpersist(blocking = false)
     w
   }
 }

@@ -35,7 +35,7 @@ object ProductQuantizer {
   /** Deterministic codebooks from the first k vectors by id. */
   def train(emb: DataFrame, m: Int, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): Codebooks = {
-    val vecs = Lineage.record(emb.orderBy(col(idCol)).limit(k)
+    val vecs = Pin.record(emb.orderBy(col(idCol)).limit(k)
       .select(col(vecCol))).collect()
       .map(_.getSeq[Float](0).map(_.toDouble).toArray)
     require(vecs.length == k, s"corpus smaller than k=$k")

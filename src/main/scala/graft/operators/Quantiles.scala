@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.operators.Lineage.LineageOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._

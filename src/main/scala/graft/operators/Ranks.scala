@@ -34,17 +34,13 @@ object Ranks {
     val g = df.filter(col(valueCol).isNotNull)
       .groupBy(col(valueCol).as("value"))
       .agg(aggs.head, aggs.tail: _*)
-    val ranged = g.repartitionByRange(numPartitions, col("value"))
-      .withColumn("_pid", spark_partition_id().cast("long"))
-      .cache()
-    val parts = Lineage.record(ranged.groupBy(col("_pid"))
-      .agg(sum(col("c")).as("_n"))
-      .as[(Long, Long)]).collect().sortBy(_._1)
-    val offs = parts.map(_._1).zip(parts.map(_._2).scanLeft(0L)(_ + _))
-    val offDf = offs.toSeq.toDF("_pid", "_off")
     val win = Window.partitionBy(col("_pid")).orderBy(col("value"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ranged.join(broadcast(offDf), "_pid")
+    GlobalOrder.rangeOffsets(g, numPartitions, Seq(col("value")),
+        Seq(sum(col("c")))) { parts =>
+      parts.map(_.getLong(0)).zip(parts.map(_.getLong(1)).scanLeft(0L)(_ + _))
+        .toDF("_pid", "_off")
+    }
       .withColumn("_e", sum(col("c")).over(win) + col("_off"))
       .withColumn("mr2", lit(2) * (col("_e") - col("c")) + col("c") + 1)
       .drop("_pid", "_off", "_e")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.operators.Lineage.LineageOps
+import graft.operators.Pin._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -235,21 +235,21 @@ object Similarity {
     // survivors only. Ordering (score desc, id asc) matches the
     // window-rank tie-break exactly.
     val topM = topMCandidates(queries, corpus, m)
-    // cache: every greedy round references the candidate table (and
-    // sims) again — uncached, Spark would repeat the full corpus scan
+    // pin: every greedy round references the candidate table (and
+    // sims) again — unpinned, Spark would repeat the full corpus scan
     // once per reference. Post-top-m state is m rows per query —
     // bounded model-sized data, safe to pin (broadcast as the small
     // side of the cv re-fetch).
     val cand = corpus.join(broadcast(topM), Seq("nbr_id"))
       .select(col("query_id"), col("nbr_id"), col("rel"), col("cv"))
-      .cache()
+      .pin(Wide)
     val sims = cand.select(col("query_id"), col("nbr_id").as("id_a"), col("cv").as("va"))
       .join(cand.select(col("query_id"), col("nbr_id").as("id_b"), col("cv").as("vb")),
         Seq("query_id"))
       .filter(col("id_a") =!= col("id_b"))
       .withColumn("sim", Num.r4(cosine(col("va"), col("vb"))))
       .select(col("query_id"), col("id_a"), col("id_b"), col("sim"))
-      .cache()
+      .pin(Wide)
     val slim = cand.select(col("query_id"), col("nbr_id"), col("rel"))
     val wScore = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("nbr_id"))
@@ -274,7 +274,7 @@ object Similarity {
       // round (anti-join + selected-ids join), so an unpinned plan
       // re-executes every earlier round ~2× per level — exponential in
       // k. The selection is ≤ j rows per query — trivially small.
-      sel.unionByName(pick).cutLineage()
+      sel.unionByName(pick).pin(Narrow)
     }
   }
 
@@ -561,7 +561,7 @@ object Similarity {
     * id (shared by ivfTopK and streaming.StreamAnn). */
   private[graft] def ivfCentroids(emb: DataFrame, nlist: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): Array[(Int, Array[Double])] =
-    Lineage.record(emb.orderBy(col(idCol)).limit(nlist)
+    Pin.record(emb.orderBy(col(idCol)).limit(nlist)
       .select(col(vecCol))).collect()
       .zipWithIndex
       .map { case (r, i) =>

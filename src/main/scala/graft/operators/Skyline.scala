@@ -45,22 +45,19 @@ object Skyline {
     // 1. one row per distinct x: the best (max) y there
     val perX = in.groupBy(col(xCol).as("_x"))
       .agg(max(col(yCol)).as("_maxy"))
-    // 2. range-partition by x; per-partition max to the driver
-    val ranged = perX.repartitionByRange(numPartitions, col("_x"))
-      .withColumn("_pid", spark_partition_id().cast("long"))
-      .cache()
-    val parts = Lineage.record(ranged.groupBy(col("_pid"))
-      .agg(max(col("_maxy")).cast("double").as("_pmax"))
-      .as[(Long, Double)]).collect().sortBy(_._1)
+    // 2. range-partition by x; per-partition max to the driver, its
     // exclusive prefix max across partitions (ascending x ranges)
-    val offs = parts.map(_._1)
-      .zip(parts.map(_._2).scanLeft(Double.NegativeInfinity)(math.max))
-    val offDf = offs.toSeq.toDF("_pid", "_prevmax")
-    // 3. running max over strictly smaller x INSIDE the range: window
-    // keyed on _pid (balanced), ordered by x, frame up to 1 preceding
+    // broadcast back; 3. running max over strictly smaller x INSIDE the
+    // range: window keyed on _pid (balanced), ordered by x, frame up
+    // to 1 preceding
     val win = Window.partitionBy(col("_pid")).orderBy(col("_x"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val summary = ranged.join(broadcast(offDf), "_pid")
+    val summary = GlobalOrder.rangeOffsets(perX, numPartitions,
+        Seq(col("_x")), Seq(max(col("_maxy")).cast("double"))) { parts =>
+      parts.map(_.getLong(0))
+        .zip(parts.map(_.getDouble(1)).scanLeft(Double.NegativeInfinity)(math.max))
+        .toDF("_pid", "_prevmax")
+    }
       .withColumn("_cheaper_best",
         greatest(coalesce(max(col("_maxy")).over(win).cast("double"),
           lit(Double.NegativeInfinity)), col("_prevmax")))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.operators.Lineage.LineageOps
+import graft.operators.Pin._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
@@ -20,6 +20,13 @@ import graft.functions.TextFunctions._
   *    the `maxBucket` guard drops degenerate buckets outright (a
   *    bucket with 10k near-identical docs is better handled by exact
   *    dedup upstream).
+  *
+  * Unique ids: the shingle-set operators assume one row per id and do
+  * not check it (a guard costs a job per call). Rows sharing an id stay
+  * separate documents: no id pairs with itself and pairs of unique ids
+  * are unaffected, but which pairs a duplicated id joins is unspecified
+  * (the exact and prefix forms can disagree); [[incrementalDedup]]
+  * repeats a duplicated batch id's verdict once per row.
   */
 object TextDedup {
 
@@ -88,7 +95,8 @@ object TextDedup {
 
   /** Exact n-gram Jaccard similar pairs: |A∩B| / |A∪B| ≥ threshold.
     * Quadratic in shared-shingle pairs — verification / small-corpus
-    * tool; LSH below is the scale path. */
+    * tool; LSH below is the scale path.
+    * Precondition: one row per id (unchecked; see [[TextDedup]]). */
   def jaccardPairs(docs: DataFrame, n: Int = 3, threshold: Double = 0.5,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     jaccardPairsFromTokens(
@@ -97,10 +105,11 @@ object TextDedup {
 
   /** [[jaccardPairs]] over a pre-tokenized (id, toks) frame —
     * identical rows; the token-level twin of
-    * [[prefixJaccardPairsFromTokens]]. */
+    * [[prefixJaccardPairsFromTokens]].
+    * Precondition: one row per id (unchecked; see [[TextDedup]]). */
   def jaccardPairsFromTokens(tokDf: DataFrame, n: Int = 3,
       threshold: Double = 0.5): DataFrame = {
-    val sh = shingleSets(tokDf, n).cache()
+    val sh = shingleSets(tokDf, n).pin(Wide)
     // inverted-index pruning: a shingle in exactly one document can't
     // produce a pair — drop singletons before the self-join (most
     // shingles are unique, so this shrinks the join input by far more
@@ -250,6 +259,8 @@ object TextDedup {
     ranked.filter(col("rnk") <=
       col("sz") - ceil(lit(tau) * col("sz") - 1e-9) + 1)
 
+  /** Prefix-filtered [[jaccardPairs]], identical rows (notes above
+    * [[rankedShingles]]). Precondition: one row per id (unchecked). */
   def prefixJaccardPairs(docs: DataFrame, n: Int = 3, threshold: Double = 0.5,
       idCol: String = "doc_id", textCol: String = "text",
       broadcastIndex: Boolean = true): DataFrame =
@@ -258,7 +269,8 @@ object TextDedup {
       n, threshold, broadcastIndex)
 
   /** [[prefixJaccardPairs]] over a pre-tokenized (id, toks) frame —
-    * identical rows; lets a composed pipeline tokenize once. */
+    * identical rows; lets a composed pipeline tokenize once.
+    * Precondition: one row per id (unchecked; see [[TextDedup]]). */
   def prefixJaccardPairsFromTokens(tokDf: DataFrame, n: Int = 3,
       threshold: Double = 0.5, broadcastIndex: Boolean = true): DataFrame = {
     def bcast(d: DataFrame): DataFrame = if (broadcastIndex) broadcast(d) else d
@@ -271,8 +283,8 @@ object TextDedup {
     // doubly-widened slack admits a sliver of extra candidates;
     // verification discards them.
     val tau = threshold - (5e-5 + 1e-8)
-    val sh = shingleSets(tokDf, n).cache()
-    val prefix = prefixOf(rankedShingles(explodeSetsWithSize(sh)), tau).cache()
+    val sh = shingleSets(tokDf, n).pin(Wide)
+    val prefix = prefixOf(rankedShingles(explodeSetsWithSize(sh)), tau).pin(Wide)
     // Candidate aggregation carries the PPJoin filter inputs out of
     // the prefix self-join for free: po = #prefix collisions, pa/pb =
     // rank of the LAST collision on each side. Under the global order
@@ -297,11 +309,11 @@ object TextDedup {
     val needed = ceil(
       lit(tau / (1.0 + tau)) * (col("sz_a") + col("sz_b")) - 1e-9)
     // survivors feeds BOTH the semi-reduction and the verification
-    // join — cache it so the candidate join runs once, not three times
+    // join — pin it so the candidate join runs once, not three times
     val survivors = cand
       .filter(col("po") +
         least(col("sz_a") - col("pa"), col("sz_b") - col("pb")) >= needed)
-      .cache()
+      .pin(Wide)
     // Verification touches only documents that survive both filters:
     // semi-reduce the per-doc sorted shingle sets to candidate docs
     // (at scale, a vanishing fraction of the corpus — this is where
@@ -311,7 +323,7 @@ object TextDedup {
     val candIds = survivors
       .select(explode(array(col("id_a"), col("id_b"))).as("id"))
       .distinct()
-    val sets = sortedSets(sh, candIds).cache()
+    val sets = sortedSets(sh, candIds).pin(Wide)
     verifiedJaccard(survivors.select(col("id_a"), col("id_b")),
       sets, sets, threshold, bcastSets = broadcastIndex)
       .select(col("id_a"), col("id_b"), col("jaccard"))
@@ -326,10 +338,11 @@ object TextDedup {
     * with [[jaccardPairs]] — quadratic in shared-shingle pairs, so
     * like [[jaccardPairs]] this is the small-corpus verification
     * tool; [[prefixContainmentPairs]] is the identical-result scale
-    * path. */
+    * path.
+    * Precondition: one row per id (unchecked; see [[TextDedup]]). */
   def containmentPairs(docs: DataFrame, n: Int = 3, threshold: Double = 0.6,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val sh = docShingleSets(docs, idCol, textCol, n).cache()
+    val sh = docShingleSets(docs, idCol, textCol, n).pin(Wide)
     val ds = explodeSetsWithSize(sh)
     // singleton pruning via groupBy+join (map-side partials) — see
     // jaccardPairs; sizes ride the explode and group with the pair key
@@ -395,7 +408,8 @@ object TextDedup {
     * index against the full-list probe side (prefixes are the small
     * fraction (1−τ) of corpus shingles); at web scale set it false →
     * sort-merge on the shingle key with AQE skew handling, identical
-    * rows. */
+    * rows.
+    * Precondition: one row per id (unchecked; see [[TextDedup]]). */
   def prefixContainmentPairs(docs: DataFrame, n: Int = 3,
       threshold: Double = 0.6, idCol: String = "doc_id",
       textCol: String = "text", broadcastIndex: Boolean = true): DataFrame = {
@@ -404,11 +418,11 @@ object TextDedup {
     // raw ratio in [τ−5e-5−0.5e-8, τ) also satisfies (both Num.r
     // rounding stages covered — see prefixJaccardPairs)
     val tau = threshold - (5e-5 + 1e-8)
-    val sh = docShingleSets(docs, idCol, textCol, n).cache()
+    val sh = docShingleSets(docs, idCol, textCol, n).pin(Wide)
     // unlike the Jaccard join, BOTH sides of the candidate join need
     // ranked rows (the container side probes with its full df>1 set),
-    // so the shared ranked frame is what gets cached here
-    val ranked = rankedShingles(explodeSetsWithSize(sh)).cache()
+    // so the shared ranked frame is what gets pinned here
+    val ranked = rankedShingles(explodeSetsWithSize(sh)).pin(Wide)
     // contained-side index: first |A| − ⌈τ·|A|⌉ + 1 shingles
     val prefix = prefixOf(ranked, tau)
     val idx = if (broadcastIndex) broadcast(prefix.as("a")) else prefix.as("a")
@@ -424,11 +438,11 @@ object TextDedup {
     val survivors = cand
       .filter(col("po") +
         least(col("sz_a") - col("pa"), col("sz_b") - col("pb")) >= needed)
-      .cache()
+      .pin(Wide)
     val candIds = survivors
       .select(explode(array(col("id_a"), col("id_b"))).as("id"))
       .distinct()
-    val sets = sortedSets(sh, candIds).cache()
+    val sets = sortedSets(sh, candIds).pin(Wide)
     def side(idc: String, suffix: String): DataFrame = {
       val s = sets.select(col("id").as(idc), col("set").as(s"set_$suffix"),
         col("sz").as(s"szv_$suffix"))
@@ -506,14 +520,15 @@ object TextDedup {
   /** Full MinHash-LSH near-dup pipeline: signatures → banded candidate
     * pairs → exact Jaccard verification ≥ threshold (sorted-set
     * merge-intersect over candidate docs only; `broadcastSets=false`
-    * for candidate sets beyond executor memory). */
+    * for candidate sets beyond executor memory).
+    * Precondition: one row per id (unchecked; see [[TextDedup]]). */
   def minhashDedup(docs: DataFrame, n: Int = 3, threshold: Double = 0.5,
       idCol: String = "doc_id", textCol: String = "text",
       broadcastSets: Boolean = true): DataFrame = {
     // one per-doc shingle-array pass feeds signatures and verification
-    val sh = docShingleSets(docs, idCol, textCol, n).cache()
+    val sh = docShingleSets(docs, idCol, textCol, n).pin(Wide)
     val candidates = minhashCandidates(
-      signaturesFromShingles(explodeSets(sh))).cache()
+      signaturesFromShingles(explodeSets(sh))).pin(Wide)
     val candIds = candidates
       .select(explode(array(col("id_a"), col("id_b"))).as("id"))
       .distinct()
@@ -538,7 +553,8 @@ object TextDedup {
     * deployment its signatures/bands are precomputed and stored
     * bucketed by (band, key), so only the (tiny) batch side moves;
     * `maxBucket` bounds degenerate corpus buckets exactly as in
-    * [[minhashCandidates]]. Nothing here is ever corpus×corpus. */
+    * [[minhashCandidates]]. Nothing here is ever corpus×corpus.
+    * Precondition: one row per id (unchecked; see [[TextDedup]]). */
   def incrementalDedup(batch: DataFrame, corpus: DataFrame, n: Int = 3,
       threshold: Double = 0.5, maxBucket: Int = 1000,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
@@ -549,20 +565,17 @@ object TextDedup {
       .agg(count(lit(1)).as("n_exact"))
     val bRest = batch.join(exact.select(col("id").as(idCol)), Seq(idCol), "left_anti")
     // The set tables each feed their band fan-out AND their sorted-set
-    // verification side. The lazy caches are safe here ONLY because
-    // every multi-consumer derivation below them is an EAGER
-    // checkpoint reached through exactly one consumer at a time: the
-    // cBands cut fills cs's cache, the cand cut fills bs's, and the
-    // later verification reads find warm columnar blocks. Lazy all the
-    // way down, the concurrently submitted consumer stages raced the
-    // unfilled caches and re-ran the tokenize+shingle+signature per
-    // racer (run-1 CPU 50.7 s raced vs ~30 s pinned at sf0.1).
-    val bs = docShingleSets(bRest, idCol, textCol, n).cache()
-    val cs = docShingleSets(corpus, idCol, textCol, n).cache()
+    // verification side, so both are pinned before any consumer plans.
+    // Lazy all the way down, the concurrently submitted consumer stages
+    // raced the unfilled caches and re-ran the tokenize+shingle+
+    // signature per racer (run-1 CPU 50.7 s raced vs ~30 s pinned at
+    // sf0.1).
+    val bs = docShingleSets(bRest, idCol, textCol, n).pin(Wide)
+    val cs = docShingleSets(corpus, idCol, textCol, n).pin(Wide)
     // corpus band table feeds its own bucket-size guard AND the join —
     // pin it or the signature pass runs once per consumer
     val cBands = bandKeys(signaturesFromShingles(explodeSets(cs)))
-      .cutLineage()
+      .pin(Narrow)
     val cBsz = cBands.groupBy(col("band"), col("key"))
       .agg(count(lit(1)).as("bucket_size"))
     val cBounded = cBands
@@ -572,7 +585,7 @@ object TextDedup {
         col("a.band") === col("b.band") && col("a.key") === col("b.key"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
-      .cutLineage()
+      .pin(Narrow)
     // verification via sorted-set merge-intersect, each side
     // semi-reduced to its own candidate ids
     val bSets = sortedSets(bs, cand.select(col("id_a").as("id")).distinct())
@@ -644,11 +657,11 @@ object TextDedup {
   def simhashPairs(docs: DataFrame, maxHamming: Int = 6,
       idCol: String = "doc_id", textCol: String = "text",
       broadcastBands: Boolean = true): DataFrame = {
-    // checkpoint: the band table feeds BOTH sides of the self-join, and
-    // the signature computation above it (tokenize + 32 weighted bit
-    // sums over the corpus) is the expensive part — without the
-    // checkpoint it runs once per side
-    // repartition the checkpointed signatures by id: the signature agg
+    // no pin: the band table feeds BOTH sides of the self-join, but
+    // both sides read the one `sigs` exchange below (AQE reuses it), so
+    // the signature computation (tokenize + 32 weighted bit sums over
+    // the corpus) runs once per execution without one.
+    // repartition the signatures by id: the signature agg
     // is AQE-coalesced to its byte-size (tiny — 9 longs/doc) but the
     // work BELOW it fans out ×4 bands and probes the band join with a
     // per-collision popcount — with the coalesced layout that whole
@@ -658,9 +671,8 @@ object TextDedup {
     // probe stages). defaultParallelism = the cluster width, so the
     // shape is scale-adaptive, not a local[32] constant; the exchange
     // still moves only the narrow signature rows.
-    val sigs0 = simhash(docs, idCol, textCol).cutLineage()
-    val sigs = sigs0.repartition(
-      sigs0.sparkSession.sparkContext.defaultParallelism, col("id"))
+    val sigs = simhash(docs, idCol, textCol).repartition(
+      docs.sparkSession.sparkContext.defaultParallelism, col("id"))
     val bands = sigs.select(col("id"), col("simhash"),
       explode(array((0 until 4).map(b =>
         struct(lit(b).as("band"),

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.operators.Lineage.LineageOps
+import graft.operators.Pin._
 
 /** Unigram-LM tokenizer statistics (Kudo 2018, the SentencePiece
   * unigram model) — one HARD-EM round, fully declarative:
@@ -74,7 +74,7 @@ object UnigramLm {
       .select(col("word"), col("f"), col("n"),
         col("c.i").as("i"), col("c.l").as("l"),
         col("word").substr(col("c.i") + 1, col("c.l")).as("piece"))
-      .cutLineage()
+      .pin(Narrow)
 
     // seed probabilities from frequency-weighted occurrence counts
     val seed = cand.groupBy(col("piece")).agg(sum(col("f")).as("scnt"))

@@ -77,7 +77,9 @@ object Winnowing {
     * per doc; cross-doc dups are impossible by keying), so consumers
     * that only need the hash set skip the post-explode `distinct()`
     * exchange entirely. The distinct runs over the already-selected
-    * array (density 2/(w+1)), not the gram list. */
+    * array (density 2/(w+1)), not the gram list.
+    * Precondition: one row per id, unchecked (a guard costs a job per
+    * call); a duplicated id gets each of its rows' hash sets, unmerged. */
   def fingerprintHashes(docs: DataFrame, k: Int = 3, w: Int = 4,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     selections(docs, k, w, idCol, textCol)
@@ -113,7 +115,7 @@ object Winnowing {
   def probeAgainst(batch: DataFrame, corpusIndex: DataFrame,
       k: Int = 3, w: Int = 4, minShared: Int = 2,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val bfp = fingerprintHashes(batch, k, w, idCol, textCol).cache()
+    val bfp = Pin(fingerprintHashes(batch, k, w, idCol, textCol), Pin.Wide)
     val sizes = bfp.groupBy(col("doc_id")).agg(count(lit(1)).as("n_fp"))
     bfp.join(corpusIndex, Seq("fp_hash"))
       .groupBy(col("doc_id"), col("corpus_doc"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.operators.Lineage.LineageOps
+import graft.operators.Pin._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -108,12 +108,12 @@ object CorpusStatsQueries {
 
   def q84TemperatureMix(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Scalars.withScalars
-    // cached: |sources| rows after the one corpus shuffle — the two
+    // pinned: |sources| rows after the one corpus shuffle — the two
     // scalar-cross stages below each re-read this frame, and without
-    // the cache the second would rescan the corpus
+    // the pin the second would rescan the corpus
     val perSource = docs(spark, dir)
       .groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
-      .cache()
+      .pin(Wide)
     val withP = withScalars(perSource, "tot_n" -> sum(col("n_docs")))
       .withColumn("p", col("n_docs").cast("double") / col("tot_n"))
       .withColumn("pa", pow(col("p"), MixAlpha))
@@ -224,7 +224,7 @@ object CorpusStatsQueries {
     // it the blocked pair join runs once per branch
     val edges = Similarity.cosinePairsBlocked(embs(spark, dir), PrTau)
       .select(col("id_a"), col("id_b"))
-      .cutLineage()
+      .pin(Narrow)
     val deg = edges.select(col("id_a").as("node"))
       .unionAll(edges.select(col("id_b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("d"))
@@ -778,8 +778,8 @@ object CorpusStatsQueries {
     def side(t: String): DataFrame =
       ev.filter(col("event_type") === t).select(Kmv.normHash(col("user_id")))
     val (va, pa) = (side("view"), side("purchase"))
-    val synA = Kmv.synopsis(va, KmvK).cache()
-    val synB = Kmv.synopsis(pa, KmvK).cache()
+    val synA = Kmv.synopsis(va, KmvK).pin(Wide)
+    val synB = Kmv.synopsis(pa, KmvK).pin(Wide)
     val (na, hka) = Kmv.stats(synA, KmvK)
     val (nb, hkb) = Kmv.stats(synB, KmvK)
     val estA = Kmv.estimate(na, hka, KmvK)
@@ -983,7 +983,7 @@ object CorpusStatsQueries {
     * scanned, tokenized, and quality-scored ONCE — every downstream
     * stage (shingling, cluster labeling, split/order) reads these
     * columns instead of re-deriving them from `text`. Callers that
-    * fan the base into several jobs should `localCheckpoint()` it
+    * fan the base into several jobs should pin it
     * (the ClusterDedup pattern) so the token arrays are computed once
     * per pipeline, not once per stage. */
   private[graft] def pipelineBase(d: DataFrame): DataFrame =
@@ -1082,10 +1082,10 @@ object CorpusStatsQueries {
   private[graft] def mixPlanRaw(d: DataFrame): DataFrame = {
     val spark = d.sparkSession
     import spark.implicits._
-    // Lineage.record: the collect hides this corpus-scale aggregation
+    // Pin.record: the collect hides this corpus-scale aggregation
     // from every downstream executedPlan — register it with an active
     // plan-gate walk so the gate still inspects the heavy stage
-    val perLang = graft.operators.Lineage.record(d
+    val perLang = graft.operators.Pin.record(d
       .groupBy(col("lang"))
       .agg(sum(TF.tokenCount(col("text"))).cast("long").as("n_tokens"))
       .orderBy(col("lang"))
@@ -1130,13 +1130,13 @@ object CorpusStatsQueries {
     // Global sums ride scalar-agg + one-row broadcast cross joins
     // (Scalars.withScalars), not empty-frame windows — a SinglePartition
     // funnel over even this |langs|-row frame is a plan shape the gate
-    // should not need to exempt. The per-lang frame is cached: every
-    // round's scalar aggregate re-reads the chain, and uncached the
+    // should not need to exempt. The per-lang frame is pinned: every
+    // round's scalar aggregate re-reads the chain, and unpinned the
     // corpus groupBy would re-run once per reference.
     val perLang = d
       .groupBy(col("lang"))
       .agg(sum(TF.tokenCount(col("text"))).cast("long").as("n_tokens"))
-      .cache()
+      .pin(Wide)
     val withB = withScalars(perLang, "bl" -> sum(col("n_tokens")))
       .withColumn("b", col("bl").cast("double")).drop("bl")
       .withColumn("pa", pow(col("n_tokens") / col("b"), lit(MixAlpha)))
@@ -1162,7 +1162,7 @@ object CorpusStatsQueries {
           // aggregate re-executes rounds 1..k−1 (the LabelProp
           // quadratic-re-execution lesson; measured 0.57 → 2.8 s on
           // the bench when left growing)
-          .cutLineage()
+          .pin(Narrow)
     }
   }
 
@@ -1374,11 +1374,11 @@ object CorpusStatsQueries {
 
   def q105CorpusPipeline(spark: SparkSession, dir: String): DataFrame = {
     // ONE text scan for the whole pipeline: tokenize + quality-score
-    // in a single projection, pinned with cache() so the dedup stage
+    // in a single projection, pinned Wide so the dedup stage
     // (shingles from toks), the cluster labeling, and the split/order
     // stage all read columnar in-memory blocks — the composed form
     // previously re-read parquet and re-ran the regex split once per
-    // stage. cache(), NOT localCheckpoint, and the reason is COLUMN
+    // stage. Wide, NOT Narrow, and the reason is COLUMN
     // PRUNING, not warm reruns: the base row carries the full token
     // array, and the many narrow consumers (edge scaffolding reads
     // (id, toks) several times; labeling/split read (doc_id, lang,
@@ -1387,8 +1387,8 @@ object CorpusStatsQueries {
     // CPU-s/run cached vs 67.8 checkpointed at sf0.1. At 100 TB the
     // same structure holds with the base written to an intermediate
     // (columnar) table.
-    val base = pipelineBase(docs(spark, dir)).cache()
-    // cutLineage on the kept-id set: it feeds the join's BROADCAST
+    val base = pipelineBase(docs(spark, dir)).pin(Wide)
+    // a Narrow pin on the kept-id set: it feeds the join's BROADCAST
     // build and, through `train`, GlobalOrder's range-sampling pass
     // and materialization — uncheckpointed, the whole verdict pipeline
     // (edges + CC + argmax joins, ~15 CPU-s/run at sf0.1) executes
@@ -1397,7 +1397,7 @@ object CorpusStatsQueries {
     val kept = canonicalVerdictsFromBase(base)
       .filter(col("kept") && col("quality_score") >= QualityGate)
       .select(col("doc_id"))
-      .cutLineage()
+      .pin(Narrow)
     val train = base.select(col("doc_id"), col("lang")).join(kept, "doc_id")
       .withColumn("split", TF.splitAssign(col("doc_id")))
       .filter(col("split") === "train")
@@ -1516,7 +1516,7 @@ object CorpusStatsQueries {
       "q181_degree_mle" -> ((s, dir) => {
         val edges = Similarity.cosinePairs(embs(s, dir), PrTau)
           .select(col("id_a"), col("id_b"))
-          .cutLineage()
+          .pin(Narrow)
         val deg = edges.select(col("id_a").as("node"))
           .unionAll(edges.select(col("id_b").as("node")))
           .groupBy(col("node")).agg(count(lit(1)).as("d"))
@@ -1583,7 +1583,7 @@ object CorpusStatsQueries {
       .select(col("query_id"), col("nbr_id"), col("rel"))
     val cand = corpus.join(broadcast(topM), Seq("nbr_id"))
       .select(col("query_id"), col("nbr_id"), col("rel"), col("cv"))
-      .cache()
+      .pin(Wide)
     val sims = cand
       .select(col("query_id"), col("nbr_id").as("id_a"), col("cv").as("va"))
       .join(cand.select(col("query_id"), col("nbr_id").as("id_b"),
@@ -1591,7 +1591,7 @@ object CorpusStatsQueries {
       .filter(col("id_a") =!= col("id_b"))
       .withColumn("sim", Num.r4(vec_cosine(col("va"), col("vb"))))
       .select(col("query_id"), col("id_a"), col("id_b"), col("sim"))
-      .cache()
+      .pin(Wide)
     val slim = cand.select(col("query_id"), col("nbr_id"), col("rel"))
     // argmax by max(struct(score, -nbr_id)): score desc, then nbr_id
     // ASC — the window (score desc, nbr_id) tie-break
@@ -1616,7 +1616,7 @@ object CorpusStatsQueries {
         .agg(max(col("sim")).as("ms"))
         .withColumn("score", Num.r4(lit(MmrLam) * col("rel") -
           lit(1.0 - MmrLam) * col("ms"))), j)
-      sel.unionByName(pick).cutLineage()
+      sel.unionByName(pick).pin(Narrow)
     }.orderBy(col("query_id"), col("pick"))
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{TextFunctions => TF}
 import graft.operators.Num
+import graft.operators.Pin._
 
 /** Round-5 additions: corpus-curation operations a training-data
   * pipeline runs between dedup and export — benchmark-contamination
@@ -38,7 +39,6 @@ object CurationQueries {
   private val ContamN = 3
 
   def q55Contamination(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Lineage.LineageOps
     // distinctness of (doc_id, g) is a PER-DOCUMENT property (hk is a
     // function of doc_id), so dedupe in-array: the corpus-wide
     // distinct() exchange of every (doc_id, hk, g) row is pure waste
@@ -52,7 +52,7 @@ object CurationQueries {
         TF.tokens(col("text")).as("toks"))
       .select(col("doc_id"), col("hk"),
         array_distinct(TF.shinglesFromTokens(col("toks"), ContamN)).as("gs"))
-      .cutLineage()
+      .pin(Narrow)
     val g = arr.select(col("doc_id"), col("hk"), explode(col("gs")).as("g"))
     val evalGrams = g.filter(col("hk") < EvalPct).select(col("g")).distinct()
     g.filter(col("hk") >= EvalPct)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{TextFunctions => TF}
 import graft.operators.{Multimodal, Num, Similarity, TextDedup}
+import graft.operators.Pin._
 
 /** LLM-data-pipeline tier (builder brief; BASELINE.json north star):
   * dedup (exact / MinHash-LSH / SimHash / n-gram Jaccard), similarity
@@ -633,8 +634,7 @@ object ExtensionQueries {
   }
 
   private def q26SimhashAlt(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Lineage.LineageOps
-    val sigs = TextDedup.simhash(docs(spark, dir)).cutLineage()
+    val sigs = TextDedup.simhash(docs(spark, dir)).pin(Narrow)
     val perBand = (0 until 4).map { b =>
       val keyed = sigs.select(col("id"), col("simhash"),
         shiftright(col("simhash"), b * 8).bitwiseAND(255).as("key"))

@@ -1,12 +1,12 @@
 package graft.queries
 
-import graft.operators.Lineage.LineageOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{TextFunctions => TF}
-import graft.operators.{Kmv, NaiveBayes, Num, Quantiles, Ridge}
+import graft.operators.{GlobalOrder, Kmv, NaiveBayes, Num, Pin, Quantiles, Ridge}
+import graft.operators.Pin._
 
 /** Round-7 second wave: feature-engineering and corpus-statistics
   * operators a training-data platform layers on top of curation —
@@ -111,8 +111,7 @@ object FeatureQueries {
     // pinned: totals, unigram counts AND bigram counts all read the
     // token table — unpinned, the regex tokenize ran once per consumer
     // (3 corpus passes; the LanguageModel.tokenTable rationale)
-    import graft.operators.Lineage.LineageOps
-    val tok = d.select(TF.tokens(col("text")).as("ts")).cutLineage()
+    val tok = d.select(TF.tokens(col("text")).as("ts")).pin(Narrow)
     val totals = tok.agg(
       sum(size(col("ts"))).cast("double").as("t_tok"),
       sum(greatest(size(col("ts")) - 1, lit(0))).cast("double").as("t_big"))
@@ -318,7 +317,7 @@ object FeatureQueries {
         "l_extendedprice", "l_quantity", Seq(0.5, 0.9), Seq("wmedian", "wp90"))
       // pin before the sort — the range exchange's sampling job would
       // re-execute the cumulative-weight window chain (the q37 finding)
-      .cutLineage()
+      .pin(Narrow)
       .orderBy(col("l_returnflag"))
 
   val q111Sql: String =
@@ -428,7 +427,7 @@ object FeatureQueries {
         row_number().over(Window.partitionBy(col("source")).orderBy(col("u"))))
       .filter(col("rn") <= KovK)
       .select(col("source"), col("u"))
-      .cutLineage()
+      .pin(Narrow)
     val est = syn.groupBy(col("source"))
       .agg(count(lit(1)).as("nd"), max(col("u")).as("hk"))
       .select(col("source"),
@@ -969,7 +968,6 @@ object FeatureQueries {
 
   def q120PerplexityBucket(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.LanguageModel
-    import graft.operators.Lineage.LineageOps
     val d = docs(spark, dir)
     // checkpoint the scored frame: it feeds BOTH the per-lang tercile
     // computation and the final bucket join — uncheckpointed, the whole
@@ -979,7 +977,7 @@ object FeatureQueries {
     val scored = LanguageModel.scoreDocs(d, alpha = 1.0)
       .select(col("doc_id"), col("nll"))
       .join(d.select(col("doc_id"), col("lang")), "doc_id")
-      .cutLineage()
+      .pin(Narrow)
     // fences snapped r8: with r4-snapped nll inputs the tercile rank
     // often lands on TIES (lo == hi) — one engine's interpolation
     // returns exactly lo while the other's lo·(1−f)+hi·f form can be
@@ -1111,7 +1109,7 @@ object FeatureQueries {
   // row_number window — the equality proves the composed rank. ----
 
   def q122Curriculum(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{GlobalOrder, LanguageModel}
+    import graft.operators.LanguageModel
     val scored = LanguageModel.scoreDocs(docs(spark, dir), alpha = 1.0)
       .select(col("doc_id"), col("nll"))
     GlobalOrder.withGlobalPos(scored, 8,
@@ -1173,83 +1171,63 @@ object FeatureQueries {
     * to the single-reducer form: counts are integers, so the offset
     * addition is exact, and the final long→double division is the
     * same operation. */
-  /** Cached count frames of the most recent [[ksDrift]] invocation —
-    * see the registry comment inside; bounded at one invocation. */
-  private val ksCacheRegistry =
-    scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
   private[graft] def ksDrift(d: DataFrame): DataFrame = {
     val spark = d.sparkSession
     import spark.implicits._
     // The two-row result is materialized eagerly (both features in ONE
     // action — the union keeps their subtrees in the same job, as the
-    // fully-lazy form did), and the cached range-partitioned count
-    // frames are tracked in a bounded registry: the next invocation
-    // unpersists them IF its input differs (`sameResult`), so a
-    // long-lived drift-monitoring session that calls ksDrift on
-    // successive snapshots holds at most one invocation's cache —
-    // the lazy form accumulated one frame per feature per call until
-    // LRU eviction. Same-plan repeats keep their warm cache
-    // (CacheManager dedupes identical plans, so they never
-    // accumulated anyway).
-    val (r1, c1) = ksFeatureLazy(d, "n_chars", col("n_chars").cast("long"))
-    val (r2, c2) = ksFeatureLazy(d, "n_tokens",
-      TF.tokenCount(col("text")).cast("long"))
-    ksCacheRegistry.synchronized {
-      val cur = Seq(c1, c2).map(_.queryExecution.analyzed)
-      ksCacheRegistry.filterNot(p =>
-          cur.exists(_.sameResult(p.queryExecution.analyzed)))
-        .foreach(_.unpersist())
-      ksCacheRegistry.clear()
-      ksCacheRegistry ++= Seq(c1, c2)
+    // fully-lazy form did), so the scope releases both features' pinned
+    // count frames before returning: a long-lived drift-monitoring
+    // session that calls ksDrift on successive snapshots holds none.
+    val out = Pin.scope {
+      val r1 = ksFeatureLazy(d, "n_chars", col("n_chars").cast("long"))
+      val r2 = ksFeatureLazy(d, "n_tokens",
+        TF.tokenCount(col("text")).cast("long"))
+      Pin.record(r1.unionByName(r2)
+        .as[(String, Option[Double], Option[Double])]).collect().toSeq
     }
-    val out = graft.operators.Lineage.record(r1.unionByName(r2)
-      .as[(String, Option[Double], Option[Double])]).collect().toSeq
     out.toDF("feature", "ks", "at_value").orderBy(col("feature"))
   }
 
   /** Lazy one-row (feature, ks, at_value) aggregate for one feature,
-    * plus the cached range-partitioned count frame backing it (the
-    * caller owns its lifecycle — [[ksDrift]] unpersists after the
-    * collect; the plan spec inspects the lazy plan). */
+    * over a range-partitioned count frame pinned at construction (the
+    * caller owns its lifecycle — [[ksDrift]] scopes it; the plan spec
+    * inspects the lazy plan). */
   private[graft] def ksFeatureLazy(d: DataFrame, name: String,
-      value: org.apache.spark.sql.Column): (DataFrame, DataFrame) = {
+      value: org.apache.spark.sql.Column): DataFrame = {
     val spark = d.sparkSession
     import spark.implicits._
     val counts = d.select(col("snap"), value.as("v"))
       .groupBy(col("v"))
       .agg(sum(when(col("snap") === "ref", 1L).otherwise(0L)).as("cr"),
         sum(when(col("snap") === "cur", 1L).otherwise(0L)).as("cc"))
-    val ranged = counts.repartitionByRange(8, col("v"))
-      .withColumn("_pid", spark_partition_id().cast("long"))
-      .cache()
-    val parts = graft.operators.Lineage.record(ranged.groupBy(col("_pid"))
-      .agg(sum(col("cr")).as("pr"), sum(col("cc")).as("pc"))
-      .as[(Long, Long, Long)]).collect().sortBy(_._1)
-    val totR = parts.map(_._2).sum.toDouble
-    val totC = parts.map(_._3).sum.toDouble
-    val offs = parts.map(_._1)
-      .zip(parts.map(_._2).scanLeft(0L)(_ + _)
-        .zip(parts.map(_._3).scanLeft(0L)(_ + _)))
-      .map { case (pid, (or, oc)) => (pid, or, oc) }
-    val offDf = offs.toSeq.toDF("_pid", "_or", "_oc")
     // the window repartitions by _pid — a balanced 8-way exchange of
     // the (already aggregated) distinct-value table, never a single
     // reducer; within a _pid group `v` is distinct, so the frame is
     // a total order
     val w = Window.partitionBy(col("_pid")).orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val gaps = ranged.join(broadcast(offDf), "_pid")
+    // per-range subtotals → exclusive prefixes (_or, _oc) plus the
+    // grand totals (_tr, _tc) the CDFs divide by
+    val gaps = GlobalOrder.rangeOffsets(counts, 8, Seq(col("v")),
+        Seq(sum(col("cr")), sum(col("cc")))) { parts =>
+      val pr = parts.map(_.getLong(1))
+      val pc = parts.map(_.getLong(2))
+      parts.map(_.getLong(0))
+        .zip(pr.scanLeft(0L)(_ + _).zip(pc.scanLeft(0L)(_ + _)))
+        .map { case (pid, (or, oc)) =>
+          (pid, or, oc, pr.sum.toDouble, pc.sum.toDouble) }
+        .toDF("_pid", "_or", "_oc", "_tr", "_tc")
+    }
       .withColumn("fr",
-        (col("_or") + sum(col("cr")).over(w)).cast("double") / totR)
+        (col("_or") + sum(col("cr")).over(w)).cast("double") / col("_tr"))
       .withColumn("fc",
-        (col("_oc") + sum(col("cc")).over(w)).cast("double") / totC)
+        (col("_oc") + sum(col("cc")).over(w)).cast("double") / col("_tc"))
       .select(col("v"), Num.r(abs(col("fr") - col("fc")), 6).as("gap"))
-    val res = gaps.agg(max(struct(col("gap"),
+    gaps.agg(max(struct(col("gap"),
         (-col("v").cast("double")).as("nv"))).as("m"))
       .select(lit(name).as("feature"), col("m.gap").as("ks"),
         (-col("m.nv")).as("at_value"))
-    (res, ranged)
   }
 
   val q123Sql: String = {

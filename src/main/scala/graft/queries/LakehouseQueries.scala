@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.operators.Lineage.LineageOps
+import graft.operators.Pin._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -57,7 +57,7 @@ object LakehouseQueries {
       .select(col("doc_id"), col("source"), TF.tokens(col("text")).as("toks"))
       .select(col("doc_id"), col("source"),
         explode(array_distinct(TF.shinglesFromTokens(col("toks"), BoilerN))).as("g"))
-      .cutLineage()
+      .pin(Narrow)
     // Only the span-frequency table needs the (source, g) shuffle;
     // the per-doc scoring is a LEFT join against just the BOILERPLATE
     // spans — only spans shared across docs of a source — then one
@@ -424,7 +424,7 @@ object LakehouseQueries {
       .select(col("doc_id"), TF.tokens(col("text")).as("toks"))
       .select(col("doc_id"),
         posexplode(TF.shinglesFromTokens(col("toks"), SpanL)).as(Seq("pos", "g")))
-      .cutLineage()
+      .pin(Narrow)
     val dup = t.groupBy(col("g"))
       .agg(countDistinct(col("doc_id")).as("df"))
       .filter(col("df") >= 2)
@@ -477,13 +477,13 @@ object LakehouseQueries {
   def q151DedupApply(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val base = docs(spark, dir)
-      .select(col("doc_id"), TF.tokens(col("text")).as("toks")).cache()
+      .select(col("doc_id"), TF.tokens(col("text")).as("toks")).pin(Wide)
     val tok = base
       .select(col("doc_id"), posexplode(col("toks")).as(Seq("pos", "tok")))
     val t = base
       .select(col("doc_id"),
         posexplode(TF.shinglesFromTokens(col("toks"), SpanL)).as(Seq("pos", "g")))
-      .cutLineage()
+      .pin(Narrow)
     val dup = t.groupBy(col("g"))
       .agg(countDistinct(col("doc_id")).as("df"))
       .filter(col("df") >= 2)
@@ -1201,7 +1201,7 @@ object LakehouseQueries {
     }
     var centroids = graft.operators.KMeans.initCentroids(emb, KmTrainK)
     for (_ <- 1 to KmIters) {
-      val means = graft.operators.Lineage.record(assignAlt(centroids)
+      val means = graft.operators.Pin.record(assignAlt(centroids)
         .select(col("cell"), posexplode(col("v").cast("array<double>"))
           .as(Seq("dim", "x")))
         .groupBy(col("cell"), col("dim"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{TextFunctions => TF}
 import graft.operators.{ClusterDedup, Num, TextDedup}
-import graft.operators.Lineage.LineageOps
+import graft.operators.Pin._
 
 /** Round-2 additions: the operations a production training-data
   * pipeline layers on top of pair generation and basic analytics —
@@ -127,7 +127,7 @@ object PipelineQueries {
       // whole child stage, and here that child is the cumulative
       // window over every distinct (group, value) row — measured as
       // the window stage running twice (2× 1.2 CPU-s at sf0.1)
-      .cutLineage()
+      .pin(Narrow)
       .orderBy(col("l_returnflag"))
 
   val q37Sql: String =
@@ -554,7 +554,7 @@ object PipelineQueries {
           col("p50_approx") <= col("p_hi")).as("within_bound"))
       // pin before the sort — the range exchange's sampling job would
       // re-execute the exact-quantile window chain (the q37 finding)
-      .cutLineage()
+      .pin(Narrow)
       .orderBy(col("l_returnflag"))
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.{LanguageModel, Num, Winnowing}
 import graft.functions.{TextFunctions => TF}
+import graft.operators.Pin._
 
 /** Document-signal tier (round 10): substring-level fingerprinting and
   * the stronger LM quality signal.
@@ -40,19 +41,18 @@ object SignalQueries {
     * fingerprints per pair. */
   def q148WinnowPairs(spark: SparkSession, dir: String): DataFrame = {
     // The fingerprint set feeds FOUR consumers (df guard, both sides
-    // of the pair join, per-doc sizes). Checkpoint — NOT cache():
+    // of the pair join, per-doc sizes). Checkpoint — NOT a lazy cache:
     // a lazy cache is raced by the independent consumer stages AQE
     // submits concurrently, and each racer re-runs the tokenize →
     // gram-hash → window-min pipeline for the partitions it touches
     // first (stage attribution showed the winnow compute 3× in one
     // run, 12 of 16 CPU-s). The eager cut materializes it exactly
     // once before any consumer plans.
-    import graft.operators.Lineage.LineageOps
-    val fp = Winnowing.fingerprintHashes(docs(spark, dir), K, W).cutLineage()
+    val fp = Winnowing.fingerprintHashes(docs(spark, dir), K, W).pin(Narrow)
     val kept = fp.join(
       fp.groupBy(col("fp_hash")).agg(count(lit(1)).as("df"))
         .filter(col("df") <= MaxDf),
-      Seq("fp_hash")).cutLineage()
+      Seq("fp_hash")).pin(Narrow)
     val sizes = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("n_fp"))
     val a = kept.select(col("doc_id").as("doc_a"), col("fp_hash"))
     val b = kept.select(col("doc_id").as("doc_b"), col("fp_hash"))
@@ -177,13 +177,12 @@ object SignalQueries {
     // the tokenize/explode+agg for unfilled cache partitions (the
     // q148 pathology; stage attribution showed the explode+agg twice
     // per run here). The eager cut materializes each exactly once.
-    import graft.operators.Lineage.LineageOps
     val d = d0
-      .select(col("doc_id"), TF.tokens(col("text")).as("ts")).cutLineage()
+      .select(col("doc_id"), TF.tokens(col("text")).as("ts")).pin(Narrow)
     val postings = d
       .select(col("doc_id"), size(col("ts")).as("dl"), explode(col("ts")).as("term"))
       .groupBy(col("doc_id"), col("dl"), col("term"))
-      .agg(count(lit(1)).as("tf")).cutLineage()
+      .agg(count(lit(1)).as("tf")).pin(Narrow)
     val stats = postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val corpus = d.agg(count(lit(1)).as("n"), avg(size(col("ts"))).as("avgdl"))
     val q = d.orderBy(col("doc_id")).limit(NQueries)
@@ -343,11 +342,11 @@ object SignalQueries {
       .groupBy(col("doc_id"), col("s"))
       .agg(min(struct(col("h"), (-col("p")).as("np"))).as("m"))
       .select(col("doc_id"), col("m.h").as("fp_hash"))
-      .distinct().cache()
+      .distinct().pin(Wide)
     val kept = fp.join(
       fp.groupBy(col("fp_hash")).agg(count(lit(1)).as("df"))
         .filter(col("df") <= MaxDf),
-      Seq("fp_hash")).cache()
+      Seq("fp_hash")).pin(Wide)
     val sizes = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("n_fp"))
     val a = kept.select(col("doc_id").as("doc_a"), col("fp_hash"))
     val b = kept.select(col("doc_id").as("doc_b"), col("fp_hash"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.Num
-import graft.operators.Lineage.LineageOps
+import graft.operators.Pin._
 
 /** Classic decision-support (TPC-H) tier over the driver testdata.
   *
@@ -595,7 +595,7 @@ object WarehouseQueries {
     // ONE basket-keyed aggregation builds the deduped item set per
     // basket straight from the raw join output: collect_set absorbs
     // the old corpus-wide distinct() exchange, and the basket count /
-    // frequency table / pair expansion all read this cached frame —
+    // frequency table / pair expansion all read this pinned frame —
     // two full-table exchanges (distinct + the A-priori semi-join
     // probe) removed vs the previous form (guide §2.4).
     val sets = Tables.load(spark, dir, "lineitem")
@@ -604,16 +604,16 @@ object WarehouseQueries {
       .select(col("l_orderkey").as("basket"), col("p_brand").as("item"))
       .groupBy(col("basket"))
       .agg(collect_set(col("item")).as("is"))
-      .cache()
+      .pin(Wide)
     val n = broadcast(sets.agg(count(lit(1)).as("n_baskets")))
     // per-item support over the deduped sets = the old per-(basket,
     // item)-distinct counts; tiny table (bounded by the brand domain),
-    // cached so its three consumers don't re-explode the sets
+    // pinned so its three consumers don't re-explode the sets
     val freq = sets.select(explode(col("is")).as("item"))
       .groupBy(col("item"))
       .agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= BasketMinSupCnt)
-      .cache()
+      .pin(Wide)
     // A-priori prune IN-ARRAY (downward closure — an infrequent item
     // cannot appear in a frequent pair): intersect each basket's set
     // with the frequent-item array, then expand ordered pairs with
@@ -731,7 +731,7 @@ object WarehouseQueries {
         Num.r4(col("p99")).as("p99"))
       // pin before the sort — the range exchange's sampling job would
       // re-execute the quantile window chain (the q37 finding)
-      .cutLineage()
+      .pin(Narrow)
       .orderBy(col("o_orderpriority"))
   }
 
@@ -823,16 +823,15 @@ object WarehouseQueries {
 
   def q176AlsRound(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.{TextFunctions => TFn}
-    // localCheckpoint the aggregated ratings matrix: it feeds the
+    // pin (Narrow) the aggregated ratings matrix: it feeds the
     // solve, the prediction join AND the distinct-item count —
     // unpinned, the 3-table join + groupBy re-executes for each read.
     // Post-aggregation it is (users × brands)-bounded, far smaller
-    // than the fact table. Checkpoint, NOT cache(): the three
+    // than the fact table. Narrow, NOT Wide: the three
     // consumers re-read the frame in full, and the columnar
     // encode/decode of the cache measured ~18 CPU-s across the
     // consumer stages at sf0.1 vs ~3 CPU-s to materialize the rows
     // once as checkpoint blocks (Scratch q176 stage attribution).
-    import graft.operators.Lineage.LineageOps
     val ratings = Tables.load(spark, dir, "lineitem")
       .join(broadcast(Tables.load(spark, dir, "part")),
         col("l_partkey") === col("p_partkey"))
@@ -840,7 +839,7 @@ object WarehouseQueries {
         col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_custkey").as("u"), col("p_brand").as("item"))
       .agg(count(lit(1)).cast("double").as("r"))
-      .cutLineage()
+      .pin(Narrow)
     // frozen deterministic item factors: v0 ≡ 1 (bias-like), v1 a
     // hash-spread value in [-0.5, 0.5)
     val v1 = Num.r((TFn.hash60(col("item")) % 1000).cast("double") / 1000 - 0.5, 6)

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{Similarity, TextDedup}
+import graft.operators.{Pin, Similarity, TextDedup}
 
 /** Replay contract at SCALE for the heaviest streaming twins (r14
   * verdict item 7; widened r16): the 18 ReplayContractSpec twins pin
@@ -61,8 +61,8 @@ object ReplayScale {
           .select(col("vec_id"), col("embedding")), "vec_id")
       case other => sys.error(s"unknown twin '$other' (dedup | emb_pairs)")
     }
-    val corpus = all.filter(pmod(col(idCol), lit(10)) =!= 0).cache()
-    val corpusRows = corpus.count() // materialize before streaming starts
+    val corpus = Pin(all.filter(pmod(col(idCol), lit(10)) =!= 0), Pin.Wide)
+    val corpusRows = corpus.count()
     // Deterministic slice membership — xxhash64(id) mod slices (Spark's
     // xxhash64 with its default seed 42), one file per slice:
     // `repartition(slices)` round-robins over the INPUT row order,
@@ -73,17 +73,18 @@ object ReplayScale {
     // fingerprints reproducible from regenerated inputs.
     // (Streamed-vs-batch comparison never depended on this — both
     // sides consume the same files — only cross-run record stability
-    // did.) Cached: the per-slice loop re-reads this selection
-    // `slices` times (r16 advice — uncached it rescanned the source
+    // did.) Pinned: the per-slice loop re-reads this selection
+    // `slices` times (r16 advice — unpinned it rescanned the source
     // per slice, serializing one job into `slices`).
-    val streamSel = all.filter(pmod(col(idCol), lit(10)) === 0).cache()
-    (0 until slices).foreach { k =>
-      streamSel.filter(pmod(xxhash64(col(idCol)), lit(slices)) === k)
-        .repartition(1).sortWithinPartitions(col(idCol))
-        .write.mode(if (k == 0) "overwrite" else "append")
-        .parquet(s"$out/stream")
+    Pin.scope {
+      val streamSel = Pin(all.filter(pmod(col(idCol), lit(10)) === 0), Pin.Wide)
+      (0 until slices).foreach { k =>
+        streamSel.filter(pmod(xxhash64(col(idCol)), lit(slices)) === k)
+          .repartition(1).sortWithinPartitions(col(idCol))
+          .write.mode(if (k == 0) "overwrite" else "append")
+          .parquet(s"$out/stream")
+      }
     }
-    streamSel.unpersist()
     // micro_batches in the record counts on one file per slice: Spark
     // writes no file for an empty task, so a slice with zero matching
     // ids would silently shrink the batch count (r16 advice) — fail

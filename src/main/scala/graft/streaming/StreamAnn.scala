@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{Num, Sampling, Similarity}
+import graft.operators.{Num, Pin, Sampling, Similarity}
 
 /** Streaming ANN enrichment — the serving half of the IVF index
   * (operators.Similarity.ivfTopK is its batch twin): an incoming
@@ -38,11 +38,10 @@ object StreamAnn {
     val cellArr = Similarity.ivfCellArr(centroids) _
     // the index side: one cell per corpus vector (fused argmax — see
     // plans.VecCellArgmax, bit-equal to the composed array_max form);
-    // cache — it is re-read every micro-batch
-    val indexed = corpus.select(col(idCol).as("nbr_id"), col(vecCol).as("cv"),
+    // pinned — it is re-read every micro-batch
+    val indexed = Pin(corpus.select(col(idCol).as("nbr_id"), col(vecCol).as("cv"),
       graft.plans.VectorFunctions.vec_cell_argmax(col(vecCol),
-        centroids.map(_._2.toIndexedSeq).toIndexedSeq).as("cell"))
-      .cache()
+        centroids.map(_._2.toIndexedSeq).toIndexedSeq).as("cell")), Pin.Wide)
     val probes = queries
       .select(col("query_id"), col("qv"),
         explode(slice(sort_array(cellArr(col("qv")), asc = false), 1, nprobe)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.model.Schemas
+import graft.operators.Pin
 import graft.sources.{EventParser, EventSource}
 
 /** End-to-end wiring of the streaming pipeline — the Scala twin of
@@ -153,14 +154,14 @@ object StreamApp {
       .trigger(MetricsSink.trigger(sink))
       .option("checkpointLocation", s"${sink.checkpointRoot}/orders_shared")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val cached = batch.cache()
-          try {
-            deriveDropOff(cached).drop("sample_order_ids")
+        Pin.scope {
+          val pinned = Pin(batch, Pin.Wide)
+          if (!pinned.isEmpty) {
+            deriveDropOff(pinned).drop("sample_order_ids")
               .write.mode("append").parquet(s"$outRoot/drop_off_analysis")
-            deriveFunnel(cached)
+            deriveFunnel(pinned)
               .write.mode("append").parquet(s"$outRoot/real_time_funnel")
-          } finally { cached.unpersist(); () }
+          }
         }
       }
       .start()

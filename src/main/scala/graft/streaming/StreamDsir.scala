@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import graft.operators.{LanguageModel, Num}
+import graft.operators.Pin._
 
 /** Deploy half of the DSIR selection loop (q125 trains/ranks offline;
   * this weighs documents at ingestion): score each arriving micro-batch
@@ -29,9 +30,9 @@ import graft.operators.{LanguageModel, Num}
 object StreamDsir {
 
   /** Frozen model pair from offline training ([[LanguageModel.train]]
-    * over the target slice and the raw pool respectively). Cache or
-    * checkpoint the six tables in the caller — they are re-joined
-    * every micro-batch. */
+    * over the target slice and the raw pool respectively).
+    * [[trainModels]] pins the six tables — they are re-joined every
+    * micro-batch. */
   final case class DsirModels(
       targetCab: DataFrame, targetCa: DataFrame, targetV: DataFrame,
       corpusCab: DataFrame, corpusCa: DataFrame, corpusV: DataFrame)
@@ -42,8 +43,8 @@ object StreamDsir {
       idCol: String = "doc_id", textCol: String = "text"): DsirModels = {
     val (tc, ta, tv) = LanguageModel.train(target, idCol, textCol)
     val (cc, ca, cv) = LanguageModel.train(corpus, idCol, textCol)
-    DsirModels(tc.cache(), ta.cache(), tv.cache(),
-      cc.cache(), ca.cache(), cv.cache())
+    DsirModels(tc.pin(Wide), ta.pin(Wide), tv.pin(Wide),
+      cc.pin(Wide), ca.pin(Wide), cv.pin(Wide))
   }
 
   /** Per-doc (doc_id, nll_target, nll_corpus, w) for one batch — the

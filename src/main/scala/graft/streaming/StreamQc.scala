@@ -47,7 +47,7 @@ object StreamQc {
     * `cur` snapshot, measured against a STATIC reference corpus
     * (yesterday's accepted data) — the production alerting shape
     * "did today's ingest shift?". The reference side of the PSI is
-    * recomputed per batch from `reference`; cache that DataFrame in
+    * recomputed per batch from `reference`; pin that DataFrame in
     * the caller if the source is expensive. Stateless — no watermark
     * or state store; per-batch PSI is a complete answer by itself. */
   def driftStart(docsStream: DataFrame, reference: DataFrame,

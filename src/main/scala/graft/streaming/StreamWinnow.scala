@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
-import graft.operators.Winnowing
+import graft.operators.{Pin, Winnowing}
 
 /** Streaming twin of `operators.Winnowing.probeAgainst`: each
   * micro-batch of an incoming document stream is fingerprinted and
@@ -38,7 +38,7 @@ object StreamWinnow {
       .outputMode("append")
       .trigger(Trigger.ProcessingTime(triggerMs))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(batchId, Winnowing.probeAgainst(
-          batch, corpusIndex, k = k, w = w, minShared = minShared))
+        Pin.scope(sink(batchId, Winnowing.probeAgainst(
+          batch, corpusIndex, k = k, w = w, minShared = minShared)))
       }
 }

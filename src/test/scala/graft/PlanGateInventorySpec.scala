@@ -3,7 +3,7 @@ package graft
 /** The full 190-query plan gate, wired into `sbt test` so a plan
   * regression fails CI instead of waiting for a human `runMain`
   * (round-11 verdict #4). Same walk as `runMain graft.PlanGate`:
-  * every query compiles under Lineage capture at sf0.001, and the
+  * every query compiles under Pin capture at sf0.001, and the
   * main plan PLUS every pre-checkpoint / cached subplan is checked
   * for CartesianProduct, conditioned BNLJ (outside the single
   * justified, condition-tied exemption — q183's micro-batch-broadcast

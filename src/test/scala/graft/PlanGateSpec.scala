@@ -124,13 +124,13 @@ class PlanGateSpec extends SparkSpec {
     } finally bad.unpersist()
   }
 
-  test("a checkpointed anti-pattern is visible through Lineage capture") {
+  test("a checkpointed anti-pattern is visible through Pin capture") {
     val d = data
-    import graft.operators.Lineage
-    val (downstream, cuts) = Lineage.capturing {
-      val edges = Lineage.cut(
+    import graft.operators.Pin
+    val (downstream, cuts) = Pin.capturing {
+      val edges = Pin(
         d.as("a").join(d.as("b"), col("a.v") < col("b.v"))
-          .select(col("a.id").as("id_a"), col("b.id").as("id_b")))
+          .select(col("a.id").as("id_a"), col("b.id").as("id_b")), Pin.Narrow)
       edges.groupBy(col("id_a")).count()
     }
     // the checkpoint hides the join from the main plan…

@@ -186,7 +186,7 @@ class PlanSpec extends SparkSpec {
     // the r18 pre-sort pin checkpoints the joined result, so the
     // quantile/sketch machinery lives in the captured pre-checkpoint
     // plan, not the (cut) final plan — assert over both
-    val (df, cuts) = graft.operators.Lineage.capturing(
+    val (df, cuts) = graft.operators.Pin.capturing(
       PipelineQueries.q37bApproxQuantiles(spark, sf))
     assert(cuts.nonEmpty, "pre-sort checkpoint missing — pin is vacuous")
     val plan = formatted(df) + cuts.map(_.toString).mkString("\n")
@@ -282,7 +282,7 @@ class PlanSpec extends SparkSpec {
 
   test("q87/q181/q79: edge subplans clean INCLUDING behind checkpoints") {
     uncached()
-    // Lineage capture exposes every pre-checkpoint subplan (the graph
+    // Pin capture exposes every pre-checkpoint subplan (the graph
     // operators checkpoint their edge lists, so the main executedPlan
     // alone would be vacuously clean — r11 ADVICE). Gate main + cuts.
     val builds: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
@@ -290,7 +290,7 @@ class PlanSpec extends SparkSpec {
       ("q181_degree_mle", () => graft.queries.CorpusStatsQueries.q181DegreeMle(spark, sf)),
       ("q79_triangles", () => graft.queries.LakehouseQueries.q79Triangles(spark, sf)))
     for ((name, build) <- builds) {
-      val (df, cuts) = graft.operators.Lineage.capturing(build())
+      val (df, cuts) = graft.operators.Pin.capturing(build())
       assert(cuts.nonEmpty, s"$name: no captured checkpoints — pin is vacuous")
       val v = graft.PlanGate.violations(name,
         df.queryExecution.executedPlan +: cuts)
@@ -318,7 +318,7 @@ class PlanSpec extends SparkSpec {
     uncached()
     // the ratings matrix is checkpointed (three consumers), so the
     // 3-way build join lives in the captured pre-checkpoint plan
-    val (df, cuts) = graft.operators.Lineage.capturing(
+    val (df, cuts) = graft.operators.Pin.capturing(
       graft.queries.WarehouseQueries.q176AlsRound(spark, sf))
     assert(cuts.nonEmpty, "ratings checkpoint missing — pin is vacuous")
     val pre = cuts.map(_.toString).mkString("\n")

@@ -1,12 +1,11 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Scratch stage-attribution harness for the r17 optimization round —
-  * NOT part of the driver contract; times named sub-pipelines of hot
-  * queries with the noop sink (guide §1.4) so CPU can be attributed to
-  * stages. Usage: runMain graft.Scratch <sfDir> <case> */
+  * NOT part of the driver contract; times one SparkEntry query with
+  * the noop sink (guide §1.4), and with SCRATCH_STAGES set prints its
+  * per-stage CPU. Usage: runMain graft.Scratch <sfDir> <query> */
 object Scratch {
   /** Per-Spark-stage metrics listener: accumulates (stage name → cpu,
     * runtime, tasks) while a timed region runs. */
@@ -74,17 +73,8 @@ object Scratch {
     val spark = Harness.session()
     Harness.warmup(spark, sfDir)
 
-    which match {
-      case "q105" => ScratchCases.q105(spark, sfDir)
-      case "q159" => ScratchCases.q159(spark, sfDir)
-      case "q148" => ScratchCases.q148(spark, sfDir)
-      case "q176" => ScratchCases.q176(spark, sfDir)
-      case "q150" => ScratchCases.q150(spark, sfDir)
-      case "q86" => ScratchCases.q86(spark, sfDir)
-      case name =>
-        // fall back: time a full declared query, 3 runs like Bench
-        time(spark, name, SparkEntry.queries(name)(spark, sfDir), runs = 3)
-    }
+    // a full declared query, 3 runs like Bench
+    time(spark, which, SparkEntry.queries(which)(spark, sfDir), runs = 3)
     spark.stop()
   }
 }

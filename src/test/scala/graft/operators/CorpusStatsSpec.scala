@@ -463,10 +463,10 @@ class CorpusStatsSpec extends SparkSpec {
 
   test("mix plan: the collected per-lang aggregation registers with the plan-gate walk") {
     // the driver-side fit hides the corpus-scale groupBy behind a
-    // collect — Lineage.record must surface its physical plan to an
+    // collect — Pin.record must surface its physical plan to an
     // active capture so PlanGate keeps inspecting the heavy stage
     val d = graft.Tables.load(spark, sf001, "documents")
-    val (_, recorded) = graft.operators.Lineage.capturing {
+    val (_, recorded) = graft.operators.Pin.capturing {
       CorpusStatsQueries.mixPlanRaw(d)
     }
     assert(recorded.exists(_.toString.contains("n_tokens")),

@@ -314,12 +314,11 @@ class FeatureQueriesSpec extends SparkSpec {
     val d = (1 to 200).map(i =>
         (if (i % 2 == 0) "ref" else "cur", (i % 13 + 1).toLong, s"t$i word"))
       .toDF("snap", "n_chars", "text")
-    // ksDrift itself materializes eagerly (to unpersist its cache), so
+    // ksDrift itself materializes eagerly (to release its pins), so
     // the plan to audit is the lazy per-feature builder it runs
-    val (res, ranged) = FeatureQueries.ksFeatureLazy(
+    val lines = graft.operators.Pin.scope(FeatureQueries.ksFeatureLazy(
       d, "n_chars", org.apache.spark.sql.functions.col("n_chars").cast("long"))
-    val lines = res.queryExecution.executedPlan.toString.split("\n")
-    ranged.unpersist()
+      .queryExecution.executedPlan.toString.split("\n"))
     val sp = lines.indices.filter(lines(_).contains("Exchange SinglePartition"))
     assert(sp.nonEmpty) // the scalar-max merges are expected to be there
     sp.foreach { i =>
