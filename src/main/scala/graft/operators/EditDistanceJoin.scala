@@ -40,9 +40,7 @@ import org.apache.spark.sql.functions._
   * by equi-join), so the gram index carries one row per distinct
   * (string, gram) — shuffled on the gram key, where the count filter's
   * selectivity lives. Hot grams (common substrings) are the skew
-  * risk → AQE skew-join; `broadcastIndex = false` switches the gram
-  * self-join and the shorts branch to sort-merge for index sides
-  * beyond executor memory, identical rows.
+  * risk → AQE skew-join.
   */
 object EditDistanceJoin {
 
@@ -50,12 +48,14 @@ object EditDistanceJoin {
   private val Pad = "\u0001"
 
   /** All unordered pairs (s_a < s_b) of distinct non-null values of
-    * `strCol` with levenshtein ≤ maxDist: (s_a, s_b, dist). */
+    * `strCol` with levenshtein ≤ maxDist: (s_a, s_b, dist).
+    * Precondition: the positional gram index and the shorts set are
+    * broadcast and must fit executor memory; past that Spark fails
+    * the query. */
   def selfJoin(df: DataFrame, strCol: String, maxDist: Int = 2,
-      q: Int = 2, broadcastIndex: Boolean = true): DataFrame = {
+      q: Int = 2): DataFrame = {
     require(maxDist >= 0 && q >= 1, "maxDist >= 0, q >= 1")
     val k = maxDist
-    def bcast(d: DataFrame): DataFrame = if (broadcastIndex) broadcast(d) else d
     val names = Pin(df.select(col(strCol).as("s"))
       .filter(col("s").isNotNull).distinct()
       .withColumn("len", length(col("s"))), Pin.Wide)
@@ -70,7 +70,7 @@ object EditDistanceJoin {
     // main branch: gram-join with length + position filters in the
     // join condition, then the count filter on the grouped matches
     val cand = posGrams.as("a")
-      .join(bcast(posGrams.as("b")),
+      .join(broadcast(posGrams.as("b")),
         col("a.gram") === col("b.gram") && col("a.s") < col("b.s") &&
           abs(col("a.len") - col("b.len")) <= k &&
           abs(col("a.pos") - col("b.pos")) <= k)
@@ -95,7 +95,7 @@ object EditDistanceJoin {
       .withColumn("lb", explode(sequence(
         greatest(col("len") - k, lit(0)), col("len") + k)))
       .as("a")
-      .join(bcast(shorts.as("b")),
+      .join(broadcast(shorts.as("b")),
         col("lb") === col("b.len") && col("a.s") < col("b.s"))
       .select(col("a.s").as("s_a"), col("b.s").as("s_b"))
     // a short pair sharing a gram appears in both branches → distinct

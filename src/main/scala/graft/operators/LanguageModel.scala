@@ -92,23 +92,16 @@ object LanguageModel {
 
   /** Per-document (n_bigrams, nll) under the corpus model. The nll is
     * Num.r4-snapped (ln is libm — the q47 convention).
-    *
-    * `broadcastModel = true` (default) broadcasts the history-count
-    * table c(a,·) — right whenever the vocabulary fits an executor. At
-    * web-corpus scale (10⁸+ distinct tokens) set it false: the scoring
-    * join then sort-merges on the `a` key (same result), instead of
-    * shipping a vocabulary-sized table to every executor. */
+    * Precondition: the history-count table c(a,·) is broadcast and
+    * must fit executor memory; past that Spark fails the query. */
   def scoreDocs(docs: DataFrame, alpha: Double = 1.0,
-      idCol: String = "doc_id", textCol: String = "text",
-      broadcastModel: Boolean = true): DataFrame =
-    scoreDocsFromTokens(tokenTable(docs, idCol, textCol), alpha,
-      broadcastModel)
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    scoreDocsFromTokens(tokenTable(docs, idCol, textCol), alpha)
 
   /** [[scoreDocs]] over an ALREADY-PINNED (doc_id, ts) token table
     * from [[tokenTable]] — the shared-scan entry point for pipelines
     * (DSIR) that score the same frame under several models. */
-  def scoreDocsFromTokens(ts: DataFrame, alpha: Double = 1.0,
-      broadcastModel: Boolean = true): DataFrame = {
+  def scoreDocsFromTokens(ts: DataFrame, alpha: Double = 1.0): DataFrame = {
     // The bigram explode runs once per consumer (the model aggregation
     // and the scoring probe) — a shared explicit-count (a, b)
     // repartition was TRIED to merge them through exchange reuse and
@@ -125,12 +118,11 @@ object LanguageModel {
     // tried)
     val cab = bg.groupBy(col("a"), col("b")).agg(count(lit(1)).as("cab"))
     val ca = cab.groupBy(col("a")).agg(sum(col("cab")).as("ca"))
-    val caJ = if (broadcastModel) broadcast(ca) else ca
     val lp: Column =
       log((col("cab") + lit(alpha)) / (col("ca") + lit(alpha) * col("v")))
     bg
       .join(cab, Seq("a", "b"))
-      .join(caJ, Seq("a"))
+      .join(broadcast(ca), Seq("a"))
       .crossJoin(broadcast(vocabFromTs(ts)))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"),
@@ -153,12 +145,12 @@ object LanguageModel {
     *
     * Scale shape = [[scoreDocs]]: one pinned token table feeds the
     * counting aggregations and the scoring join; history/continuation
-    * tables are vocabulary-sized a-/b-keyed joins (broadcast by
-    * default, `broadcastModel=false` sort-merges at web-corpus
-    * vocabulary); NT is a one-row frame. */
+    * tables are vocabulary-sized a-/b-keyed joins; NT is a one-row
+    * frame. Precondition: the history and continuation tables are
+    * broadcast and must fit executor memory; past that Spark fails
+    * the query. */
   def scoreDocsKneserNey(docs: DataFrame, discount: Double = 0.75,
-      idCol: String = "doc_id", textCol: String = "text",
-      broadcastModel: Boolean = true): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val ts = tokenTable(docs, idCol, textCol)
     val bg = bigramsFromTs(ts)
     // cab feeds FOUR consumers (ha, hb, nt, the scoring join) —
@@ -170,16 +162,14 @@ object LanguageModel {
       .agg(sum(col("cab")).as("ca"), count(lit(1)).as("n1a"))
     val hb = cab.groupBy(col("b")).agg(count(lit(1)).as("n1b"))
     val nt = cab.agg(count(lit(1)).as("nt"))
-    val haJ = if (broadcastModel) broadcast(ha) else ha
-    val hbJ = if (broadcastModel) broadcast(hb) else hb
     val p: Column =
       greatest(col("cab") - lit(discount), lit(0.0)) / col("ca") +
         lit(discount) * col("n1a") / col("ca") *
           (col("n1b").cast("double") / col("nt").cast("double"))
     bg
       .join(cab, Seq("a", "b"))
-      .join(haJ, Seq("a"))
-      .join(hbJ, Seq("b"))
+      .join(broadcast(ha), Seq("a"))
+      .join(broadcast(hb), Seq("b"))
       .crossJoin(broadcast(nt))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"),
@@ -197,39 +187,32 @@ object LanguageModel {
     * become LEFT joins with zero-coalesced counts, nothing else
     * changes.
     *
-    * Scale shape is scoreDocs' — EXCEPT that here `broadcastModel`
-    * hints BOTH model joins, including the full bigram table `cab`.
-    * `cab` grows with the distinct-bigram count (quadratic-ish in
-    * vocabulary), so gate the flag on the BIGRAM-table size fitting an
-    * executor, not the vocabulary: a target-domain model whose vocab
-    * broadcasts fine can still blow the limit through `cab`. Set
-    * `broadcastModel=false` to sort-merge both joins (identical
-    * rows); AQE still converts a genuinely small `cab` to a broadcast
-    * at runtime. */
+    * Precondition: BOTH model tables are broadcast, including the full
+    * bigram table `cab`, and must fit executor memory; past that Spark
+    * fails the query. `cab` grows with the distinct-bigram count
+    * (quadratic-ish in vocabulary), so it is the bigram table, not the
+    * vocabulary, that bounds the model size. */
   def scoreAgainst(docs: DataFrame, cab: DataFrame, ca: DataFrame,
       vocab: DataFrame, alpha: Double = 1.0, idCol: String = "doc_id",
-      textCol: String = "text", broadcastModel: Boolean = true): DataFrame =
+      textCol: String = "text"): DataFrame =
     scoreAgainstFromTokens(
       docs.select(col(idCol).as("doc_id"),
         TextFunctions.tokens(col(textCol)).as("ts")),
-      cab, ca, vocab, alpha, broadcastModel)
+      cab, ca, vocab, alpha)
 
   /** [[scoreAgainst]] over a (doc_id, ts) token table — pass a PINNED
     * table from [[tokenTable]] to share the tokenize pass with other
     * scorers of the same frame (no pin needed when this is the only
     * consumer: the bigram explode reads the table once). */
   def scoreAgainstFromTokens(ts: DataFrame, cab: DataFrame, ca: DataFrame,
-      vocab: DataFrame, alpha: Double = 1.0,
-      broadcastModel: Boolean = true): DataFrame = {
+      vocab: DataFrame, alpha: Double = 1.0): DataFrame = {
     val bg = bigramsFromTs(ts)
-    val caJ = if (broadcastModel) broadcast(ca) else ca
-    val cabJ = if (broadcastModel) broadcast(cab) else cab
     val lp: Column =
       log((coalesce(col("cab"), lit(0L)) + lit(alpha)) /
         (coalesce(col("ca"), lit(0L)) + lit(alpha) * col("v")))
     bg
-      .join(cabJ, Seq("a", "b"), "left")
-      .join(caJ, Seq("a"), "left")
+      .join(broadcast(cab), Seq("a", "b"), "left")
+      .join(broadcast(ca), Seq("a"), "left")
       .crossJoin(broadcast(vocab))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"),

@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * construction, re-expressed as pure DataFrame transforms so they
   * run against any snapshot + changes pair.
   *
-  * 100 TB notes: `upsert` is one anti-join (keyed shuffle or broadcast
-  * when the change batch is small — the common CDC case) plus a
+  * 100 TB notes: `upsert` is one broadcast anti-join (the change
+  * batch is small next to the snapshot — the CDC case) plus a
   * union — no full-table rewrite logic here; partition-level file
   * replacement is the writer's concern. `scd2` is two windows over the
   * same (key, ts) partitioning — Catalyst plans them in a single sort
@@ -25,19 +25,12 @@ object Merge {
     * `changes` takes the `changes` row (matched → update); keys absent
     * from `changes` keep their `base` row; keys new to `changes`
     * insert. `changes` must have one row per key (CDC-compacted) and
-    * `base`'s schema.
-    *
-    * `broadcastChanges` — CDC batches are typically tiny next to the
-    * snapshot; broadcasting the key side keeps the snapshot from
-    * shuffling at all. Pass false for snapshot-scale change sets and
-    * let AQE pick the join strategy.
+    * `base`'s schema. Precondition: `changes`' key set is broadcast
+    * and must fit executor memory; past that Spark fails the query.
     */
-  def upsert(base: DataFrame, changes: DataFrame, keys: Seq[String],
-      broadcastChanges: Boolean = true): DataFrame = {
-    val keyRows = changes.select(keys.map(col): _*)
-    val keySide = if (broadcastChanges) broadcast(keyRows) else keyRows
-    base.join(keySide, keys, "left_anti").unionByName(changes)
-  }
+  def upsert(base: DataFrame, changes: DataFrame, keys: Seq[String]): DataFrame =
+    base.join(broadcast(changes.select(keys.map(col): _*)), keys, "left_anti")
+      .unionByName(changes)
 
   /** SCD Type-2 history from an event log: per key, collapse
     * consecutive equal states and emit one versioned row per state

@@ -133,11 +133,14 @@ object ProductQuantizer {
     * O(n²) total (measured 22.9× time for 10× data on the sf0.1→sf1
     * decade); IVF-PQ with derived nlist is the scale path, and the
     * flat form (`nprobe = 0`) remains the exact-ADC recall baseline.
+    *
+    * Precondition: the query side (one ADC table per query, times
+    * `nprobe` cells under IVF-PQ) is broadcast and must fit executor
+    * memory; past that Spark fails the query.
     */
   def adcTopK(emb: DataFrame, cb: Codebooks, queryPred: Column, k: Int,
       candN: Int = 32, idCol: String = "vec_id", vecCol: String = "embedding",
-      broadcastQueries: Boolean = true, nprobe: Int = 0,
-      nlist: Int = 0): DataFrame = {
+      nprobe: Int = 0, nlist: Int = 0): DataFrame = {
     val coarse: Option[Array[(Int, Array[Double])]] =
       if (nprobe <= 0) None
       else {
@@ -186,7 +189,7 @@ object ProductQuantizer {
             Similarity.ivfCellArr(cent)(col("qv")), asc = false), 1, nprobe)
             .getField("cell")))
     }
-    val querySide = if (broadcastQueries) broadcast(queries) else queries
+    val querySide = broadcast(queries)
     val scan = coarse match {
       case None => index.join(querySide, col("nbr_id") =!= col("query_id"))
       case Some(_) => index.join(querySide, Seq("cell"))

@@ -18,10 +18,7 @@ import org.apache.spark.sql.functions._
   * partials. (The previous formulation — all columns' countDistincts
   * in one global agg — planned through Catalyst's Expand with every
   * algebraic agg buffer riding all ×cols branches: measured 4.7 s vs
-  * ~1 s for this shape on 150k rows × 6 columns.) At extreme
-  * cardinalities swap `exactDistinct = false` to HLL
-  * (approx_count_distinct) and the whole profile becomes a plain
-  * one-pass algebraic aggregate.
+  * ~1 s for this shape on 150k rows × 6 columns.)
   */
 object Profiler {
 
@@ -32,8 +29,7 @@ object Profiler {
 
   final case class ColSpec(name: String, kind: Kind)
 
-  def profile(df: DataFrame, cols: Seq[ColSpec],
-      exactDistinct: Boolean = true): DataFrame = {
+  def profile(df: DataFrame, cols: Seq[ColSpec]): DataFrame = {
     val entries = array(cols.map { cs =>
       val c = col(cs.name)
       // numeric view of the column for min/max: timestamps → epoch
@@ -103,55 +99,38 @@ object Profiler {
     val base = df.select(explode(entries).as("s")).select(col("s.*"))
     val name = element_at(array(cols.map(cs => lit(cs.name)): _*),
       col("col_ord") + 1).as("col_name")
-    if (!exactDistinct)
-      // approximate path: one algebraic pass, HLL riding the buffers
-      base.groupBy(col("col_ord"))
-        .agg(
-          count(when(!col("is_null"), 1)).as("n"),
-          count(when(col("is_null"), 1)).as("nulls"),
-          approx_count_distinct(when(!col("is_null"),
-            struct(col("id_long"), col("id_num"), col("id_str"))))
-            .as("n_distinct"),
-          min(col("num_view")).as("min_num"),
-          max(col("num_view")).as("max_num"),
-          min(col("str_view")).as("min_str"),
-          max(col("str_view")).as("max_str"))
-        .select(name, col("n"), col("nulls"), col("n_distinct"),
-          col("min_num"), col("max_num"), col("min_str"), col("max_str"))
-    else {
-      // exact path, manual two-phase distinct: a mixed
-      // distinct+algebraic Aggregate plans every min/max/count buffer
-      // through all three phases of the distinct rewrite — measured
-      // 2.4 s vs 1.4 s for this split on 150k rows × 6 columns. Phase
-      // 1 dedups to (ord, identity) with a per-value count (map-side
-      // hash agg collapses duplicates before the only wide shuffle);
-      // phase 2 rolls the per-column stats up FROM the distinct rows:
-      // n = Σ cnt, n_distinct = row count, and min/max over distinct
-      // values ≡ min/max over the multiset. The views ride phase 1 as
-      // GROUPING keys, not first() aggregates: they are functions of
-      // the identity slots (same group cardinality either way), and a
-      // first(str_view) aggregate carries a string BUFFER, which
-      // disqualifies HashAggregateExec (string buffers are not
-      // UnsafeRow-mutable) — the whole phase-1 pass fell back to a
-      // SortAggregate, a full sort of every exploded struct (measured
-      // ~2 CPU-s single-task on 150k rows × 6 columns; hash-agg keys
-      // may be strings, only buffers must be fixed-width).
-      val pre = base
-        .groupBy(col("col_ord"), col("is_null"), col("id_long"),
-          col("id_num"), col("id_str"), col("num_view"), col("str_view"))
-        .agg(count(lit(1)).as("cnt"))
-      pre.groupBy(col("col_ord"))
-        .agg(
-          coalesce(sum(when(!col("is_null"), col("cnt"))), lit(0L)).as("n"),
-          coalesce(sum(when(col("is_null"), col("cnt"))), lit(0L)).as("nulls"),
-          count(when(!col("is_null"), 1)).as("n_distinct"),
-          min(col("num_view")).as("min_num"),
-          max(col("num_view")).as("max_num"),
-          min(col("str_view")).as("min_str"),
-          max(col("str_view")).as("max_str"))
-        .select(name, col("n"), col("nulls"), col("n_distinct"),
-          col("min_num"), col("max_num"), col("min_str"), col("max_str"))
-    }
+    // manual two-phase distinct: a mixed distinct+algebraic Aggregate
+    // plans every min/max/count buffer through all three phases of
+    // the distinct rewrite — measured
+    // 2.4 s vs 1.4 s for this split on 150k rows × 6 columns. Phase
+    // 1 dedups to (ord, identity) with a per-value count (map-side
+    // hash agg collapses duplicates before the only wide shuffle);
+    // phase 2 rolls the per-column stats up FROM the distinct rows:
+    // n = Σ cnt, n_distinct = row count, and min/max over distinct
+    // values ≡ min/max over the multiset. The views ride phase 1 as
+    // GROUPING keys, not first() aggregates: they are functions of
+    // the identity slots (same group cardinality either way), and a
+    // first(str_view) aggregate carries a string BUFFER, which
+    // disqualifies HashAggregateExec (string buffers are not
+    // UnsafeRow-mutable) — the whole phase-1 pass fell back to a
+    // SortAggregate, a full sort of every exploded struct (measured
+    // ~2 CPU-s single-task on 150k rows × 6 columns; hash-agg keys
+    // may be strings, only buffers must be fixed-width).
+    val pre = base
+      .groupBy(col("col_ord"), col("is_null"), col("id_long"),
+        col("id_num"), col("id_str"), col("num_view"), col("str_view"))
+      .agg(count(lit(1)).as("cnt"))
+    pre.groupBy(col("col_ord"))
+      .agg(
+        coalesce(sum(when(!col("is_null"), col("cnt"))), lit(0L)).as("n"),
+        coalesce(sum(when(col("is_null"), col("cnt"))), lit(0L)).as("nulls"),
+        count(when(!col("is_null"), 1)).as("n_distinct"),
+        min(col("num_view")).as("min_num"),
+        max(col("num_view")).as("max_num"),
+        min(col("str_view")).as("min_str"),
+        max(col("str_view")).as("max_str"))
+      .select(name, col("n"), col("nulls"), col("n_distinct"),
+        col("min_num"), col("max_num"), col("min_str"), col("max_str"))
   }
 
   /** Fixed-width histogram of a numeric column, optionally per group:

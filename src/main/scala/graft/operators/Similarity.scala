@@ -170,11 +170,13 @@ object Similarity {
     * recall is the documented semantics (property-tested: results ⊆
     * the exact band set, band respected, ranks well-formed).
     * `nprobe` defaults higher than top-k's (band members sit farther
-    * from the query's own centroid than nearest neighbors do). */
+    * from the query's own centroid than nearest neighbors do).
+    * Precondition: the probe side (queries × nprobe cells) is
+    * broadcast and must fit executor memory; past that Spark fails
+    * the query. */
   def hardNegativesIvf(emb: DataFrame, queryPred: Column, k: Int,
       lo: Double, hi: Double, nlist: Int = 0, nprobe: Int = 8,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      broadcastQueries: Boolean = true): DataFrame = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val nl = if (nlist > 0) nlist else deriveNlist(emb.count())
     val centroids = ivfCentroids(emb, nl, idCol, vecCol)
     def cellArr(v: Column): Column = ivfCellArr(centroids)(v)
@@ -187,8 +189,7 @@ object Similarity {
       .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
         explode(slice(sort_array(cellArr(col(vecCol)), asc = false), 1, nprobe)
           .getField("cell")).as("cell"))
-    val probeSide = if (broadcastQueries) broadcast(probes) else probes
-    indexed.join(probeSide, Seq("cell"))
+    indexed.join(broadcast(probes), Seq("cell"))
       .filter(col("id") =!= col("query_id"))
       .withColumn("cos", Num.r4(cosine(col("qv"), col("v"))))
       .filter(col("cos") >= lo && col("cos") < hi)
@@ -602,10 +603,13 @@ object Similarity {
   private[graft] def deriveNlistSql(table: String): String =
     s"(SELECT 1 << least(12, greatest(4, length(bin(count(*))) // 2)) FROM $table)"
 
+  /** ANN top-k over an IVF index: each query probes its `nprobe`
+    * nearest of `nlist` cells (√n-derived when 0). Precondition: the
+    * probe side (queries × nprobe cells) is broadcast and must fit
+    * executor memory; past that Spark fails the query. */
   def ivfTopK(emb: DataFrame, queryPred: Column, k: Int,
       nlist: Int = 0, nprobe: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      broadcastQueries: Boolean = true): DataFrame = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val nl = if (nlist > 0) nlist else deriveNlist(emb.count())
     val centroids = ivfCentroids(emb, nl, idCol, vecCol)
     def cellArr(v: Column): Column = ivfCellArr(centroids)(v)
@@ -627,13 +631,9 @@ object Similarity {
         explode(slice(sort_array(cellArr(col(vecCol)), asc = false), 1, nprobe)
           .getField("cell")).as("cell"))
     // each corpus vector lives in exactly one cell, so a (query, nbr)
-    // pair can match at most once — no distinct needed. With a
-    // selective queryPred the probes are query-sized → broadcast and
-    // the corpus side never shuffles; for an unselective predicate
-    // pass broadcastQueries=false and let AQE pick the strategy
-    // (forcing the hint there would broadcast a corpus-scale table).
-    val probeSide = if (broadcastQueries) broadcast(probes) else probes
-    val candidates = indexed.join(probeSide, Seq("cell"))
+    // pair can match at most once — no distinct needed. The probes
+    // are query-sized → broadcast and the corpus side never shuffles.
+    val candidates = indexed.join(broadcast(probes), Seq("cell"))
       .filter(col("id") =!= col("query_id"))
       .select(col("query_id"), col("qv"), col("id").as("nbr_id"), col("v"))
     candidates
@@ -647,11 +647,12 @@ object Similarity {
 
   /** ANN top-k via multi-table hyperplane LSH: queries probe their
     * bucket in each table; union of candidates ranked exactly.
-    * Recall vs bruteForceTopK is property-tested. */
+    * Recall vs bruteForceTopK is property-tested. Precondition: the
+    * keyed query side is broadcast and must fit executor memory; past
+    * that Spark fails the query. */
   def lshTopK(emb: DataFrame, queryPred: Column, k: Int,
       numPlanes: Int = 6, numTables: Int = 8, dim: Int = 64,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      broadcastQueries: Boolean = true): DataFrame = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     // one fused expression computes every table's key in a single
     // vector pass (plans.VecLshKeys); posexplode recovers (t, key)
     val planeMatrix: IndexedSeq[IndexedSeq[Double]] =
@@ -662,15 +663,12 @@ object Similarity {
         posexplode(graft.plans.VectorFunctions.vec_lsh_keys(
           col(v), planeMatrix, numPlanes)).as(Seq("t", "key")))
     // corpus keyed once; queries are the filtered (small) side and key
-    // themselves directly — broadcast (so the corpus never shuffles)
-    // when queryPred is selective; broadcastQueries=false degrades to
-    // an AQE-chosen join for corpus-scale query sides
+    // themselves directly — broadcast, so the corpus never shuffles
     val buckets = withKeys(
       emb.select(col(idCol).as("id"), col(vecCol).as("v")), "id", "v")
     val queries = withKeys(emb.filter(queryPred)
       .select(col(idCol).as("query_id"), col(vecCol).as("qv")), "query_id", "qv")
-    val querySide = if (broadcastQueries) broadcast(queries) else queries
-    val candidates = buckets.join(querySide, Seq("t", "key"))
+    val candidates = buckets.join(broadcast(queries), Seq("t", "key"))
       .filter(col("id") =!= col("query_id"))
       .select(col("query_id"), col("qv"), col("id").as("nbr_id"), col("v"))
       .distinct()

@@ -150,16 +150,13 @@ object TextDedup {
   /** Exact Jaccard of candidate pairs (columns id_a, id_b) against
     * sorted-set frames for each side, via the codegen merge-intersect
     * (the interpreted `size(array_intersect(..))` dominated every
-    * verification stage it appeared in). `bcastSets` broadcasts the
-    * semi-reduced set frames — right while candidate docs fit an
-    * executor; false → sort-merge on the id keys, identical result. */
+    * verification stage it appeared in). The semi-reduced set frames
+    * are broadcast: candidate docs must fit executor memory. */
   private def verifiedJaccard(cand: DataFrame, setsA: DataFrame,
-      setsB: DataFrame, threshold: Double, bcastSets: Boolean): DataFrame = {
-    def side(sets: DataFrame, idc: String, suffix: String): DataFrame = {
-      val s = sets.select(col("id").as(idc), col("set").as(s"set_$suffix"),
-        col("sz").as(s"sz_$suffix"))
-      if (bcastSets) broadcast(s) else s
-    }
+      setsB: DataFrame, threshold: Double): DataFrame = {
+    def side(sets: DataFrame, idc: String, suffix: String): DataFrame =
+      broadcast(sets.select(col("id").as(idc), col("set").as(s"set_$suffix"),
+        col("sz").as(s"sz_$suffix")))
     cand
       .join(side(setsA, "id_a", "a"), "id_a")
       .join(side(setsB, "id_b", "b"), "id_b")
@@ -195,13 +192,6 @@ object TextDedup {
     * |A∩B| ≤ po + min(sz_a−pa, sz_b−pb). Only survivors are verified,
     * by `array_intersect` against per-document sorted shingle sets
     * semi-reduced to candidate docs.
-    *
-    * `broadcastIndex = true` (default) broadcasts the prefix index for
-    * the candidate self-join and the semi-reduced shingle sets for
-    * verification — right whenever the PREFIXES of the corpus fit an
-    * executor (prefixes are ~(1−τ)·corpus-shingles; at web scale set
-    * it false to get sort-merge joins on the shingle / id keys with
-    * AQE skew handling — the result is identical).
     */
   /** (id, h, sz, rnk) for every df>1 shingle occurrence, ranked under
     * the global canonical order (hash-bucket document frequency asc,
@@ -260,20 +250,21 @@ object TextDedup {
       col("sz") - ceil(lit(tau) * col("sz") - 1e-9) + 1)
 
   /** Prefix-filtered [[jaccardPairs]], identical rows (notes above
-    * [[rankedShingles]]). Precondition: one row per id (unchecked). */
+    * [[rankedShingles]]). Preconditions: one row per id (unchecked);
+    * the prefix index (~(1−τ) of corpus shingles) and the candidate
+    * docs' shingle sets are broadcast and must fit executor memory —
+    * past that Spark fails the query. */
   def prefixJaccardPairs(docs: DataFrame, n: Int = 3, threshold: Double = 0.5,
-      idCol: String = "doc_id", textCol: String = "text",
-      broadcastIndex: Boolean = true): DataFrame =
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     prefixJaccardPairsFromTokens(
       docs.select(col(idCol).as("id"), tokens(col(textCol)).as("toks")),
-      n, threshold, broadcastIndex)
+      n, threshold)
 
   /** [[prefixJaccardPairs]] over a pre-tokenized (id, toks) frame —
     * identical rows; lets a composed pipeline tokenize once.
-    * Precondition: one row per id (unchecked; see [[TextDedup]]). */
+    * Preconditions as [[prefixJaccardPairs]]. */
   def prefixJaccardPairsFromTokens(tokDf: DataFrame, n: Int = 3,
-      threshold: Double = 0.5, broadcastIndex: Boolean = true): DataFrame = {
-    def bcast(d: DataFrame): DataFrame = if (broadcastIndex) broadcast(d) else d
+      threshold: Double = 0.5): DataFrame = {
     // Pruning must use a SNAP-SLACK-relaxed τ: verification accepts the
     // r4-SNAPPED ratio ≥ τ, and Num.r snaps in TWO stages (r8 then
     // r4), each rounding half-ties up — so a raw ratio as low as
@@ -296,7 +287,7 @@ object TextDedup {
     // The length filter (J ≤ min/max of sizes) sits IN the join
     // condition so doomed collisions die before the pair shuffle.
     val cand = prefix.as("a")
-      .join(bcast(prefix.as("b")),
+      .join(broadcast(prefix.as("b")),
         col("a.h") === col("b.h") && col("a.id") < col("b.id") &&
           least(col("a.sz"), col("b.sz")) >=
             lit(tau) * greatest(col("a.sz"), col("b.sz")) - 1e-9)
@@ -325,7 +316,7 @@ object TextDedup {
       .distinct()
     val sets = sortedSets(sh, candIds).pin(Wide)
     verifiedJaccard(survivors.select(col("id_a"), col("id_b")),
-      sets, sets, threshold, bcastSets = broadcastIndex)
+      sets, sets, threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
@@ -404,15 +395,13 @@ object TextDedup {
     * docs semi-reduced to candidates — so pruning can only drop
     * candidates the verifier would reject.
     *
-    * `broadcastIndex = true` broadcasts the contained-side prefix
-    * index against the full-list probe side (prefixes are the small
-    * fraction (1−τ) of corpus shingles); at web scale set it false →
-    * sort-merge on the shingle key with AQE skew handling, identical
-    * rows.
-    * Precondition: one row per id (unchecked; see [[TextDedup]]). */
+    * Preconditions: one row per id (unchecked; see [[TextDedup]]); the
+    * contained-side prefix index (~(1−τ) of corpus shingles) and the
+    * candidate docs' shingle sets are broadcast and must fit executor
+    * memory — past that Spark fails the query. */
   def prefixContainmentPairs(docs: DataFrame, n: Int = 3,
       threshold: Double = 0.6, idCol: String = "doc_id",
-      textCol: String = "text", broadcastIndex: Boolean = true): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     // snap-slack-relaxed τ for pruning, as in prefixJaccardPairs:
     // verification accepts the r4-snapped containment ≥ τ, which a
     // raw ratio in [τ−5e-5−0.5e-8, τ) also satisfies (both Num.r
@@ -425,9 +414,8 @@ object TextDedup {
     val ranked = rankedShingles(explodeSetsWithSize(sh)).pin(Wide)
     // contained-side index: first |A| − ⌈τ·|A|⌉ + 1 shingles
     val prefix = prefixOf(ranked, tau)
-    val idx = if (broadcastIndex) broadcast(prefix.as("a")) else prefix.as("a")
     val cand = ranked.as("b")
-      .join(idx, col("a.h") === col("b.h") &&
+      .join(broadcast(prefix.as("a")), col("a.h") === col("b.h") &&
         col("a.id") =!= col("b.id") &&
         col("b.sz") >= lit(tau) * col("a.sz") - 1e-9)
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"),
@@ -443,11 +431,9 @@ object TextDedup {
       .select(explode(array(col("id_a"), col("id_b"))).as("id"))
       .distinct()
     val sets = sortedSets(sh, candIds).pin(Wide)
-    def side(idc: String, suffix: String): DataFrame = {
-      val s = sets.select(col("id").as(idc), col("set").as(s"set_$suffix"),
-        col("sz").as(s"szv_$suffix"))
-      if (broadcastIndex) broadcast(s) else s
-    }
+    def side(idc: String, suffix: String): DataFrame =
+      broadcast(sets.select(col("id").as(idc), col("set").as(s"set_$suffix"),
+        col("sz").as(s"szv_$suffix")))
     survivors.select(col("id_a"), col("id_b"))
       .join(side("id_a", "a"), "id_a")
       .join(side("id_b", "b"), "id_b")
@@ -519,12 +505,12 @@ object TextDedup {
 
   /** Full MinHash-LSH near-dup pipeline: signatures → banded candidate
     * pairs → exact Jaccard verification ≥ threshold (sorted-set
-    * merge-intersect over candidate docs only; `broadcastSets=false`
-    * for candidate sets beyond executor memory).
-    * Precondition: one row per id (unchecked; see [[TextDedup]]). */
+    * merge-intersect over candidate docs only).
+    * Preconditions: one row per id (unchecked; see [[TextDedup]]); the
+    * candidate docs' shingle sets are broadcast and must fit executor
+    * memory — past that Spark fails the query. */
   def minhashDedup(docs: DataFrame, n: Int = 3, threshold: Double = 0.5,
-      idCol: String = "doc_id", textCol: String = "text",
-      broadcastSets: Boolean = true): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     // one per-doc shingle-array pass feeds signatures and verification
     val sh = docShingleSets(docs, idCol, textCol, n).pin(Wide)
     val candidates = minhashCandidates(
@@ -533,7 +519,7 @@ object TextDedup {
       .select(explode(array(col("id_a"), col("id_b"))).as("id"))
       .distinct()
     val sets = sortedSets(sh, candIds)
-    verifiedJaccard(candidates, sets, sets, threshold, broadcastSets)
+    verifiedJaccard(candidates, sets, sets, threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
@@ -590,7 +576,7 @@ object TextDedup {
     // semi-reduced to its own candidate ids
     val bSets = sortedSets(bs, cand.select(col("id_a").as("id")).distinct())
     val cSets = sortedSets(cs, cand.select(col("id_b").as("id")).distinct())
-    val near = verifiedJaccard(cand, bSets, cSets, threshold, bcastSets = true)
+    val near = verifiedJaccard(cand, bSets, cSets, threshold)
       .groupBy(col("id_a").as("id"))
       .agg(count(lit(1)).as("n_near"))
     batch.select(col(idCol).as("id"))
@@ -649,14 +635,11 @@ object TextDedup {
 
   /** SimHash near-dup pairs with band blocking: 4 bands of 8 bits; any
     * shared band → candidate; keep pairs with Hamming distance ≤ k.
-    *
-    * `broadcastBands = true` (default) broadcasts one side of the band
-    * self-join — right whenever the signature table (9 longs/doc) fits
-    * an executor; at full corpus scale set it false to get a sort-merge
-    * join on (band, key) with AQE skew handling. */
+    * Precondition: one side of the band self-join (4 bands × the
+    * signature table) is broadcast and must fit executor memory; past
+    * that Spark fails the query. */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 6,
-      idCol: String = "doc_id", textCol: String = "text",
-      broadcastBands: Boolean = true): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     // no pin: the band table feeds BOTH sides of the self-join, but
     // both sides read the one `sigs` exchange below (AQE reuses it), so
     // the signature computation (tokenize + 32 weighted bit sums over
@@ -679,12 +662,11 @@ object TextDedup {
           shiftright(col("simhash"), b * 8).bitwiseAND(255).as("key"))): _*))
         .as("bk"))
       .select(col("id"), col("simhash"), col("bk.band"), col("bk.key"))
-    val right = if (broadcastBands) broadcast(bands.as("b")) else bands.as("b")
     // hamming filter BELOW the dedup: evaluated during the join probe,
     // so the distinct only sees surviving pairs (~4% of candidates),
     // not every band collision
     bands.as("a")
-      .join(right, col("a.band") === col("b.band") &&
+      .join(broadcast(bands.as("b")), col("a.band") === col("b.band") &&
         col("a.key") === col("b.key") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))

@@ -32,9 +32,7 @@ import graft.operators.Pin._
   *
   * Scale shape: EVERYTHING here is bounded by the vocabulary, not the
   * corpus — one corpus scan builds the word-frequency table, and all
-  * later joins/aggregations run per distinct word or per piece. The
-  * piece-probability join broadcasts by default
-  * (`broadcastPieces=false` sort-merges for 10⁸-piece inventories).
+  * later joins/aggregations run per distinct word or per piece.
   * Words longer than `maxWordLen` chars are excluded from the model
   * (the SentencePiece max-sentencepiece-length discipline; documents
   * full of URLs would otherwise blow the per-word DP width).
@@ -50,10 +48,11 @@ object UnigramLm {
       .filter(col("n") <= maxWordLen)
 
   /** One hard-EM round: (piece, cnt, prob) after re-estimation,
-    * ranked by (cnt desc, piece), top `topK`. */
+    * ranked by (cnt desc, piece), top `topK`. Precondition: the
+    * piece-probability table is broadcast and must fit executor
+    * memory; past that Spark fails the query. */
   def emRound(docs: DataFrame, textCol: String = "text",
-      maxPiece: Int = 6, maxWordLen: Int = 16, topK: Int = 50,
-      broadcastPieces: Boolean = true): DataFrame = {
+      maxPiece: Int = 6, maxWordLen: Int = 16, topK: Int = 50): DataFrame = {
     val L = maxPiece
     val words = wordTable(docs, textCol, maxWordLen)
 
@@ -81,10 +80,9 @@ object UnigramLm {
     val st = seed.agg(sum(col("scnt")).as("st"))
     val lpTable = seed.crossJoin(broadcast(st))
       .select(col("piece"), log(col("scnt") / col("st")).as("lp"))
-    val lpJ = if (broadcastPieces) broadcast(lpTable) else lpTable
 
     // per-word (i*32+l) -> logp map (l <= 31 by construction)
-    val wm = cand.join(lpJ, Seq("piece"))
+    val wm = cand.join(broadcast(lpTable), Seq("piece"))
       .groupBy(col("word"), col("f"), col("n"))
       .agg(map_from_entries(collect_list(
         struct((col("i") * 32 + col("l")).as("key"), col("lp").as("value")))).as("m"))

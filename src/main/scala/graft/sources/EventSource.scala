@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.StructType
   * The reference reads three Kafka topics (stream_processor.py:102-109).
   * This environment ships no spark-sql-kafka connector (SURVEY.md §7
   * env facts), so sources hide behind a trait: Kafka for production,
-  * file/rate/memory for tests — all expose the same raw frame shape as
+  * file/memory for tests — all expose the same raw frame shape as
   * the Kafka source (`key`, `value` as strings + an ingest
   * `event_timestamp`), so the parse stage downstream is identical.
   *
@@ -72,34 +72,6 @@ final case class FileEventSource(
         coalesce(
           to_timestamp(get_json_object(col("value"), "$.timestamp")),
           current_timestamp()).as("event_timestamp"))
-}
-
-/** Rate source for load/soak testing: synthesizes order events at
-  * `rowsPerSecond`. */
-final case class RateEventSource(rowsPerSecond: Int = 100) extends EventSource {
-  def load(spark: SparkSession): DataFrame =
-    spark.readStream
-      .format("rate")
-      .option("rowsPerSecond", rowsPerSecond)
-      .load()
-      .select(
-        concat(lit("order_"), col("value")).as("key"),
-        to_json(struct(
-          concat(lit("evt_"), col("value")).as("event_id"),
-          lit("order_created").as("event_type"),
-          date_format(col("timestamp"), "yyyy-MM-dd'T'HH:mm:ss").as("event_time"),
-          concat(lit("order_"), col("value")).as("order_id"),
-          concat(lit("cust_"), col("value") % 1000).as("customer_id"),
-          element_at(
-            array(lit("created"), lit("approved"), lit("invoiced"),
-              lit("processing"), lit("shipped"), lit("delivered"),
-              lit("unavailable"), lit("canceled")),
-            (col("value") % 8 + 1).cast("int")).as("order_status"),
-          lit(null).cast("string").as("order_approved_at"),
-          lit(null).cast("string").as("estimated_delivery_date"),
-          date_format(col("timestamp"), "yyyy-MM-dd'T'HH:mm:ss").as("timestamp")
-        )).as("value"),
-        col("timestamp").as("event_timestamp"))
 }
 
 /** Parse stage (S2): raw `value` JSON → typed columns.

@@ -22,24 +22,26 @@ object StreamApp {
   final case class Pipelines(
       funnel: DataFrame, gmv: DataFrame, dropOff: DataFrame, payment: DataFrame)
 
-  /** Parse + dedup + transform: the full logical topology, no sinks.
-    * Works on streaming AND batch inputs (same expressions). */
-  def build(orders: DataFrame, items: DataFrame, payments: DataFrame,
-      cfg: WindowConfig = WindowConfig()): Pipelines = {
-    // Dedup once at ingest (D1, stream_processor.py:138-139). The
-    // reference re-dedups in every processor — a no-op not replicated.
-    // With a watermark set, state for old event_ids is evicted
-    // (dropDuplicatesWithinWatermark); without one this is the
-    // reference's unbounded-state semantics.
-    def dedup(df: DataFrame): DataFrame = cfg.watermark match {
+  /** Dedup once at ingest (D1, stream_processor.py:138-139). The
+    * reference re-dedups in every processor — a no-op not replicated.
+    * With a watermark set, state for old event_ids is evicted
+    * (dropDuplicatesWithinWatermark); without one this is the
+    * reference's unbounded-state semantics. */
+  private def dedup(df: DataFrame, cfg: WindowConfig): DataFrame =
+    cfg.watermark match {
       case Some(delay) =>
         df.withWatermark("event_timestamp", delay)
           .dropDuplicatesWithinWatermark("event_id")
       case None => df.dropDuplicates("event_id")
     }
-    val o = dedup(orders)
-    val i = dedup(items)
-    val p = dedup(payments)
+
+  /** Parse + dedup + transform: the full logical topology, no sinks.
+    * Works on streaming AND batch inputs (same expressions). */
+  def build(orders: DataFrame, items: DataFrame, payments: DataFrame,
+      cfg: WindowConfig = WindowConfig()): Pipelines = {
+    val o = dedup(orders, cfg)
+    val i = dedup(items, cfg)
+    val p = dedup(payments, cfg)
     Pipelines(
       funnel = Processors.funnel(o, cfg),
       gmv = Processors.gmv(i, cfg),
@@ -144,10 +146,7 @@ object StreamApp {
         MetricsSink.parquetWriter): Seq[StreamingQuery] = {
     require(cfg.watermark.isDefined, "shared topology needs a watermark")
     val (o, i, p) = ingest(spark, ordersSrc, itemsSrc, paymentsSrc)
-    def dedup(df: DataFrame): DataFrame =
-      df.withWatermark("event_timestamp", cfg.watermark.get)
-        .dropDuplicatesWithinWatermark("event_id")
-    val fine = fineGrainOrders(dedup(o), cfg)
+    val fine = fineGrainOrders(dedup(o, cfg), cfg)
     val ordersQuery = fine.writeStream
       .outputMode("append")
       .queryName("sink_orders_shared")
@@ -166,36 +165,30 @@ object StreamApp {
       }
       .start()
     val pipes = Seq(
-      MetricsSink.start(Processors.gmv(dedup(i), cfg), "gmv_metrics", sink)(
+      MetricsSink.start(Processors.gmv(dedup(i, cfg), cfg), "gmv_metrics", sink)(
         writer(s"$outRoot/gmv_metrics")),
-      MetricsSink.start(Processors.payment(dedup(p), cfg), "payment_metrics", sink)(
+      MetricsSink.start(Processors.payment(dedup(p, cfg), cfg), "payment_metrics", sink)(
         writer(s"$outRoot/payment_metrics")))
     ordersQuery +: pipes
   }
 
-  /** First-class mode switch: `shared = true` runs the 3-query shared
-    * topology (one orders read/dedup, funnel + drop-off derived from
-    * the fine-grain aggregate — it beats the 4-query reference
-    * topology at both measured scales and halves source reads and
-    * dedup state); `shared = false` keeps the reference's 4
-    * independent queries as the fidelity default.
+  /** First-class mode switch: `shared = false` (default) runs the
+    * reference's 4 independent queries, the fidelity default;
+    * `shared = true` runs the 3-query shared topology (one orders
+    * read/dedup, funnel + drop-off derived from the fine-grain
+    * aggregate — it beats the 4-query reference topology at both
+    * measured scales and halves source reads and dedup state).
     * SharedTopologyEquivalenceSpec pins the streamed outputs of the
-    * two modes against each other. */
+    * two modes against each other. `writer` builds the sink writer per
+    * table path (the compare demo passes idempotentParquetWriter). */
   def run(spark: SparkSession,
       ordersSrc: EventSource, itemsSrc: EventSource, paymentsSrc: EventSource,
-      outRoot: String, cfg: WindowConfig, sink: SinkConfig,
-      shared: Boolean): Seq[StreamingQuery] =
-    run(spark, ordersSrc, itemsSrc, paymentsSrc, outRoot, cfg, sink, shared,
-      MetricsSink.parquetWriter)
-
-  /** As above with an explicit sink writer (only one overload may
-    * carry default arguments, so this variant takes it positionally —
-    * the compare demo passes idempotentParquetWriter here). */
-  def run(spark: SparkSession,
-      ordersSrc: EventSource, itemsSrc: EventSource, paymentsSrc: EventSource,
-      outRoot: String, cfg: WindowConfig, sink: SinkConfig,
-      shared: Boolean,
-      writer: String => (DataFrame, Long) => Unit): Seq[StreamingQuery] =
+      outRoot: String,
+      cfg: WindowConfig = WindowConfig(),
+      sink: SinkConfig = SinkConfig(),
+      shared: Boolean = false,
+      writer: String => (DataFrame, Long) => Unit =
+        MetricsSink.parquetWriter): Seq[StreamingQuery] =
     if (shared) {
       // No silent watermark injection: shared mode REQUIRES one
       // (append-mode finalization) and runShared's require says so
@@ -204,27 +197,17 @@ object StreamApp {
       // different config.
       runShared(spark, ordersSrc, itemsSrc, paymentsSrc, outRoot, cfg, sink,
         writer)
-    } else run(spark, ordersSrc, itemsSrc, paymentsSrc, outRoot, cfg, sink,
-      writer)
-
-  /** Reference topology: 4 independent queries, parquet sinks. */
-  def run(spark: SparkSession,
-      ordersSrc: EventSource, itemsSrc: EventSource, paymentsSrc: EventSource,
-      outRoot: String,
-      cfg: WindowConfig = WindowConfig(),
-      sink: SinkConfig = SinkConfig(),
-      writer: String => (DataFrame, Long) => Unit =
-        MetricsSink.parquetWriter): Seq[StreamingQuery] = {
-    val (o, i, p) = ingest(spark, ordersSrc, itemsSrc, paymentsSrc)
-    val pipes = build(o, i, p, cfg)
-    Seq(
-      MetricsSink.start(pipes.funnel, "real_time_funnel", sink)(
-        writer(s"$outRoot/real_time_funnel")),
-      MetricsSink.start(pipes.gmv, "gmv_metrics", sink)(
-        writer(s"$outRoot/gmv_metrics")),
-      MetricsSink.start(pipes.dropOff, "drop_off_analysis", sink)(
-        writer(s"$outRoot/drop_off_analysis")),
-      MetricsSink.start(pipes.payment, "payment_metrics", sink)(
-        writer(s"$outRoot/payment_metrics")))
-  }
+    } else {
+      val (o, i, p) = ingest(spark, ordersSrc, itemsSrc, paymentsSrc)
+      val pipes = build(o, i, p, cfg)
+      Seq(
+        MetricsSink.start(pipes.funnel, "real_time_funnel", sink)(
+          writer(s"$outRoot/real_time_funnel")),
+        MetricsSink.start(pipes.gmv, "gmv_metrics", sink)(
+          writer(s"$outRoot/gmv_metrics")),
+        MetricsSink.start(pipes.dropOff, "drop_off_analysis", sink)(
+          writer(s"$outRoot/drop_off_analysis")),
+        MetricsSink.start(pipes.payment, "payment_metrics", sink)(
+          writer(s"$outRoot/payment_metrics")))
+    }
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.{LanguageModel, Num}
 import graft.operators.Pin._
 
@@ -20,9 +20,9 @@ import graft.operators.Pin._
   * domain training mix.
   *
   * Shape: stateless `foreachBatch` — the model tables ride the
-  * stream-static scoring joins (broadcast while the vocabulary fits an
-  * executor, `broadcastModel = false` for sort-merge beyond that — the
-  * LanguageModel contract). Per-doc weights are complete per batch, so
+  * stream-static scoring joins, broadcast, so both models must fit
+  * executor memory (the [[LanguageModel.scoreAgainst]] precondition).
+  * Per-doc weights are complete per batch, so
   * there is no watermark and no state store; the stream runs forever
   * with bounded resources as long as the frozen model tables do not
   * grow.
@@ -50,13 +50,10 @@ object StreamDsir {
   /** Per-doc (doc_id, nll_target, nll_corpus, w) for one batch — the
     * exact q125 weight arithmetic. Docs with fewer than two tokens
     * have no bigrams and are absent (they carry no LM evidence). */
-  def weigh(batch: DataFrame, m: DsirModels,
-      broadcastModel: Boolean = true): DataFrame = {
-    val nt = LanguageModel.scoreAgainst(batch, m.targetCab, m.targetCa,
-        m.targetV, broadcastModel = broadcastModel)
+  def weigh(batch: DataFrame, m: DsirModels): DataFrame = {
+    val nt = LanguageModel.scoreAgainst(batch, m.targetCab, m.targetCa, m.targetV)
       .select(col("doc_id"), col("nll").as("nll_target"))
-    val nc = LanguageModel.scoreAgainst(batch, m.corpusCab, m.corpusCa,
-        m.corpusV, broadcastModel = broadcastModel)
+    val nc = LanguageModel.scoreAgainst(batch, m.corpusCab, m.corpusCa, m.corpusV)
       .select(col("doc_id"), col("nll").as("nll_corpus"))
     nc.join(nt, Seq("doc_id"))
       .withColumn("w", greatest(
@@ -72,15 +69,11 @@ object StreamDsir {
     * the standard foreachBatch contract. */
   def start(docsStream: DataFrame, m: DsirModels, triggerMs: Long = 1000L)(
       sink: (Long, DataFrame) => Unit): StreamingQuery =
-    writer(docsStream, m, triggerMs)(sink).start()
-
-  private[streaming] def writer(docsStream: DataFrame, m: DsirModels,
-      triggerMs: Long)(
-      sink: (Long, DataFrame) => Unit): DataStreamWriter[Row] =
     docsStream.writeStream
       .outputMode("append")
       .trigger(Trigger.ProcessingTime(triggerMs))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         sink(batchId, weigh(batch, m))
       }
+      .start()
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.Similarity
 
 /** Streaming twin of `operators.Similarity.incrementalPairs`: a stream
@@ -25,11 +25,6 @@ object StreamEmbPairs {
   def start(embStream: DataFrame, corpus: DataFrame,
       threshold: Double = 0.35, nBlocks: Int = 8,
       triggerMs: Long = 1000L)(sink: (Long, DataFrame) => Unit): StreamingQuery =
-    writer(embStream, corpus, threshold, nBlocks, triggerMs)(sink).start()
-
-  private[streaming] def writer(embStream: DataFrame, corpus: DataFrame,
-      threshold: Double, nBlocks: Int, triggerMs: Long)(
-      sink: (Long, DataFrame) => Unit): DataStreamWriter[Row] =
     embStream.writeStream
       .outputMode("append")
       .trigger(Trigger.ProcessingTime(triggerMs))
@@ -37,4 +32,5 @@ object StreamEmbPairs {
         sink(batchId, Similarity.incrementalPairs(
           batch, corpus, threshold, nBlocks = nBlocks))
       }
+      .start()
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.TextDedup
 
 /** Streaming twin of `operators.TextDedup.incrementalDedup`: an
@@ -32,11 +31,6 @@ object StreamIncrementalDedup {
   def start(docsStream: DataFrame, corpus: DataFrame,
       n: Int = 3, threshold: Double = 0.5, maxBucket: Int = 1000,
       triggerMs: Long = 1000L)(sink: (Long, DataFrame) => Unit): StreamingQuery =
-    writer(docsStream, corpus, n, threshold, maxBucket, triggerMs)(sink).start()
-
-  private[streaming] def writer(docsStream: DataFrame, corpus: DataFrame,
-      n: Int, threshold: Double, maxBucket: Int, triggerMs: Long)(
-      sink: (Long, DataFrame) => Unit): DataStreamWriter[Row] =
     docsStream.writeStream
       .outputMode("append")
       .trigger(Trigger.ProcessingTime(triggerMs))
@@ -44,4 +38,5 @@ object StreamIncrementalDedup {
         sink(batchId, TextDedup.incrementalDedup(
           batch, corpus, n = n, threshold = threshold, maxBucket = maxBucket))
       }
+      .start()
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.queries.QcQueries
 
 /** Streaming twin of the q101 expectation checks: the QC gate runs on
@@ -29,10 +29,6 @@ object StreamQc {
     * to `doc_id_unique_intra_batch`. */
   def start(docsStream: DataFrame, triggerMs: Long = 1000L)(
       sink: (Long, DataFrame) => Unit): StreamingQuery =
-    writer(docsStream, triggerMs)(sink).start()
-
-  private[streaming] def writer(docsStream: DataFrame, triggerMs: Long)(
-      sink: (Long, DataFrame) => Unit): DataStreamWriter[Row] =
     docsStream.writeStream
       .outputMode("append")
       .trigger(Trigger.ProcessingTime(triggerMs))
@@ -42,6 +38,7 @@ object StreamQc {
           .withColumn("rule", when(col("rule") === "doc_id_unique",
             "doc_id_unique_intra_batch").otherwise(col("rule"))))
       }
+      .start()
 
   /** Streaming twin of the q102 drift gate: each micro-batch is the
     * `cur` snapshot, measured against a STATIC reference corpus
@@ -53,11 +50,6 @@ object StreamQc {
   def driftStart(docsStream: DataFrame, reference: DataFrame,
       triggerMs: Long = 1000L)(
       sink: (Long, DataFrame) => Unit): StreamingQuery =
-    driftWriter(docsStream, reference, triggerMs)(sink).start()
-
-  private[streaming] def driftWriter(docsStream: DataFrame,
-      reference: DataFrame, triggerMs: Long)(
-      sink: (Long, DataFrame) => Unit): DataStreamWriter[Row] =
     docsStream.writeStream
       .outputMode("append")
       .trigger(Trigger.ProcessingTime(triggerMs))
@@ -67,6 +59,7 @@ object StreamQc {
           .unionByName(batch.withColumn("snap", lit("cur")))
         sink(batchId, QcQueries.driftReport(tagged))
       }
+      .start()
 
   /** KS twin of [[driftStart]]: per micro-batch, the exact numeric
     * EDF max-gap (q123) of the batch against the static reference —
@@ -77,11 +70,6 @@ object StreamQc {
   def ksStart(docsStream: DataFrame, reference: DataFrame,
       triggerMs: Long = 1000L)(
       sink: (Long, DataFrame) => Unit): StreamingQuery =
-    ksWriter(docsStream, reference, triggerMs)(sink).start()
-
-  private[streaming] def ksWriter(docsStream: DataFrame,
-      reference: DataFrame, triggerMs: Long)(
-      sink: (Long, DataFrame) => Unit): DataStreamWriter[Row] =
     docsStream.writeStream
       .outputMode("append")
       .trigger(Trigger.ProcessingTime(triggerMs))
@@ -91,4 +79,5 @@ object StreamQc {
           .unionByName(batch.withColumn("snap", lit("cur")))
         sink(batchId, graft.queries.FeatureQueries.ksDrift(tagged))
       }
+      .start()
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Deploy half of the sketch-rollup tier (q154 builds daily HLL
   * sketches offline; q161 slides over them): MAINTAIN the daily
@@ -92,14 +92,11 @@ object StreamSketchInventory {
 
   def start(eventsStream: DataFrame, inv: Inventory,
       triggerMs: Long = 1000L): StreamingQuery =
-    writer(eventsStream, inv, triggerMs).start()
-
-  private[streaming] def writer(eventsStream: DataFrame, inv: Inventory,
-      triggerMs: Long): DataStreamWriter[Row] =
     eventsStream.writeStream
       .outputMode("append")
       .trigger(Trigger.ProcessingTime(triggerMs))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         inv.apply(batchId, batch)
       }
+      .start()
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.{Pin, Winnowing}
 
 /** Streaming twin of `operators.Winnowing.probeAgainst`: each
@@ -29,11 +28,6 @@ object StreamWinnow {
   def start(docsStream: DataFrame, corpusIndex: DataFrame,
       k: Int = 3, w: Int = 4, minShared: Int = 2,
       triggerMs: Long = 1000L)(sink: (Long, DataFrame) => Unit): StreamingQuery =
-    writer(docsStream, corpusIndex, k, w, minShared, triggerMs)(sink).start()
-
-  private[streaming] def writer(docsStream: DataFrame, corpusIndex: DataFrame,
-      k: Int, w: Int, minShared: Int, triggerMs: Long)(
-      sink: (Long, DataFrame) => Unit): DataStreamWriter[Row] =
     docsStream.writeStream
       .outputMode("append")
       .trigger(Trigger.ProcessingTime(triggerMs))
@@ -41,4 +35,5 @@ object StreamWinnow {
         Pin.scope(sink(batchId, Winnowing.probeAgainst(
           batch, corpusIndex, k = k, w = w, minShared = minShared)))
       }
+      .start()
 }

@@ -139,7 +139,7 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("CEIL"), "prefix cutoff filter missing")
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"))
-    // broadcastIndex=true: index/verify joins are all BHJ at this scale
+    // index/verify joins are broadcast: all BHJ at this scale
     assert(!plan.contains("SortMergeJoin"), "expected broadcast-only joins")
   }
 

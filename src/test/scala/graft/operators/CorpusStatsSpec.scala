@@ -81,14 +81,6 @@ class CorpusStatsSpec extends SparkSpec {
     assert(ids == Set(2L))
   }
 
-  test("LM: broadcastModel=false sort-merge path is row-identical") {
-    val docs = graft.Tables.load(spark, sf001, "documents")
-    val b = LanguageModel.scoreDocs(docs).collect().map(_.toSeq).toSet
-    val s = LanguageModel.scoreDocs(docs, broadcastModel = false)
-      .collect().map(_.toSeq).toSet
-    assert(b.nonEmpty && b == s)
-  }
-
   test("LM: scoring reads the pinned token table, not a second corpus scan") {
     val docs = graft.Tables.load(spark, sf001, "documents")
     val scored = LanguageModel.scoreDocs(docs)
@@ -180,15 +172,6 @@ class CorpusStatsSpec extends SparkSpec {
     assert(pref == full && full.map(p => (p._1, p._2)) == Set((1L, 2L), (3L, 4L)))
   }
 
-  test("prefix join: broadcastIndex=false sort-merge path is row-identical") {
-    val docs = graft.Tables.load(spark, sf001, "documents")
-    val b = TextDedup.prefixJaccardPairs(docs, n = 3, threshold = 0.4)
-      .collect().map(_.toSeq).toSet
-    val s = TextDedup.prefixJaccardPairs(docs, n = 3, threshold = 0.4,
-      broadcastIndex = false).collect().map(_.toSeq).toSet
-    assert(b.nonEmpty && b == s)
-  }
-
   test("prefix join plan: codegen merge-intersect, no interpreted array_intersect") {
     val docs = graft.Tables.load(spark, sf001, "documents")
     val d = TextDedup.prefixJaccardPairs(docs, n = 3, threshold = 0.4)
@@ -259,15 +242,6 @@ class CorpusStatsSpec extends SparkSpec {
     assert(pref == full)
     assert(pref.map(p => (p._1, p._2)).contains((1L, 2L)))
     assert(!pref.map(p => (p._1, p._2)).contains((2L, 1L)))
-  }
-
-  test("prefix containment: broadcastIndex=false sort-merge path is row-identical") {
-    val docs = graft.Tables.load(spark, sf001, "documents")
-    val b = TextDedup.prefixContainmentPairs(docs, n = 3, threshold = 0.6)
-      .collect().map(_.toSeq).toSet
-    val s = TextDedup.prefixContainmentPairs(docs, n = 3, threshold = 0.6,
-      broadcastIndex = false).collect().map(_.toSeq).toSet
-    assert(b.nonEmpty && b == s)
   }
 
   test("prefix containment plan: codegen merge-intersect, no array_intersect") {

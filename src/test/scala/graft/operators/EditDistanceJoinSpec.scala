@@ -30,10 +30,8 @@ class EditDistanceJoinSpec extends SparkSpec {
     } yield (a, b, d)).toSet
   }
 
-  private def run(ss: Seq[String], k: Int, q: Int,
-      bcast: Boolean = true): Set[(String, String, Int)] =
-    EditDistanceJoin.selfJoin(ss.toDF("s"), "s", maxDist = k, q = q,
-        broadcastIndex = bcast)
+  private def run(ss: Seq[String], k: Int, q: Int): Set[(String, String, Int)] =
+    EditDistanceJoin.selfJoin(ss.toDF("s"), "s", maxDist = k, q = q)
       .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSet
 
   test("hand case: typo pairs found, distant pairs pruned") {
@@ -62,12 +60,10 @@ class EditDistanceJoinSpec extends SparkSpec {
       assert(run(ss, k, q) === brute(ss, k), s"k=$k q=$q")
   }
 
-  test("q=3 grams and sort-merge (broadcastIndex=false) give identical rows") {
+  test("q=3 grams give the brute-force rows") {
     val rnd = new scala.util.Random(11)
     val ss = Seq.fill(40)(
       Seq.fill(2 + rnd.nextInt(8))("abcd" (rnd.nextInt(4))).mkString)
-    val expected = brute(ss, 2)
-    assert(run(ss, 2, q = 3) === expected)
-    assert(run(ss, 2, q = 2, bcast = false) === expected)
+    assert(run(ss, 2, q = 3) === brute(ss, 2))
   }
 }

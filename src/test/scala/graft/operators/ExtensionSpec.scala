@@ -221,19 +221,6 @@ class ExtensionSpec extends SparkSpec {
     assert(recall >= 0.3, s"recall $recall") // deterministic for fixed centroids
   }
 
-  test("broadcastQueries=false produces identical ANN results") {
-    // unselective query sides must be able to opt out of the broadcast
-    // hint (AQE picks the join) without changing results
-    val emb = Tables.load(spark, sf, "embeddings")
-    val pred = col("vec_id") % 50 === 0
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("query_id", "rank", "nbr_id").as[(Long, Int, Long)].collect().toSet
-    assert(rows(Similarity.lshTopK(emb, pred, 5, broadcastQueries = false)) ==
-      rows(Similarity.lshTopK(emb, pred, 5)))
-    assert(rows(Similarity.ivfTopK(emb, pred, 5, broadcastQueries = false)) ==
-      rows(Similarity.ivfTopK(emb, pred, 5)))
-  }
-
   test("multimodal stub pipeline: features match hand computation") {
     val df = Seq((3L, "abc", 3L)).toDF("doc_id", "text", "n_chars")
     val out = Multimodal.extractFeatures(Multimodal.asMedia(df)).collect().head

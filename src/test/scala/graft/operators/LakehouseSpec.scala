@@ -19,15 +19,6 @@ class LakehouseSpec extends SparkSpec {
       (3L, "c", 30.0), (9L, "z", 1.0)))
   }
 
-  test("upsert: shuffle-join path (broadcastChanges=false) is identical") {
-    val base = (0L until 100L).map(i => (i, s"v$i")).toDF("k", "v")
-    val changes = (0L until 100L by 3).map(i => (i, s"u$i")).toDF("k", "v")
-    val a = Merge.upsert(base, changes, Seq("k")).as[(Long, String)].collect().toSet
-    val b = Merge.upsert(base, changes, Seq("k"), broadcastChanges = false)
-      .as[(Long, String)].collect().toSet
-    assert(a == b && a.size == 100)
-  }
-
   // ---- Merge.scd2 ----
 
   test("scd2: consecutive repeats collapse; intervals chain; last is open") {

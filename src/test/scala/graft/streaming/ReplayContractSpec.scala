@@ -40,9 +40,9 @@ class ReplayContractSpec extends SparkSpec {
   private def canon(df: DataFrame): Vector[String] =
     df.collect().map(_.toString).sorted.toVector
 
-  /** Drives a sink-taking twin (writer-style) twice over the same
+  /** Drives a sink-taking twin (its `start`) twice over the same
     * micro-batch splits; returns both (batchId → rows) captures. */
-  private def runTwiceWriter[T: Encoder](chunks: Seq[Seq[T]])(
+  private def runTwiceSink[T: Encoder](chunks: Seq[Seq[T]])(
       start: (DataFrame, (Long, DataFrame) => Unit) => StreamingQuery)
       : (Map[Long, Vector[String]], Map[Long, Vector[String]]) = {
     def once(): Map[Long, Vector[String]] = {
@@ -61,7 +61,7 @@ class ReplayContractSpec extends SparkSpec {
   private def runTwiceDf[T: Encoder](chunks: Seq[Seq[T]], mode: String)(
       build: DataFrame => DataFrame)
       : (Map[Long, Vector[String]], Map[Long, Vector[String]]) =
-    runTwiceWriter[T](chunks) { (in, sink) =>
+    runTwiceSink[T](chunks) { (in, sink) =>
       build(in).writeStream.outputMode(mode)
         .foreachBatch((b: DataFrame, id: Long) => sink(id, b)).start()
     }
@@ -86,7 +86,7 @@ class ReplayContractSpec extends SparkSpec {
           "key-upsert replay would be lossy")
     }
 
-  // ---- (a) writer-style twins ----------------------------------------
+  // ---- (a) sink-taking twins ----------------------------------------
 
   test("StreamDsir replay: deterministic re-delivery per batchId") {
     val dir = "/root/testdata/sf0.001"
@@ -96,10 +96,10 @@ class ReplayContractSpec extends SparkSpec {
     val rows = docs.select(col("doc_id"), col("text"))
       .as[(Long, String)].collect().toSeq
     val chunks = Seq(rows.take(rows.length / 2), rows.drop(rows.length / 2))
-    assertDeterministic("StreamDsir", runTwiceWriter(chunks) { (in, sink) =>
-      StreamDsir.writer(in.toDF("doc_id", "text"), m, triggerMs = 50L) {
+    assertDeterministic("StreamDsir", runTwiceSink(chunks) { (in, sink) =>
+      StreamDsir.start(in.toDF("doc_id", "text"), m, triggerMs = 50L) {
         (id, df) => sink(id, df)
-      }.start()
+      }
     })
   }
 
@@ -110,9 +110,9 @@ class ReplayContractSpec extends SparkSpec {
       (3L, "ok document", "de", "src3", 11L),
       (4L, "mismatch", "fr", "src4", 77L))
     val chunks = Seq(rows.take(2), rows.drop(2))
-    assertDeterministic("StreamQc", runTwiceWriter(chunks) { (in, sink) =>
-      StreamQc.writer(in.toDF("doc_id", "text", "lang", "source", "n_chars"),
-        triggerMs = 50L)((id, df) => sink(id, df)).start()
+    assertDeterministic("StreamQc", runTwiceSink(chunks) { (in, sink) =>
+      StreamQc.start(in.toDF("doc_id", "text", "lang", "source", "n_chars"),
+        triggerMs = 50L)((id, df) => sink(id, df))
     })
   }
 
@@ -125,10 +125,10 @@ class ReplayContractSpec extends SparkSpec {
       (101L, "prefix words gamma delta epsilon zeta eta theta suffix tail"),
       (102L, "ten one nine two eight three seven four six five"))
     val chunks = Seq(batch.take(1), batch.drop(1))
-    assertDeterministic("StreamWinnow", runTwiceWriter(chunks) { (in, sink) =>
-      StreamWinnow.writer(in.toDF("doc_id", "text"), index,
+    assertDeterministic("StreamWinnow", runTwiceSink(chunks) { (in, sink) =>
+      StreamWinnow.start(in.toDF("doc_id", "text"), index,
         k = 3, w = 4, minShared = 1, triggerMs = 50L)(
-        (id, df) => sink(id, df)).start()
+        (id, df) => sink(id, df))
     })
   }
 
@@ -139,10 +139,10 @@ class ReplayContractSpec extends SparkSpec {
       (101L, Array(1.0f, 0.0f, 0.0f)), (102L, Array(0.1f, 1.0f, 0.0f)),
       (103L, Array(0.0f, 0.0f, 1.0f)), (104L, Array(0.9f, 0.1f, 0.0f)))
     val chunks = Seq(batch.take(2), batch.drop(2))
-    assertDeterministic("StreamEmbPairs", runTwiceWriter(chunks) { (in, sink) =>
-      StreamEmbPairs.writer(in.toDF("vec_id", "embedding"), corpus,
+    assertDeterministic("StreamEmbPairs", runTwiceSink(chunks) { (in, sink) =>
+      StreamEmbPairs.start(in.toDF("vec_id", "embedding"), corpus,
         threshold = 0.5, nBlocks = 4, triggerMs = 50L)(
-        (id, df) => sink(id, df)).start()
+        (id, df) => sink(id, df))
     })
   }
 
@@ -157,10 +157,10 @@ class ReplayContractSpec extends SparkSpec {
       (103L, "completely different content with no overlap at all"))
     val chunks = Seq(batch.take(2), batch.drop(2))
     assertDeterministic("StreamIncrementalDedup",
-      runTwiceWriter(chunks) { (in, sink) =>
-        StreamIncrementalDedup.writer(in.toDF("doc_id", "text"), corpus,
+      runTwiceSink(chunks) { (in, sink) =>
+        StreamIncrementalDedup.start(in.toDF("doc_id", "text"), corpus,
           n = 3, threshold = 0.4, maxBucket = 1000, triggerMs = 50L)(
-          (id, df) => sink(id, df)).start()
+          (id, df) => sink(id, df))
       })
   }
 

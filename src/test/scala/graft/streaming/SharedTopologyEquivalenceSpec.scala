@@ -37,6 +37,15 @@ class SharedTopologyEquivalenceSpec extends SparkSpec {
     try assert(refQs.size == 4) finally refQs.foreach(_.stop())
   }
 
+  test("run(shared = true) without a watermark fails before starting a query") {
+    val root = Files.createTempDirectory("graft-mode-nowm").toString
+    val err = intercept[IllegalArgumentException](StreamApp.run(spark,
+      FileEventSource(s"$root/ev/orders"), FileEventSource(s"$root/ev/items"),
+      FileEventSource(s"$root/ev/payments"), s"$root/m", shared = true))
+    assert(err.getMessage.contains("shared topology needs a watermark"))
+    assert(spark.streams.active.isEmpty)
+  }
+
   test("shared-mode streamed outputs equal the 4-query semantics " +
       "(batch processors) on finalized windows") {
     val root = Files.createTempDirectory("graft-shared-eq").toString

@@ -24,10 +24,10 @@ class StreamDsirSpec extends SparkSpec {
     val in = MemoryStream[(Long, String)](spark)
     val acc = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Double, Double, Double)]
-    val q = StreamDsir.writer(
+    val q = StreamDsir.start(
       in.toDF().toDF("doc_id", "text"), m, triggerMs = 50L) { (_, out) =>
       acc ++= out.as[(Long, Double, Double, Double)].collect()
-    }.start()
+    }
     try {
       val third = rows.length / 3
       in.addData(rows.take(third))

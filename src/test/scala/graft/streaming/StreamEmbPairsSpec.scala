@@ -30,13 +30,13 @@ class StreamEmbPairsSpec extends SparkSpec {
     val in = MemoryStream[(Long, Array[Float])](spark)
     val collected = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
     val perBatch = scala.collection.mutable.Map.empty[Long, Set[(Long, Long, Double)]]
-    val q = StreamEmbPairs.writer(
+    val q = StreamEmbPairs.start(
       in.toDF().toDF("vec_id", "embedding"), corpus,
       threshold = tau, nBlocks = 4, triggerMs = 50L) { (bid, edges) =>
       val rows = edges.as[(Long, Long, Double)].collect()
       collected ++= rows
       perBatch(bid) = rows.toSet
-    }.start()
+    }
     try {
       in.addData(batchRows.take(2))
       q.processAllAvailable()

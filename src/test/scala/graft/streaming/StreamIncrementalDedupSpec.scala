@@ -24,11 +24,11 @@ class StreamIncrementalDedupSpec extends SparkSpec {
     val corpus = corpusRows.toDF("doc_id", "text")
     val in = MemoryStream[(Long, String)](spark)
     val collected = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
-    val q = StreamIncrementalDedup.writer(
+    val q = StreamIncrementalDedup.start(
       in.toDF().toDF("doc_id", "text"), corpus,
       n = 3, threshold = 0.4, maxBucket = 1000, triggerMs = 50L) { (_, verdicts) =>
       collected ++= verdicts.as[(Long, String, Long)].collect()
-    }.start()
+    }
     try {
       in.addData(batchRows.take(2))
       q.processAllAvailable()
@@ -49,11 +49,11 @@ class StreamIncrementalDedupSpec extends SparkSpec {
     val corpus = Seq((1L, "p q r s t u v w")).toDF("doc_id", "text")
     val in = MemoryStream[(Long, String)](spark)
     val collected = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
-    val q = StreamIncrementalDedup.writer(
+    val q = StreamIncrementalDedup.start(
       in.toDF().toDF("doc_id", "text"), corpus,
       n = 3, threshold = 0.4, maxBucket = 1000, triggerMs = 50L) { (_, verdicts) =>
       collected ++= verdicts.as[(Long, String, Long)].collect()
-    }.start()
+    }
     try {
       // identical novel doc in two different micro-batches: both must
       // report 'new' vs the corpus — intra-stream dedup is StreamDedup's

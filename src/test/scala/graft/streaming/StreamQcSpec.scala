@@ -23,11 +23,11 @@ class StreamQcSpec extends SparkSpec {
   test("summed per-batch reports ≡ batch report on the union") {
     val in = MemoryStream[(Long, String, String, String, Long)](spark)
     val acc = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-    val q = StreamQc.writer(
+    val q = StreamQc.start(
       in.toDF().toDF("doc_id", "text", "lang", "source", "n_chars"),
       triggerMs = 50L) { (_, report) =>
       acc ++= report.as[(String, Long, Long)].collect()
-    }.start()
+    }
     try {
       in.addData(rows.take(2))
       q.processAllAvailable()
@@ -59,12 +59,12 @@ class StreamQcSpec extends SparkSpec {
 
     val in = MemoryStream[(Long, String, String, String, Long)](spark)
     val acc = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Double)]
-    val q = StreamQc.driftWriter(
+    val q = StreamQc.driftStart(
       in.toDF().toDF("doc_id", "text", "lang", "source", "n_chars"),
       ref, triggerMs = 50L) { (bid, report) =>
       acc ++= report.select(lit(bid), col("feature"), col("bucket"), col("psi"))
         .as[(Long, String, String, Double)].collect()
-    }.start()
+    }
     try {
       in.addData(shifted)
       q.processAllAvailable()
@@ -99,12 +99,12 @@ class StreamQcSpec extends SparkSpec {
 
     val in = MemoryStream[(Long, String, String, String, Long)](spark)
     val acc = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Double, Double)]
-    val q = StreamQc.ksWriter(
+    val q = StreamQc.ksStart(
       in.toDF().toDF("doc_id", "text", "lang", "source", "n_chars"),
       ref, triggerMs = 50L) { (bid, report) =>
       acc ++= report.select(lit(bid), col("feature"), col("ks"), col("at_value"))
         .as[(Long, String, Double, Double)].collect()
-    }.start()
+    }
     try {
       in.addData(long)
       q.processAllAvailable()
@@ -127,11 +127,11 @@ class StreamQcSpec extends SparkSpec {
   test("uniqueness is intra-batch: a cross-batch duplicate is not counted") {
     val in = MemoryStream[(Long, String, String, String, Long)](spark)
     val acc = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-    val q = StreamQc.writer(
+    val q = StreamQc.start(
       in.toDF().toDF("doc_id", "text", "lang", "source", "n_chars"),
       triggerMs = 50L) { (_, report) =>
       acc ++= report.as[(String, Long, Long)].collect()
-    }.start()
+    }
     try {
       in.addData(Seq((1L, "a doc", "en", "src1", 5L)))
       q.processAllAvailable()

@@ -23,8 +23,8 @@ class StreamSketchInventorySpec extends SparkSpec {
   test("streamed inventory ≡ exact sliding distinct within the HLL bound") {
     val in = MemoryStream[(Timestamp, Long)](spark)
     val inv = new StreamSketchInventory.Inventory(spark)
-    val q = StreamSketchInventory.writer(
-      in.toDF().toDF("ts", "user_id"), inv, triggerMs = 50L).start()
+    val q = StreamSketchInventory.start(
+      in.toDF().toDF("ts", "user_id"), inv, triggerMs = 50L)
     try {
       // ragged micro-batches: 3 uneven slices
       in.addData(rows.take(70))

@@ -26,11 +26,11 @@ class StreamWinnowSpec extends SparkSpec {
     val index = Winnowing.index(corpusRows.toDF("doc_id", "text")).cache()
     val in = MemoryStream[(Long, String)](spark)
     val collected = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Double)]
-    val q = StreamWinnow.writer(
+    val q = StreamWinnow.start(
       in.toDF().toDF("doc_id", "text"), index,
       k = 3, w = 4, minShared = 1, triggerMs = 50L) { (_, matches) =>
       collected ++= matches.as[(Long, Long, Long, Double)].collect()
-    }.start()
+    }
     try {
       in.addData(batchRows.take(1))
       q.processAllAvailable()
