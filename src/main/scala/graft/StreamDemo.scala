@@ -54,9 +54,10 @@ object StreamDemo {
     val sinkRows =
       Seq("real_time_funnel", "gmv_metrics", "drop_off_analysis",
         "payment_metrics").map { t =>
-        val n = try spark.read.parquet(s"$outRoot/$t").count()
-          catch { case _: Throwable => 0L }
-        t -> n
+        // a sink that never wrote has no directory; any other read
+        // error is a real failure and propagates
+        val dir = s"$outRoot/$t"
+        t -> (if (new java.io.File(dir).exists()) spark.read.parquet(dir).count() else 0L)
       }
     // queries.size travels with the result so the demo JSON line's
     // "queries" field always reports the topology's REAL query count

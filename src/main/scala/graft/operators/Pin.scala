@@ -63,6 +63,15 @@ object Pin {
     pinned
   }
 
+  /** Whether `df` has no rows. A filled [[Wide]] pin already counted its
+    * rows while filling, so for the pinned frame itself this runs no
+    * job; any other frame is probed with `Dataset.isEmpty`. */
+  def isEmpty(df: DataFrame): Boolean = df.queryExecution.withCachedData match {
+    case r: InMemoryRelation if r.cacheBuilder.isCachedColumnBuffersLoaded =>
+      r.cacheBuilder.rowCountStats.value == 0L
+    case _ => df.isEmpty
+  }
+
   /** Run `body`, then release (blocking) every pin made inside it on
     * this thread, on return or throw. Only for bodies whose result is
     * already local (a collect, a `foreachBatch` write). */

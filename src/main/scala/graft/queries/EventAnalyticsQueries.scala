@@ -111,7 +111,7 @@ object EventAnalyticsQueries {
     * arbitrary-order collect_list+slice is not reproducible across
     * engines (SURVEY §2.8 note). */
   def q14DropOff(spark: SparkSession, dir: String): DataFrame = {
-    val alertThreshold = 50
+    val alertAbove = 50
     val dropTypes = Seq("error", "click")
     val ev = events(spark, dir)
       .withColumn("is_dropoff", col("event_type").isin(dropTypes: _*))
@@ -140,7 +140,7 @@ object EventAnalyticsQueries {
         concat_ws(",", graft.operators.Sampling.smallestK(
           col("user_id").cast("string"), 3)).as("sample_user_ids"))
       .withColumn("alert_triggered",
-        col("is_dropoff") && col("status_count") > alertThreshold)
+        col("is_dropoff") && col("status_count") > alertAbove)
       .orderBy(col("window_start"), col("event_type"))
   }
 

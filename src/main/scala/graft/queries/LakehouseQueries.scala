@@ -37,17 +37,11 @@ object LakehouseQueries {
   private val BoilerN = 5
   private val BoilerMinDf = 2
 
-  def q64Boilerplate(spark: SparkSession, dir: String): DataFrame =
-    boilerplateFractions(spark, dir, broadcastDict = true)
-
-  /** `broadcastDict = true` broadcasts the boilerplate-span dictionary
-    * (35 of 25k spans at sf0.01) — right while the df≥MinDf span set
-    * fits an executor. The set grows with the corpus (every template
-    * shared by ≥2 docs of a source joins it), so at corpus scale set
-    * it false → sort-merge on (source, g) with AQE skew handling,
-    * identical rows (equivalence-pinned in LakehouseSpec). */
-  private[graft] def boilerplateFractions(spark: SparkSession, dir: String,
-      broadcastDict: Boolean): DataFrame = {
+  /** The boilerplate-span dictionary (35 of 25k spans at sf0.01) is
+    * broadcast and must fit executor memory; past that Spark fails the
+    * query. It grows with the corpus: every template shared by ≥2 docs
+    * of a source joins it. */
+  def q64Boilerplate(spark: SparkSession, dir: String): DataFrame = {
     // localCheckpoint: the exploded span table feeds BOTH the span-
     // frequency aggregation and the per-doc probe join — without the
     // pin each consumer re-ran the tokenize + shingle pipeline (the
@@ -68,8 +62,7 @@ object LakehouseQueries {
       .agg(count(lit(1)).as("df"))
       .filter(col("df") >= BoilerMinDf)
       .select(col("source"), col("g"), lit(1L).as("is_bp"))
-    val dict = if (broadcastDict) broadcast(bp) else bp
-    t.join(dict, Seq("source", "g"), "left")
+    t.join(broadcast(bp), Seq("source", "g"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("spans"),
         sum(coalesce(col("is_bp"), lit(0L))).as("bp_spans"))

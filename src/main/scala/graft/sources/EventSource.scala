@@ -78,9 +78,9 @@ final case class FileEventSource(
   *
   * Faithful to stream_processor.py:111-133: from_json with the explicit
   * schema, drop rows that fail to parse, flatten, carry the ingest
-  * timestamp. `corruptToConsole=false` replicates the reference's
-  * silent drop; the idiomatic improvement routes corrupt rows to a
-  * side channel instead of losing them (SURVEY §1.3).
+  * timestamp. [[parse]] drops corrupt rows as the reference does;
+  * [[corruptRecords]] is their side channel, so they can be routed
+  * somewhere instead of lost (SURVEY §1.3).
   */
 object EventParser {
   // Spark's PERMISSIVE from_json yields an all-null struct (not a null

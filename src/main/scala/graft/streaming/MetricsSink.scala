@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import java.util.Properties
+import graft.operators.Pin
 
 /** Sinks (SURVEY.md §2.2, metrics_sink.py:18-51).
   *
@@ -30,29 +31,35 @@ object MetricsSink {
 
   /** The trigger of every sink query: drain the backlog and stop under
     * `availableNow`, else fire every `triggerInterval`. */
-  def trigger(cfg: SinkConfig): Trigger =
+  private def trigger(cfg: SinkConfig): Trigger =
     if (cfg.availableNow) Trigger.AvailableNow()
     else Trigger.ProcessingTime(cfg.triggerInterval)
 
   /** Wire a metric stream to a foreachBatch writer — the per-query
-    * topology of stream_processor.py:175-231. */
-  def start(df: DataFrame, queryName: String, cfg: SinkConfig)(
+    * topology of stream_processor.py:175-231, and the one sink path of
+    * both topologies. Each micro-batch is pinned first: the console
+    * monitor and the writer read one computed batch, and the emptiness
+    * test reads the pin's row count, so an empty batch costs one job. */
+  def start(df: DataFrame, queryName: String, cfg: SinkConfig,
+      outputMode: String = "update")(
       write: (DataFrame, Long) => Unit): StreamingQuery =
     df.writeStream
-      .outputMode("update")
+      .outputMode(outputMode)
       .queryName(s"sink_$queryName")
       .trigger(trigger(cfg))
       .option("checkpointLocation", s"${cfg.checkpointRoot}/$queryName")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          if (cfg.console) batch.show(cfg.showRows, truncate = false)
-          write(batch, batchId)
+        Pin.scope {
+          val b = Pin(batch, Pin.Wide)
+          if (!Pin.isEmpty(b)) {
+            if (cfg.console) b.show(cfg.showRows, truncate = false)
+            write(b, batchId)
+          }
         }
       }
       .start()
 
-  /** Parquet-append sink — the test/offline stand-in for the JDBC sink;
-    * partitioned by nothing at test scale, by window date at 100 TB. */
+  /** Parquet-append sink — the test/offline stand-in for the JDBC sink. */
   def parquetWriter(outDir: String): (DataFrame, Long) => Unit =
     (batch, _) => batch.write.mode("append").parquet(outDir)
 
@@ -69,29 +76,6 @@ object MetricsSink {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id")
       .parquet(outDir)
-
-  /** Scale variant: partition output by window date so downstream
-    * dashboard queries (last hour / last day) prune partitions instead
-    * of scanning history. */
-  def partitionedParquetWriter(outDir: String): (DataFrame, Long) => Unit =
-    (batch, _) => batch
-      .withColumn("window_date",
-        org.apache.spark.sql.functions.to_date(
-          org.apache.spark.sql.functions.col("window_start")))
-      .write.mode("append").partitionBy("window_date").parquet(outDir)
-
-  /** Switch streaming state to RocksDB (SURVEY §4 state-store row): the
-    * default HDFS-backed store keeps state on the JVM heap — at 100 TB
-    * scale (millions of windows × keys) RocksDB keeps it off-heap +
-    * disk with incremental checkpointing. Config-level change only;
-    * call before starting queries. */
-  def useRocksDbStateStore(spark: SparkSession): Unit = {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      "true")
-  }
 
   /** In-memory sink for unit tests: complete/update-mode results land in
     * a queryable temp view. */

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.model.Schemas
-import graft.operators.Pin
 import graft.sources.{EventParser, EventSource}
 
 /** End-to-end wiring of the streaming pipeline — the Scala twin of
@@ -14,7 +13,7 @@ import graft.sources.{EventParser, EventSource}
   * stream feeds 3 of them and each query re-reads its topic (SURVEY §3.1
   * step 4). That is kept as the default for fidelity. At 100 TB, prefer
   * `runShared`: one pass per source with the downstream metric fan-out
-  * inside a single foreachBatch, so each topic is read and deduped once
+  * inside a single sink micro-batch, so each topic is read and deduped once
   * per trigger instead of three times (SURVEY §7.4 risk 5).
   */
 object StreamApp {
@@ -26,7 +25,8 @@ object StreamApp {
     * reference re-dedups in every processor — a no-op not replicated.
     * With a watermark set, state for old event_ids is evicted
     * (dropDuplicatesWithinWatermark); without one this is the
-    * reference's unbounded-state semantics. */
+    * reference's unbounded-state semantics. The one place that applies
+    * `cfg.watermark`: every metric transform reads its output. */
   private def dedup(df: DataFrame, cfg: WindowConfig): DataFrame =
     cfg.watermark match {
       case Some(delay) =>
@@ -58,20 +58,19 @@ object StreamApp {
     EventParser.parse(paymentsSrc.load(spark), Schemas.payment))
 
   /** Fine-grain orders aggregate for the shared topology: ONE stateful
-    * pass at (window × order_status) grain carrying mergeable HLL
-    * sketches (Spark 4 datasketches) instead of scalar approx-distincts
-    * — so both the drop-off table (same grain) and the funnel (coarser
-    * grain) derive from it without re-reading or re-aggregating the
-    * stream. At 100 TB this halves source reads and dedup state for
-    * the orders topic (SURVEY §7.4 risk 5). */
+    * pass at (window × order_status) grain carrying a mergeable HLL
+    * sketch of customers (Spark 4 datasketches) instead of a scalar
+    * approx-distinct — so both the drop-off table (same grain) and the
+    * funnel (coarser grain) derive from it without re-reading or
+    * re-aggregating the stream. At 100 TB this halves source reads and
+    * dedup state for the orders topic (SURVEY §7.4 risk 5). A streaming
+    * `orders` must already carry its watermark (see [[Processors]]). */
   def fineGrainOrders(orders: DataFrame, cfg: WindowConfig): DataFrame =
-    cfg.applyWatermark(orders)
-      .withColumn("is_dropoff",
-        col("order_status").isin("canceled", "unavailable", "created"))
+    orders
+      .withColumn("is_dropoff", Processors.isDropOff)
       .groupBy(cfg.windowCol, col("order_status"))
       .agg(
         count(lit(1)).as("status_count"),
-        hll_sketch_agg(col("order_id")).as("order_sketch"),
         hll_sketch_agg(col("customer_id")).as("customer_sketch"),
         first(col("is_dropoff")).as("is_dropoff_status"),
         slice(sort_array(collect_list(col("order_id"))), 1, 3)
@@ -79,58 +78,25 @@ object StreamApp {
       .select(
         col("window.start").as("window_start"),
         col("window.end").as("window_end"),
-        col("order_status"), col("status_count"),
-        col("order_sketch"), col("customer_sketch"),
+        col("order_status"), col("status_count"), col("customer_sketch"),
         col("is_dropoff_status"), col("sample_order_ids"))
 
   /** Funnel rows derived from finalized fine-grain rows (batch re-agg
-    * inside foreachBatch; HLL union preserves distinct estimation
-    * across statuses). */
-  def deriveFunnel(fine: DataFrame): DataFrame = {
-    def cnt(cond: org.apache.spark.sql.Column) =
-      sum(when(cond, col("status_count")).otherwise(0L))
-    def rate(n: org.apache.spark.sql.Column, d: org.apache.spark.sql.Column) =
-      when(d > 0, round(n.cast("double") / d.cast("double") * 100, 2)).otherwise(0.0)
+    * inside the sink's micro-batch). */
+  def deriveFunnel(fine: DataFrame): DataFrame =
     fine.groupBy(col("window_start"), col("window_end"))
-      .agg(
-        sum(col("status_count")).as("total_orders"),
-        hll_sketch_estimate(hll_union_agg(col("order_sketch")))
-          .as("unique_orders"),
-        cnt(col("order_status") =!= "canceled").as("orders_with_items"),
-        cnt(col("order_status").isin("delivered", "shipped", "invoiced",
-          "processing")).as("orders_with_payment"),
-        cnt(col("order_status") === "canceled").as("canceled_orders"),
-        cnt(col("order_status").isin("created", "approved", "unavailable"))
-          .as("pending_orders"))
-      .select(
-        col("window_start"), col("window_end"), col("total_orders"),
-        col("orders_with_items"), col("orders_with_payment"),
-        rate(col("orders_with_items"), col("total_orders"))
-          .as("items_conversion_rate"),
-        rate(col("orders_with_payment"), col("orders_with_items"))
-          .as("payment_conversion_rate"),
-        col("canceled_orders").as("dropped_after_order"),
-        col("pending_orders").as("dropped_after_items"),
-        current_timestamp().as("processed_at"))
-  }
+      .agg(sum(col("status_count")).as("total_orders"),
+        Processors.stageCounts(col("status_count")): _*)
+      .select(Processors.funnelRow(col("window_start"), col("window_end")): _*)
 
   /** Drop-off rows derived 1:1 from fine-grain rows. */
-  def deriveDropOff(fine: DataFrame, alertThreshold: Int = 5): DataFrame =
-    fine.select(
-      col("window_start"), col("window_end"), col("order_status"),
-      when(col("is_dropoff_status"), col("status_count")).otherwise(lit(0L))
-        .as("dropped_orders"),
-      hll_sketch_estimate(col("customer_sketch"))
-        .as("unique_customers_affected"),
-      col("status_count").cast("double").as("drop_rate"),
-      (col("is_dropoff_status") && col("status_count") > alertThreshold)
-        .as("alert_triggered"),
-      col("sample_order_ids"),
-      current_timestamp().as("detected_at"))
+  def deriveDropOff(fine: DataFrame): DataFrame =
+    fine.select(Processors.dropOffRow(col("window_start"), col("window_end"),
+      hll_sketch_estimate(col("customer_sketch")).as("unique_customers_affected")): _*)
 
   /** Shared topology (100 TB mode): 3 queries instead of 4 — the orders
     * topic is read, parsed, and deduped ONCE; funnel + drop-off both
-    * derive from its fine-grain aggregate inside one foreachBatch.
+    * derive from its fine-grain aggregate inside one sink micro-batch.
     * Requires a watermark (append mode: rows arrive finalized). */
   def runShared(spark: SparkSession,
       ordersSrc: EventSource, itemsSrc: EventSource, paymentsSrc: EventSource,
@@ -147,29 +113,17 @@ object StreamApp {
     require(cfg.watermark.isDefined, "shared topology needs a watermark")
     val (o, i, p) = ingest(spark, ordersSrc, itemsSrc, paymentsSrc)
     val fine = fineGrainOrders(dedup(o, cfg), cfg)
-    val ordersQuery = fine.writeStream
-      .outputMode("append")
-      .queryName("sink_orders_shared")
-      .trigger(MetricsSink.trigger(sink))
-      .option("checkpointLocation", s"${sink.checkpointRoot}/orders_shared")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Pin.scope {
-          val pinned = Pin(batch, Pin.Wide)
-          if (!pinned.isEmpty) {
-            deriveDropOff(pinned).drop("sample_order_ids")
-              .write.mode("append").parquet(s"$outRoot/drop_off_analysis")
-            deriveFunnel(pinned)
-              .write.mode("append").parquet(s"$outRoot/real_time_funnel")
-          }
-        }
-      }
-      .start()
-    val pipes = Seq(
+    Seq(
+      MetricsSink.start(fine, "orders_shared", sink, "append") { (batch, _) =>
+        deriveDropOff(batch).drop("sample_order_ids")
+          .write.mode("append").parquet(s"$outRoot/drop_off_analysis")
+        deriveFunnel(batch)
+          .write.mode("append").parquet(s"$outRoot/real_time_funnel")
+      },
       MetricsSink.start(Processors.gmv(dedup(i, cfg), cfg), "gmv_metrics", sink)(
         writer(s"$outRoot/gmv_metrics")),
       MetricsSink.start(Processors.payment(dedup(p, cfg), cfg), "payment_metrics", sink)(
         writer(s"$outRoot/payment_metrics")))
-    ordersQuery +: pipes
   }
 
   /** First-class mode switch: `shared = false` (default) runs the

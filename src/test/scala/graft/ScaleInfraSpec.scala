@@ -7,7 +7,7 @@ import graft.model.OrderEvent
 import graft.streaming.{MetricsSink, Processors}
 
 /** Scale-infrastructure checks: RocksDB state store, bucketed
-  * co-located joins, partitioned sink writes. */
+  * co-located joins, partition pruning. */
 class ScaleInfraSpec extends SparkSpec {
   import spark.implicits._
 
@@ -19,7 +19,8 @@ class ScaleInfraSpec extends SparkSpec {
 
   test("streaming aggregation runs on the RocksDB state store") {
     val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    MetricsSink.useRocksDbStateStore(spark)
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val input = MemoryStream[(OrderEvent, Timestamp)](spark)
       val orders = input.toDF().select($"_1.*", $"_2".as("event_timestamp"))
@@ -59,22 +60,6 @@ class ScaleInfraSpec extends SparkSpec {
     val plan = joined.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange hashpartitioning"), plan)
     assert(joined.count() == li.count())
-  }
-
-  test("partitioned sink writer lays out output by window date") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
-    val batch = Seq(
-      (ts("2024-01-01 10:00:00"), 5L), (ts("2024-01-02 11:00:00"), 7L))
-      .toDF("window_start", "total_orders")
-    MetricsSink.partitionedParquetWriter(dir)(batch, 0L)
-    val dates = new java.io.File(dir).listFiles()
-      .filter(_.isDirectory).map(_.getName).sorted
-    assert(dates.sameElements(Array(
-      "window_date=2024-01-01", "window_date=2024-01-02")))
-    // partition pruning: a date filter scans one partition
-    val pruned = spark.read.parquet(dir)
-      .filter(col("window_date") === "2024-01-01")
-    assert(pruned.count() == 1)
   }
 
   test("partition pruning reaches the scan (PartitionFilters, one dir read)") {

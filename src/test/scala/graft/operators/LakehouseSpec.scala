@@ -243,17 +243,6 @@ class LakehouseSpec extends SparkSpec {
     assert(ts.getDouble(4) == 1704067210.0 && ts.getDouble(5) == 1704153610.0)
   }
 
-  test("q64: broadcastDict=false sort-merge path is row-identical") {
-    val sf = "/root/testdata/sf0.001"
-    val b = graft.queries.LakehouseQueries
-      .boilerplateFractions(spark, sf, broadcastDict = true)
-      .collect().map(_.toSeq).toSeq
-    val s = graft.queries.LakehouseQueries
-      .boilerplateFractions(spark, sf, broadcastDict = false)
-      .collect().map(_.toSeq).toSeq
-    assert(b.nonEmpty && b == s)
-  }
-
   test("q76: cell count grows with corpus size, floor 16, ~constant cell width") {
     import graft.queries.LakehouseQueries.semCellCount
     assert(semCellCount(0) == 16)

@@ -54,6 +54,26 @@ class PinSpec extends graft.SparkSpec {
     Harness.release(spark)
   }
 
+  test("isEmpty of a filled Wide pin reads its row count and runs no job") {
+    Harness.release(spark)
+    val sc = spark.sparkContext
+    def jobs(group: String) = sc.statusTracker.getJobIdsForGroup(group)
+    Pin.scope {
+      val full = Pin(frame(9), Pin.Wide)
+      val empty = Pin(frame(10).filter("v < 0"), Pin.Wide)
+      sc.setJobGroup("pin-isEmpty", "probe")
+      assert(!Pin.isEmpty(full) && Pin.isEmpty(empty))
+      // job events arrive in order: once a later job shows, any job the probe ran shows too
+      sc.setJobGroup("pin-marker", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30e9
+      while (jobs("pin-marker").isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(jobs("pin-marker").nonEmpty && jobs("pin-isEmpty").isEmpty)
+      assert(!Pin.isEmpty(frame(11)) && Pin.isEmpty(full.filter("v < 0")))
+    }
+  }
+
   test("ksDrift on two different inputs leaves no persistent RDD") {
     Harness.release(spark)
     val s = spark

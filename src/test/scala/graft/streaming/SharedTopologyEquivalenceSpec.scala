@@ -86,8 +86,8 @@ class SharedTopologyEquivalenceSpec extends SparkSpec {
       .collect().foreach { got =>
         assert(expectedFunnel(got._1) == got, s"funnel window ${got._1}")
       }
-    // (the funnel sink drops the HLL unique_orders column in its final
-    // select; the 10% HLL envelope is pinned by SharedTopologySpec)
+    // (the one HLL output, the drop-off's unique_customers_affected,
+    // is pinned to its 10% envelope by SharedTopologySpec)
 
     // drop-off: exact columns equal on every emitted (window, status)
     val dropOff = spark.read.parquet(s"$root/metrics/drop_off_analysis")

@@ -1,6 +1,8 @@
 package graft.streaming
 
 import java.nio.file.Files
+import java.sql.Timestamp
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.model.Schemas
@@ -44,35 +46,39 @@ class SharedTopologySpec extends SparkSpec {
 
   test("derived drop-off matches the direct processor on exact columns") {
     val cfg = WindowConfig()
-    val direct = Processors.dropOff(orders, cfg)
-      .select("window_start", "order_status", "dropped_orders",
-        "alert_triggered")
-      .as[(java.sql.Timestamp, String, Long, Boolean)]
-      .collect().sortBy(r => (r._1.getTime, r._2))
-    val derived = StreamApp.deriveDropOff(
-      StreamApp.fineGrainOrders(orders, cfg))
-      .select("window_start", "order_status", "dropped_orders",
-        "alert_triggered")
-      .as[(java.sql.Timestamp, String, Long, Boolean)]
-      .collect().sortBy(r => (r._1.getTime, r._2))
-    assert(direct.sameElements(derived))
+    // six null-status orders in one window: more than the alert
+    // threshold, but a null status is no drop-off in either topology
+    val nullStatus = (1 to 6).map(i => (s"o$i", s"c$i", Option.empty[String],
+        Timestamp.valueOf("2024-01-01 10:00:05")))
+      .toDF("order_id", "customer_id", "order_status", "event_timestamp")
+    def exact(df: DataFrame) =
+      df.select("window_start", "order_status", "dropped_orders", "alert_triggered")
+        .collect().sortBy(r => (r.getTimestamp(0).getTime, Option(r.getString(1))))
+    Seq(orders, nullStatus).foreach { in =>
+      val direct = exact(Processors.dropOff(in, cfg))
+      val derived = exact(StreamApp.deriveDropOff(StreamApp.fineGrainOrders(in, cfg)))
+      assert(direct.nonEmpty && direct.sameElements(derived),
+        s"direct ${direct.take(4).mkString} vs derived ${derived.take(4).mkString}")
+    }
   }
 
   test("HLL unique estimates stay within 10% of exact distinct counts") {
     val cfg = WindowConfig()
     val est = StreamApp.fineGrainOrders(orders, cfg)
-      .groupBy($"window_start")
-      .agg(hll_sketch_estimate(hll_union_agg($"order_sketch")).as("u"))
-      .as[(java.sql.Timestamp, Long)].collect().toMap
+      .select($"window_start", $"order_status",
+        hll_sketch_estimate($"customer_sketch").as("u"))
+      .as[(Timestamp, String, Long)].collect()
+      .map { case (w, s, u) => (w, s) -> u }.toMap
     val exact = orders
-      .groupBy(window($"event_timestamp", "1 minute", "30 seconds"))
-      .agg(countDistinct($"order_id").as("u"))
-      .select($"window.start", $"u")
-      .as[(java.sql.Timestamp, Long)].collect().toMap
-    exact.foreach { case (w, u) =>
-      val e = est(w)
+      .groupBy(window($"event_timestamp", "1 minute", "30 seconds"), $"order_status")
+      .agg(countDistinct($"customer_id").as("u"))
+      .select($"window.start", $"order_status", $"u")
+      .as[(Timestamp, String, Long)].collect()
+    assert(exact.nonEmpty)
+    exact.foreach { case (w, s, u) =>
+      val e = est((w, s))
       assert(math.abs(e - u) <= math.max(1, u / 10),
-        s"window $w: est $e vs exact $u")
+        s"window $w status $s: est $e vs exact $u")
     }
   }
 

@@ -65,7 +65,8 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(OrderEvent, Timestamp)](spark)
     val orders = input.toDF().select($"_1.*", $"_2".as("event_timestamp"))
     val cfg = WindowConfig(watermark = Some("10 minutes"))
-    val deduped = cfg.applyWatermark(orders).dropDuplicatesWithinWatermark("event_id")
+    val deduped = orders.withWatermark("event_timestamp", "10 minutes")
+      .dropDuplicatesWithinWatermark("event_id")
     val q = MetricsSink.memory(Processors.funnel(deduped, cfg), "wm_mem", "append")
     try {
       input.addData(event("e1", "o1", "delivered", "2024-01-01 10:00:05"))
