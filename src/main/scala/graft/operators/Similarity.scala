@@ -504,7 +504,13 @@ object Similarity {
     * Shape: the batch (micro-batch-sized by contract) broadcasts
     * against the corpus — one narrow corpus scan, no corpus shuffle,
     * no corpus×corpus work; intra-batch pairs ride the blocked tile
-    * join. Output matches [[cosinePairs]]: (id_a < id_b, cos). */
+    * join. Output matches [[cosinePairs]]: (id_a < id_b, cos).
+    *
+    * Streaming: applied per micro-batch through
+    * [[graft.streaming.MicroBatch]], this is the continuously ingested
+    * form of q183. Each micro-batch edges against the static corpus
+    * (and itself) only; edges between two micro-batches are the
+    * index-append sink's concern. */
   def incrementalPairs(batch: DataFrame, corpus: DataFrame,
       threshold: Double, idCol: String = "vec_id",
       vecCol: String = "embedding", nBlocks: Int = 0): DataFrame = {

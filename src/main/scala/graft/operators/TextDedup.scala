@@ -540,7 +540,17 @@ object TextDedup {
     * bucketed by (band, key), so only the (tiny) batch side moves;
     * `maxBucket` bounds degenerate corpus buckets exactly as in
     * [[minhashCandidates]]. Nothing here is ever corpus×corpus.
-    * Precondition: one row per id (unchecked; see [[TextDedup]]). */
+    * Precondition: one row per id (unchecked; see [[TextDedup]]).
+    *
+    * Streaming: applied per micro-batch through
+    * [[graft.streaming.MicroBatch]], the stream IS the daily batch,
+    * arriving continuously, and its pins are released as each batch
+    * ends. Each micro-batch dedups against the static corpus only: two
+    * near-identical docs arriving in different micro-batches both get
+    * their corpus verdict (intra-stream dedup is StreamDedup's job,
+    * composable upstream). Growing the corpus index as batches commit
+    * is the sink's concern; the verdicts carry what it needs to append
+    * `new` docs. */
   def incrementalDedup(batch: DataFrame, corpus: DataFrame, n: Int = 3,
       threshold: Double = 0.5, maxBucket: Int = 1000,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {

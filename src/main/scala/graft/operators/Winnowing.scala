@@ -111,7 +111,16 @@ object Winnowing {
     * Scale shape: the batch fingerprints once (window pass over the
     * batch only), then ONE hash-keyed equi join against the index —
     * never batch×batch or corpus×corpus; bucket width is bounded by
-    * the index's df guard. */
+    * the index's df guard.
+    *
+    * Streaming: applied per micro-batch through
+    * [[graft.streaming.MicroBatch]] against an index built once, this
+    * is the substring-level complement to
+    * `TextDedup.incrementalDedup`'s verdicts on the same ingestion
+    * topology. Stateless: each micro-batch probes the static index
+    * only; cross-batch novelty is the sink's concern (append matched
+    * pairs; `new` docs' fingerprints can extend the stored index
+    * between runs). */
   def probeAgainst(batch: DataFrame, corpusIndex: DataFrame,
       k: Int = 3, w: Int = 4, minShared: Int = 2,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {

@@ -1429,13 +1429,13 @@ object CorpusStatsQueries {
 
   // ---- q183: incremental near-dup edges — the graph-maintenance
   // increment when a batch of embeddings arrives against a static
-  // corpus (the embedding twin of q89's incremental dedup; streaming
-  // twin: streaming.StreamEmbPairs). Batch = hash-designated 20% of
-  // vectors, corpus = the rest; edges = batch x corpus (batch
-  // broadcast, one corpus scan, no corpus shuffle) + intra-batch via
-  // the blocked tile join. The oracle recomputes both edge classes
-  // all-pairs; the equality proves the increment is exactly the set
-  // of edges the batch introduces. ----
+  // corpus (the embedding twin of q89's incremental dedup; streamed
+  // per micro-batch through streaming.MicroBatch). Batch =
+  // hash-designated 20% of vectors, corpus = the rest; edges = batch x
+  // corpus (batch broadcast, one corpus scan, no corpus shuffle) +
+  // intra-batch via the blocked tile join. The oracle recomputes both
+  // edge classes all-pairs; the equality proves the increment is
+  // exactly the set of edges the batch introduces. ----
 
   private val IncrPairTau = 0.35
   private def vecSplitHash = TF.hash60(col("vec_id").cast("string")) % 10

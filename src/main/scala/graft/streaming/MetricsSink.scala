@@ -19,7 +19,8 @@ import graft.operators.Pin
 final case class SinkConfig(
     triggerInterval: String = "30 seconds",
     checkpointRoot: String = "/tmp/graft-checkpoints",
-    showRows: Int = 5,
+    /** Print each non-empty micro-batch's first rows, the reference's
+      * console `show(5)` monitor. */
     console: Boolean = false,
     /** true = Trigger.AvailableNow: drain the whole backlog in rate-
       * limited micro-batches, then stop. The catch-up / incremental-
@@ -35,29 +36,27 @@ object MetricsSink {
     if (cfg.availableNow) Trigger.AvailableNow()
     else Trigger.ProcessingTime(cfg.triggerInterval)
 
-  /** Wire a metric stream to a foreachBatch writer — the per-query
-    * topology of stream_processor.py:175-231, and the one sink path of
-    * both topologies. Each micro-batch is pinned first: the console
-    * monitor and the writer read one computed batch, and the emptiness
-    * test reads the pin's row count, so an empty batch costs one job. */
+  /** Wire a metric stream to its writer through the [[MicroBatch]]
+    * runner — the per-query topology of stream_processor.py:175-231,
+    * and the one sink path of both topologies. Each micro-batch is
+    * pinned first: the console monitor and the writer read one
+    * computed batch, and the emptiness test reads the pin's row count,
+    * so an empty batch costs one job. */
   def start(df: DataFrame, queryName: String, cfg: SinkConfig,
       outputMode: String = "update")(
       write: (DataFrame, Long) => Unit): StreamingQuery =
-    df.writeStream
+    MicroBatch.start(df.writeStream
       .outputMode(outputMode)
       .queryName(s"sink_$queryName")
       .trigger(trigger(cfg))
-      .option("checkpointLocation", s"${cfg.checkpointRoot}/$queryName")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Pin.scope {
-          val b = Pin(batch, Pin.Wide)
-          if (!Pin.isEmpty(b)) {
-            if (cfg.console) b.show(cfg.showRows, truncate = false)
-            write(b, batchId)
-          }
+      .option("checkpointLocation", s"${cfg.checkpointRoot}/$queryName")) {
+      (batch, batchId) =>
+        val b = Pin(batch, Pin.Wide)
+        if (!Pin.isEmpty(b)) {
+          if (cfg.console) b.show(5, truncate = false)
+          write(b, batchId)
         }
-      }
-      .start()
+    }
 
   /** Parquet-append sink — the test/offline stand-in for the JDBC sink. */
   def parquetWriter(outDir: String): (DataFrame, Long) => Unit =
@@ -67,8 +66,8 @@ object MetricsSink {
     * with swallowed conflicts): output is laid out by batch_id and each
     * batch overwrites ITS OWN partition (dynamic overwrite), so a
     * replayed micro-batch after failure/restart rewrites the same
-    * partition instead of duplicating rows. foreachBatch + idempotent
-    * write = effective exactly-once. */
+    * partition instead of duplicating rows. The runner's at-least-once
+    * delivery + idempotent write = effective exactly-once. */
   def idempotentParquetWriter(outDir: String): (DataFrame, Long) => Unit =
     (batch, batchId) => batch
       .withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
@@ -76,15 +75,6 @@ object MetricsSink {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id")
       .parquet(outDir)
-
-  /** In-memory sink for unit tests: complete/update-mode results land in
-    * a queryable temp view. */
-  def memory(df: DataFrame, queryName: String, outputMode: String = "update"): StreamingQuery =
-    df.writeStream
-      .outputMode(outputMode)
-      .format("memory")
-      .queryName(queryName)
-      .start()
 
   /** Upsert dialect for [[jdbcUpsertWriter]].
     *

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import graft.operators.{Pin, Similarity, TextDedup}
 
 /** Replay contract at SCALE for the heaviest streaming twins (r14
@@ -13,23 +14,23 @@ import graft.operators.{Pin, Similarity, TextDedup}
   * emits one machine-checkable JSON line — order-independent
   * fingerprint of the streamed results vs the batch operator's on the
   * same inputs, micro-batch count, and the state-store plateau (these
-  * twins are deliberately STATELESS — the corpus is a static cached
-  * relation and foreachBatch applies the batch operator, so
-  * stateOperators must stay empty; a nonzero row count here means the
-  * topology regressed into keeping state).
+  * twins are deliberately STATELESS — the corpus is a static pinned
+  * relation and the [[MicroBatch]] runner applies the batch operator,
+  * so stateOperators must stay empty; a nonzero row count here means
+  * the topology regressed into keeping state).
   *
-  * Twins:
-  *  - `dedup` (default): StreamIncrementalDedup over documents. The
-  *    batch side is ONE whole-set call — per-document verdicts against
-  *    the static corpus are batching-invariant.
-  *  - `emb_pairs`: StreamEmbPairs over embeddings. Its contract is
-  *    per-micro-batch (intra-batch near-dup edges belong to the batch
-  *    that introduced them; cross-batch edges are the index-append's
-  *    concern — see StreamEmbPairs scaladoc), so the batch side
-  *    applies `Similarity.incrementalPairs` to the SAME one-file
-  *    slices the stream consumed and unions — proving the streaming
-  *    topology (trigger pacing, foreachBatch, append sink) delivers
-  *    exactly the batch operator's edges at scale with zero state.
+  * Twins, each a batch operator run per micro-batch:
+  *  - `dedup` (default): `TextDedup.incrementalDedup` over documents.
+  *    The batch side is ONE whole-set call — per-document verdicts
+  *    against the static corpus are batching-invariant.
+  *  - `emb_pairs`: `Similarity.incrementalPairs` over embeddings. Its
+  *    contract is per-micro-batch (intra-batch near-dup edges belong
+  *    to the batch that introduced them; cross-batch edges are the
+  *    index-append's concern — see its scaladoc), so the batch side
+  *    applies it to the SAME one-file slices the stream consumed and
+  *    unions — proving the streaming topology (trigger pacing, the
+  *    runner, append sink) delivers exactly the batch operator's edges
+  *    at scale with zero state.
   *
   * Usage: runMain graft.streaming.ReplayScale [sfDir] [slices] [twin]
   * (twin: dedup | emb_pairs). Exits 1 on fingerprint mismatch or
@@ -101,16 +102,15 @@ object ReplayScale {
       .schema(spark.read.parquet(s"$out/stream").schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$out/stream")
-    val sink = { (_: Long, results: DataFrame) =>
-      results.write.mode("append").parquet(s"$out/results"); ()
-    }
-    val q = twin match {
-      case "dedup" =>
-        StreamIncrementalDedup.start(streamed, corpus,
-          n = 3, threshold = 0.5, maxBucket = 1000, triggerMs = 200L)(sink)
+    val perBatch: DataFrame => DataFrame = twin match {
+      case "dedup" => TextDedup.incrementalDedup(_, corpus,
+        n = 3, threshold = 0.5, maxBucket = 1000)
       case "emb_pairs" =>
-        StreamEmbPairs.start(streamed, corpus,
-          threshold = 0.35, nBlocks = 8, triggerMs = 200L)(sink)
+        Similarity.incrementalPairs(_, corpus, 0.35, nBlocks = 8)
+    }
+    val q = MicroBatch.start(
+        streamed.writeStream.trigger(Trigger.ProcessingTime(200L))) {
+      (batch, _) => perBatch(batch).write.mode("append").parquet(s"$out/results")
     }
     q.processAllAvailable()
     val progresses = q.recentProgress.toSeq
@@ -121,17 +121,14 @@ object ReplayScale {
     val wall = (System.nanoTime() - t0) / 1e9
 
     val batchResult = twin match {
-      case "dedup" =>
-        TextDedup.incrementalDedup(spark.read.parquet(s"$out/stream"),
-          corpus, n = 3, threshold = 0.5, maxBucket = 1000)
+      case "dedup" => perBatch(spark.read.parquet(s"$out/stream"))
       case "emb_pairs" =>
         // same one-file slices the maxFilesPerTrigger=1 stream consumed
         val files = new java.io.File(s"$out/stream").listFiles()
           .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
         require(files.nonEmpty,
           s"$sfDir produced an empty stream subset — nothing to replay")
-        files.map(f => Similarity.incrementalPairs(
-            spark.read.parquet(f.getPath), corpus, 0.35, nBlocks = 8))
+        files.map(f => perBatch(spark.read.parquet(f.getPath)))
           .reduce(_ unionByName _)
     }
     val streamedFp = graft.CrossPlan.fingerprint(

@@ -3,7 +3,7 @@ package graft.streaming
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Long RocksDB soak (round-11 verdict #6): the 150 s SoakSpec proves
   * the TTL/eviction MECHANISM; this main proves it holds for ≥10 min
@@ -78,9 +78,11 @@ object SoakMain {
 
     // ---- 3. daily sketch inventory (driver-held, one row per day).
     val inv = new StreamSketchInventory.Inventory(spark)
-    val invQ = StreamSketchInventory.start(
-      rate(500).select(col("timestamp").as("ts"), col("value").as("user_id")),
-      inv, triggerMs = 2000L)
+    val invQ = MicroBatch.start(
+      rate(500).select(col("timestamp").as("ts"), col("value").as("user_id"))
+        .writeStream.trigger(Trigger.ProcessingTime(2000L))) {
+      (batch, batchId) => inv.apply(batchId, batch)
+    }
 
     // ---- 4. KMV + TTL churn (the SoakSpec shape, longer).
     val kmvQ = StreamKmv.distinctEstimates(

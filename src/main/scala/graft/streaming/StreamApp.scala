@@ -12,9 +12,9 @@ import graft.sources.{EventParser, EventSource}
   * Reference topology: 4 independent StreamingQueries, where the orders
   * stream feeds 3 of them and each query re-reads its topic (SURVEY §3.1
   * step 4). That is kept as the default for fidelity. At 100 TB, prefer
-  * `runShared`: one pass per source with the downstream metric fan-out
-  * inside a single sink micro-batch, so each topic is read and deduped once
-  * per trigger instead of three times (SURVEY §7.4 risk 5).
+  * `run(shared = true)`: one pass per source with the downstream metric
+  * fan-out inside a single sink micro-batch, so each topic is read and
+  * deduped once per trigger instead of three times (SURVEY §7.4 risk 5).
   */
 object StreamApp {
 
@@ -98,18 +98,12 @@ object StreamApp {
     * topic is read, parsed, and deduped ONCE; funnel + drop-off both
     * derive from its fine-grain aggregate inside one sink micro-batch.
     * Requires a watermark (append mode: rows arrive finalized). */
-  def runShared(spark: SparkSession,
+  private def runShared(spark: SparkSession,
       ordersSrc: EventSource, itemsSrc: EventSource, paymentsSrc: EventSource,
-      outRoot: String,
-      cfg: WindowConfig = WindowConfig(watermark = Some("10 minutes")),
-      sink: SinkConfig = SinkConfig(),
-      // sink writer per table path — swap in idempotentParquetWriter
-      // to batch-id-tag the update-mode tables (StreamDemo --compare
-      // reads finals as max-batch_id rows); funnel + drop-off are
-      // append-mode here (finalized rows, one per key) so they write
-      // direct parquet regardless
-      writer: String => (DataFrame, Long) => Unit =
-        MetricsSink.parquetWriter): Seq[StreamingQuery] = {
+      outRoot: String, cfg: WindowConfig, sink: SinkConfig,
+      // funnel + drop-off are append-mode here (finalized rows, one per
+      // key), so they write direct parquet whatever `writer` is
+      writer: String => (DataFrame, Long) => Unit): Seq[StreamingQuery] = {
     require(cfg.watermark.isDefined, "shared topology needs a watermark")
     val (o, i, p) = ingest(spark, ordersSrc, itemsSrc, paymentsSrc)
     val fine = fineGrainOrders(dedup(o, cfg), cfg)

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.{LanguageModel, Num}
 import graft.operators.Pin._
 
@@ -19,13 +18,13 @@ import graft.operators.Pin._
   * probability ∝ w, or a router shunts high-w docs to the target-
   * domain training mix.
   *
-  * Shape: stateless `foreachBatch` — the model tables ride the
-  * stream-static scoring joins, broadcast, so both models must fit
-  * executor memory (the [[LanguageModel.scoreAgainst]] precondition).
-  * Per-doc weights are complete per batch, so
-  * there is no watermark and no state store; the stream runs forever
-  * with bounded resources as long as the frozen model tables do not
-  * grow.
+  * Shape: [[weigh]] per micro-batch through [[MicroBatch]] — the
+  * model tables ride the stream-static scoring joins, broadcast, so
+  * both models must fit executor memory (the
+  * [[LanguageModel.scoreAgainst]] precondition). Per-doc weights are
+  * complete per batch, so there is no watermark and no state store;
+  * the stream runs forever with bounded resources as long as the
+  * frozen model tables do not grow.
   */
 object StreamDsir {
 
@@ -59,21 +58,4 @@ object StreamDsir {
       .withColumn("w", greatest(
         Num.r(exp(col("nll_corpus") - col("nll_target")), 6), lit(1e-6)))
   }
-
-  /** `foreachBatch` is AT-LEAST-ONCE: on failure/recovery a batchId
-    * can be re-delivered with the same rows, so a sink that blindly
-    * appends double-counts weights — which biases any downstream
-    * proportional sampler. The sink MUST be idempotent per `batchId`
-    * (that's why the id is passed): dedupe on it, e.g. write to a
-    * batchId-keyed path/partition or upsert on (batchId, doc_id) —
-    * the standard foreachBatch contract. */
-  def start(docsStream: DataFrame, m: DsirModels, triggerMs: Long = 1000L)(
-      sink: (Long, DataFrame) => Unit): StreamingQuery =
-    docsStream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(batchId, weigh(batch, m))
-      }
-      .start()
 }

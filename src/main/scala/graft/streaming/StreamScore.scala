@@ -13,7 +13,7 @@ import graft.operators.LogisticGd
   *
   * Being stateless it needs no watermark, no state store, and
   * composes anywhere in an ingestion topology (before StreamCuration's
-  * gate, after StreamIncrementalDedup's verdicts). */
+  * gate, after `TextDedup.incrementalDedup`'s verdicts). */
 object StreamScore {
 
   /** Append (score, pred) from a trained weight vector to a document

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Deploy half of the sketch-rollup tier (q154 builds daily HLL
   * sketches offline; q161 slides over them): MAINTAIN the daily
@@ -27,11 +26,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * and re-parallelized each batch, the KMeans-centroid bounded-model
   * shape. All per-event work stays distributed.
   *
-  * At-least-once note: `foreachBatch` can re-deliver a batchId on
-  * recovery. Element-level idempotence (above) makes re-applying the
-  * SAME rows harmless here — unlike additive sinks (see StreamDsir's
-  * contract), a re-merged HLL sketch is bit-for-bit the same set.
-  * The batchId guard below still skips already-applied ids to avoid
+  * Run it as `MicroBatch.start(w)((b, id) => inv.apply(id, b))`.
+  * Under the runner's at-least-once delivery, element-level
+  * idempotence (above) makes re-applying the SAME rows harmless: a
+  * re-merged HLL sketch is bit-for-bit the same set. The batchId guard
+  * in [[Inventory.apply]] still skips already-applied ids to avoid
   * wasted work.
   */
 object StreamSketchInventory {
@@ -89,14 +88,4 @@ object StreamSketchInventory {
         .orderBy(col("day"))
     }
   }
-
-  def start(eventsStream: DataFrame, inv: Inventory,
-      triggerMs: Long = 1000L): StreamingQuery =
-    eventsStream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        inv.apply(batchId, batch)
-      }
-      .start()
 }

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.model.OrderEvent
-import graft.streaming.{MetricsSink, Processors}
+import graft.streaming.Processors
 
 /** Scale-infrastructure checks: RocksDB state store, bucketed
   * co-located joins, partition pruning. */
@@ -24,7 +24,8 @@ class ScaleInfraSpec extends SparkSpec {
     try {
       val input = MemoryStream[(OrderEvent, Timestamp)](spark)
       val orders = input.toDF().select($"_1.*", $"_2".as("event_timestamp"))
-      val q = MetricsSink.memory(Processors.funnel(orders), "rocksdb_mem")
+      val q = Processors.funnel(orders).writeStream.outputMode("update")
+        .format("memory").queryName("rocksdb_mem").start()
       try {
         input.addData(event("e1", "o1", "delivered", "2024-01-01 10:00:05"))
         q.processAllAvailable()

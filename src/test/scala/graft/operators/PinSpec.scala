@@ -7,7 +7,8 @@ import graft.Harness
 
 /** The one materialization API: pins are filled at the pin, a scope
   * releases what was pinned inside it, and nothing else in the main
-  * sources persists, checkpoints or releases a frame. */
+  * sources persists, checkpoints or releases a frame — nor runs a
+  * micro-batch outside the runner's scope. */
 class PinSpec extends graft.SparkSpec {
 
   private def rddBlocks = SparkEnv.get.blockManager.getMatchingBlockIds(_.isRDD).toSet
@@ -87,17 +88,24 @@ class PinSpec extends graft.SparkSpec {
       spark.sparkContext.getPersistentRDDs)
   }
 
-  test("only Pin and Harness persist, checkpoint or release frames in the main sources") {
-    val calls = Seq(".cache()", ".persist(", "localCheckpoint(", "unpersist(")
+  /** Names of the main-source files whose text contains any of `calls`. */
+  private def mainSourcesCalling(calls: String*): Set[String] = {
     val walk = Files.walk(Paths.get("src/main/scala"))
-    val users =
-      try walk.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala") && {
-          val src = Files.readString(p)
-          calls.exists(src.contains)
-        })
-        .map(_.getFileName.toString).toSet
-      finally walk.close()
-    assert(users == Set("Pin.scala", "Harness.scala"))
+    try walk.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && {
+        val src = Files.readString(p)
+        calls.exists(src.contains)
+      })
+      .map(_.getFileName.toString).toSet
+    finally walk.close()
+  }
+
+  test("only Pin and Harness persist, checkpoint or release frames in the main sources") {
+    assert(mainSourcesCalling(".cache()", ".persist(", "localCheckpoint(",
+      "unpersist(") == Set("Pin.scala", "Harness.scala"))
+  }
+
+  test("only the micro-batch runner calls foreachBatch in the main sources") {
+    assert(mainSourcesCalling(".foreachBatch") == Set("MicroBatch.scala"))
   }
 }

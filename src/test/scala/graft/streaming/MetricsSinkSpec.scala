@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** `MetricsSink.start` is the sink path of both topologies: its
-  * emptiness probe and its writer must read one computed micro-batch. */
+  * emptiness probe, its console monitor and its writer must read one
+  * computed micro-batch. */
 class MetricsSinkSpec extends SparkSpec {
   import spark.implicits._
 
@@ -21,7 +22,8 @@ class MetricsSinkSpec extends SparkSpec {
     val received = new AtomicLong
     val q = MetricsSink.start(input.toDF().select(counting($"value").as("v")),
       "once", SinkConfig(triggerInterval = "1 seconds",
-        checkpointRoot = Files.createTempDirectory("graft-sink-once").toString)) {
+        checkpointRoot = Files.createTempDirectory("graft-sink-once").toString,
+        console = true)) {
       (batch, _) => received.addAndGet(batch.collect().length.toLong); ()
     }
     try {

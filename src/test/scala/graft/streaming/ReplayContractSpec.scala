@@ -5,14 +5,14 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Encoder, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import graft.{SparkSpec, Tables}
-import graft.operators.{LogisticGd, NaiveBayes, Ridge, Winnowing}
+import graft.operators.{LogisticGd, NaiveBayes, Ridge, Similarity, TextDedup,
+  Winnowing}
 
-/** The shared foreachBatch replay contract: `foreachBatch` is
-  * AT-LEAST-ONCE — on failure/recovery a sink can see the same
-  * (batchId, rows) again. Every streaming twin must therefore satisfy
-  * one of:
+/** The replay side of [[MicroBatch]]'s at-least-once contract (stated
+  * in its scaladoc): a sink can see the same (batchId, rows) again, so
+  * every streaming twin must satisfy one of:
   *
   *  (a) DETERMINISTIC RE-DELIVERY — re-running the twin over the same
   *      source content reproduces byte-identical rows per batchId, so
@@ -40,15 +40,20 @@ class ReplayContractSpec extends SparkSpec {
   private def canon(df: DataFrame): Vector[String] =
     df.collect().map(_.toString).sorted.toVector
 
-  /** Drives a sink-taking twin (its `start`) twice over the same
-    * micro-batch splits; returns both (batchId → rows) captures. */
-  private def runTwiceSink[T: Encoder](chunks: Seq[Seq[T]])(
-      start: (DataFrame, (Long, DataFrame) => Unit) => StreamingQuery)
+  /** Drives a twin twice through the runner over the same micro-batch
+    * splits: `writer` shapes the streaming input into its writer,
+    * `perBatch` maps each delivered batch. Returns both
+    * (batchId → rows) captures. */
+  private def runTwice[T: Encoder](chunks: Seq[Seq[T]])(
+      writer: DataFrame => DataStreamWriter[Row],
+      perBatch: DataFrame => DataFrame)
       : (Map[Long, Vector[String]], Map[Long, Vector[String]]) = {
     def once(): Map[Long, Vector[String]] = {
       val in = MemoryStream[T](spark)
       val rec = mutable.LinkedHashMap.empty[Long, Vector[String]]
-      val q = start(in.toDF(), (id, df) => rec(id) = canon(df))
+      val q = MicroBatch.start(writer(in.toDF())) {
+        (b, id) => rec(id) = canon(perBatch(b))
+      }
       try chunks.foreach { c => in.addData(c); q.processAllAvailable() }
       finally q.stop()
       rec.toMap
@@ -56,15 +61,19 @@ class ReplayContractSpec extends SparkSpec {
     (once(), once())
   }
 
-  /** Drives a DataFrame-returning twin twice via a recording
-    * foreachBatch; returns both captures. */
+  /** A batch operator applied to each micro-batch of the input, its
+    * columns named `cols`. */
+  private def runTwiceBatch[T: Encoder](chunks: Seq[Seq[T]], cols: String*)(
+      op: DataFrame => DataFrame)
+      : (Map[Long, Vector[String]], Map[Long, Vector[String]]) =
+    runTwice[T](chunks)(
+      _.toDF(cols: _*).writeStream.trigger(Trigger.ProcessingTime(50L)), op)
+
+  /** A DataFrame-returning twin, its output delivered as is. */
   private def runTwiceDf[T: Encoder](chunks: Seq[Seq[T]], mode: String)(
       build: DataFrame => DataFrame)
       : (Map[Long, Vector[String]], Map[Long, Vector[String]]) =
-    runTwiceSink[T](chunks) { (in, sink) =>
-      build(in).writeStream.outputMode(mode)
-        .foreachBatch((b: DataFrame, id: Long) => sink(id, b)).start()
-    }
+    runTwice[T](chunks)(build(_).writeStream.outputMode(mode), identity)
 
   private def assertDeterministic(name: String,
       runs: (Map[Long, Vector[String]], Map[Long, Vector[String]])): Unit = {
@@ -86,7 +95,7 @@ class ReplayContractSpec extends SparkSpec {
           "key-upsert replay would be lossy")
     }
 
-  // ---- (a) sink-taking twins ----------------------------------------
+  // ---- (a) batch operators run per micro-batch ----------------------
 
   test("StreamDsir replay: deterministic re-delivery per batchId") {
     val dir = "/root/testdata/sf0.001"
@@ -96,11 +105,8 @@ class ReplayContractSpec extends SparkSpec {
     val rows = docs.select(col("doc_id"), col("text"))
       .as[(Long, String)].collect().toSeq
     val chunks = Seq(rows.take(rows.length / 2), rows.drop(rows.length / 2))
-    assertDeterministic("StreamDsir", runTwiceSink(chunks) { (in, sink) =>
-      StreamDsir.start(in.toDF("doc_id", "text"), m, triggerMs = 50L) {
-        (id, df) => sink(id, df)
-      }
-    })
+    assertDeterministic("StreamDsir",
+      runTwiceBatch(chunks, "doc_id", "text")(StreamDsir.weigh(_, m)))
   }
 
   test("StreamQc expectation replay: deterministic re-delivery") {
@@ -110,10 +116,8 @@ class ReplayContractSpec extends SparkSpec {
       (3L, "ok document", "de", "src3", 11L),
       (4L, "mismatch", "fr", "src4", 77L))
     val chunks = Seq(rows.take(2), rows.drop(2))
-    assertDeterministic("StreamQc", runTwiceSink(chunks) { (in, sink) =>
-      StreamQc.start(in.toDF("doc_id", "text", "lang", "source", "n_chars"),
-        triggerMs = 50L)((id, df) => sink(id, df))
-    })
+    assertDeterministic("StreamQc", runTwiceBatch(chunks,
+      "doc_id", "text", "lang", "source", "n_chars")(StreamQc.expectations))
   }
 
   test("StreamWinnow replay: deterministic re-delivery") {
@@ -125,11 +129,9 @@ class ReplayContractSpec extends SparkSpec {
       (101L, "prefix words gamma delta epsilon zeta eta theta suffix tail"),
       (102L, "ten one nine two eight three seven four six five"))
     val chunks = Seq(batch.take(1), batch.drop(1))
-    assertDeterministic("StreamWinnow", runTwiceSink(chunks) { (in, sink) =>
-      StreamWinnow.start(in.toDF("doc_id", "text"), index,
-        k = 3, w = 4, minShared = 1, triggerMs = 50L)(
-        (id, df) => sink(id, df))
-    })
+    assertDeterministic("StreamWinnow",
+      runTwiceBatch(chunks, "doc_id", "text")(
+        Winnowing.probeAgainst(_, index, k = 3, w = 4, minShared = 1)))
   }
 
   test("StreamEmbPairs replay: deterministic re-delivery") {
@@ -139,11 +141,9 @@ class ReplayContractSpec extends SparkSpec {
       (101L, Array(1.0f, 0.0f, 0.0f)), (102L, Array(0.1f, 1.0f, 0.0f)),
       (103L, Array(0.0f, 0.0f, 1.0f)), (104L, Array(0.9f, 0.1f, 0.0f)))
     val chunks = Seq(batch.take(2), batch.drop(2))
-    assertDeterministic("StreamEmbPairs", runTwiceSink(chunks) { (in, sink) =>
-      StreamEmbPairs.start(in.toDF("vec_id", "embedding"), corpus,
-        threshold = 0.5, nBlocks = 4, triggerMs = 50L)(
-        (id, df) => sink(id, df))
-    })
+    assertDeterministic("StreamEmbPairs",
+      runTwiceBatch(chunks, "vec_id", "embedding")(
+        Similarity.incrementalPairs(_, corpus, 0.5, nBlocks = 4)))
   }
 
   test("StreamIncrementalDedup replay: deterministic re-delivery") {
@@ -157,11 +157,8 @@ class ReplayContractSpec extends SparkSpec {
       (103L, "completely different content with no overlap at all"))
     val chunks = Seq(batch.take(2), batch.drop(2))
     assertDeterministic("StreamIncrementalDedup",
-      runTwiceSink(chunks) { (in, sink) =>
-        StreamIncrementalDedup.start(in.toDF("doc_id", "text"), corpus,
-          n = 3, threshold = 0.4, maxBucket = 1000, triggerMs = 50L)(
-          (id, df) => sink(id, df))
-      })
+      runTwiceBatch(chunks, "doc_id", "text")(TextDedup.incrementalDedup(
+        _, corpus, n = 3, threshold = 0.4, maxBucket = 1000)))
   }
 
   // ---- (a)+(b) DataFrame-returning twins ------------------------------

@@ -86,12 +86,14 @@ class SharedTopologySpec extends SparkSpec {
     * into `root/metrics`; `sink` gets `root/ckpt` as checkpoint root. */
   private def runShared(root: String, sink: SinkConfig) = {
     EventGenerator.writeAll(spark, "/root/testdata/sf0.001", s"$root/ev", 2)
-    StreamApp.runShared(spark,
+    StreamApp.run(spark,
       FileEventSource(s"$root/ev/orders"),
       FileEventSource(s"$root/ev/items"),
       FileEventSource(s"$root/ev/payments"),
       s"$root/metrics",
-      sink = sink.copy(checkpointRoot = s"$root/ckpt"))
+      cfg = WindowConfig(watermark = Some("10 minutes")),
+      sink = sink.copy(checkpointRoot = s"$root/ckpt"),
+      shared = true)
   }
 
   test("e2e shared topology writes all three sinks from two sources") {

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import graft.SparkSpec
 
 /** Stateful-tier soak (round-10 verdict item 8): the 100 TB claim for
@@ -63,8 +64,9 @@ class SoakSpec extends SparkSpec {
         concat(lit("alpha beta gamma doc "), (col("value") % 37).cast("string"),
           lit(" epsilon zeta")).as("text"))
     var dsirBatches = 0L
-    val dsirQ = StreamDsir.start(dsirIn, models, triggerMs = 1000L) {
-      (_, weighed) => dsirBatches += weighed.count() }
+    val dsirQ = MicroBatch.start(
+        dsirIn.writeStream.trigger(Trigger.ProcessingTime(1000L))) {
+      (batch, _) => dsirBatches += StreamDsir.weigh(batch, models).count() }
 
     val kmvQ = est.writeStream
       .outputMode("update")

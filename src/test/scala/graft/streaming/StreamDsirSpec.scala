@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import graft.SparkSpec
 import graft.Tables
 
@@ -24,9 +25,9 @@ class StreamDsirSpec extends SparkSpec {
     val in = MemoryStream[(Long, String)](spark)
     val acc = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Double, Double, Double)]
-    val q = StreamDsir.start(
-      in.toDF().toDF("doc_id", "text"), m, triggerMs = 50L) { (_, out) =>
-      acc ++= out.as[(Long, Double, Double, Double)].collect()
+    val q = MicroBatch.start(in.toDF().toDF("doc_id", "text")
+        .writeStream.trigger(Trigger.ProcessingTime(50L))) { (batch, _) =>
+      acc ++= StreamDsir.weigh(batch, m).as[(Long, Double, Double, Double)].collect()
     }
     try {
       val third = rows.length / 3

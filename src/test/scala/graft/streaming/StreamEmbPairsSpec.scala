@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.Trigger
 import graft.SparkSpec
 import graft.operators.Similarity
 
@@ -30,10 +31,10 @@ class StreamEmbPairsSpec extends SparkSpec {
     val in = MemoryStream[(Long, Array[Float])](spark)
     val collected = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
     val perBatch = scala.collection.mutable.Map.empty[Long, Set[(Long, Long, Double)]]
-    val q = StreamEmbPairs.start(
-      in.toDF().toDF("vec_id", "embedding"), corpus,
-      threshold = tau, nBlocks = 4, triggerMs = 50L) { (bid, edges) =>
-      val rows = edges.as[(Long, Long, Double)].collect()
+    val q = MicroBatch.start(in.toDF().toDF("vec_id", "embedding")
+        .writeStream.trigger(Trigger.ProcessingTime(50L))) { (batch, bid) =>
+      val rows = Similarity.incrementalPairs(batch, corpus, tau, nBlocks = 4)
+        .as[(Long, Long, Double)].collect()
       collected ++= rows
       perBatch(bid) = rows.toSet
     }

@@ -1,12 +1,16 @@
 package graft.streaming
 
+import scala.collection.mutable
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.SparkSpec
 import graft.operators.TextDedup
 
 /** Streamed batch-vs-corpus verdicts equal the batch operator's on
   * the same documents, across micro-batch boundaries, and each
-  * micro-batch dedups against the STATIC corpus only. */
+  * micro-batch dedups against the STATIC corpus only; the runner
+  * releases every pin the operator makes for a micro-batch. */
 class StreamIncrementalDedupSpec extends SparkSpec {
   import spark.implicits._
 
@@ -20,21 +24,30 @@ class StreamIncrementalDedupSpec extends SparkSpec {
     (103L, "completely different content with no overlap at all whatsoever"),
     (104L, "one two three four five six seven eight nine ten extra"))
 
+  /** Streams each micro-batch's verdicts into `collected`. */
+  private def start(docs: DataFrame, corpus: DataFrame)(
+      collected: mutable.Buffer[(Long, String, Long)]): StreamingQuery =
+    MicroBatch.start(docs.writeStream.trigger(Trigger.ProcessingTime(50L))) {
+      (batch, _) => collected ++= TextDedup.incrementalDedup(
+        batch, corpus, n = 3, threshold = 0.4, maxBucket = 1000)
+        .as[(Long, String, Long)].collect()
+    }
+
   test("streamed verdicts ≡ batch verdicts across micro-batch boundaries") {
     val corpus = corpusRows.toDF("doc_id", "text")
     val in = MemoryStream[(Long, String)](spark)
-    val collected = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
-    val q = StreamIncrementalDedup.start(
-      in.toDF().toDF("doc_id", "text"), corpus,
-      n = 3, threshold = 0.4, maxBucket = 1000, triggerMs = 50L) { (_, verdicts) =>
-      collected ++= verdicts.as[(Long, String, Long)].collect()
-    }
+    val collected = mutable.ArrayBuffer.empty[(Long, String, Long)]
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val q = start(in.toDF().toDF("doc_id", "text"), corpus)(collected)
     try {
       in.addData(batchRows.take(2))
       q.processAllAvailable()
       in.addData(batchRows.drop(2))
       q.processAllAvailable()
     } finally q.stop()
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore
+    assert(leaked.isEmpty,
+      s"micro-batch pins outlived their batch: ${leaked.toSeq.sorted}")
 
     val batchVerdicts = TextDedup.incrementalDedup(
       batchRows.toDF("doc_id", "text"), corpus, n = 3, threshold = 0.4)
@@ -48,12 +61,8 @@ class StreamIncrementalDedupSpec extends SparkSpec {
   test("micro-batches dedup against the static corpus, not each other") {
     val corpus = Seq((1L, "p q r s t u v w")).toDF("doc_id", "text")
     val in = MemoryStream[(Long, String)](spark)
-    val collected = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
-    val q = StreamIncrementalDedup.start(
-      in.toDF().toDF("doc_id", "text"), corpus,
-      n = 3, threshold = 0.4, maxBucket = 1000, triggerMs = 50L) { (_, verdicts) =>
-      collected ++= verdicts.as[(Long, String, Long)].collect()
-    }
+    val collected = mutable.ArrayBuffer.empty[(Long, String, Long)]
+    val q = start(in.toDF().toDF("doc_id", "text"), corpus)(collected)
     try {
       // identical novel doc in two different micro-batches: both must
       // report 'new' vs the corpus — intra-stream dedup is StreamDedup's

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.Trigger
 import graft.SparkSpec
 import graft.queries.QcQueries
 
@@ -23,10 +24,10 @@ class StreamQcSpec extends SparkSpec {
   test("summed per-batch reports ≡ batch report on the union") {
     val in = MemoryStream[(Long, String, String, String, Long)](spark)
     val acc = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-    val q = StreamQc.start(
-      in.toDF().toDF("doc_id", "text", "lang", "source", "n_chars"),
-      triggerMs = 50L) { (_, report) =>
-      acc ++= report.as[(String, Long, Long)].collect()
+    val q = MicroBatch.start(
+        in.toDF().toDF("doc_id", "text", "lang", "source", "n_chars")
+          .writeStream.trigger(Trigger.ProcessingTime(50L))) { (batch, _) =>
+      acc ++= StreamQc.expectations(batch).as[(String, Long, Long)].collect()
     }
     try {
       in.addData(rows.take(2))
@@ -59,10 +60,11 @@ class StreamQcSpec extends SparkSpec {
 
     val in = MemoryStream[(Long, String, String, String, Long)](spark)
     val acc = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Double)]
-    val q = StreamQc.driftStart(
-      in.toDF().toDF("doc_id", "text", "lang", "source", "n_chars"),
-      ref, triggerMs = 50L) { (bid, report) =>
-      acc ++= report.select(lit(bid), col("feature"), col("bucket"), col("psi"))
+    val q = MicroBatch.start(
+        in.toDF().toDF("doc_id", "text", "lang", "source", "n_chars")
+          .writeStream.trigger(Trigger.ProcessingTime(50L))) { (batch, bid) =>
+      acc ++= StreamQc.drift(batch, ref)
+        .select(lit(bid), col("feature"), col("bucket"), col("psi"))
         .as[(Long, String, String, Double)].collect()
     }
     try {
@@ -99,10 +101,11 @@ class StreamQcSpec extends SparkSpec {
 
     val in = MemoryStream[(Long, String, String, String, Long)](spark)
     val acc = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Double, Double)]
-    val q = StreamQc.ksStart(
-      in.toDF().toDF("doc_id", "text", "lang", "source", "n_chars"),
-      ref, triggerMs = 50L) { (bid, report) =>
-      acc ++= report.select(lit(bid), col("feature"), col("ks"), col("at_value"))
+    val q = MicroBatch.start(
+        in.toDF().toDF("doc_id", "text", "lang", "source", "n_chars")
+          .writeStream.trigger(Trigger.ProcessingTime(50L))) { (batch, bid) =>
+      acc ++= StreamQc.ksDrift(batch, ref)
+        .select(lit(bid), col("feature"), col("ks"), col("at_value"))
         .as[(Long, String, Double, Double)].collect()
     }
     try {
@@ -127,10 +130,10 @@ class StreamQcSpec extends SparkSpec {
   test("uniqueness is intra-batch: a cross-batch duplicate is not counted") {
     val in = MemoryStream[(Long, String, String, String, Long)](spark)
     val acc = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-    val q = StreamQc.start(
-      in.toDF().toDF("doc_id", "text", "lang", "source", "n_chars"),
-      triggerMs = 50L) { (_, report) =>
-      acc ++= report.as[(String, Long, Long)].collect()
+    val q = MicroBatch.start(
+        in.toDF().toDF("doc_id", "text", "lang", "source", "n_chars")
+          .writeStream.trigger(Trigger.ProcessingTime(50L))) { (batch, _) =>
+      acc ++= StreamQc.expectations(batch).as[(String, Long, Long)].collect()
     }
     try {
       in.addData(Seq((1L, "a doc", "en", "src1", 5L)))

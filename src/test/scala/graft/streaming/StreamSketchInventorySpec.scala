@@ -3,6 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import graft.SparkSpec
 
 /** The incrementally-maintained daily sketch inventory serves the same
@@ -23,8 +24,10 @@ class StreamSketchInventorySpec extends SparkSpec {
   test("streamed inventory ≡ exact sliding distinct within the HLL bound") {
     val in = MemoryStream[(Timestamp, Long)](spark)
     val inv = new StreamSketchInventory.Inventory(spark)
-    val q = StreamSketchInventory.start(
-      in.toDF().toDF("ts", "user_id"), inv, triggerMs = 50L)
+    val q = MicroBatch.start(in.toDF().toDF("ts", "user_id")
+        .writeStream.trigger(Trigger.ProcessingTime(50L))) {
+      (batch, batchId) => inv.apply(batchId, batch)
+    }
     try {
       // ragged micro-batches: 3 uneven slices
       in.addData(rows.take(70))

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.Trigger
 import graft.SparkSpec
 import graft.operators.Winnowing
 
@@ -26,10 +27,10 @@ class StreamWinnowSpec extends SparkSpec {
     val index = Winnowing.index(corpusRows.toDF("doc_id", "text")).cache()
     val in = MemoryStream[(Long, String)](spark)
     val collected = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Double)]
-    val q = StreamWinnow.start(
-      in.toDF().toDF("doc_id", "text"), index,
-      k = 3, w = 4, minShared = 1, triggerMs = 50L) { (_, matches) =>
-      collected ++= matches.as[(Long, Long, Long, Double)].collect()
+    val q = MicroBatch.start(in.toDF().toDF("doc_id", "text")
+        .writeStream.trigger(Trigger.ProcessingTime(50L))) { (batch, _) =>
+      collected ++= Winnowing.probeAgainst(batch, index, k = 3, w = 4, minShared = 1)
+        .as[(Long, Long, Long, Double)].collect()
     }
     try {
       in.addData(batchRows.take(1))

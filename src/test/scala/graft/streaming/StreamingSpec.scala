@@ -23,7 +23,8 @@ class StreamingSpec extends SparkSpec {
   test("funnel over MemoryStream micro-batches refines windows in update mode") {
     val input = MemoryStream[(OrderEvent, Timestamp)](spark)
     val orders = input.toDF().select($"_1.*", $"_2".as("event_timestamp"))
-    val q = MetricsSink.memory(Processors.funnel(orders), "funnel_mem")
+    val q = Processors.funnel(orders).writeStream.outputMode("update")
+      .format("memory").queryName("funnel_mem").start()
     try {
       input.addData(event("e1", "o1", "delivered", "2024-01-01 10:00:05"))
       q.processAllAvailable()
@@ -48,8 +49,8 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(OrderEvent, Timestamp)](spark)
     val orders = input.toDF().select($"_1.*", $"_2".as("event_timestamp"))
       .dropDuplicates("event_id")
-    val q = MetricsSink.memory(
-      orders.groupBy().agg(count(lit(1)).as("n")), "dedup_mem")
+    val q = orders.groupBy().agg(count(lit(1)).as("n")).writeStream
+      .outputMode("update").format("memory").queryName("dedup_mem").start()
     try {
       input.addData(event("dup", "o1", "delivered", "2024-01-01 10:00:05"))
       q.processAllAvailable()
@@ -67,7 +68,8 @@ class StreamingSpec extends SparkSpec {
     val cfg = WindowConfig(watermark = Some("10 minutes"))
     val deduped = orders.withWatermark("event_timestamp", "10 minutes")
       .dropDuplicatesWithinWatermark("event_id")
-    val q = MetricsSink.memory(Processors.funnel(deduped, cfg), "wm_mem", "append")
+    val q = Processors.funnel(deduped, cfg).writeStream.outputMode("append")
+      .format("memory").queryName("wm_mem").start()
     try {
       input.addData(event("e1", "o1", "delivered", "2024-01-01 10:00:05"))
       input.addData(event("e2", "o2", "created", "2024-01-01 11:00:00"))
