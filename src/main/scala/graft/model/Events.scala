@@ -1,6 +1,5 @@
 package graft.model
 
-import java.sql.Timestamp
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.types.StructType
 
@@ -57,12 +56,6 @@ object Schemas {
   val item: StructType = Encoders.product[ItemEvent].schema
   val payment: StructType = Encoders.product[PaymentEvent].schema
 
-  /** Topic → schema, mirroring config/kafka_config.py:18-22. */
-  val byTopic: Map[String, StructType] = Map(
-    "olist.orders" -> order,
-    "olist.order_items" -> item,
-    "olist.payments" -> payment)
-
   /** Wire-contract nullability (avro_schemas.py:1-57): exactly the
     * fields the reference declares WITHOUT a `["null", T]` union are
     * required — the envelope, plus per-schema measures and `timestamp`.
@@ -83,34 +76,3 @@ object Schemas {
     envelope ++ Set("payment_sequential", "payment_installments",
       "payment_value", "timestamp"))
 }
-
-/** Metric-row shapes mirroring the reference's Postgres tables
-  * (infrastructure/postgres/init_metrics.sql:15-149). Window bounds are
-  * TimestampType; money stays double until the JDBC boundary
-  * (SURVEY §1.4). */
-final case class FunnelMetric(
-    window_start: Timestamp, window_end: Timestamp,
-    total_events: Long, unique_orders: Long, orders_created: Long,
-    orders_with_items: Long, orders_with_payment: Long,
-    orders_delivered: Long, orders_canceled: Long,
-    item_conversion_rate: Option[Double],
-    payment_conversion_rate: Option[Double])
-
-final case class GmvMetric(
-    window_start: Timestamp, window_end: Timestamp,
-    total_gmv: Double, order_count: Long, unique_orders: Long,
-    avg_item_price: Double, max_item_price: Double, min_item_price: Double)
-
-final case class DropOffMetric(
-    window_start: Timestamp, window_end: Timestamp,
-    order_status: String, status_count: Long, unique_customers: Long,
-    is_dropoff: Boolean, sample_order_ids: Seq[String],
-    alert_triggered: Boolean)
-
-final case class PaymentMetric(
-    window_start: Timestamp, window_end: Timestamp,
-    payment_type: String, transaction_count: Long, unique_orders: Long,
-    total_payment_value: Double, avg_payment_value: Double,
-    success_count: Long, failed_count: Long,
-    success_rate: Option[Double], avg_installments: Double,
-    max_installments: Int)

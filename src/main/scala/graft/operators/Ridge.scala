@@ -10,9 +10,11 @@ import org.apache.spark.sql.functions._
   *    integer sufficient statistics — ONE grouped aggregation with
   *    map-side partials over integer-measure rows (g, x1, x2, y).
   *    Order-independent by construction (64-bit integer sums), so the
-  *    same expressions run batch OR streaming (update-mode agg state
-  *    is exactly these sums, and they are ADDITIVE across
-  *    micro-batches — see streaming.StreamRidge).
+  *    same call runs batch OR streaming (update-mode agg state is
+  *    exactly these sums, and they are ADDITIVE across micro-batches,
+  *    so a counter-upsert sink needs no further state); [[solve]] on
+  *    any snapshot of the maintained sums gives the batch
+  *    coefficients of all data seen so far.
   *  - [[solve]]: the 3×3 ridge system (X'X + λI)β = X'y closed-form by
   *    Cramer's rule as a fixed expression tree over the (exactly
   *    double-representable) sums, written with the identical
@@ -40,9 +42,8 @@ object Ridge {
       s" + $c * ($d * $h - $e * $g))"
 
   /** The 9 sufficient-sum aggregate expressions over integer columns
-    * (x1, x2, y) — shared verbatim by the batch groupBy and the
-    * streaming update-mode aggregation. */
-  def sumExprs: Seq[Column] = Seq(
+    * (x1, x2, y). */
+  private def sumExprs: Seq[Column] = Seq(
     count(lit(1)).as("n"),
     sum(col("x1")).as("s1"), sum(col("x2")).as("s2"),
     sum(col("x1") * col("x1")).as("s11"),

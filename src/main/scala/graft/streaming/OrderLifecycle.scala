@@ -3,12 +3,11 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Arbitrary stateful processing (SURVEY.md §2.13 — absent in the
   * reference, a first-class Structured Streaming capability): a
   * per-order lifecycle state machine over the order event stream,
-  * implemented with flatMapGroupsWithState.
+  * implemented with flatMapGroupsWithState through [[KeyedState]].
   *
   * Emits one OrderTransition per observed status change (cross-
   * micro-batch: the previous status lives in the state store), which is
@@ -16,8 +15,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * can't provide.
   *
   * State hygiene at scale: keyed state is one small record per open
-  * order; event-time timeout (watermark-driven) evicts orders with no
-  * activity, so state size tracks active orders, not stream history.
+  * order; the watermark-driven timeout of [[KeyedState]] evicts orders
+  * with no activity, so state size tracks active orders, not stream
+  * history.
   */
 object OrderLifecycle {
 
@@ -31,54 +31,39 @@ object OrderLifecycle {
       to_status: String, gap_seconds: Long, transition_no: Int,
       at: Timestamp)
 
-  val TimeoutConf: GroupStateTimeout = GroupStateTimeout.EventTimeTimeout
-
+  /** One order's events of a micro-batch, in event-time order, against
+    * its stored state → the next state and the transitions. */
   def step(orderId: String, events: Iterator[OrderPing],
-      state: GroupState[LifecycleState]): Iterator[OrderTransition] = {
-    if (state.hasTimedOut) {
-      state.remove()
-      Iterator.empty
-    } else {
-      val sorted = events.toSeq.sortBy(_.event_timestamp.getTime)
-      var cur = state.getOption
-      val out = Seq.newBuilder[OrderTransition]
-      sorted.foreach { e =>
-        val ts = e.event_timestamp.getTime
-        cur match {
-          case Some(s) if s.lastStatus != e.order_status =>
-            out += OrderTransition(orderId, s.lastStatus, e.order_status,
-              (ts - s.lastTsMs) / 1000, s.transitions + 1, e.event_timestamp)
-            cur = Some(LifecycleState(e.order_status, ts, s.transitions + 1))
-          case Some(s) => // same status: refresh timestamp only
-            cur = Some(s.copy(lastTsMs = ts))
-          case None => // first sighting: no transition yet
-            cur = Some(LifecycleState(e.order_status, ts, 0))
-        }
+      prev: Option[LifecycleState])
+      : (Option[LifecycleState], Iterator[OrderTransition]) = {
+    var cur = prev
+    val out = Seq.newBuilder[OrderTransition]
+    events.toSeq.sortBy(_.event_timestamp.getTime).foreach { e =>
+      val ts = e.event_timestamp.getTime
+      cur match {
+        case Some(s) if s.lastStatus != e.order_status =>
+          out += OrderTransition(orderId, s.lastStatus, e.order_status,
+            (ts - s.lastTsMs) / 1000, s.transitions + 1, e.event_timestamp)
+          cur = Some(LifecycleState(e.order_status, ts, s.transitions + 1))
+        case Some(s) => // same status: refresh timestamp only
+          cur = Some(s.copy(lastTsMs = ts))
+        case None => // first sighting: no transition yet
+          cur = Some(LifecycleState(e.order_status, ts, 0))
       }
-      cur.foreach { s =>
-        state.update(s)
-        // GC: no activity for 1h of event time → evict (clamped above
-        // the watermark — late keys must not request a passed timeout)
-        val wm = state.getCurrentWatermarkMs()
-        if (wm > 0)
-          state.setTimeoutTimestamp(
-            math.max(s.lastTsMs + 3600 * 1000, wm + 60 * 1000))
-      }
-      out.result().iterator
     }
+    (cur, out.result().iterator)
   }
 
   /** orders frame (order_id, order_status, event_timestamp) → transition
-    * stream. Watermark is required for the event-time timeout. */
-  def transitions(orders: DataFrame, watermarkDelay: String = "10 minutes"):
-      Dataset[OrderTransition] = {
+    * stream. Precondition: a streaming input already carries its
+    * event-time watermark. An order with no activity for 1 h of event
+    * time is evicted ([[KeyedState]]). */
+  def transitions(orders: DataFrame): Dataset[OrderTransition] = {
     val spark = orders.sparkSession
     import spark.implicits._
-    orders
-      .withWatermark("event_timestamp", watermarkDelay)
+    KeyedState.eventTime(orders
       .select(col("order_id"), col("order_status"), col("event_timestamp"))
-      .as[OrderPing]
-      .groupByKey(_.order_id)
-      .flatMapGroupsWithState(OutputMode.Append, TimeoutConf)(step)
+      .as[OrderPing])(_.order_id)(
+      (s: LifecycleState) => s.lastTsMs + 3600 * 1000)(step)
   }
 }

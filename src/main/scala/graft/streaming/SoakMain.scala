@@ -58,11 +58,10 @@ object SoakMain {
           typedLit(Seq("created", "approved", "shipped", "delivered",
             "canceled", "invoiced", "processing", "unavailable")),
           (col("value") % 8 + 1).cast("int")).as("order_status"))
-      .withWatermark("event_timestamp", "30 seconds")
-      .dropDuplicatesWithinWatermark("event_id")
     val cfg = WindowConfig(windowDuration = "1 minute",
       slideDuration = "30 seconds", watermark = Some("30 seconds"))
-    val fineQ = StreamApp.fineGrainOrders(orders, cfg).writeStream
+    val fineQ = StreamApp.fineGrainOrders(StreamApp.dedup(orders, cfg), cfg)
+      .writeStream
       .outputMode("append").queryName("soak_fine")
       .option("checkpointLocation", s"$ckpt/fine").format("noop").start()
 
@@ -70,8 +69,9 @@ object SoakMain {
     // (users go idle forever -> their sessions close and evict).
     val sess = StreamSession.sessions(
       rate(500).select(col("timestamp").as("ts"),
-        ((col("value") / 5000L) * 100L + col("value") % 100L).as("user_id")),
-      gap = "5 seconds", watermarkDelay = "10 seconds")
+        ((col("value") / 5000L) * 100L + col("value") % 100L).as("user_id"))
+        .withWatermark("ts", "10 seconds"),
+      gap = "5 seconds")
     val sessQ = sess.writeStream
       .outputMode("append").queryName("soak_sessions")
       .option("checkpointLocation", s"$ckpt/sess").format("noop").start()

@@ -27,7 +27,7 @@ object StreamApp {
     * (dropDuplicatesWithinWatermark); without one this is the
     * reference's unbounded-state semantics. The one place that applies
     * `cfg.watermark`: every metric transform reads its output. */
-  private def dedup(df: DataFrame, cfg: WindowConfig): DataFrame =
+  private[streaming] def dedup(df: DataFrame, cfg: WindowConfig): DataFrame =
     cfg.watermark match {
       case Some(delay) =>
         df.withWatermark("event_timestamp", delay)

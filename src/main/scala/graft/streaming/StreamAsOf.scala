@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming deployment of the as-of join (operators.AsOfJoin /
   * plans.AsOfJoinPlan are its batch forms): enrich each purchase with
@@ -12,8 +11,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Structured Streaming cannot express "most recent prior event from
   * the same stream" as a stream-stream join (that join emits ALL pairs
   * in the time range, not the latest), so this is keyed state:
-  * `flatMapGroupsWithState` holding one (last view timestamp) record
-  * per user.
+  * `flatMapGroupsWithState` ([[KeyedState]]) holding one (last view
+  * timestamp) record per user.
   *
   * Ordering: events are processed in event-time order inside each
   * micro-batch (views win ties, matching the batch operator's
@@ -22,8 +21,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * stream contract is "best knowledge at emit time"; the batch
   * operator is the retrospective truth.
   *
-  * 100 TB notes: state is one long per active user, watermark-driven
-  * event-time timeout evicts idle users (state tracks active users,
+  * 100 TB notes: state is one long per active user, the watermark-driven
+  * timeout of [[KeyedState]] evicts idle users (state tracks active users,
   * not history). The shuffle is the groupByKey on user_id only.
   */
 object StreamAsOf {
@@ -38,62 +37,47 @@ object StreamAsOf {
 
   val ToleranceSec = 3600L
 
+  /** One user's events of a micro-batch against the stored last view →
+    * the next last view and the enriched purchases. */
   def step(userId: Long, events: Iterator[UserEvent],
-      state: GroupState[LastView]): Iterator[EnrichedPurchase] = {
-    if (state.hasTimedOut) {
-      state.remove()
-      Iterator.empty
-    } else {
-      // event-time order; views before purchases on equal timestamps
-      val sorted = events.toSeq.sortBy(e =>
-        (e.ts.getTime, if (e.event_type == "view") 0 else 1))
-      var lastView = state.getOption.map(_.tsMs)
-      val out = Seq.newBuilder[EnrichedPurchase]
-      sorted.foreach { e =>
-        e.event_type match {
-          case "view" =>
-            lastView = Some(lastView.fold(e.ts.getTime)(math.max(_, e.ts.getTime)))
-          case "purchase" =>
-            // tolerance at ms precision (the native operator compares
-            // at full precision); reported gap as floor(sec)-floor(sec)
-            // to match unix_timestamp arithmetic exactly
-            val gapMs = lastView.map(v => e.ts.getTime - v)
-            val within = gapMs.exists(g => g >= 0 && g <= ToleranceSec * 1000)
-            val gapSec = lastView.map(v =>
-              math.floorDiv(e.ts.getTime, 1000) - math.floorDiv(v, 1000))
-            out += EnrichedPurchase(userId, e.ts, e.value,
-              within, if (within) gapSec.get else -1L)
-          case _ => ()
-        }
+      prev: Option[LastView]): (Option[LastView], Iterator[EnrichedPurchase]) = {
+    // event-time order; views before purchases on equal timestamps
+    val sorted = events.toSeq.sortBy(e =>
+      (e.ts.getTime, if (e.event_type == "view") 0 else 1))
+    var lastView = prev.map(_.tsMs)
+    val out = Seq.newBuilder[EnrichedPurchase]
+    sorted.foreach { e =>
+      e.event_type match {
+        case "view" =>
+          lastView = Some(lastView.fold(e.ts.getTime)(math.max(_, e.ts.getTime)))
+        case "purchase" =>
+          // tolerance at ms precision (the native operator compares
+          // at full precision); reported gap as floor(sec)-floor(sec)
+          // to match unix_timestamp arithmetic exactly
+          val gapMs = lastView.map(v => e.ts.getTime - v)
+          val within = gapMs.exists(g => g >= 0 && g <= ToleranceSec * 1000)
+          val gapSec = lastView.map(v =>
+            math.floorDiv(e.ts.getTime, 1000) - math.floorDiv(v, 1000))
+          out += EnrichedPurchase(userId, e.ts, e.value,
+            within, if (within) gapSec.get else -1L)
+        case _ => ()
       }
-      lastView.foreach { v =>
-        state.update(LastView(v))
-        // idle users: no view activity for tolerance + 1h slack → evict
-        // (clamped above the watermark — a state older than the horizon
-        // would otherwise request an already-passed timeout)
-        val wm = state.getCurrentWatermarkMs()
-        if (wm > 0)
-          state.setTimeoutTimestamp(
-            math.max(v + (ToleranceSec + 3600) * 1000, wm + 60 * 1000))
-      }
-      out.result().iterator
     }
+    (lastView.map(LastView), out.result().iterator)
   }
 
   /** events frame (user_id, event_type, ts, value) → enriched purchase
-    * stream. Watermark required for the event-time timeout. */
-  def enrichedPurchases(events: DataFrame,
-      watermarkDelay: String = "10 minutes"): Dataset[EnrichedPurchase] = {
+    * stream. Precondition: a streaming input already carries its
+    * event-time watermark. A user with no view for tolerance + 1 h of
+    * event time is evicted ([[KeyedState]]). */
+  def enrichedPurchases(events: DataFrame): Dataset[EnrichedPurchase] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
+    KeyedState.eventTime(events
       .select(col("user_id").cast("long").as("user_id"), col("event_type"),
         col("ts"), coalesce(col("value"), lit(0.0)).as("value"))
       .filter(col("event_type").isin("view", "purchase"))
-      .as[UserEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(step)
+      .as[UserEvent])(_.user_id)(
+      (s: LastView) => s.tsMs + (ToleranceSec + 3600) * 1000)(step)
   }
 }

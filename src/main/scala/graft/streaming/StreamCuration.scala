@@ -21,17 +21,16 @@ object StreamCuration {
 
   /** Curate an incoming document stream. Input needs
     * (doc_id, lang, text, tsCol). Emits the batch pipeline's columns
-    * plus the event time. */
+    * plus the event time. Precondition: a streaming input already
+    * carries its event-time watermark on `tsCol`. */
   def curate(docsStream: DataFrame, minTokens: Int = 20,
-      tsCol: String = "ts",
-      watermarkDelay: String = "10 minutes"): DataFrame =
+      tsCol: String = "ts"): DataFrame =
     docsStream
       .select(col("doc_id"), col("lang"), col(tsCol),
         CurationPipeline.scrubbed(col("text")).as("clean"))
       .withColumn("toks", size(TextFunctions.tokens(col("clean"))).cast("long"))
       .filter(col("toks") >= minTokens)
       .withColumn("fp", TextFunctions.fingerprint(col("clean")))
-      .withWatermark(tsCol, watermarkDelay)
       .dropDuplicatesWithinWatermark("fp")
       .withColumn("split", TextFunctions.splitAssign(col("doc_id")))
       .select(col("doc_id"), col("lang"), col("split"), col("toks"),

@@ -18,12 +18,11 @@ import graft.functions.TextFunctions
 object StreamDedup {
 
   /** Keep the first document per content fingerprint within the
-    * watermark horizon. Input needs (textCol, tsCol). */
-  def contentDedup(docsStream: DataFrame, tsCol: String = "ts",
-      textCol: String = "text",
-      watermarkDelay: String = "10 minutes"): DataFrame =
+    * watermark horizon. Input needs (textCol). Precondition: a
+    * streaming input already carries its event-time watermark. */
+  def contentDedup(docsStream: DataFrame,
+      textCol: String = "text"): DataFrame =
     docsStream
       .withColumn("fp", TextFunctions.fingerprint(col(textCol)))
-      .withWatermark(tsCol, watermarkDelay)
       .dropDuplicatesWithinWatermark("fp")
 }

@@ -19,16 +19,15 @@ object StreamJoins {
 
   /** orders ⟕ items on order_id, item event within [order, order+1h].
     * Inputs need `event_timestamp`; outputs carry both sides' values
-    * for revenue attribution. */
+    * for revenue attribution. Precondition: both streaming inputs
+    * already carry their event-time watermark (the outer join needs
+    * both to emit and evict). */
   def ordersWithItems(orders: DataFrame, items: DataFrame,
-      watermarkDelay: String = "10 minutes",
       joinWindow: String = "1 hour"): DataFrame = {
     val o = orders
-      .withWatermark("event_timestamp", watermarkDelay)
       .select(col("order_id"), col("order_status"),
         col("event_timestamp").as("order_ts"))
     val i = items
-      .withWatermark("event_timestamp", watermarkDelay)
       .select(col("order_id").as("item_order_id"), col("price"),
         col("freight_value"), col("event_timestamp").as("item_ts"))
     o.join(i,
@@ -40,11 +39,11 @@ object StreamJoins {
   }
 
   /** Joined funnel: per sliding window, how many orders have ≥1 item
-    * event vs status-derived counts — the real conversion measurement. */
+    * event vs status-derived counts — the real conversion measurement.
+    * Same precondition as [[ordersWithItems]]; `cfg` gives the window. */
   def joinedFunnel(orders: DataFrame, items: DataFrame,
-      cfg: WindowConfig = WindowConfig(watermark = Some("10 minutes"))): DataFrame = {
-    val joined = ordersWithItems(orders, items,
-      cfg.watermark.getOrElse("10 minutes"))
+      cfg: WindowConfig = WindowConfig()): DataFrame = {
+    val joined = ordersWithItems(orders, items)
     val perOrder = joined
       .groupBy(window(col("order_ts"), cfg.windowDuration, cfg.slideDuration),
         col("order_id"))

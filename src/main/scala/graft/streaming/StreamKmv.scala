@@ -29,7 +29,10 @@ import graft.operators.Kmv
   * `stateTtl` (e.g. "2 hours") to expire synopses for keys idle
   * longer than that — the right policy for high-churn keyspaces
   * (session ids); leave None for closed keyspaces (categories) where
-  * every key's synopsis should live for the query's lifetime.
+  * every key's synopsis should live for the query's lifetime. The TTL
+  * is processing time, so this keeps its own `flatMapGroupsWithState`
+  * rather than [[KeyedState]]'s event-time lifecycle: its input has no
+  * event-time column to watermark, and it emits in Update mode.
   */
 object StreamKmv {
 

@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of q186's transition extraction: incremental
   * maintenance of the per-user event-type transition stream. The batch
@@ -26,8 +25,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * than the batch truth — same contract as StreamAsOf's
   * "best knowledge at emit time".
   *
-  * 100 TB notes: state is ~three words per ACTIVE user with
-  * watermark-driven event-time timeout eviction; the only shuffle is
+  * 100 TB notes: state is ~three words per ACTIVE user with the
+  * watermark-driven timeout eviction of [[KeyedState]]; the only shuffle is
   * the groupByKey on user_id. The eviction horizon is the one place
   * stream and batch can diverge: a user who returns AFTER eviction
   * starts a fresh chain, so their boundary transition is not emitted
@@ -48,60 +47,43 @@ object StreamMarkov {
 
   val DefaultIdleMs: Long = 30L * 24 * 3600 * 1000
 
-  def step(idleMs: Long)(userId: Long, events: Iterator[Ev],
-      state: GroupState[LastEv]): Iterator[Transition] = {
-    if (state.hasTimedOut) {
-      state.remove()
-      Iterator.empty
-    } else {
-      val sorted = events.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      if (sorted.isEmpty) Iterator.empty
-      else {
-        val types = state.getOption.map(_.typ).toSeq ++
-          sorted.map(_.event_type)
-        val out = types.zip(types.drop(1)).map { case (a, b) =>
-          Transition(userId, a, b)
-        }
-        // keep the NEWEST-seen event as the boundary record: a
-        // cross-batch straggler older than the stored last event
-        // (contract-violating input) mis-pairs its own transition, but
-        // must not also regress the boundary and the timeout horizon —
-        // that would compound the divergence beyond the documented
-        // single mis-paired transition
-        val newest = sorted.last
-        val storedIsNewer = state.getOption.exists(p =>
-          p.tsMs > newest.ts.getTime ||
-            (p.tsMs == newest.ts.getTime && p.eventId >= newest.event_id))
-        val last =
-          if (storedIsNewer) state.get
-          else LastEv(newest.ts.getTime, newest.event_id, newest.event_type)
-        state.update(last)
-        // always set the timeout (wm is 0 in the first micro-batch —
-        // guarding on it would leak first-batch-only users forever)
-        val wm = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(
-          math.max(last.tsMs + idleMs, wm + 60 * 1000))
-        out.iterator
-      }
+  /** One user's events of a micro-batch (never empty: [[KeyedState]]
+    * calls `step` only for keys with data) against the stored boundary
+    * event → the next boundary and the transitions. */
+  def step(userId: Long, events: Iterator[Ev],
+      prev: Option[LastEv]): (Option[LastEv], Iterator[Transition]) = {
+    val sorted = events.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
+    val types = prev.map(_.typ).toSeq ++ sorted.map(_.event_type)
+    val out = types.zip(types.drop(1)).map { case (a, b) =>
+      Transition(userId, a, b)
     }
+    // keep the NEWEST-seen event as the boundary record: a cross-batch
+    // straggler older than the stored last event (contract-violating
+    // input) mis-pairs its own transition, but must not also regress
+    // the boundary and the timeout horizon — that would compound the
+    // divergence beyond the documented single mis-paired transition
+    val newest = sorted.last
+    val storedIsNewer = prev.exists(p =>
+      p.tsMs > newest.ts.getTime ||
+        (p.tsMs == newest.ts.getTime && p.eventId >= newest.event_id))
+    val last =
+      if (storedIsNewer) prev
+      else Some(LastEv(newest.ts.getTime, newest.event_id, newest.event_type))
+    (last, out.iterator)
   }
 
   /** events frame (user_id, event_type, ts, event_id) → transition
-    * stream. Watermark required for the event-time timeout; `idleMs`
-    * is the state-eviction horizon (see class note — must exceed the
-    * longest user-return gap for exact batch parity). */
+    * stream. Precondition: a streaming input already carries its
+    * event-time watermark. `idleMs` is the state-eviction horizon (see
+    * class note — must exceed the longest user-return gap for exact
+    * batch parity). */
   def transitions(events: DataFrame,
-      watermarkDelay: String = "10 minutes",
       idleMs: Long = DefaultIdleMs): Dataset[Transition] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
+    KeyedState.eventTime(events
       .select(col("user_id").cast("long").as("user_id"), col("event_type"),
         col("ts"), col("event_id").cast("long").as("event_id"))
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(step(idleMs))
+      .as[Ev])(_.user_id)((s: LastEv) => s.tsMs + idleMs)(step)
   }
 }

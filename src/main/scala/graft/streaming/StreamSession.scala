@@ -13,31 +13,21 @@ import org.apache.spark.sql.functions._
   * watermark passes its close.
   *
   * Scale shape: state is keyed on (user, open session) — bounded by
-  * concurrently-open sessions, not event history; the watermark is
-  * what lets Spark drop closed sessions, so it is REQUIRED here (an
-  * unwatermarked streaming session aggregation cannot evict and is
-  * rejected in append mode). Output in append mode = only finalized
-  * sessions, which is what a downstream engagement table wants.
+  * concurrently-open sessions, not event history; the input's
+  * watermark is what lets Spark drop closed sessions, so it is
+  * REQUIRED here (an unwatermarked streaming session aggregation
+  * cannot evict and is rejected in append mode). Output in append
+  * mode = only finalized sessions, which is what a downstream
+  * engagement table wants.
   */
 object StreamSession {
 
-  /** Finalized (user_id, session_start, session_end, n_events) rows.
-    * `gap` and `watermarkDelay` are standard duration strings. */
-  def sessions(eventsStream: DataFrame, gap: String = "30 minutes",
-      watermarkDelay: String = "10 minutes"): DataFrame =
-    eventsStream
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"),
-        col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("n_events"))
-
-  /** Batch twin over the same frame — identical output columns, for
-    * the stream≡batch equivalence spec (q17 is the oracle-gated
-    * gaps-and-islands form of the same semantics). */
-  def sessionsBatch(events: DataFrame, gap: String = "30 minutes"): DataFrame =
+  /** Finalized (user_id, session_start, session_end, n_events) rows;
+    * `gap` is a duration string. Precondition: a streaming input
+    * already carries its event-time watermark. The same call on a batch
+    * frame is the batch twin (q17 is the oracle-gated gaps-and-islands
+    * form of the same semantics). */
+  def sessions(events: DataFrame, gap: String = "30 minutes"): DataFrame =
     events
       .groupBy(session_window(col("ts"), gap), col("user_id"))
       .agg(count(lit(1)).as("n_events"))

@@ -25,11 +25,11 @@ import graft.functions.TextFunctions
 object StreamTrending {
 
   /** Incremental per-(window, term) counts of a document stream.
-    * Input needs (text, tsCol). */
+    * Input needs (text, tsCol). Precondition: a streaming input
+    * already carries its event-time watermark on `tsCol`. */
   def termCounts(docsStream: DataFrame, windowLen: String = "10 minutes",
-      tsCol: String = "ts", watermarkDelay: String = "10 minutes"): DataFrame =
+      tsCol: String = "ts"): DataFrame =
     docsStream
-      .withWatermark(tsCol, watermarkDelay)
       .select(col(tsCol), explode(TextFunctions.tokens(col("text"))).as("term"))
       .groupBy(window(col(tsCol), windowLen), col("term"))
       .agg(count(lit(1)).as("cnt"))

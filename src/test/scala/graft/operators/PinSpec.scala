@@ -108,4 +108,11 @@ class PinSpec extends graft.SparkSpec {
   test("only the micro-batch runner calls foreachBatch in the main sources") {
     assert(mainSourcesCalling(".foreachBatch") == Set("MicroBatch.scala"))
   }
+
+  test("only the ingest dedup and the soak watermark a stream, and only " +
+      "KeyedState sets an event-time timeout, in the main sources") {
+    assert(mainSourcesCalling(".withWatermark(") ==
+      Set("StreamApp.scala", "SoakMain.scala"))
+    assert(mainSourcesCalling("EventTimeTimeout") == Set("KeyedState.scala"))
+  }
 }

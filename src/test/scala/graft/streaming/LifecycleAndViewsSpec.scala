@@ -19,6 +19,7 @@ class LifecycleAndViewsSpec extends SparkSpec {
   test("order lifecycle: transitions emitted across micro-batches") {
     val input = MemoryStream[(OrderEvent, Timestamp)](spark)
     val orders = input.toDF().select($"_1.*", $"_2".as("event_timestamp"))
+      .withWatermark("event_timestamp", "10 minutes")
     val q = OrderLifecycle.transitions(orders).writeStream
       .outputMode("append").format("memory").queryName("lifecycle_mem").start()
     try {
@@ -43,6 +44,7 @@ class LifecycleAndViewsSpec extends SparkSpec {
   test("lifecycle ignores same-status repeats") {
     val input = MemoryStream[(OrderEvent, Timestamp)](spark)
     val orders = input.toDF().select($"_1.*", $"_2".as("event_timestamp"))
+      .withWatermark("event_timestamp", "10 minutes")
     val q = OrderLifecycle.transitions(orders).writeStream
       .outputMode("append").format("memory").queryName("lifecycle_rep").start()
     try {

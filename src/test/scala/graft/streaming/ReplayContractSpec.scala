@@ -238,7 +238,7 @@ class ReplayContractSpec extends SparkSpec {
       .as[(String, Long, Long, Long)].collect().toSeq
     val chunks = Seq(rows.take(rows.length / 2), rows.drop(rows.length / 2))
     val runs = runTwiceDf(chunks, "update") { in =>
-      StreamRidge.sufficientSums(in.toDF("g", "x1", "x2", "y"))
+      Ridge.sums(in.toDF("g", "x1", "x2", "y"))
     }
     assertDeterministic("StreamRidge", runs)
     assertKeyUpsertSafe("StreamRidge", runs._1, keyLen = 1)
@@ -267,7 +267,8 @@ class ReplayContractSpec extends SparkSpec {
       StreamMarkov.Ev(2, "purchase", ts("2024-01-01 10:12:00"), 5))
     val chunks = Seq(rows.take(3), rows.drop(3))
     assertDeterministic("StreamMarkov",
-      runTwiceDf(chunks, "append")(in => StreamMarkov.transitions(in).toDF()))
+      runTwiceDf(chunks, "append")(in => StreamMarkov.transitions(
+        in.withWatermark("ts", "10 minutes")).toDF()))
   }
 
   test("StreamScd2 replay: closed versions carry a natural upsert key") {
@@ -277,7 +278,8 @@ class ReplayContractSpec extends SparkSpec {
       (1L, "x", t(3), 4L), (2L, "a", t(1), 5L))
     val chunks = Seq(log.take(2), log.drop(2))
     val runs = runTwiceDf(chunks, "append") { in =>
-      StreamScd2.closedVersions(in.toDF("key", "state", "ts", "tie"))
+      StreamScd2.closedVersions(in.toDF("key", "state", "ts", "tie")
+          .withWatermark("ts", "10 minutes"))
         .toDF().select(col("key"), col("version"), col("state"),
           col("effective_from"), col("effective_to"))
     }
@@ -294,7 +296,8 @@ class ReplayContractSpec extends SparkSpec {
     val chunks = Seq(rows.take(2), rows.drop(2))
     assertDeterministic("StreamAsOf",
       runTwiceDf(chunks, "append")(in =>
-        StreamAsOf.enrichedPurchases(in).toDF()))
+        StreamAsOf.enrichedPurchases(
+          in.withWatermark("ts", "10 minutes")).toDF()))
   }
 
   test("StreamSession replay: closed sessions re-deliver identically") {
@@ -305,8 +308,8 @@ class ReplayContractSpec extends SparkSpec {
     val chunks = Seq(rows.take(2), rows.slice(2, 4), rows.drop(4))
     assertDeterministic("StreamSession",
       runTwiceDf(chunks, "append") { in =>
-        StreamSession.sessions(in.toDF("ts", "user_id"),
-          gap = "30 minutes", watermarkDelay = "10 minutes")
+        StreamSession.sessions(in.toDF("ts", "user_id")
+          .withWatermark("ts", "10 minutes"), gap = "30 minutes")
       })
   }
 
@@ -319,7 +322,8 @@ class ReplayContractSpec extends SparkSpec {
     val chunks = Seq(rows.take(2), rows.drop(2))
     assertDeterministic("OrderLifecycle",
       runTwiceDf(chunks, "append")(in =>
-        OrderLifecycle.transitions(in).toDF()))
+        OrderLifecycle.transitions(
+          in.withWatermark("event_timestamp", "10 minutes")).toDF()))
   }
 
   test("StreamTrending replay: complete-mode counts are key-upsert safe") {
@@ -329,7 +333,8 @@ class ReplayContractSpec extends SparkSpec {
       (ts("2024-01-01 10:12:00"), "flink flink kafka"))
     val chunks = Seq(rows.take(2), rows.drop(2))
     val runs = runTwiceDf(chunks, "complete") { in =>
-      StreamTrending.termCounts(in.toDF("ts", "text"))
+      StreamTrending.termCounts(in.toDF("ts", "text")
+          .withWatermark("ts", "10 minutes"))
         .select(col("window.start").as("ws"), col("term"), col("cnt"))
     }
     assertDeterministic("StreamTrending", runs)
@@ -347,7 +352,8 @@ class ReplayContractSpec extends SparkSpec {
     val chunks = Seq(rows.take(2), rows.drop(2))
     assertDeterministic("StreamCuration",
       runTwiceDf(chunks, "append") { in =>
-        StreamCuration.curate(in.toDF("doc_id", "lang", "text", "ts"))
+        StreamCuration.curate(in.toDF("doc_id", "lang", "text", "ts")
+          .withWatermark("ts", "10 minutes"))
       })
   }
 
@@ -359,7 +365,8 @@ class ReplayContractSpec extends SparkSpec {
     val chunks = Seq(rows.take(2), rows.drop(2))
     assertDeterministic("StreamDedup",
       runTwiceDf(chunks, "append") { in =>
-        StreamDedup.contentDedup(in.toDF("doc_id", "text", "ts"))
+        StreamDedup.contentDedup(in.toDF("doc_id", "text", "ts")
+          .withWatermark("ts", "10 minutes"))
           .select("doc_id", "fp")
       })
   }

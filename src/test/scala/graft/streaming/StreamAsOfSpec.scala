@@ -15,7 +15,8 @@ class StreamAsOfSpec extends SparkSpec {
 
   test("purchase picks the latest prior view within tolerance") {
     val in = MemoryStream[StreamAsOf.UserEvent](spark)
-    val q = StreamAsOf.enrichedPurchases(in.toDF())
+    val q = StreamAsOf.enrichedPurchases(
+      in.toDF().withWatermark("ts", "10 minutes"))
       .writeStream.outputMode("append")
       .format("memory").queryName("asof_mem").start()
     try {
@@ -37,7 +38,8 @@ class StreamAsOfSpec extends SparkSpec {
 
   test("view state survives across micro-batches") {
     val in = MemoryStream[StreamAsOf.UserEvent](spark)
-    val q = StreamAsOf.enrichedPurchases(in.toDF())
+    val q = StreamAsOf.enrichedPurchases(
+      in.toDF().withWatermark("ts", "10 minutes"))
       .writeStream.outputMode("append")
       .format("memory").queryName("asof_mem2").start()
     try {
@@ -80,7 +82,8 @@ class StreamAsOfSpec extends SparkSpec {
         col("ts"), coalesce(col("value"), lit(0.0)).as("value"))
       .as[StreamAsOf.UserEvent].collect().sortBy(_.ts.getTime)
     val in = MemoryStream[StreamAsOf.UserEvent](spark)
-    val q = StreamAsOf.enrichedPurchases(in.toDF())
+    val q = StreamAsOf.enrichedPurchases(
+      in.toDF().withWatermark("ts", "10 minutes"))
       .writeStream.outputMode("append")
       .format("memory").queryName("asof_mem3").start()
     try {
@@ -100,7 +103,8 @@ class StreamAsOfSpec extends SparkSpec {
   test("streaming content dedup keeps first copy per fingerprint") {
     val in = MemoryStream[(Long, String, Timestamp)](spark)
     val docsStream = in.toDF().toDF("doc_id", "text", "ts")
-    val q = StreamDedup.contentDedup(docsStream)
+    val q = StreamDedup.contentDedup(
+      docsStream.withWatermark("ts", "10 minutes"))
       .writeStream.outputMode("append")
       .format("memory").queryName("dedup_mem").start()
     try {

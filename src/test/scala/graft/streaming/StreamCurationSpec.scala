@@ -24,6 +24,7 @@ class StreamCurationSpec extends SparkSpec {
 
   private def docStream(in: MemoryStream[(Long, String, String, Timestamp)]) =
     in.toDF().toDF("doc_id", "lang", "text", "ts")
+      .withWatermark("ts", "10 minutes")
 
   test("streaming curation equals the batch pipeline on an ordered stream") {
     val in = MemoryStream[(Long, String, String, Timestamp)](spark)

@@ -23,7 +23,9 @@ class StreamJoinsSpec extends SparkSpec {
     val oIn = MemoryStream[(OrderEvent, Timestamp)](spark)
     val iIn = MemoryStream[(ItemEvent, Timestamp)](spark)
     val orders = oIn.toDF().select($"_1.*", $"_2".as("event_timestamp"))
+      .withWatermark("event_timestamp", "10 minutes")
     val items = iIn.toDF().select($"_1.*", $"_2".as("event_timestamp"))
+      .withWatermark("event_timestamp", "10 minutes")
     val joined = StreamJoins.ordersWithItems(orders, items)
       .filter(col("item_ts").isNotNull)
     val q = joined.writeStream.outputMode("append")

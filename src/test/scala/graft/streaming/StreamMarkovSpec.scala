@@ -16,7 +16,8 @@ class StreamMarkovSpec extends SparkSpec {
 
   test("boundary transition spans the micro-batch cut") {
     val in = MemoryStream[StreamMarkov.Ev](spark)
-    val q = StreamMarkov.transitions(in.toDF())
+    val q = StreamMarkov.transitions(
+      in.toDF().withWatermark("ts", "10 minutes"))
       .writeStream.outputMode("append")
       .format("memory").queryName("mk_mem").start()
     try {
@@ -37,7 +38,8 @@ class StreamMarkovSpec extends SparkSpec {
 
   test("intra-batch disorder is repaired by the (ts, event_id) sort") {
     val in = MemoryStream[StreamMarkov.Ev](spark)
-    val q = StreamMarkov.transitions(in.toDF())
+    val q = StreamMarkov.transitions(
+      in.toDF().withWatermark("ts", "10 minutes"))
       .writeStream.outputMode("append")
       .format("memory").queryName("mk_mem2").start()
     try {
@@ -57,7 +59,8 @@ class StreamMarkovSpec extends SparkSpec {
   test("cross-batch straggler older than the stored boundary does not " +
       "regress the state") {
     val in = MemoryStream[StreamMarkov.Ev](spark)
-    val q = StreamMarkov.transitions(in.toDF())
+    val q = StreamMarkov.transitions(
+      in.toDF().withWatermark("ts", "10 minutes"))
       .writeStream.outputMode("append")
       .format("memory").queryName("mk_mem_straggler").start()
     try {
@@ -87,8 +90,8 @@ class StreamMarkovSpec extends SparkSpec {
       "after it starts a fresh chain") {
     val in = MemoryStream[StreamMarkov.Ev](spark)
     // 1 h horizon; watermark advances past last.ts + 1 h via user 2
-    val q = StreamMarkov.transitions(in.toDF(), watermarkDelay = "0 seconds",
-        idleMs = 3600 * 1000)
+    val q = StreamMarkov.transitions(
+        in.toDF().withWatermark("ts", "0 seconds"), idleMs = 3600 * 1000)
       .writeStream.outputMode("append")
       .format("memory").queryName("mk_mem_evict").start()
     try {
@@ -137,7 +140,8 @@ class StreamMarkovSpec extends SparkSpec {
     // exact parity needs an eviction horizon beyond the longest
     // user-return gap (65 h in this slice; see StreamMarkov note)
     val in = MemoryStream[StreamMarkov.Ev](spark)
-    val q = StreamMarkov.transitions(in.toDF(),
+    val q = StreamMarkov.transitions(
+        in.toDF().withWatermark("ts", "10 minutes"),
         idleMs = 3650L * 24 * 3600 * 1000)
       .writeStream.outputMode("append")
       .format("memory").queryName("mk_mem3").start()

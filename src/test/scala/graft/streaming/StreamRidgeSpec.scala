@@ -25,7 +25,7 @@ class StreamRidgeSpec extends SparkSpec {
 
     val all = rows.as[R].collect()
     val in = MemoryStream[R](spark)
-    val q = StreamRidge.sufficientSums(in.toDF())
+    val q = Ridge.sums(in.toDF())
       .writeStream.outputMode("update")
       .format("memory").queryName("ridge_sums").start()
     try {
@@ -45,7 +45,7 @@ class StreamRidgeSpec extends SparkSpec {
           org.apache.spark.sql.expressions.Window
             .partitionBy(col("g")).orderBy(col("n").desc)))
         .filter(col("rk") === 1).drop("rk")
-      assert(StreamRidge.solveSnapshot(snap).collect().toSeq == batch)
+      assert(Ridge.solve(snap).collect().toSeq == batch)
     } finally q.stop()
   }
 

@@ -23,7 +23,8 @@ class StreamScd2Spec extends SparkSpec {
   test("streamed closed versions equal the batch history across batches") {
     val in = MemoryStream[(Long, String, Timestamp, Long)](spark)
     val q = StreamScd2.closedVersions(
-      in.toDF().toDF("key", "state", "ts", "tie"))
+      in.toDF().toDF("key", "state", "ts", "tie")
+        .withWatermark("ts", "10 minutes"))
       .writeStream.outputMode("append")
       .format("memory").queryName("scd2_mem").start()
     try {
@@ -53,7 +54,8 @@ class StreamScd2Spec extends SparkSpec {
   test("consecutive duplicates emit nothing and do not bump versions") {
     val in = MemoryStream[(Long, String, Timestamp, Long)](spark)
     val q = StreamScd2.closedVersions(
-      in.toDF().toDF("key", "state", "ts", "tie"))
+      in.toDF().toDF("key", "state", "ts", "tie")
+        .withWatermark("ts", "10 minutes"))
       .writeStream.outputMode("append")
       .format("memory").queryName("scd2_mem2").start()
     try {
@@ -77,7 +79,8 @@ class StreamScd2Spec extends SparkSpec {
   test("cross-batch straggler older than the open version is ignored, never inverts history") {
     val in = MemoryStream[(Long, String, Timestamp, Long)](spark)
     val q = StreamScd2.closedVersions(
-      in.toDF().toDF("key", "state", "ts", "tie"))
+      in.toDF().toDF("key", "state", "ts", "tie")
+        .withWatermark("ts", "10 minutes"))
       .writeStream.outputMode("append")
       .format("memory").queryName("scd2_mem3").start()
     try {

@@ -16,8 +16,8 @@ class StreamSessionSpec extends SparkSpec {
   test("sessions merge across micro-batches and match the batch twin") {
     val in = MemoryStream[(Timestamp, Long)](spark)
     val out = StreamSession.sessions(
-      in.toDF().toDF("ts", "user_id"), gap = "30 minutes",
-      watermarkDelay = "10 minutes")
+      in.toDF().toDF("ts", "user_id").withWatermark("ts", "10 minutes"),
+      gap = "30 minutes")
     val q = out.writeStream
       .format("memory").queryName("sess_out").outputMode("append")
       .start()
@@ -46,7 +46,7 @@ class StreamSessionSpec extends SparkSpec {
 
     val got = spark.table("sess_out")
       .as[(Long, Timestamp, Timestamp, Long)].collect().toSet
-    val want = StreamSession.sessionsBatch(rows.toDF("ts", "user_id"))
+    val want = StreamSession.sessions(rows.toDF("ts", "user_id"))
       .as[(Long, Timestamp, Timestamp, Long)].collect().toSet
     assert(want.subsetOf(got), s"got=$got want=$want")
     // the merged session is one 50-minute window with both events

@@ -20,7 +20,8 @@ class StreamTrendingSpec extends SparkSpec {
 
   test("cross-batch streaming counts equal the batch aggregation; top-k matches") {
     val in = MemoryStream[(Timestamp, String)](spark)
-    val q = StreamTrending.termCounts(in.toDF().toDF("ts", "text"))
+    val q = StreamTrending.termCounts(
+      in.toDF().toDF("ts", "text").withWatermark("ts", "10 minutes"))
       .writeStream.outputMode("complete")
       .format("memory").queryName("trend_mem").start()
     try {
