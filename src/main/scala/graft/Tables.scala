@@ -46,11 +46,9 @@ object Tables {
     // partial aggregations).
     val df =
       if (name == "documents") {
-        val target = spark.conf.getOption("spark.graft.scan.spreadTargetBytes")
-          .map(_.toLong).getOrElse(64L * 1024)
         val bytes = raw.queryExecution.optimizedPlan.stats.sizeInBytes
         val want = (BigInt(spark.sparkContext.defaultParallelism)
-          .min((bytes / target).max(2))).toInt
+          .min((bytes / (64L * 1024)).max(2))).toInt
         if (raw.rdd.getNumPartitions < want) raw.repartition(want) else raw
       } else raw
     if (name == "events" && df.schema("ts").dataType == org.apache.spark.sql.types.LongType)

@@ -23,6 +23,8 @@ import org.apache.spark.sql.functions._
   * driver-coordination shape as ClusterDedup's rounds. Production
   * trainers batch many disjoint merges per pass; the per-iteration
   * plan is identical, so the operator's shape holds.
+  *
+  * Input: a token table — an array<string> `toks` column.
   */
 object Bpe {
 
@@ -31,21 +33,21 @@ object Bpe {
 
   /** Adjacent-pair counts of a token-array column, one row per
     * (a, b) pair with its corpus frequency. */
-  def pairCounts(toks: DataFrame, tokCol: String = "toks"): DataFrame =
+  def pairCounts(toks: DataFrame): DataFrame =
     toks
       // guard: sequence(1, 0) would generate DESCENDING [1, 0] for a
       // one-token row and index 0 errors under ANSI
-      .filter(size(col(tokCol)) >= 2)
+      .filter(size(col("toks")) >= 2)
       .select(explode(transform(
-        sequence(lit(1), size(col(tokCol)) - 1),
-        i => struct(element_at(col(tokCol), i).as("a"),
-          element_at(col(tokCol), i + 1).as("b")))).as("p"))
+        sequence(lit(1), size(col("toks")) - 1),
+        i => struct(element_at(col("toks"), i).as("a"),
+          element_at(col("toks"), i + 1).as("b")))).as("p"))
       .groupBy(col("p.a").as("a"), col("p.b").as("b"))
       .agg(count(lit(1)).as("cnt"))
 
   /** The next merge: most frequent pair, ties by (a asc, b asc). */
-  def topPair(toks: DataFrame, tokCol: String = "toks"): Option[(String, String)] =
-    Pin.record(pairCounts(toks, tokCol)
+  def topPair(toks: DataFrame): Option[(String, String)] =
+    Pin.record(pairCounts(toks)
       .orderBy(col("cnt").desc, col("a"), col("b"))
       .limit(1)).collect().headOption
       .map(r => (r.getString(0), r.getString(1)))
@@ -63,17 +65,16 @@ object Bpe {
 
   /** Learn `numMerges` merges over the corpus; returns the merge list
     * in learned order plus the corpus with all merges applied. */
-  def train(toks: DataFrame, numMerges: Int,
-      tokCol: String = "toks"): (Seq[(String, String)], DataFrame) = {
+  def train(toks: DataFrame, numMerges: Int): (Seq[(String, String)], DataFrame) = {
     var cur = toks
     val merges = Seq.newBuilder[(String, String)]
     var i = 0
     var continue = true
     while (i < numMerges && continue) {
-      topPair(cur, tokCol) match {
+      topPair(cur) match {
         case Some((a, b)) =>
           merges += ((a, b))
-          cur = cur.withColumn(tokCol, applyMerge(col(tokCol), a, b))
+          cur = cur.withColumn("toks", applyMerge(col("toks"), a, b))
             // each iteration re-reads the previous — truncate lineage
             // so iteration N doesn't replay N-1 regex passes
             .pin(Narrow)

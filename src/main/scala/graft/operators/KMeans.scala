@@ -24,6 +24,9 @@ import org.apache.spark.sql.functions._
   * with iterations — each round's assignment reads the raw corpus
   * against literal centroids. Empty cells keep their previous
   * centroid.
+  *
+  * Input: an `embeddings` frame — `vec_id` and `embedding`
+  * (array<float>).
   */
 object KMeans {
 
@@ -43,10 +46,10 @@ object KMeans {
       struct(Num.r4(sqDist(v, c)).as("dist"), lit(i).as("cell"))
     }: _*)
 
-  /** Deterministic init: the first k vectors by id. */
-  def initCentroids(emb: DataFrame, k: Int, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Array[Array[Double]] =
-    Pin.record(emb.orderBy(col(idCol)).limit(k).select(col(vecCol))).collect()
+  /** Deterministic init: the first k vectors by id (also the IVF
+    * coarse centroids and the PQ codebook seed). */
+  def initCentroids(emb: DataFrame, k: Int): Array[Array[Double]] =
+    Pin.record(emb.orderBy(col("vec_id")).limit(k).select(col("embedding"))).collect()
       .map(_.getSeq[Float](0).map(_.toDouble).toArray)
 
   /** Cell assignment under the given centroids. The argmin struct is
@@ -56,10 +59,9 @@ object KMeans {
     * rescues it (it does not for the higher-order aggregate/zip_with
     * chain inside sqDist). CollapseProject keeps the split: the alias
     * is referenced twice and the expression is not cheap. */
-  def assign(emb: DataFrame, centroids: Array[Array[Double]],
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    emb.select(col(idCol).as("id"), col(vecCol).as("v"),
-        array_min(distArr(col(vecCol), centroids)).as("m"))
+  def assign(emb: DataFrame, centroids: Array[Array[Double]]): DataFrame =
+    emb.select(col("vec_id").as("id"), col("embedding").as("v"),
+        array_min(distArr(col("embedding"), centroids)).as("m"))
       .select(col("id"), col("v"),
         col("m").getField("cell").as("cell"),
         col("m").getField("dist").as("dist"))
@@ -68,22 +70,20 @@ object KMeans {
     * centroid), plus the iteration's inertia (Σ assigned dist). Two
     * corpus passes (inertia + means) — training loops that do not
     * consume the inertia should call [[update]] instead (one pass). */
-  def step(emb: DataFrame, centroids: Array[Array[Double]],
-      idCol: String = "vec_id", vecCol: String = "embedding"):
+  def step(emb: DataFrame, centroids: Array[Array[Double]]):
       (Array[Array[Double]], Double) = {
-    val assigned = assign(emb, centroids, idCol, vecCol)
+    val assigned = assign(emb, centroids)
     val inertia = Pin.record(assigned.agg(sum(col("dist")))).collect()(0).getDouble(0)
-    (update(emb, centroids, idCol, vecCol), inertia)
+    (update(emb, centroids), inertia)
   }
 
   /** Means-only update: the next round's centroids in ONE corpus pass.
     * [[step]] additionally collects the iteration's inertia, which
     * costs a second full assignment pass — q81's training loop
     * discards it, so computing it was a wasted scan per round. */
-  def update(emb: DataFrame, centroids: Array[Array[Double]],
-      idCol: String = "vec_id", vecCol: String = "embedding"):
+  def update(emb: DataFrame, centroids: Array[Array[Double]]):
       Array[Array[Double]] = {
-    val means = assign(emb, centroids, idCol, vecCol)
+    val means = assign(emb, centroids)
       .select(col("cell"), posexplode(col("v").cast("array<double>"))
         .as(Seq("dim", "x")))
       .groupBy(col("cell"), col("dim"))
@@ -100,18 +100,17 @@ object KMeans {
 
   /** Full training loop: k cells, maxIter update rounds. Returns the
     * final assignment frame, centroids, and the inertia trace. */
-  def fit(emb: DataFrame, k: Int, maxIter: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"):
+  def fit(emb: DataFrame, k: Int, maxIter: Int):
       (DataFrame, Array[Array[Double]], Seq[Double]) = {
-    var centroids = initCentroids(emb, k, idCol, vecCol)
+    var centroids = initCentroids(emb, k)
     val trace = Seq.newBuilder[Double]
     var i = 0
     while (i < maxIter) {
-      val (next, inertia) = step(emb, centroids, idCol, vecCol)
+      val (next, inertia) = step(emb, centroids)
       trace += inertia
       centroids = next
       i += 1
     }
-    (assign(emb, centroids, idCol, vecCol), centroids, trace.result())
+    (assign(emb, centroids), centroids, trace.result())
   }
 }

@@ -25,6 +25,8 @@ import graft.operators.Pin._
   * table c(a,·) (vocabulary-sized) broadcasts. The vocabulary size V
   * is a single scalar carried as a broadcast one-row frame, never a
   * driver collect of data rows.
+  *
+  * Input: a `documents` frame — `doc_id` and `text`.
   */
 object LanguageModel {
 
@@ -35,12 +37,12 @@ object LanguageModel {
     * blocks would leak into re-invocations. Every consumer reads the
     * full `ts` column, so the checkpoint's full-row reads lose nothing
     * to columnar pruning. */
-  def tokenTable(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    docs
-      .select(col(idCol).as("doc_id"),
-        TextFunctions.tokens(col(textCol)).as("ts"))
-      .pin(Narrow)
+  def tokenTable(docs: DataFrame): DataFrame =
+    docTokens(docs).pin(Narrow)
+
+  /** (doc_id, ts): the tokenize projection of a documents frame. */
+  private def docTokens(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), TextFunctions.tokens(col("text")).as("ts"))
 
   /** (doc_id, a, b) adjacent-token pairs from a token table; documents
     * with fewer than two tokens contribute nothing. */
@@ -57,10 +59,8 @@ object LanguageModel {
     * below the explode (the TextFunctions convention — an inline tree
     * would re-split per pair). Single-consumer convenience — multi-
     * consumer callers should go through [[tokenTable]]. */
-  def docBigrams(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    bigramsFromTs(docs.select(col(idCol).as("doc_id"),
-      TextFunctions.tokens(col(textCol)).as("ts")))
+  def docBigrams(docs: DataFrame): DataFrame =
+    bigramsFromTs(docTokens(docs))
 
   /** V counts distinct TOKENS (single-token docs contribute vocabulary
     * but no bigram, so it cannot be derived from the bigram table). */
@@ -71,9 +71,8 @@ object LanguageModel {
   /** Model tables: bigram counts c(a,b), history counts c(a,·), and a
     * one-row vocabulary-size frame. One tokenize pass: bigrams AND the
     * vocabulary count both derive from the pinned token table. */
-  def train(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): (DataFrame, DataFrame, DataFrame) =
-    trainFromTokens(tokenTable(docs, idCol, textCol))
+  def train(docs: DataFrame): (DataFrame, DataFrame, DataFrame) =
+    trainFromTokens(tokenTable(docs))
 
   /** [[train]] over a (doc_id, ts) token table — lets a caller that
     * already pinned the corpus tokens (e.g. DSIR training its target
@@ -94,9 +93,8 @@ object LanguageModel {
     * Num.r4-snapped (ln is libm — the q47 convention).
     * Precondition: the history-count table c(a,·) is broadcast and
     * must fit executor memory; past that Spark fails the query. */
-  def scoreDocs(docs: DataFrame, alpha: Double = 1.0,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    scoreDocsFromTokens(tokenTable(docs, idCol, textCol), alpha)
+  def scoreDocs(docs: DataFrame, alpha: Double = 1.0): DataFrame =
+    scoreDocsFromTokens(tokenTable(docs), alpha)
 
   /** [[scoreDocs]] over an ALREADY-PINNED (doc_id, ts) token table
     * from [[tokenTable]] — the shared-scan entry point for pipelines
@@ -149,9 +147,8 @@ object LanguageModel {
     * frame. Precondition: the history and continuation tables are
     * broadcast and must fit executor memory; past that Spark fails
     * the query. */
-  def scoreDocsKneserNey(docs: DataFrame, discount: Double = 0.75,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val ts = tokenTable(docs, idCol, textCol)
+  def scoreDocsKneserNey(docs: DataFrame, discount: Double = 0.75): DataFrame = {
+    val ts = tokenTable(docs)
     val bg = bigramsFromTs(ts)
     // cab feeds FOUR consumers (ha, hb, nt, the scoring join) —
     // materialize the model-sized table once instead of four
@@ -193,12 +190,8 @@ object LanguageModel {
     * (quadratic-ish in vocabulary), so it is the bigram table, not the
     * vocabulary, that bounds the model size. */
   def scoreAgainst(docs: DataFrame, cab: DataFrame, ca: DataFrame,
-      vocab: DataFrame, alpha: Double = 1.0, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    scoreAgainstFromTokens(
-      docs.select(col(idCol).as("doc_id"),
-        TextFunctions.tokens(col(textCol)).as("ts")),
-      cab, ca, vocab, alpha)
+      vocab: DataFrame, alpha: Double = 1.0): DataFrame =
+    scoreAgainstFromTokens(docTokens(docs), cab, ca, vocab, alpha)
 
   /** [[scoreAgainst]] over a (doc_id, ts) token table — pass a PINNED
     * table from [[tokenTable]] to share the tokenize pass with other

@@ -44,10 +44,11 @@ object LogisticGd {
     * `df` (intercept, capped token count, alpha ratio, stopword
     * ratio, scaled mean word length) — 8-decimal-snapped so any
     * SQL twin trains on bit-identical inputs. Shared by the batch
-    * trainer queries and the streaming scoring twin. */
-  def qualityFeatures(df: DataFrame, textCol: String = "text"): DataFrame = {
+    * trainer queries and the streaming scoring twin. Reads `df`'s
+    * `text` column (a `documents` frame or stream). */
+  def qualityFeatures(df: DataFrame): DataFrame = {
     import graft.functions.{TextFunctions => TF}
-    val t = col(textCol)
+    val t = col("text")
     val tc = TF.tokenCount(t).cast("double")
     df
       .withColumn("x0", lit(1.0))

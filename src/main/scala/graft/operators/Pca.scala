@@ -22,6 +22,9 @@ import org.apache.spark.sql.functions._
   *
   * Covariance here is the population form E[xxᵀ] − μμᵀ (divide by n),
   * matching the SQL twin `avg(xi*xj) − avg(xi)*avg(xj)` exactly.
+  *
+  * Input: an `embeddings` frame's `embedding` column; [[project]]
+  * appends the projection as `pca`.
   */
 object Pca {
 
@@ -62,10 +65,10 @@ object Pca {
   }
 
   /** Full d×d population covariance matrix from one aggregation job. */
-  def covariance(df: DataFrame, vecCol: String, d: Int): Array[Array[Double]] = {
+  def covariance(df: DataFrame, d: Int): Array[Array[Double]] = {
     val spark = df.sparkSession
     import spark.implicits._
-    val buf = df.select(col(vecCol).cast("array<float>")).as[Seq[Float]]
+    val buf = df.select(col("embedding").cast("array<float>")).as[Seq[Float]]
       .select(new CovarianceAggregator(d).toColumn)
       .head()
     val n = buf.n.toDouble
@@ -143,14 +146,12 @@ object Pca {
   /** Project the embedding column onto the top-k principal components
     * (a narrow per-row transform — the components ride the plan as one
     * reference-object literal via the fused LSH-keys pattern). */
-  def project(df: DataFrame, vecCol: String, components: Array[Array[Double]],
-      outCol: String = "pca"): DataFrame = {
+  def project(df: DataFrame, components: Array[Array[Double]]): DataFrame = {
     val comps = components.map(_.toIndexedSeq).toIndexedSeq
     val proj = array(comps.map { c =>
-      graft.plans.VectorFunctions.vec_dot(
-        col(vecCol),
+      graft.plans.VectorFunctions.vec_dot(col("embedding"),
         typedLit(c.map(_.toFloat)))
     }: _*)
-    df.withColumn(outCol, proj)
+    df.withColumn("pca", proj)
   }
 }

@@ -25,6 +25,9 @@ import graft.plans.VectorFunctions.vec_dot
   * `candN` candidates per query. That read-mostly split — hot compact
   * index + cold exact vectors — is what makes billion-vector ANN
   * serveable at all.
+  *
+  * Input: an `embeddings` frame — `vec_id` and `embedding`
+  * (array<float>).
   */
 object ProductQuantizer {
 
@@ -33,11 +36,8 @@ object ProductQuantizer {
       books: IndexedSeq[IndexedSeq[Array[Double]]])
 
   /** Deterministic codebooks from the first k vectors by id. */
-  def train(emb: DataFrame, m: Int, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Codebooks = {
-    val vecs = Pin.record(emb.orderBy(col(idCol)).limit(k)
-      .select(col(vecCol))).collect()
-      .map(_.getSeq[Float](0).map(_.toDouble).toArray)
+  def train(emb: DataFrame, m: Int, k: Int): Codebooks = {
+    val vecs = KMeans.initCentroids(emb, k)
     require(vecs.length == k, s"corpus smaller than k=$k")
     val dim = vecs.head.length
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
@@ -139,13 +139,12 @@ object ProductQuantizer {
     * memory; past that Spark fails the query.
     */
   def adcTopK(emb: DataFrame, cb: Codebooks, queryPred: Column, k: Int,
-      candN: Int = 32, idCol: String = "vec_id", vecCol: String = "embedding",
-      nprobe: Int = 0, nlist: Int = 0): DataFrame = {
+      candN: Int = 32, nprobe: Int = 0, nlist: Int = 0): DataFrame = {
     val coarse: Option[Array[(Int, Array[Double])]] =
       if (nprobe <= 0) None
       else {
         val nl = if (nlist > 0) nlist else Similarity.deriveNlist(emb.count())
-        Some(Similarity.ivfCentroids(emb, nl, idCol, vecCol))
+        Some(Similarity.ivfCentroids(emb, nl))
       }
     // The repartition is a materialization barrier, not a layout
     // choice: without it the encode projection shares a codegen stage
@@ -165,22 +164,22 @@ object ProductQuantizer {
     val barrierParts = emb.sparkSession.sparkContext.defaultParallelism
     val index = coarse match {
       case None =>
-        embSpread.select(col(idCol).as("nbr_id"),
-          encode(col(vecCol), cb).as("codes"))
+        embSpread.select(col("vec_id").as("nbr_id"),
+          encode(col("embedding"), cb).as("codes"))
           .repartition(barrierParts, col("nbr_id"))
       case Some(cent) =>
         // fused argmax cell (plans.VecCellArgmax) — ivfCentroids
         // returns cells as ascending indices, which is what the fused
         // expression's position-is-cell contract needs
-        embSpread.select(col(idCol).as("nbr_id"),
-          encode(col(vecCol), cb).as("codes"),
-          graft.plans.VectorFunctions.vec_cell_argmax(col(vecCol),
+        embSpread.select(col("vec_id").as("nbr_id"),
+          encode(col("embedding"), cb).as("codes"),
+          graft.plans.VectorFunctions.vec_cell_argmax(col("embedding"),
             cent.map(_._2.toIndexedSeq).toIndexedSeq).as("cell"))
           .repartition(barrierParts, col("nbr_id"))
     }
     val queriesBase = emb.filter(queryPred)
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        adcTable(col(vecCol), cb).as("tbl"))
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
+        adcTable(col("embedding"), cb).as("tbl"))
     val queries = coarse match {
       case None => queriesBase
       case Some(cent) =>
@@ -201,9 +200,7 @@ object ProductQuantizer {
       .groupBy(col("query_id"))
       .agg(Sampling.topKByScore(col("nbr_id"), -col("adc"), candN).as("topc"))
       .select(col("query_id"), explode(col("topc").getField("id")).as("nbr_id"))
-    val full = emb.select(col(idCol).as("nbr_id"), col(vecCol).as("cv"))
-    val q = emb.filter(queryPred)
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+    val (q, full) = Similarity.scanSides(emb, queryPred)
     cands
       .join(full, Seq("nbr_id"))
       .join(broadcast(q), Seq("query_id"))

@@ -20,6 +20,9 @@ import graft.plans.VectorFunctions.{vec_cosine, vec_dot}
   * All vector math is `functions._` higher-order expressions — codegen
   * handles the inner loops; a custom Catalyst Expression is the next
   * step if profiles show the lambda allocation dominating (plans/).
+  *
+  * Input: an `embeddings` frame — `vec_id` and `embedding`
+  * (array<float>).
   */
 object Similarity {
 
@@ -85,14 +88,19 @@ object Similarity {
       .drop("blk")
   }
 
+  /** The (query_id, qv) query side — rows matching `queryPred` — and
+    * the (nbr_id, cv) corpus side of an embeddings frame. */
+  private[operators] def scanSides(emb: DataFrame,
+      queryPred: Column): (DataFrame, DataFrame) =
+    (emb.filter(queryPred)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv")),
+      emb.select(col("vec_id").as("nbr_id"), col("embedding").as("cv")))
+
   /** Brute-force cosine top-k: for each query vector (subset of the
     * corpus selected by `queryPred`), the k nearest corpus vectors.
     * Deterministic: rank on rounded cosine with id tie-break. */
-  def bruteForceTopK(emb: DataFrame, queryPred: Column, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val queries = emb.filter(queryPred)
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val corpus = emb.select(col(idCol).as("nbr_id"), col(vecCol).as("cv"))
+  def bruteForceTopK(emb: DataFrame, queryPred: Column, k: Int): DataFrame = {
+    val (queries, corpus) = scanSides(emb, queryPred)
     val scored = queryCorpusScan(queries, corpus)
       .withColumn("cos", Num.r4(cosine(col("qv"), col("cv"))))
     val w = Window.partitionBy(col("query_id"))
@@ -114,11 +122,8 @@ object Similarity {
     * other at the SFs where no DuckDB oracle fits (the q27 oracle is
     * a measured >900 s timeout at sf10). */
   def bruteForceTopKAgg(emb: DataFrame, queryPred: Column, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding",
       nBlocks: Int = 0): DataFrame = {
-    val queries = emb.filter(queryPred)
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val corpus = emb.select(col(idCol).as("nbr_id"), col(vecCol).as("cv"))
+    val (queries, corpus) = scanSides(emb, queryPred)
     queryCorpusScan(queries, corpus, nBlocks)
       .withColumn("cos", Num.r4(cosine(col("qv"), col("cv"))))
       .groupBy(col("query_id"))
@@ -143,11 +148,8 @@ object Similarity {
     * negatives need coverage, not exhaustiveness, so sampling the
     * candidate pool is semantically fine where it isn't for dedup. */
   def hardNegatives(emb: DataFrame, queryPred: Column, k: Int,
-      lo: Double, hi: Double,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val queries = emb.filter(queryPred)
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val corpus = emb.select(col(idCol).as("nbr_id"), col(vecCol).as("cv"))
+      lo: Double, hi: Double): DataFrame = {
+    val (queries, corpus) = scanSides(emb, queryPred)
     val scored = queryCorpusScan(queries, corpus)
       .withColumn("cos", Num.r4(cosine(col("qv"), col("cv"))))
       .filter(col("cos") >= lo && col("cos") < hi)
@@ -175,19 +177,18 @@ object Similarity {
     * broadcast and must fit executor memory; past that Spark fails
     * the query. */
   def hardNegativesIvf(emb: DataFrame, queryPred: Column, k: Int,
-      lo: Double, hi: Double, nlist: Int = 0, nprobe: Int = 8,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+      lo: Double, hi: Double, nlist: Int = 0, nprobe: Int = 8): DataFrame = {
     val nl = if (nlist > 0) nlist else deriveNlist(emb.count())
-    val centroids = ivfCentroids(emb, nl, idCol, vecCol)
+    val centroids = ivfCentroids(emb, nl)
     def cellArr(v: Column): Column = ivfCellArr(centroids)(v)
     // fused argmax cell + narrow-scan spread — see ivfTopK
     val indexed = spreadNarrowScan(emb)
-      .select(col(idCol).as("id"), col(vecCol).as("v"),
-        graft.plans.VectorFunctions.vec_cell_argmax(col(vecCol),
+      .select(col("vec_id").as("id"), col("embedding").as("v"),
+        graft.plans.VectorFunctions.vec_cell_argmax(col("embedding"),
           centroids.map(_._2.toIndexedSeq).toIndexedSeq).as("cell"))
     val probes = emb.filter(queryPred)
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        explode(slice(sort_array(cellArr(col(vecCol)), asc = false), 1, nprobe)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
+        explode(slice(sort_array(cellArr(col("embedding")), asc = false), 1, nprobe)
           .getField("cell")).as("cell"))
     indexed.join(broadcast(probes), Seq("cell"))
       .filter(col("id") =!= col("query_id"))
@@ -220,12 +221,9 @@ object Similarity {
     * chosen so 1−λ is binary-exact (e.g. 0.75) if bit-parity with an
     * external oracle matters. */
   def mmrTopK(emb: DataFrame, queryPred: Column, m: Int, k: Int,
-      lam: Double, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
+      lam: Double): DataFrame = {
     require(k >= 1 && m >= k)
-    val queries = emb.filter(queryPred)
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val corpus = emb.select(col(idCol).as("nbr_id"), col(vecCol).as("cv"))
+    val (queries, corpus) = scanSides(emb, queryPred)
     // Top-m candidates via the bounded aggregator (O(m) state,
     // map-side pruning — lshTopK's pattern), NOT a window rank: the
     // window form sorts every (query × corpus) scored row, and the
@@ -304,12 +302,9 @@ object Similarity {
     * structurally-different twin (and the shape whose greedy rounds
     * an external SQL oracle can replicate). */
   def mmrTopKFused(emb: DataFrame, queryPred: Column, m: Int, k: Int,
-      lam: Double, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
+      lam: Double): DataFrame = {
     require(k >= 1 && m >= k)
-    val queries = emb.filter(queryPred)
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val corpus = emb.select(col(idCol).as("nbr_id"), col(vecCol).as("cv"))
+    val (queries, corpus) = scanSides(emb, queryPred)
     corpus.join(broadcast(topMCandidates(queries, corpus, m)), Seq("nbr_id"))
       .select(col("query_id"), col("nbr_id"), col("rel"), col("cv"))
       .groupBy(col("query_id"))
@@ -322,9 +317,8 @@ object Similarity {
 
   /** All pairs above a cosine threshold (near-duplicate detection by
     * embedding). Quadratic — verification tool; LSH is the scale path. */
-  def cosinePairs(emb: DataFrame, threshold: Double,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val v = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
+  def cosinePairs(emb: DataFrame, threshold: Double): DataFrame = {
+    val v = emb.select(col("vec_id").as("id"), col("embedding").as("v"))
     v.as("a").join(v.as("b"), col("a.id") < col("b.id"))
       .withColumn("cos", Num.r4(cosine(col("a.v"), col("b.v"))))
       .filter(col("cos") >= threshold)
@@ -436,13 +430,12 @@ object Similarity {
   }
 
   def cosinePairsBlocked(emb: DataFrame, threshold: Double,
-      idCol: String = "vec_id", vecCol: String = "embedding",
       nBlocks: Int = 0): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
     val b = if (nBlocks > 0) nBlocks else deriveBlocks(emb)
-    val v = emb.select(col(idCol).as("id"), col(vecCol).as("v"),
-      pmod(xxhash64(col(idCol)), lit(b)).cast("int").as("blk"))
+    val v = emb.select(col("vec_id").as("id"), col("embedding").as("v"),
+      pmod(xxhash64(col("vec_id")), lit(b)).cast("int").as("blk"))
     val tiles = (0 until b)
       .flatMap(i => (i until b).map(j => (i, j))).toDF("ba", "bb")
     // both sides replicate to their ~B/2 tiles and the pair join is
@@ -475,16 +468,15 @@ object Similarity {
     * under-block an asymmetric (small l, huge r) call and collapse the
     * tile parallelism. */
   def cosinePairsAcross(l: DataFrame, r: DataFrame, threshold: Double,
-      idCol: String = "vec_id", vecCol: String = "embedding",
       nBlocks: Int = 0): DataFrame = {
     val b = if (nBlocks > 0) nBlocks
             else deriveBlocks(l).max(deriveBlocks(r))
     val blks = array((0 until b).map(lit): _*)
-    val lhs = l.select(col(idCol).as("ia"), col(vecCol).as("va"),
-      pmod(xxhash64(col(idCol)), lit(b)).cast("int").as("ba"))
+    val lhs = l.select(col("vec_id").as("ia"), col("embedding").as("va"),
+      pmod(xxhash64(col("vec_id")), lit(b)).cast("int").as("ba"))
       .withColumn("bb", explode(blks))
-    val rhs = r.select(col(idCol).as("ib"), col(vecCol).as("vb"),
-      pmod(xxhash64(col(idCol)), lit(b)).cast("int").as("rbb"))
+    val rhs = r.select(col("vec_id").as("ib"), col("embedding").as("vb"),
+      pmod(xxhash64(col("vec_id")), lit(b)).cast("int").as("rbb"))
       .withColumn("rba", explode(blks))
     lhs.join(rhs, col("ba") === col("rba") && col("bb") === col("rbb"))
       .withColumn("cos", Num.r4(cosine(col("va"), col("vb"))))
@@ -512,10 +504,9 @@ object Similarity {
     * (and itself) only; edges between two micro-batches are the
     * index-append sink's concern. */
   def incrementalPairs(batch: DataFrame, corpus: DataFrame,
-      threshold: Double, idCol: String = "vec_id",
-      vecCol: String = "embedding", nBlocks: Int = 0): DataFrame = {
-    val b = batch.select(col(idCol).as("bid"), col(vecCol).as("bv"))
-    val c = corpus.select(col(idCol).as("cid"), col(vecCol).as("cv"))
+      threshold: Double, nBlocks: Int = 0): DataFrame = {
+    val b = batch.select(col("vec_id").as("bid"), col("embedding").as("bv"))
+    val c = corpus.select(col("vec_id").as("cid"), col("embedding").as("cv"))
     val cross = c.join(broadcast(b), col("cid") =!= col("bid"))
       .withColumn("cos", Num.r4(cosine(col("cv"), col("bv"))))
       .filter(col("cos") >= threshold)
@@ -528,7 +519,7 @@ object Similarity {
     // to learn a size the contract already bounds.
     val intraBlocks = if (nBlocks > 0) nBlocks else MinBlocks
     cross.unionByName(
-      cosinePairsBlocked(batch, threshold, idCol, vecCol, intraBlocks))
+      cosinePairsBlocked(batch, threshold, intraBlocks))
   }
 
   /** Deterministic pseudo-random hyperplanes: component j of plane
@@ -565,15 +556,10 @@ object Similarity {
     * cell-key join — no all-pairs anywhere.
     */
   /** Deterministic IVF coarse centroids: the first `nlist` vectors by
-    * id (shared by ivfTopK and streaming.StreamAnn). */
-  private[graft] def ivfCentroids(emb: DataFrame, nlist: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Array[(Int, Array[Double])] =
-    Pin.record(emb.orderBy(col(idCol)).limit(nlist)
-      .select(col(vecCol))).collect()
-      .zipWithIndex
-      .map { case (r, i) =>
-        (i, r.getSeq[Float](0).map(_.toDouble).toArray)
-      }
+    * id, as (cell, vector) (shared by ivfTopK and streaming.StreamAnn). */
+  private[graft] def ivfCentroids(emb: DataFrame,
+      nlist: Int): Array[(Int, Array[Double])] =
+    KMeans.initCentroids(emb, nlist).zipWithIndex.map(_.swap)
 
   /** Per-vector array of (cos to centroid c, c) structs — argmax/sort
     * over it picks assignment/probe cells. */
@@ -614,10 +600,9 @@ object Similarity {
     * probe side (queries × nprobe cells) is broadcast and must fit
     * executor memory; past that Spark fails the query. */
   def ivfTopK(emb: DataFrame, queryPred: Column, k: Int,
-      nlist: Int = 0, nprobe: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+      nlist: Int = 0, nprobe: Int = 4): DataFrame = {
     val nl = if (nlist > 0) nlist else deriveNlist(emb.count())
-    val centroids = ivfCentroids(emb, nl, idCol, vecCol)
+    val centroids = ivfCentroids(emb, nl)
     def cellArr(v: Column): Column = ivfCellArr(centroids)(v)
     // index side needs only the argmax cell — the fused
     // plans.VecCellArgmax scan (the composed nlist×VecCosine struct
@@ -628,13 +613,13 @@ object Similarity {
     // corpus-scale per-row work of this operator — an unsplittable
     // scan would run it single-task (c8/c32 ≈ 0.97 at sf1 before)
     val indexed = spreadNarrowScan(emb)
-      .select(col(idCol).as("id"), col(vecCol).as("v"),
-        graft.plans.VectorFunctions.vec_cell_argmax(col(vecCol),
+      .select(col("vec_id").as("id"), col("embedding").as("v"),
+        graft.plans.VectorFunctions.vec_cell_argmax(col("embedding"),
           centroids.map(_._2.toIndexedSeq).toIndexedSeq).as("cell"))
     // probe side (query-sized) sorts to take the nprobe nearest cells
     val probes = emb.filter(queryPred)
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        explode(slice(sort_array(cellArr(col(vecCol)), asc = false), 1, nprobe)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
+        explode(slice(sort_array(cellArr(col("embedding")), asc = false), 1, nprobe)
           .getField("cell")).as("cell"))
     // each corpus vector lives in exactly one cell, so a (query, nbr)
     // pair can match at most once — no distinct needed. The probes
@@ -657,8 +642,7 @@ object Similarity {
     * keyed query side is broadcast and must fit executor memory; past
     * that Spark fails the query. */
   def lshTopK(emb: DataFrame, queryPred: Column, k: Int,
-      numPlanes: Int = 6, numTables: Int = 8, dim: Int = 64,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+      numPlanes: Int = 6, numTables: Int = 8, dim: Int = 64): DataFrame = {
     // one fused expression computes every table's key in a single
     // vector pass (plans.VecLshKeys); posexplode recovers (t, key)
     val planeMatrix: IndexedSeq[IndexedSeq[Double]] =
@@ -671,9 +655,9 @@ object Similarity {
     // corpus keyed once; queries are the filtered (small) side and key
     // themselves directly — broadcast, so the corpus never shuffles
     val buckets = withKeys(
-      emb.select(col(idCol).as("id"), col(vecCol).as("v")), "id", "v")
+      emb.select(col("vec_id").as("id"), col("embedding").as("v")), "id", "v")
     val queries = withKeys(emb.filter(queryPred)
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv")), "query_id", "qv")
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv")), "query_id", "qv")
     val candidates = buckets.join(broadcast(queries), Seq("t", "key"))
       .filter(col("id") =!= col("query_id"))
       .select(col("query_id"), col("qv"), col("id").as("nbr_id"), col("v"))

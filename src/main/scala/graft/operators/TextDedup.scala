@@ -21,6 +21,9 @@ import graft.functions.TextFunctions._
   *    bucket with 10k near-identical docs is better handled by exact
   *    dedup upstream).
   *
+  * Input: a `documents` frame — `doc_id` (long) and `text`; the
+  * `*FromTokens` forms take its (id, toks) tokenization instead.
+  *
   * Unique ids: the shingle-set operators assume one row per id and do
   * not check it (a guard costs a job per call). Rows sharing an id stay
   * separate documents: no id pairs with itself and pairs of unique ids
@@ -32,13 +35,12 @@ object TextDedup {
 
   /** Exact near-identity dedup by normalized-content fingerprint:
     * canonical id = min doc_id per group. */
-  def contentDedup(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
+  def contentDedup(docs: DataFrame): DataFrame =
     docs
-      .withColumn("fp", fingerprint(col(textCol)))
+      .withColumn("fp", fingerprint(col("text")))
       .groupBy(col("fp"))
       .agg(
-        min(col(idCol)).as("canonical_id"),
+        min(col("doc_id")).as("canonical_id"),
         count(lit(1)).as("copies"))
 
   /** Per-document DISTINCT shingle ARRAYS (id, shs) — the shared base
@@ -82,26 +84,25 @@ object TextDedup {
     * the rule; cached consumers go through [[shingleSets]] instead,
     * where the inferred filters hit the materialized array and are
     * cheap. */
-  private def docShingles(docs: DataFrame, idCol: String, textCol: String,
-      n: Int): DataFrame =
-    docs.select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
+  private def docShingles(docs: DataFrame, n: Int): DataFrame =
+    docTokens(docs)
       .select(col("id"),
         explode(array_distinct(shinglesFromTokens(col("toks"), n))).as("shingle"))
 
-  private def docShingleSets(docs: DataFrame, idCol: String, textCol: String,
-      n: Int): DataFrame =
-    shingleSets(
-      docs.select(col(idCol).as("id"), tokens(col(textCol)).as("toks")), n)
+  /** (id, toks): the one tokenize projection every text operator starts
+    * from. */
+  private def docTokens(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id").as("id"), tokens(col("text")).as("toks"))
+
+  private def docShingleSets(docs: DataFrame, n: Int): DataFrame =
+    shingleSets(docTokens(docs), n)
 
   /** Exact n-gram Jaccard similar pairs: |A∩B| / |A∪B| ≥ threshold.
     * Quadratic in shared-shingle pairs — verification / small-corpus
     * tool; LSH below is the scale path.
     * Precondition: one row per id (unchecked; see [[TextDedup]]). */
-  def jaccardPairs(docs: DataFrame, n: Int = 3, threshold: Double = 0.5,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    jaccardPairsFromTokens(
-      docs.select(col(idCol).as("id"), tokens(col(textCol)).as("toks")),
-      n, threshold)
+  def jaccardPairs(docs: DataFrame, n: Int = 3, threshold: Double = 0.5): DataFrame =
+    jaccardPairsFromTokens(docTokens(docs), n, threshold)
 
   /** [[jaccardPairs]] over a pre-tokenized (id, toks) frame —
     * identical rows; the token-level twin of
@@ -146,6 +147,10 @@ object TextDedup {
     sh.join(broadcast(ids), Seq("id"), "left_semi")
       .select(col("id"), array_sort(col("shs")).as("set"),
         size(col("shs")).as("sz"))
+
+  /** The distinct ids on either side of (id_a, id_b) pairs. */
+  private def pairIds(pairs: DataFrame): DataFrame =
+    pairs.select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
 
   /** Exact Jaccard of candidate pairs (columns id_a, id_b) against
     * sorted-set frames for each side, via the codegen merge-intersect
@@ -254,11 +259,9 @@ object TextDedup {
     * the prefix index (~(1−τ) of corpus shingles) and the candidate
     * docs' shingle sets are broadcast and must fit executor memory —
     * past that Spark fails the query. */
-  def prefixJaccardPairs(docs: DataFrame, n: Int = 3, threshold: Double = 0.5,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    prefixJaccardPairsFromTokens(
-      docs.select(col(idCol).as("id"), tokens(col(textCol)).as("toks")),
-      n, threshold)
+  def prefixJaccardPairs(docs: DataFrame, n: Int = 3,
+      threshold: Double = 0.5): DataFrame =
+    prefixJaccardPairsFromTokens(docTokens(docs), n, threshold)
 
   /** [[prefixJaccardPairs]] over a pre-tokenized (id, toks) frame —
     * identical rows; lets a composed pipeline tokenize once.
@@ -311,10 +314,7 @@ object TextDedup {
     // prefix filtering pays), then one exact merge-intersect per pair
     // (codegen'd; `size(array_intersect(..))` is an interpreted
     // hash-set per row and was the dominant cost of the whole query).
-    val candIds = survivors
-      .select(explode(array(col("id_a"), col("id_b"))).as("id"))
-      .distinct()
-    val sets = sortedSets(sh, candIds).pin(Wide)
+    val sets = sortedSets(sh, pairIds(survivors)).pin(Wide)
     verifiedJaccard(survivors.select(col("id_a"), col("id_b")),
       sets, sets, threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
@@ -331,9 +331,9 @@ object TextDedup {
     * tool; [[prefixContainmentPairs]] is the identical-result scale
     * path.
     * Precondition: one row per id (unchecked; see [[TextDedup]]). */
-  def containmentPairs(docs: DataFrame, n: Int = 3, threshold: Double = 0.6,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val sh = docShingleSets(docs, idCol, textCol, n).pin(Wide)
+  def containmentPairs(docs: DataFrame, n: Int = 3,
+      threshold: Double = 0.6): DataFrame = {
+    val sh = docShingleSets(docs, n).pin(Wide)
     val ds = explodeSetsWithSize(sh)
     // singleton pruning via groupBy+join (map-side partials) — see
     // jaccardPairs; sizes ride the explode and group with the pair key
@@ -400,14 +400,13 @@ object TextDedup {
     * candidate docs' shingle sets are broadcast and must fit executor
     * memory — past that Spark fails the query. */
   def prefixContainmentPairs(docs: DataFrame, n: Int = 3,
-      threshold: Double = 0.6, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
+      threshold: Double = 0.6): DataFrame = {
     // snap-slack-relaxed τ for pruning, as in prefixJaccardPairs:
     // verification accepts the r4-snapped containment ≥ τ, which a
     // raw ratio in [τ−5e-5−0.5e-8, τ) also satisfies (both Num.r
     // rounding stages covered — see prefixJaccardPairs)
     val tau = threshold - (5e-5 + 1e-8)
-    val sh = docShingleSets(docs, idCol, textCol, n).pin(Wide)
+    val sh = docShingleSets(docs, n).pin(Wide)
     // unlike the Jaccard join, BOTH sides of the candidate join need
     // ranked rows (the container side probes with its full df>1 set),
     // so the shared ranked frame is what gets pinned here
@@ -427,10 +426,7 @@ object TextDedup {
       .filter(col("po") +
         least(col("sz_a") - col("pa"), col("sz_b") - col("pb")) >= needed)
       .pin(Wide)
-    val candIds = survivors
-      .select(explode(array(col("id_a"), col("id_b"))).as("id"))
-      .distinct()
-    val sets = sortedSets(sh, candIds).pin(Wide)
+    val sets = sortedSets(sh, pairIds(survivors)).pin(Wide)
     def side(idc: String, suffix: String): DataFrame =
       broadcast(sets.select(col("id").as(idc), col("set").as(s"set_$suffix"),
         col("sz").as(s"szv_$suffix")))
@@ -462,12 +458,9 @@ object TextDedup {
   val BandRows = 4
   def numBands: Int = NumHashes / BandRows
 
-  /** Per-document MinHash signature columns m0..m15. One explode + one
-    * grouped aggregation — the shuffle key is the doc id. */
-  def minhashSignatures(docs: DataFrame, n: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    signaturesFromShingles(docShingles(docs, idCol, textCol, n))
-
+  /** Per-document MinHash signature columns m0..m15 of exploded
+    * (id, shingle) rows. One grouped aggregation — the shuffle key is
+    * the doc id. */
   private def signaturesFromShingles(ds: DataFrame): DataFrame = {
     val h = ds.withColumn("h", hash32(col("shingle")))
     val aggs = (0 until NumHashes).map(i =>
@@ -509,18 +502,44 @@ object TextDedup {
     * Preconditions: one row per id (unchecked; see [[TextDedup]]); the
     * candidate docs' shingle sets are broadcast and must fit executor
     * memory — past that Spark fails the query. */
-  def minhashDedup(docs: DataFrame, n: Int = 3, threshold: Double = 0.5,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def minhashDedup(docs: DataFrame, n: Int = 3,
+      threshold: Double = 0.5): DataFrame = {
     // one per-doc shingle-array pass feeds signatures and verification
-    val sh = docShingleSets(docs, idCol, textCol, n).pin(Wide)
+    val sh = docShingleSets(docs, n).pin(Wide)
     val candidates = minhashCandidates(
       signaturesFromShingles(explodeSets(sh))).pin(Wide)
-    val candIds = candidates
-      .select(explode(array(col("id_a"), col("id_b"))).as("id"))
-      .distinct()
-    val sets = sortedSets(sh, candIds)
+    val sets = sortedSets(sh, pairIds(candidates))
     verifiedJaccard(candidates, sets, sets, threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
+  }
+
+  /** The corpus side of [[incrementalDedup]], built once by
+    * [[corpusIndex]] and probed by every batch: content fingerprints
+    * (`fp`), per-doc shingle sets (`id`, `shs`) and the LSH band table
+    * (`id`, `band`, `key`) with degenerate buckets dropped. */
+  final case class CorpusIndex(n: Int, fps: DataFrame, sets: DataFrame,
+      bands: DataFrame)
+
+  /** Build and pin the [[CorpusIndex]] of `corpus` for n-gram shingles;
+    * `maxBucket` drops corpus buckets holding more docs, exactly as in
+    * [[minhashCandidates]]. The pins belong to the caller's scope (a
+    * stream builds the index once, outside its micro-batches). */
+  def corpusIndex(corpus: DataFrame, n: Int = 3,
+      maxBucket: Int = 1000): CorpusIndex = {
+    import graft.functions.TextFunctions.fingerprint
+    val fps = corpus.select(fingerprint(col("text")).as("fp")).pin(Wide)
+    val sets = docShingleSets(corpus, n).pin(Wide)
+    // the band table feeds its own bucket-size guard AND the bounded
+    // join — pin it or the signature pass runs once per consumer
+    val bands = bandKeys(signaturesFromShingles(explodeSets(sets)))
+      .pin(Narrow)
+    val bsz = bands.groupBy(col("band"), col("key"))
+      .agg(count(lit(1)).as("bucket_size"))
+    val bounded = bands
+      .join(bsz.filter(col("bucket_size") <= maxBucket), Seq("band", "key"))
+      .select(col("id"), col("band"), col("key"))
+      .pin(Narrow)
+    CorpusIndex(n, fps, sets, bounded)
   }
 
   /** Incremental batch-vs-corpus dedup — the daily-ingest shape: a
@@ -535,49 +554,36 @@ object TextDedup {
     *    Jaccard ≥ threshold. Only batch docs with NO exact copy enter
     *    the near path (an exact copy already decides the verdict).
     *
-    * Scale: the corpus side shuffles once on (band, key) — in a real
-    * deployment its signatures/bands are precomputed and stored
-    * bucketed by (band, key), so only the (tiny) batch side moves;
-    * `maxBucket` bounds degenerate corpus buckets exactly as in
-    * [[minhashCandidates]]. Nothing here is ever corpus×corpus.
+    * Scale: the corpus side is the prebuilt [[CorpusIndex]] (in a real
+    * deployment stored bucketed by (band, key)), so each call moves
+    * only the (tiny) batch side. Nothing here is ever corpus×corpus.
     * Precondition: one row per id (unchecked; see [[TextDedup]]).
     *
     * Streaming: applied per micro-batch through
-    * [[graft.streaming.MicroBatch]], the stream IS the daily batch,
-    * arriving continuously, and its pins are released as each batch
-    * ends. Each micro-batch dedups against the static corpus only: two
-    * near-identical docs arriving in different micro-batches both get
-    * their corpus verdict (intra-stream dedup is StreamDedup's job,
-    * composable upstream). Growing the corpus index as batches commit
-    * is the sink's concern; the verdicts carry what it needs to append
-    * `new` docs. */
-  def incrementalDedup(batch: DataFrame, corpus: DataFrame, n: Int = 3,
-      threshold: Double = 0.5, maxBucket: Int = 1000,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    * [[graft.streaming.MicroBatch]] against an index built once, the
+    * stream IS the daily batch, arriving continuously, and its pins are
+    * released as each batch ends. Each micro-batch dedups against the
+    * static corpus only: two near-identical docs arriving in different
+    * micro-batches both get their corpus verdict (intra-stream dedup is
+    * StreamDedup's job, composable upstream). Growing the corpus index
+    * as batches commit is the sink's concern; the verdicts carry what
+    * it needs to append `new` docs. */
+  def incrementalDedup(batch: DataFrame, corpus: CorpusIndex,
+      threshold: Double = 0.5): DataFrame = {
     import graft.functions.TextFunctions.fingerprint
-    val bfp = batch.select(col(idCol).as("id"), fingerprint(col(textCol)).as("fp"))
-    val cfp = corpus.select(fingerprint(col(textCol)).as("fp"))
-    val exact = bfp.join(cfp, "fp").groupBy(col("id"))
+    val bfp = batch.select(col("doc_id").as("id"), fingerprint(col("text")).as("fp"))
+    val exact = bfp.join(corpus.fps, "fp").groupBy(col("id"))
       .agg(count(lit(1)).as("n_exact"))
-    val bRest = batch.join(exact.select(col("id").as(idCol)), Seq(idCol), "left_anti")
-    // The set tables each feed their band fan-out AND their sorted-set
-    // verification side, so both are pinned before any consumer plans.
-    // Lazy all the way down, the concurrently submitted consumer stages
-    // raced the unfilled caches and re-ran the tokenize+shingle+
-    // signature per racer (run-1 CPU 50.7 s raced vs ~30 s pinned at
-    // sf0.1).
-    val bs = docShingleSets(bRest, idCol, textCol, n).pin(Wide)
-    val cs = docShingleSets(corpus, idCol, textCol, n).pin(Wide)
-    // corpus band table feeds its own bucket-size guard AND the join —
-    // pin it or the signature pass runs once per consumer
-    val cBands = bandKeys(signaturesFromShingles(explodeSets(cs)))
-      .pin(Narrow)
-    val cBsz = cBands.groupBy(col("band"), col("key"))
-      .agg(count(lit(1)).as("bucket_size"))
-    val cBounded = cBands
-      .join(cBsz.filter(col("bucket_size") <= maxBucket), Seq("band", "key"))
+    val bRest = batch.join(exact.select(col("id").as("doc_id")), Seq("doc_id"),
+      "left_anti")
+    // The batch set table feeds its band fan-out AND its sorted-set
+    // verification side, so it is pinned before any consumer plans.
+    // Lazy, the concurrently submitted consumer stages raced the
+    // unfilled cache and re-ran the tokenize+shingle+signature per
+    // racer (run-1 CPU 50.7 s raced vs ~30 s pinned at sf0.1).
+    val bs = docShingleSets(bRest, corpus.n).pin(Wide)
     val cand = bandKeys(signaturesFromShingles(explodeSets(bs))).as("a")
-      .join(cBounded.as("b"),
+      .join(corpus.bands.as("b"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
@@ -585,14 +591,14 @@ object TextDedup {
     // verification via sorted-set merge-intersect, each side
     // semi-reduced to its own candidate ids
     val bSets = sortedSets(bs, cand.select(col("id_a").as("id")).distinct())
-    val cSets = sortedSets(cs, cand.select(col("id_b").as("id")).distinct())
+    val cSets = sortedSets(corpus.sets, cand.select(col("id_b").as("id")).distinct())
     val near = verifiedJaccard(cand, bSets, cSets, threshold)
       .groupBy(col("id_a").as("id"))
       .agg(count(lit(1)).as("n_near"))
-    batch.select(col(idCol).as("id"))
+    batch.select(col("doc_id").as("id"))
       .join(exact, Seq("id"), "left")
       .join(near, Seq("id"), "left")
-      .select(col("id").as(idCol),
+      .select(col("id").as("doc_id"),
         when(col("n_exact") > 0, lit("dup_exact"))
           .when(col("n_near") > 0, lit("dup_near"))
           .otherwise(lit("new")).as("status"),
@@ -610,16 +616,16 @@ object TextDedup {
     * probe is a left join on the shingle key. At deployment the
     * corpus shingle set is the stored index — only the batch side is
     * computed per run. */
-  def noveltyAgainstCorpus(batch: DataFrame, corpus: DataFrame, n: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val bs = docShingles(batch, idCol, textCol, n)
-    val cSh = docShingles(corpus, idCol, textCol, n)
+  def noveltyAgainstCorpus(batch: DataFrame, corpus: DataFrame,
+      n: Int = 3): DataFrame = {
+    val bs = docShingles(batch, n)
+    val cSh = docShingles(corpus, n)
       .select(col("shingle")).distinct().withColumn("seen", lit(1))
     bs.join(cSh, Seq("shingle"), "left")
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_shingles"),
         count(when(col("seen").isNull, 1)).as("n_novel"))
-      .select(col("id").as(idCol), col("n_shingles"),
+      .select(col("id").as("doc_id"), col("n_shingles"),
         Num.r4(col("n_novel").cast("double") / col("n_shingles")).as("novel_frac"))
   }
 
@@ -628,10 +634,9 @@ object TextDedup {
     * count), so no per-term tf grouping is needed: one explode + ONE
     * grouped aggregation with map-side partials. The shuffle carries
     * 33 longs per doc, independent of document length. */
-  def simhash(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val toks = docs.select(col(idCol).as("id"),
-      explode(tokens(col(textCol))).as("tok"))
+  def simhash(docs: DataFrame): DataFrame = {
+    val toks = docs.select(col("doc_id").as("id"),
+      explode(tokens(col("text"))).as("tok"))
       .withColumn("h", hash32(col("tok")))
     val bitSums = (0 until 32).map(b =>
       sum(when(shiftright(col("h"), b).bitwiseAND(1) === 1, 1L)
@@ -648,8 +653,7 @@ object TextDedup {
     * Precondition: one side of the band self-join (4 bands × the
     * signature table) is broadcast and must fit executor memory; past
     * that Spark fails the query. */
-  def simhashPairs(docs: DataFrame, maxHamming: Int = 6,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def simhashPairs(docs: DataFrame, maxHamming: Int = 6): DataFrame = {
     // no pin: the band table feeds BOTH sides of the self-join, but
     // both sides read the one `sigs` exchange below (AQE reuses it), so
     // the signature computation (tokenize + 32 weighted bit sums over
@@ -664,7 +668,7 @@ object TextDedup {
     // probe stages). defaultParallelism = the cluster width, so the
     // shape is scale-adaptive, not a local[32] constant; the exchange
     // still moves only the narrow signature rows.
-    val sigs = simhash(docs, idCol, textCol).repartition(
+    val sigs = simhash(docs).repartition(
       docs.sparkSession.sparkContext.defaultParallelism, col("id"))
     val bands = sigs.select(col("id"), col("simhash"),
       explode(array((0 until 4).map(b =>

@@ -36,13 +36,15 @@ import graft.operators.Pin._
   * Words longer than `maxWordLen` chars are excluded from the model
   * (the SentencePiece max-sentencepiece-length discipline; documents
   * full of URLs would otherwise blow the per-word DP width).
+  *
+  * Input: a `documents` frame's `text` column.
   */
 object UnigramLm {
 
   /** (word, f, n) distinct-word frequency table. */
-  def wordTable(docs: DataFrame, textCol: String, maxWordLen: Int): DataFrame =
+  def wordTable(docs: DataFrame, maxWordLen: Int): DataFrame =
     docs
-      .select(explode(graft.functions.TextFunctions.tokens(col(textCol))).as("word"))
+      .select(explode(graft.functions.TextFunctions.tokens(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("f"))
       .withColumn("n", length(col("word")))
       .filter(col("n") <= maxWordLen)
@@ -51,10 +53,10 @@ object UnigramLm {
     * ranked by (cnt desc, piece), top `topK`. Precondition: the
     * piece-probability table is broadcast and must fit executor
     * memory; past that Spark fails the query. */
-  def emRound(docs: DataFrame, textCol: String = "text",
-      maxPiece: Int = 6, maxWordLen: Int = 16, topK: Int = 50): DataFrame = {
+  def emRound(docs: DataFrame, maxPiece: Int = 6, maxWordLen: Int = 16,
+      topK: Int = 50): DataFrame = {
     val L = maxPiece
-    val words = wordTable(docs, textCol, maxWordLen)
+    val words = wordTable(docs, maxWordLen)
 
     // candidate pieces: all (start i, len l) substrings, l <= L.
     // Checkpointed — cand feeds BOTH the seed-probability aggregation

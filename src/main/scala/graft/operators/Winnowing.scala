@@ -25,6 +25,8 @@ import graft.functions.TextFunctions
   * bounded by document length. The cross-document pair query downstream
   * buckets by fingerprint hash with a document-frequency guard
   * (boilerplate hashes capped), the LSH-bucket discipline.
+  *
+  * Input: a `documents` frame — `doc_id` and `text`.
   */
 object Winnowing {
 
@@ -33,9 +35,8 @@ object Winnowing {
     * Documents with fewer than k tokens produce no fingerprints;
     * documents with fewer than w grams contribute the minimum of what
     * they have (the s=0 truncated window — MOSS's short-doc rule). */
-  def fingerprints(docs: DataFrame, k: Int = 3, w: Int = 4,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    selections(docs, k, w, idCol, textCol)
+  def fingerprints(docs: DataFrame, k: Int = 3, w: Int = 4): DataFrame =
+    selections(docs, k, w)
       .select(col("doc_id"), explode(col("ms")).as("m"))
       .select(col("doc_id"), col("m.h").as("fp_hash"),
         col("m.p").as("fp_pos"))
@@ -60,12 +61,11 @@ object Winnowing {
     * Projection discipline: tokenize → gram strings → hashes in
     * chained selects (the TextFunctions convention — a collapsed tree
     * would re-run the regex per reference). */
-  private def selections(docs: DataFrame, k: Int, w: Int,
-      idCol: String, textCol: String): DataFrame =
+  private def selections(docs: DataFrame, k: Int, w: Int): DataFrame =
     docs
-      .select(col(idCol).as("doc_id"),
+      .select(col("doc_id"),
         TextFunctions.shinglesFromTokens(
-          TextFunctions.tokens(col(textCol)), k).as("sh"))
+          TextFunctions.tokens(col("text")), k).as("sh"))
       .select(col("doc_id"),
         transform(col("sh"), g => TextFunctions.hash60(g)).as("hs"))
       .select(col("doc_id"),
@@ -80,9 +80,8 @@ object Winnowing {
     * array (density 2/(w+1)), not the gram list.
     * Precondition: one row per id, unchecked (a guard costs a job per
     * call); a duplicated id gets each of its rows' hash sets, unmerged. */
-  def fingerprintHashes(docs: DataFrame, k: Int = 3, w: Int = 4,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    selections(docs, k, w, idCol, textCol)
+  def fingerprintHashes(docs: DataFrame, k: Int = 3, w: Int = 4): DataFrame =
+    selections(docs, k, w)
       .select(col("doc_id"),
         explode(array_distinct(
           transform(col("ms"), m => m.getField("h")))).as("fp_hash"))
@@ -91,9 +90,8 @@ object Winnowing {
     * (doc_id, fp_hash) with hashes in more than `maxDf` corpus docs
     * dropped (boilerplate guard — bounds every probe bucket). Build
     * once, persist alongside the corpus, probe every ingest batch. */
-  def index(corpus: DataFrame, k: Int = 3, w: Int = 4, maxDf: Int = 50,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val fp = fingerprintHashes(corpus, k, w, idCol, textCol)
+  def index(corpus: DataFrame, k: Int = 3, w: Int = 4, maxDf: Int = 50): DataFrame = {
+    val fp = fingerprintHashes(corpus, k, w)
       .select(col("doc_id").as("corpus_doc"), col("fp_hash"))
     fp.join(
       fp.groupBy(col("fp_hash")).agg(count(lit(1)).as("df"))
@@ -122,9 +120,8 @@ object Winnowing {
     * pairs; `new` docs' fingerprints can extend the stored index
     * between runs). */
   def probeAgainst(batch: DataFrame, corpusIndex: DataFrame,
-      k: Int = 3, w: Int = 4, minShared: Int = 2,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val bfp = Pin(fingerprintHashes(batch, k, w, idCol, textCol), Pin.Wide)
+      k: Int = 3, w: Int = 4, minShared: Int = 2): DataFrame = {
+    val bfp = Pin(fingerprintHashes(batch, k, w), Pin.Wide)
     val sizes = bfp.groupBy(col("doc_id")).agg(count(lit(1)).as("n_fp"))
     bfp.join(corpusIndex, Seq("fp_hash"))
       .groupBy(col("doc_id"), col("corpus_doc"))

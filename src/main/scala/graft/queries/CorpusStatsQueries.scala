@@ -343,8 +343,8 @@ object CorpusStatsQueries {
     val d = docs(spark, dir)
     TextDedup.incrementalDedup(
       d.filter(splitHash >= IncrBatchBucket),
-      d.filter(splitHash < IncrBatchBucket),
-      n = 3, threshold = IncrNearTau)
+      TextDedup.corpusIndex(d.filter(splitHash < IncrBatchBucket), n = 3),
+      threshold = IncrNearTau)
       .orderBy(col("doc_id"))
   }
 
@@ -745,7 +745,7 @@ object CorpusStatsQueries {
 
   def q93Covariance(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val cov = graft.operators.Pca.covariance(embs(spark, dir), "embedding", 64)
+    val cov = graft.operators.Pca.covariance(embs(spark, dir), 64)
     val rows = for { i <- 0 until CovSlice; j <- i until CovSlice }
       yield (i.toLong, j.toLong, Num.j(cov(i)(j), 4))
     rows.toDF("i", "j", "cov").orderBy(col("i"), col("j"))

@@ -28,26 +28,29 @@ import graft.functions.{TextFunctions => TF}
   * by construction (uniform hash). A global sort is never required —
   * the training order is shard-local, which is exactly what
   * data-parallel loaders consume (one shard per reader).
+  *
+  * Input: a `documents` frame — `doc_id` keys the split, shard and
+  * order; [[manifest]] sums the written `n_chars`.
   */
 object CorpusWriter {
 
   /** Split + shard + order columns (the q56/q58 assignment rules) —
     * exposed for reuse and testing. */
-  def assign(df: DataFrame, idCol: String, numShards: Int): DataFrame =
-    df.withColumn("split", TF.splitAssign(col(idCol)))
+  def assign(df: DataFrame, numShards: Int): DataFrame =
+    df.withColumn("split", TF.splitAssign(col("doc_id")))
       .withColumn("shard",
-        (TF.hash60(col(idCol).cast("string")) % numShards).cast("int"))
+        (TF.hash60(col("doc_id").cast("string")) % numShards).cast("int"))
       .withColumn("ord",
-        TF.hash60(concat(col(idCol).cast("string"), lit("#ord"))))
+        TF.hash60(concat(col("doc_id").cast("string"), lit("#ord"))))
 
   /** Write `df` as a sharded training corpus under `outDir`.
     * `maxRecordsPerFile <= 0` leaves file splitting to Spark. */
-  def write(df: DataFrame, outDir: String, idCol: String = "doc_id",
-      numShards: Int = 8, maxRecordsPerFile: Int = 0): Unit = {
+  def write(df: DataFrame, outDir: String, numShards: Int = 8,
+      maxRecordsPerFile: Int = 0): Unit = {
     val splits = 3 // train/val/test
-    assign(df, idCol, numShards)
+    assign(df, numShards)
       .repartition(numShards * splits, col("split"), col("shard"))
-      .sortWithinPartitions(col("split"), col("shard"), col("ord"), col(idCol))
+      .sortWithinPartitions(col("split"), col("shard"), col("ord"), col("doc_id"))
       .drop("ord")
       .write.mode("overwrite")
       .option("maxRecordsPerFile", maxRecordsPerFile.toLong)
@@ -63,11 +66,10 @@ object CorpusWriter {
   /** Per-(split, shard) accounting — what a training-run manifest
     * records. One aggregation over the written layout; partition
     * pruning makes per-split reads free. */
-  def manifest(spark: SparkSession, dir: String,
-      charsCol: String = "n_chars"): DataFrame =
+  def manifest(spark: SparkSession, dir: String): DataFrame =
     read(spark, dir)
       .groupBy(col("split"), col("shard"))
       .agg(count(lit(1)).as("docs"),
-        sum(col(charsCol)).cast("long").as("chars"))
+        sum(col("n_chars")).cast("long").as("chars"))
       .orderBy(col("split"), col("shard"))
 }

@@ -98,42 +98,46 @@ object ReplayScale {
     val streamRows = spark.read.parquet(s"$out/stream").count()
 
     val t0 = System.nanoTime()
-    val streamed = spark.readStream
-      .schema(spark.read.parquet(s"$out/stream").schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$out/stream")
-    val perBatch: DataFrame => DataFrame = twin match {
-      case "dedup" => TextDedup.incrementalDedup(_, corpus,
-        n = 3, threshold = 0.5, maxBucket = 1000)
-      case "emb_pairs" =>
-        Similarity.incrementalPairs(_, corpus, 0.35, nBlocks = 8)
-    }
-    val q = MicroBatch.start(
-        streamed.writeStream.trigger(Trigger.ProcessingTime(200L))) {
-      (batch, _) => perBatch(batch).write.mode("append").parquet(s"$out/results")
-    }
-    q.processAllAvailable()
-    val progresses = q.recentProgress.toSeq
-    val stateRowsMax = progresses
-      .flatMap(_.stateOperators.map(_.numRowsTotal)).maxOption.getOrElse(0L)
-    val batches = progresses.count(_.numInputRows > 0)
-    q.stop()
-    val wall = (System.nanoTime() - t0) / 1e9
+    // the corpus side is built once, in this scope; batch pins end with their batch
+    val (batches, stateRowsMax, wall, streamedFp, batchFp) = Pin.scope {
+      val streamed = spark.readStream
+        .schema(spark.read.parquet(s"$out/stream").schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(s"$out/stream")
+      val perBatch: DataFrame => DataFrame = twin match {
+        case "dedup" =>
+          val index = TextDedup.corpusIndex(corpus, n = 3, maxBucket = 1000)
+          TextDedup.incrementalDedup(_, index, threshold = 0.5)
+        case "emb_pairs" =>
+          Similarity.incrementalPairs(_, corpus, 0.35, nBlocks = 8)
+      }
+      val q = MicroBatch.start(
+          streamed.writeStream.trigger(Trigger.ProcessingTime(200L))) {
+        (batch, _) => perBatch(batch).write.mode("append").parquet(s"$out/results")
+      }
+      q.processAllAvailable()
+      val progresses = q.recentProgress.toSeq
+      val stateRowsMax = progresses
+        .flatMap(_.stateOperators.map(_.numRowsTotal)).maxOption.getOrElse(0L)
+      val batches = progresses.count(_.numInputRows > 0)
+      q.stop()
+      val wall = (System.nanoTime() - t0) / 1e9
 
-    val batchResult = twin match {
-      case "dedup" => perBatch(spark.read.parquet(s"$out/stream"))
-      case "emb_pairs" =>
-        // same one-file slices the maxFilesPerTrigger=1 stream consumed
-        val files = new java.io.File(s"$out/stream").listFiles()
-          .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-        require(files.nonEmpty,
-          s"$sfDir produced an empty stream subset — nothing to replay")
-        files.map(f => perBatch(spark.read.parquet(f.getPath)))
-          .reduce(_ unionByName _)
+      val batchResult = twin match {
+        case "dedup" => perBatch(spark.read.parquet(s"$out/stream"))
+        case "emb_pairs" =>
+          // same one-file slices the maxFilesPerTrigger=1 stream consumed
+          val files = new java.io.File(s"$out/stream").listFiles()
+            .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+          require(files.nonEmpty,
+            s"$sfDir produced an empty stream subset — nothing to replay")
+          files.map(f => perBatch(spark.read.parquet(f.getPath)))
+            .reduce(_ unionByName _)
+      }
+      (batches, stateRowsMax, wall,
+        graft.CrossPlan.fingerprint(spark.read.parquet(s"$out/results")),
+        graft.CrossPlan.fingerprint(batchResult))
     }
-    val streamedFp = graft.CrossPlan.fingerprint(
-      spark.read.parquet(s"$out/results"))
-    val batchFp = graft.CrossPlan.fingerprint(batchResult)
     val ok = streamedFp == batchFp && stateRowsMax == 0L && streamedFp.rows > 0
     println(s"""{"metric":"replay_scale","twin":"$twin",""" +
       s""""sf":"$sfDir","corpus_rows":$corpusRows,"stream_rows":$streamRows,""" +

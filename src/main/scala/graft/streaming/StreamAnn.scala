@@ -19,6 +19,9 @@ import graft.operators.{Num, Pin, Sampling, Similarity}
   * 100 TB notes: the indexed corpus is the big side and never moves —
   * cached once, joined per micro-batch on the cell key; stream state
   * is only the in-flight top-k buffers (O(k) per open query).
+  *
+  * Input: the corpus is an `embeddings` frame — `vec_id` and
+  * `embedding` (array<float>); the query stream carries (query_id, qv).
   */
 object StreamAnn {
 
@@ -31,16 +34,15 @@ object StreamAnn {
     * default here silently broke stream≡batch parity the moment the
     * corpus outgrew the derivation's floor (review find, round 12). */
   def ivfEnrich(queries: DataFrame, corpus: DataFrame, k: Int,
-      nlist: Int = 0, nprobe: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+      nlist: Int = 0, nprobe: Int = 4): DataFrame = {
     val nl = if (nlist > 0) nlist else Similarity.deriveNlist(corpus.count())
-    val centroids = Similarity.ivfCentroids(corpus, nl, idCol, vecCol)
+    val centroids = Similarity.ivfCentroids(corpus, nl)
     val cellArr = Similarity.ivfCellArr(centroids) _
     // the index side: one cell per corpus vector (fused argmax — see
     // plans.VecCellArgmax, bit-equal to the composed array_max form);
     // pinned — it is re-read every micro-batch
-    val indexed = Pin(corpus.select(col(idCol).as("nbr_id"), col(vecCol).as("cv"),
-      graft.plans.VectorFunctions.vec_cell_argmax(col(vecCol),
+    val indexed = Pin(corpus.select(col("vec_id").as("nbr_id"), col("embedding").as("cv"),
+      graft.plans.VectorFunctions.vec_cell_argmax(col("embedding"),
         centroids.map(_._2.toIndexedSeq).toIndexedSeq).as("cell")), Pin.Wide)
     val probes = queries
       .select(col("query_id"), col("qv"),

@@ -16,17 +16,18 @@ import graft.operators.CurationPipeline
   * bounded-state contract at 100 TB (see StreamDedup). On a stream
   * ordered by doc_id the two coincide exactly, which is what the
   * equivalence spec pins.
+  *
+  * Input: a document stream — `doc_id`, `lang`, `text`, and its
+  * event time `ts`.
   */
 object StreamCuration {
 
-  /** Curate an incoming document stream. Input needs
-    * (doc_id, lang, text, tsCol). Emits the batch pipeline's columns
-    * plus the event time. Precondition: a streaming input already
-    * carries its event-time watermark on `tsCol`. */
-  def curate(docsStream: DataFrame, minTokens: Int = 20,
-      tsCol: String = "ts"): DataFrame =
+  /** Curate an incoming document stream. Emits the batch pipeline's
+    * columns plus the event time. Precondition: a streaming input
+    * already carries its event-time watermark on `ts`. */
+  def curate(docsStream: DataFrame, minTokens: Int = 20): DataFrame =
     docsStream
-      .select(col("doc_id"), col("lang"), col(tsCol),
+      .select(col("doc_id"), col("lang"), col("ts"),
         CurationPipeline.scrubbed(col("text")).as("clean"))
       .withColumn("toks", size(TextFunctions.tokens(col("clean"))).cast("long"))
       .filter(col("toks") >= minTokens)
@@ -34,5 +35,5 @@ object StreamCuration {
       .dropDuplicatesWithinWatermark("fp")
       .withColumn("split", TextFunctions.splitAssign(col("doc_id")))
       .select(col("doc_id"), col("lang"), col("split"), col("toks"),
-        col("clean"), col(tsCol))
+        col("clean"), col("ts"))
 }

@@ -14,15 +14,16 @@ import graft.functions.TextFunctions
   * contract at 100 TB — unbounded exact streaming dedup would retain
   * every fingerprint ever seen. Full-history dedup belongs to the
   * batch pass (TextDedup.contentDedup) over the accumulated corpus.
+  *
+  * Input: a document stream with a `text` column.
   */
 object StreamDedup {
 
   /** Keep the first document per content fingerprint within the
-    * watermark horizon. Input needs (textCol). Precondition: a
-    * streaming input already carries its event-time watermark. */
-  def contentDedup(docsStream: DataFrame,
-      textCol: String = "text"): DataFrame =
+    * watermark horizon. Precondition: a streaming input already
+    * carries its event-time watermark. */
+  def contentDedup(docsStream: DataFrame): DataFrame =
     docsStream
-      .withColumn("fp", TextFunctions.fingerprint(col(textCol)))
+      .withColumn("fp", TextFunctions.fingerprint(col("text")))
       .dropDuplicatesWithinWatermark("fp")
 }

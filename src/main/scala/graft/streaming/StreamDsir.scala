@@ -25,6 +25,8 @@ import graft.operators.Pin._
   * complete per batch, so there is no watermark and no state store;
   * the stream runs forever with bounded resources as long as the
   * frozen model tables do not grow.
+  *
+  * Input: a `documents` frame — `doc_id` and `text`.
   */
 object StreamDsir {
 
@@ -38,10 +40,9 @@ object StreamDsir {
 
   /** Train both models: `target` is the curated slice whose
     * distribution we resample toward, `corpus` the raw pool. */
-  def trainModels(target: DataFrame, corpus: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): DsirModels = {
-    val (tc, ta, tv) = LanguageModel.train(target, idCol, textCol)
-    val (cc, ca, cv) = LanguageModel.train(corpus, idCol, textCol)
+  def trainModels(target: DataFrame, corpus: DataFrame): DsirModels = {
+    val (tc, ta, tv) = LanguageModel.train(target)
+    val (cc, ca, cv) = LanguageModel.train(corpus)
     DsirModels(tc.pin(Wide), ta.pin(Wide), tv.pin(Wide),
       cc.pin(Wide), ca.pin(Wide), cv.pin(Wide))
   }

@@ -13,15 +13,17 @@ import graft.operators.LogisticGd
   *
   * Being stateless it needs no watermark, no state store, and
   * composes anywhere in an ingestion topology (before StreamCuration's
-  * gate, after `TextDedup.incrementalDedup`'s verdicts). */
+  * gate, after `TextDedup.incrementalDedup`'s verdicts).
+  *
+  * Input: a document stream with a `text` column.
+  */
 object StreamScore {
 
   /** Append (score, pred) from a trained weight vector to a document
-    * stream (any frame with a text column). */
-  def scored(docsStream: DataFrame, weights: Seq[Double],
-      textCol: String = "text"): DataFrame = {
+    * stream. */
+  def scored(docsStream: DataFrame, weights: Seq[Double]): DataFrame = {
     val z = LogisticGd.linearScore(weights)
-    LogisticGd.qualityFeatures(docsStream, textCol)
+    LogisticGd.qualityFeatures(docsStream)
       .withColumn("score", lit(1.0) / (lit(1.0) + exp(-z)))
       .withColumn("pred", when(z >= 0, 1L).otherwise(0L))
       .drop((0 until weights.length).map(j => s"x$j"): _*)

@@ -21,17 +21,19 @@ import graft.functions.TextFunctions
   * outgrows state, the Misra–Gries aggregator (HeavyHitters.sketch)
   * drops in as the same groupBy(window) aggregation with O(cap)
   * state per window.
+  *
+  * Input: a document stream — `text` and its event time `ts`.
   */
 object StreamTrending {
 
   /** Incremental per-(window, term) counts of a document stream.
-    * Input needs (text, tsCol). Precondition: a streaming input
-    * already carries its event-time watermark on `tsCol`. */
-  def termCounts(docsStream: DataFrame, windowLen: String = "10 minutes",
-      tsCol: String = "ts"): DataFrame =
+    * Precondition: a streaming input already carries its event-time
+    * watermark on `ts`. */
+  def termCounts(docsStream: DataFrame,
+      windowLen: String = "10 minutes"): DataFrame =
     docsStream
-      .select(col(tsCol), explode(TextFunctions.tokens(col("text"))).as("term"))
-      .groupBy(window(col(tsCol), windowLen), col("term"))
+      .select(col("ts"), explode(TextFunctions.tokens(col("text"))).as("term"))
+      .groupBy(window(col("ts"), windowLen), col("term"))
       .agg(count(lit(1)).as("cnt"))
 
   /** Per-window top-k by (count desc, term asc) — the non-incremental

@@ -635,7 +635,8 @@ class CorpusStatsSpec extends SparkSpec {
       (102L, "one two three four five six seven eight nine inserted ten"), // near copy of 2
       (103L, "completely different content with no overlap at all whatsoever"))
       .toDF("doc_id", "text")
-    val got = TextDedup.incrementalDedup(batch, corpus, n = 3, threshold = 0.4)
+    val got = TextDedup.incrementalDedup(batch,
+      TextDedup.corpusIndex(corpus, n = 3), threshold = 0.4)
       .as[(Long, String, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
     assert(got(101L) == (("dup_exact", 1L)))
     assert(got(102L)._1 == "dup_near" && got(102L)._2 >= 1L)
@@ -648,7 +649,8 @@ class CorpusStatsSpec extends SparkSpec {
     val corpus = Seq((1L, "a b c d e f g h"), (2L, "a b c d e f g h"))
       .toDF("doc_id", "text")
     val batch = Seq((100L, "a b c d e f g h")).toDF("doc_id", "text")
-    val got = TextDedup.incrementalDedup(batch, corpus, n = 3, threshold = 0.4)
+    val got = TextDedup.incrementalDedup(batch,
+      TextDedup.corpusIndex(corpus, n = 3), threshold = 0.4)
       .as[(Long, String, Long)].collect().toSeq
     assert(got == Seq((100L, "dup_exact", 2L)))
   }

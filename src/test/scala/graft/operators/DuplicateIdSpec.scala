@@ -40,7 +40,8 @@ class DuplicateIdSpec extends graft.SparkSpec {
   test("incrementalDedup: a duplicated batch id gets its id-level verdict once per row") {
     val s = spark
     import s.implicits._
-    val got = TextDedup.incrementalDedup(docs, Seq((9L, a)).toDF("doc_id", "text"))
+    val got = TextDedup.incrementalDedup(docs,
+      TextDedup.corpusIndex(Seq((9L, a)).toDF("doc_id", "text")))
       .filter($"doc_id" === 1L).as[(Long, String, Long)].collect().toSeq
     assert(got == Seq((1L, "dup_exact", 1L), (1L, "dup_exact", 1L)))
   }

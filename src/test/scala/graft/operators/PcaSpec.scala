@@ -21,8 +21,8 @@ class PcaSpec extends SparkSpec {
   private lazy val data = (0 until 2000).map(_ => sample())
 
   test("covariance aggregator ≡ direct E[xixj] − E[xi]E[xj]") {
-    val df = data.map(Tuple1(_)).toDF("v")
-    val cov = Pca.covariance(df, "v", 4)
+    val df = data.map(Tuple1(_)).toDF("embedding")
+    val cov = Pca.covariance(df, 4)
     val n = data.length.toDouble
     for (i <- 0 until 4; j <- i until 4) {
       val pij = data.map(x => x(i).toDouble * x(j).toDouble).sum / n
@@ -34,8 +34,8 @@ class PcaSpec extends SparkSpec {
   }
 
   test("jacobi: descending eigenvalues, orthonormal vectors, exact reconstruction") {
-    val df = data.map(Tuple1(_)).toDF("v")
-    val cov = Pca.covariance(df, "v", 4)
+    val df = data.map(Tuple1(_)).toDF("embedding")
+    val cov = Pca.covariance(df, 4)
     val (evals, evecs) = Pca.jacobiEigen(cov)
     assert(evals.sliding(2).forall { case Array(a, b) => a >= b - 1e-12 })
     // orthonormality
@@ -54,10 +54,10 @@ class PcaSpec extends SparkSpec {
   }
 
   test("projection concentrates variance on the leading component") {
-    val df = data.map(Tuple1(_)).toDF("v")
-    val cov = Pca.covariance(df, "v", 4)
+    val df = data.map(Tuple1(_)).toDF("embedding")
+    val cov = Pca.covariance(df, 4)
     val (evals, evecs) = Pca.jacobiEigen(cov)
-    val proj = Pca.project(df, "v", evecs.take(2))
+    val proj = Pca.project(df, evecs.take(2))
     val stats = proj
       .select(col("pca")(0).as("p0"), col("pca")(1).as("p1"))
       .agg(var_pop(col("p0")), var_pop(col("p1")))

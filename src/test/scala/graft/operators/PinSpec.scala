@@ -115,4 +115,10 @@ class PinSpec extends graft.SparkSpec {
       Set("StreamApp.scala", "SoakMain.scala"))
     assert(mainSourcesCalling("EventTimeTimeout") == Set("KeyedState.scala"))
   }
+
+  test("document, embedding and token operators read their table's own " +
+      "columns: no main source declares a column-name parameter for them") {
+    assert(mainSourcesCalling("idCol: String", "textCol: String",
+      "vecCol: String", "tokCol: String").isEmpty)
+  }
 }

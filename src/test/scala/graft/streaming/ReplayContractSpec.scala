@@ -7,8 +7,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import graft.{SparkSpec, Tables}
-import graft.operators.{LogisticGd, NaiveBayes, Ridge, Similarity, TextDedup,
-  Winnowing}
+import graft.operators.{LogisticGd, NaiveBayes, Pin, Ridge, Similarity,
+  TextDedup, Winnowing}
 
 /** The replay side of [[MicroBatch]]'s at-least-once contract (stated
   * in its scaladoc): a sink can see the same (batchId, rows) again, so
@@ -156,9 +156,12 @@ class ReplayContractSpec extends SparkSpec {
       (102L, "one two three four five six seven eight nine inserted ten"),
       (103L, "completely different content with no overlap at all"))
     val chunks = Seq(batch.take(2), batch.drop(2))
-    assertDeterministic("StreamIncrementalDedup",
-      runTwiceBatch(chunks, "doc_id", "text")(TextDedup.incrementalDedup(
-        _, corpus, n = 3, threshold = 0.4, maxBucket = 1000)))
+    Pin.scope {
+      val index = TextDedup.corpusIndex(corpus, n = 3, maxBucket = 1000)
+      assertDeterministic("StreamIncrementalDedup",
+        runTwiceBatch(chunks, "doc_id", "text")(
+          TextDedup.incrementalDedup(_, index, threshold = 0.4)))
+    }
   }
 
   // ---- (a)+(b) DataFrame-returning twins ------------------------------
