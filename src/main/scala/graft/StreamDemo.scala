@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import graft.sources.FileEventSource
-import graft.streaming.{EventGenerator, MetricsSink, SinkConfig, StreamApp,
+import graft.streaming.{EventGenerator, SinkConfig, StreamApp,
   StreamFingerprint, WindowConfig}
 
 /** End-to-end demo — the `make demo` analog (Makefile:181-190 in the
@@ -31,12 +31,12 @@ object StreamDemo {
     String.format(java.util.Locale.ROOT, s"%.${decimals}f",
       java.lang.Double.valueOf(v))
 
-  /** Run one topology over pre-generated events; returns (wall sec,
-    * per-sink row counts). `tagBatches` swaps the update-mode sinks to
-    * the batch-id-tagged idempotent writer so finals are recoverable. */
+  /** Run one topology over pre-generated events into the default
+    * (batch-id-tagged, idempotent) writer, so finals are recoverable;
+    * returns (wall sec, query count, per-sink row counts). */
   private def runTopology(spark: SparkSession, eventsRoot: String,
-      outRoot: String, ckRoot: String, shared: Boolean,
-      tagBatches: Boolean): (Double, Int, Seq[(String, Long)]) = {
+      outRoot: String, ckRoot: String,
+      shared: Boolean): (Double, Int, Seq[(String, Long)]) = {
     val t0 = System.nanoTime()
     val queries = StreamApp.run(spark,
       FileEventSource(s"$eventsRoot/orders"),
@@ -45,9 +45,7 @@ object StreamDemo {
       outRoot,
       WindowConfig(watermark = Some("10 minutes")),
       SinkConfig(triggerInterval = "2 seconds", checkpointRoot = ckRoot),
-      shared = shared,
-      writer = if (tagBatches) MetricsSink.idempotentParquetWriter
-        else MetricsSink.parquetWriter)
+      shared = shared)
     queries.foreach(_.processAllAvailable())
     queries.foreach(_.stop())
     val elapsed = (System.nanoTime() - t0) / 1e9
@@ -88,14 +86,13 @@ object StreamDemo {
 
     val compare = args.contains("--compare")
     if (compare) {
-      // both topologies over the SAME event files, batch-id-tagged
-      // sinks, then the finals fingerprint
+      // both topologies over the SAME event files, then the finals
+      // fingerprint
       val (refSec, refN, refRows) = runTopology(spark, s"$outRoot/events",
-        s"$outRoot/ref", s"$outRoot/ck_ref", shared = false, tagBatches = true)
+        s"$outRoot/ref", s"$outRoot/ck_ref", shared = false)
       println(demoLine("reference", nEvents, refSec, refN, refRows))
       val (shSec, shN, shRows) = runTopology(spark, s"$outRoot/events",
-        s"$outRoot/shared", s"$outRoot/ck_shared", shared = true,
-        tagBatches = true)
+        s"$outRoot/shared", s"$outRoot/ck_shared", shared = true)
       println(demoLine("shared", nEvents, shSec, shN, shRows))
       val verdicts = StreamFingerprint.compare(spark,
         s"$outRoot/ref", s"$outRoot/shared")
@@ -116,7 +113,7 @@ object StreamDemo {
       val topology = if (shared) "shared" else "reference"
       val (elapsed, nQueries, sinkRows) = runTopology(spark,
         s"$outRoot/events", s"$outRoot/metrics", s"$outRoot/checkpoints",
-        shared, tagBatches = false)
+        shared)
       println(f"[demo] topology=$topology events=$nEvents drained in " +
         f"$elapsed%.1f s (${nEvents / elapsed}%.0f events/s)")
       sinkRows.foreach { case (t, n) => println(s"[demo] $t rows=$n") }

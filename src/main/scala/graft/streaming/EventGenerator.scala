@@ -62,6 +62,15 @@ object EventGenerator {
       col("o_totalprice").as("payment_value"),
       iso(col("o_orderdate")).as("timestamp"))).as("value"))
 
+  /** The exact producer option set of [[toKafka]], exposed as data as
+    * `KafkaEventSource.readerOptions` is, so KafkaContractSpec pins it. */
+  def writerOptions(topic: String, bootstrapServers: String): Map[String, String] =
+    Map(
+      "kafka.bootstrap.servers" -> bootstrapServers,
+      "topic" -> topic,
+      "kafka.compression.type" -> "gzip",
+      "kafka.acks" -> "all")
+
   /** Kafka producer sink (SURVEY §2.2 K4, base_producer.py:23-76):
     * key = order_id, JSON value — as a distributed Spark write, not the
     * reference's one-synchronous-send-per-message loop. Compiles with
@@ -72,10 +81,7 @@ object EventGenerator {
       .select(get_json_object(col("value"), "$.order_id").as("key"), col("value"))
       .write
       .format("kafka")
-      .option("kafka.bootstrap.servers", bootstrapServers)
-      .option("topic", topic)
-      .option("kafka.compression.type", "gzip")
-      .option("kafka.acks", "all")
+      .options(writerOptions(topic, bootstrapServers))
       .save()
 
   /** Write the three streams as text files for FileEventSource replay.

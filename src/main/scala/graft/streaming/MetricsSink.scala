@@ -38,10 +38,11 @@ object MetricsSink {
 
   /** Wire a metric stream to its writer through the [[MicroBatch]]
     * runner — the per-query topology of stream_processor.py:175-231,
-    * and the one sink path of both topologies. Each micro-batch is
-    * pinned first: the console monitor and the writer read one
-    * computed batch, and the emptiness test reads the pin's row count,
-    * so an empty batch costs one job. */
+    * and the one sink path of both topologies. `write` keeps the
+    * runner's writer contract: idempotent per batchId (see
+    * [[MicroBatch]]). Each micro-batch is pinned first: the console
+    * monitor and the writer read one computed batch, and the emptiness
+    * test reads the pin's row count, so an empty batch costs one job. */
   def start(df: DataFrame, queryName: String, cfg: SinkConfig,
       outputMode: String = "update")(
       write: (DataFrame, Long) => Unit): StreamingQuery =
@@ -58,16 +59,13 @@ object MetricsSink {
         }
     }
 
-  /** Parquet-append sink — the test/offline stand-in for the JDBC sink. */
-  def parquetWriter(outDir: String): (DataFrame, Long) => Unit =
-    (batch, _) => batch.write.mode("append").parquet(outDir)
-
-  /** Exactly-once parquet sink (§2.13 — the reference is at-least-once
-    * with swallowed conflicts): output is laid out by batch_id and each
-    * batch overwrites ITS OWN partition (dynamic overwrite), so a
-    * replayed micro-batch after failure/restart rewrites the same
-    * partition instead of duplicating rows. The runner's at-least-once
-    * delivery + idempotent write = effective exactly-once. */
+  /** The parquet sink, the offline stand-in for the JDBC sink
+    * (§2.13 — the reference is at-least-once with swallowed
+    * conflicts): output is laid out by batch_id and each batch
+    * overwrites ITS OWN partition (dynamic overwrite), so a replayed
+    * micro-batch after failure/restart rewrites the same partition
+    * instead of duplicating rows. Readers take a table's final value
+    * per key from its highest batch_id ([[StreamFingerprint]]). */
   def idempotentParquetWriter(outDir: String): (DataFrame, Long) => Unit =
     (batch, batchId) => batch
       .withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
@@ -97,13 +95,14 @@ object MetricsSink {
     case object UpdateThenInsert extends UpsertDialect
   }
 
+  /** A key-only table (zero non-key columns) has nothing to refine,
+    * so its upsert is insert-if-absent: `DO NOTHING`, as the
+    * UpdateThenInsert dialect does for it. */
   def upsertSql(table: String, columns: Seq[String], keyCols: Seq[String]): String = {
-    val collist = columns.mkString(", ")
-    val placeholders = columns.map(_ => "?").mkString(", ")
     val updates = columns.filterNot(keyCols.contains)
       .map(c => s"$c = EXCLUDED.$c").mkString(", ")
-    s"INSERT INTO $table ($collist) VALUES ($placeholders) " +
-      s"ON CONFLICT (${keyCols.mkString(", ")}) DO UPDATE SET $updates"
+    insertSql(table, columns) + s" ON CONFLICT (${keyCols.mkString(", ")}) " +
+      (if (updates.isEmpty) "DO NOTHING" else s"DO UPDATE SET $updates")
   }
 
   private[streaming] def insertSql(table: String, columns: Seq[String]): String =

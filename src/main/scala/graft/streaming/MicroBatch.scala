@@ -19,9 +19,11 @@ import graft.operators.Pin
   * checkpoint, a batchId can be re-delivered with the same rows. A
   * sink that blindly appends double-counts (an additive weight then
   * biases any proportional sampler downstream), so the sink must be
-  * idempotent per `batchId`: write a batchId-keyed partition
-  * ([[MetricsSink.idempotentParquetWriter]]), upsert on
-  * (batchId, key), or guard on the id as
+  * idempotent per `batchId`. That is the one writer contract of the
+  * stream tier, `writer(path)(batch, batchId)`: every metric table
+  * goes through [[MetricsSink.idempotentParquetWriter]] (a
+  * batchId-keyed partition) or [[MetricsSink.jdbcUpsertWriter]] (an
+  * upsert on the table's key); driver-side state guards on the id as
   * [[StreamSketchInventory.Inventory]] does. ReplayContractSpec pins
   * that every twin re-delivers identically per batchId.
   *

@@ -29,7 +29,7 @@ import graft.operators.{Pin, Similarity, TextDedup}
   *    index-append's concern — see its scaladoc), so the batch side
   *    applies it to the SAME one-file slices the stream consumed and
   *    unions — proving the streaming topology (trigger pacing, the
-  *    runner, append sink) delivers exactly the batch operator's edges
+  *    runner, idempotent sink) delivers exactly the batch operator's edges
   *    at scale with zero state.
   *
   * Usage: runMain graft.streaming.ReplayScale [sfDir] [slices] [twin]
@@ -111,9 +111,10 @@ object ReplayScale {
         case "emb_pairs" =>
           Similarity.incrementalPairs(_, corpus, 0.35, nBlocks = 8)
       }
+      val write = MetricsSink.idempotentParquetWriter(s"$out/results")
       val q = MicroBatch.start(
           streamed.writeStream.trigger(Trigger.ProcessingTime(200L))) {
-        (batch, _) => perBatch(batch).write.mode("append").parquet(s"$out/results")
+        (batch, batchId) => write(perBatch(batch), batchId)
       }
       q.processAllAvailable()
       val progresses = q.recentProgress.toSeq
@@ -135,7 +136,8 @@ object ReplayScale {
             .reduce(_ unionByName _)
       }
       (batches, stateRowsMax, wall,
-        graft.CrossPlan.fingerprint(spark.read.parquet(s"$out/results")),
+        graft.CrossPlan.fingerprint(
+          spark.read.parquet(s"$out/results").drop("batch_id")),
         graft.CrossPlan.fingerprint(batchResult))
     }
     val ok = streamedFp == batchFp && stateRowsMax == 0L && streamedFp.rows > 0

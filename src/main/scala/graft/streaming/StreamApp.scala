@@ -101,18 +101,15 @@ object StreamApp {
   private def runShared(spark: SparkSession,
       ordersSrc: EventSource, itemsSrc: EventSource, paymentsSrc: EventSource,
       outRoot: String, cfg: WindowConfig, sink: SinkConfig,
-      // funnel + drop-off are append-mode here (finalized rows, one per
-      // key), so they write direct parquet whatever `writer` is
       writer: String => (DataFrame, Long) => Unit): Seq[StreamingQuery] = {
     require(cfg.watermark.isDefined, "shared topology needs a watermark")
     val (o, i, p) = ingest(spark, ordersSrc, itemsSrc, paymentsSrc)
     val fine = fineGrainOrders(dedup(o, cfg), cfg)
     Seq(
-      MetricsSink.start(fine, "orders_shared", sink, "append") { (batch, _) =>
-        deriveDropOff(batch).drop("sample_order_ids")
-          .write.mode("append").parquet(s"$outRoot/drop_off_analysis")
-        deriveFunnel(batch)
-          .write.mode("append").parquet(s"$outRoot/real_time_funnel")
+      MetricsSink.start(fine, "orders_shared", sink, "append") { (batch, batchId) =>
+        writer(s"$outRoot/drop_off_analysis")(
+          deriveDropOff(batch).drop("sample_order_ids"), batchId)
+        writer(s"$outRoot/real_time_funnel")(deriveFunnel(batch), batchId)
       },
       MetricsSink.start(Processors.gmv(dedup(i, cfg), cfg), "gmv_metrics", sink)(
         writer(s"$outRoot/gmv_metrics")),
@@ -128,7 +125,7 @@ object StreamApp {
     * measured scales and halves source reads and dedup state).
     * SharedTopologyEquivalenceSpec pins the streamed outputs of the
     * two modes against each other. `writer` builds the sink writer per
-    * table path (the compare demo passes idempotentParquetWriter). */
+    * table path and writes every table of both modes. */
   def run(spark: SparkSession,
       ordersSrc: EventSource, itemsSrc: EventSource, paymentsSrc: EventSource,
       outRoot: String,
@@ -136,7 +133,7 @@ object StreamApp {
       sink: SinkConfig = SinkConfig(),
       shared: Boolean = false,
       writer: String => (DataFrame, Long) => Unit =
-        MetricsSink.parquetWriter): Seq[StreamingQuery] =
+        MetricsSink.idempotentParquetWriter): Seq[StreamingQuery] =
     if (shared) {
       // No silent watermark injection: shared mode REQUIRES one
       // (append-mode finalization) and runShared's require says so

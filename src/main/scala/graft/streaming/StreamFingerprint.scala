@@ -49,19 +49,13 @@ object StreamFingerprint {
         "successful_orders", "failed_orders", "success_rate")))
 
   /** FINAL value per window key: the row of the highest batch_id (the
-    * idempotentParquetWriter tag; untagged append-mode tables are one
-    * row per key already and read as batch 0). */
-  private[streaming] def finals(df: DataFrame, spec: TableSpec): DataFrame = {
-    val tagged =
-      if (df.columns.contains("batch_id")) df
-      else df.withColumn("batch_id", lit(0L))
-    tagged
-      .withColumn("__rn", row_number().over(
+    * idempotentParquetWriter tag every metric table carries). */
+  private[streaming] def finals(df: DataFrame, spec: TableSpec): DataFrame =
+    df.withColumn("__rn", row_number().over(
         Window.partitionBy(spec.keys.map(col): _*)
           .orderBy(col("batch_id").desc)))
       .filter(col("__rn") === 1)
       .select((spec.keys ++ spec.values).map(col): _*)
-  }
 
   final case class Fp(sum: String, xor: Long, n: Long)
 

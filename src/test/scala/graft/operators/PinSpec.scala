@@ -116,6 +116,11 @@ class PinSpec extends graft.SparkSpec {
     assert(mainSourcesCalling("EventTimeTimeout") == Set("KeyedState.scala"))
   }
 
+  test("every stream write goes through a batchId-idempotent writer: " +
+      "no main source appends") {
+    assert(mainSourcesCalling("mode(\"append\")").isEmpty)
+  }
+
   test("document, embedding and token operators read their table's own " +
       "columns: no main source declares a column-name parameter for them") {
     assert(mainSourcesCalling("idCol: String", "textCol: String",

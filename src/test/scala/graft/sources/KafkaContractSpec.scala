@@ -24,6 +24,15 @@ class KafkaContractSpec extends SparkSpec {
       "maxOffsetsPerTrigger" -> "5000"))
   }
 
+  test("EventGenerator.toKafka wires the reference producer option set") {
+    assert(graft.streaming.EventGenerator.writerOptions("orders",
+        "broker-1:9092") == Map(
+      "kafka.bootstrap.servers" -> "broker-1:9092",
+      "topic" -> "orders",
+      "kafka.acks" -> "all",
+      "kafka.compression.type" -> "gzip"))
+  }
+
   test("defaults: latest offsets, bounded 10k per trigger") {
     val src = KafkaEventSource("events", "localhost:9092")
     assert(src.readerOptions("startingOffsets") == "latest")

@@ -113,6 +113,10 @@ class PostgresUpsertContractSpec extends SparkSpec {
     assert(MetricsSink.updateSql("gmv_metrics", cols, keys) ==
       "UPDATE gmv_metrics SET gmv = ? " +
         "WHERE window_start = ? AND window_end = ?")
+    // a key-only table has nothing to refine: insert-if-absent
+    assert(MetricsSink.upsertSql("windows", keys, keys) ==
+      "INSERT INTO windows (window_start, window_end) VALUES (?, ?) " +
+        "ON CONFLICT (window_start, window_end) DO NOTHING")
   }
 
   /** Jar-inventory proof that ON CONFLICT itself cannot run here — and

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.model.Schemas
@@ -35,6 +36,25 @@ class SharedTopologyEquivalenceSpec extends SparkSpec {
       SinkConfig(triggerInterval = "1 seconds",
         checkpointRoot = s"$root/ck2"), shared = false)
     try assert(refQs.size == 4) finally refQs.foreach(_.stop())
+  }
+
+  test("run(shared = true) writes all four tables through the writer passed in") {
+    val root = Files.createTempDirectory("graft-shared-writer").toString
+    EventGenerator.writeAll(spark, "/root/testdata/sf0.001", s"$root/ev", 1)
+    val written = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val queries = StreamApp.run(spark,
+      FileEventSource(s"$root/ev/orders"), FileEventSource(s"$root/ev/items"),
+      FileEventSource(s"$root/ev/payments"), s"$root/metrics",
+      WindowConfig(watermark = Some("10 minutes")),
+      SinkConfig(triggerInterval = "1 seconds", checkpointRoot = s"$root/ckpt"),
+      shared = true,
+      writer = path => (_, _) => { written.add(path); () })
+    try queries.foreach(_.processAllAvailable())
+    finally queries.foreach(_.stop())
+    assert(written.asScala == StreamFingerprint.tables
+      .map(t => s"$root/metrics/${t.name}").toSet)
+    // nothing reached the output root except through the writer
+    assert(!Files.exists(java.nio.file.Paths.get(s"$root/metrics")))
   }
 
   test("run(shared = true) without a watermark fails before starting a query") {

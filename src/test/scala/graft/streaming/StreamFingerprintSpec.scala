@@ -27,12 +27,6 @@ class StreamFingerprintSpec extends SparkSpec {
     assert(got === Set((1L, 12L, 2.0), (2L, 20L, 9.0)))
   }
 
-  test("finals without a batch_id column passes rows through unchanged") {
-    val df = Seq((1L, 10L, 1.0), (2L, 20L, 2.0))
-      .toDF("window_start", "v", "d")
-    assert(StreamFingerprint.finals(df, spec).count() === 2)
-  }
-
   test("fingerprint is row-order independent and pins count") {
     val a = Seq((1L, 10L, 1.25), (2L, 20L, 2.5), (3L, 30L, 3.75))
       .toDF("window_start", "v", "d")
