@@ -49,14 +49,12 @@ object StreamDemo {
     queries.foreach(_.processAllAvailable())
     queries.foreach(_.stop())
     val elapsed = (System.nanoTime() - t0) / 1e9
-    val sinkRows =
-      Seq("real_time_funnel", "gmv_metrics", "drop_off_analysis",
-        "payment_metrics").map { t =>
-        // a sink that never wrote has no directory; any other read
-        // error is a real failure and propagates
-        val dir = s"$outRoot/$t"
-        t -> (if (new java.io.File(dir).exists()) spark.read.parquet(dir).count() else 0L)
-      }
+    val sinkRows = StreamFingerprint.tables.map(_.name).map { t =>
+      // a sink that never wrote has no directory; any other read
+      // error is a real failure and propagates
+      val dir = s"$outRoot/$t"
+      t -> (if (new java.io.File(dir).exists()) spark.read.parquet(dir).count() else 0L)
+    }
     // queries.size travels with the result so the demo JSON line's
     // "queries" field always reports the topology's REAL query count
     // (a hardcoded 4/3 literal would silently go stale if StreamApp's

@@ -36,9 +36,14 @@ object EventGenerator {
       lit(null).cast("string").as("estimated_delivery_date"),
       iso(col("o_orderdate")).as("timestamp"))).as("value"))
 
-  def itemEvents(spark: SparkSession, dir: String): DataFrame =
-    Tables.load(spark, dir, "lineitem").select(to_json(struct(
-      concat(lit("item_"), col("l_orderkey"), lit("_"), col("l_linenumber")).as("event_id"),
+  /** An item's `event_id` ends in a hash of its whole lineitem row:
+    * (l_orderkey, l_linenumber) alone repeats across distinct rows of
+    * the test tables, and the ingest dedup would drop real items. */
+  def itemEvents(spark: SparkSession, dir: String): DataFrame = {
+    val lineitem = Tables.load(spark, dir, "lineitem")
+    lineitem.select(to_json(struct(
+      concat(lit("item_"), col("l_orderkey"), lit("_"), col("l_linenumber"),
+        lit("_"), xxhash64(lineitem.columns.map(col).toIndexedSeq: _*)).as("event_id"),
       lit("item_added").as("event_type"),
       iso(col("l_shipdate")).as("event_time"),
       col("l_orderkey").cast("string").as("order_id"),
@@ -48,6 +53,7 @@ object EventGenerator {
       col("l_extendedprice").as("price"),
       round(col("l_extendedprice") * col("l_tax"), 2).as("freight_value"),
       iso(col("l_shipdate")).as("timestamp"))).as("value"))
+  }
 
   def paymentEvents(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "orders").select(to_json(struct(

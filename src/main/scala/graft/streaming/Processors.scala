@@ -31,14 +31,15 @@ final case class WindowConfig(
   def windowCol = window(col("event_timestamp"), windowDuration, slideDuration)
 }
 
-/** Precondition of every transform here and of
-  * `StreamApp.fineGrainOrders`: a streaming input already carries its
-  * watermark. `StreamApp`'s ingest dedup is the one place that applies
-  * `WindowConfig.watermark`; these only window.
+/** Precondition of every transform here: a streaming input already
+  * carries its watermark. `StreamApp`'s ingest dedup is the one place
+  * that applies `WindowConfig.watermark`; these only window.
   *
   * The order-status policy (funnel stages, drop-off statuses, alert
-  * threshold, rates) is defined once here; the shared topology's
-  * derived funnel and drop-off use the same definitions. */
+  * threshold, rates) is defined once here, and so is the one
+  * (window × order_status) aggregate, [[statusCounts]]: the reference
+  * drop-off selects its rows from it, and the shared topology streams
+  * it and derives both its drop-off and its funnel from the rows. */
 object Processors {
 
   /** Order statuses that count as a drop-off (dropoff_processor.py). */
@@ -57,7 +58,7 @@ object Processors {
 
   /** The funnel's four stage counts, each the sum of `weight` over the
     * rows whose `order_status` is in that stage: 1 per order event, or
-    * a fine-grain row's `status_count`. */
+    * a [[statusCounts]] row's `status_count`. */
   private[streaming] def stageCounts(weight: Column): Seq[Column] = {
     val status = col("order_status")
     def cnt(stage: Column) = sum(when(stage, weight).otherwise(0))
@@ -69,10 +70,11 @@ object Processors {
       cnt(status.isin("created", "approved", "unavailable")).as("pending_orders"))
   }
 
-  /** The funnel's output row over `total_orders` and [[stageCounts]]. */
-  private[streaming] def funnelRow(start: Column, end: Column): Seq[Column] = Seq(
-    start.as("window_start"),
-    end.as("window_end"),
+  /** The funnel's output row over a window's `total_orders` and
+    * [[stageCounts]]. */
+  private[streaming] def funnelRow: Seq[Column] = Seq(
+    col("window.start").as("window_start"),
+    col("window.end").as("window_end"),
     col("total_orders"),
     col("orders_with_items"),
     col("orders_with_payment"),
@@ -82,17 +84,14 @@ object Processors {
     col("pending_orders").as("dropped_after_items"),
     current_timestamp().as("processed_at"))
 
-  /** The drop-off output row over a (window, order_status) group's
-    * `status_count`, `is_dropoff_status` and `sample_order_ids`;
-    * `uniqueCustomers` is named `unique_customers_affected`. */
-  private[streaming] def dropOffRow(start: Column, end: Column,
-      uniqueCustomers: Column): Seq[Column] = Seq(
-    start.as("window_start"),
-    end.as("window_end"),
+  /** The drop-off output row over a [[statusCounts]] row. */
+  private[streaming] def dropOffRow: Seq[Column] = Seq(
+    col("window.start").as("window_start"),
+    col("window.end").as("window_end"),
     col("order_status"),
     when(col("is_dropoff_status"), col("status_count")).otherwise(lit(0L))
       .as("dropped_orders"),
-    uniqueCustomers,
+    col("unique_customers_affected"),
     col("status_count").cast("double").as("drop_rate"),
     (col("is_dropoff_status") && col("status_count") > AlertThreshold)
       .as("alert_triggered"),
@@ -106,7 +105,7 @@ object Processors {
     orders
       .groupBy(cfg.windowCol)
       .agg(count(lit(1)).as("total_orders"), stageCounts(lit(1)): _*)
-      .select(funnelRow(col("window.start"), col("window.end")): _*)
+      .select(funnelRow: _*)
 
   /** GMV (gmv_processor.py:20-57): total_value = price + freight_value,
     * then window agg sum/count/approx-distinct/avg/max/min. */
@@ -131,16 +130,23 @@ object Processors {
         round(col("max_item_price"), 2).as("max_item_price"),
         round(col("min_item_price"), 2).as("min_item_price"))
 
-  /** Drop-off detection (dropoff_processor.py:22-77): window ×
-    * order_status counts, alert when a drop-off status exceeds the
-    * threshold, bounded sample of order ids.
+  /** The (window × order_status) aggregate of drop-off detection
+    * (dropoff_processor.py:22-77): per `window` struct and
+    * `order_status`, the `status_count`, `unique_customers_affected`
+    * (approx-distinct customers), `is_dropoff_status` and a bounded
+    * sample of order ids. Both topologies compute it here. Its HLL++
+    * buffer merges by per-register max, so a streamed final equals the
+    * batch value on the same events whatever the micro-batch
+    * boundaries. The rows keep the `window` struct: a rename of its
+    * fields here would be folded into the aggregate by the optimizer
+    * and move the reference drop-off's final projection.
     *
     * Deviation (documented, SURVEY §2.8): the sample list is sorted
     * before slicing so output is deterministic, and at scale the
     * bounded-sample aggregator (operators.Sampling) should replace
     * collect_list entirely — collect_list materializes every id per
     * group before slice. */
-  def dropOff(orders: DataFrame, cfg: WindowConfig = WindowConfig()): DataFrame =
+  def statusCounts(orders: DataFrame, cfg: WindowConfig = WindowConfig()): DataFrame =
     orders
       .withColumn("is_dropoff", isDropOff)
       .groupBy(cfg.windowCol, col("order_status"))
@@ -149,8 +155,11 @@ object Processors {
         approx_count_distinct(col("customer_id")).as("unique_customers_affected"),
         first(col("is_dropoff")).as("is_dropoff_status"),
         slice(sort_array(collect_list(col("order_id"))), 1, 3).as("sample_order_ids"))
-      .select(dropOffRow(col("window.start"), col("window.end"),
-        col("unique_customers_affected")): _*)
+
+  /** Drop-off detection: [[statusCounts]] with the alert when a
+    * drop-off status exceeds the threshold. */
+  def dropOff(orders: DataFrame, cfg: WindowConfig = WindowConfig()): DataFrame =
+    statusCounts(orders, cfg).select(dropOffRow: _*)
 
   /** Payment analytics (payment_processor.py:20-70): success =
     * payment_value present and > 0; per window × payment_type. */

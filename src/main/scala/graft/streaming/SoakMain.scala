@@ -10,8 +10,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * at sf0.1-like event volume with the full stateful tier running
   * CONCURRENTLY on one RocksDB-backed session:
   *
-  *  1. watermarked dedup + fine-grain window aggregate (the shared
-  *     topology's orders path: dropDuplicatesWithinWatermark state is
+  *  1. watermarked dedup + (window × order_status) aggregate (the
+  *     shared topology's orders path: dropDuplicatesWithinWatermark state is
   *     the big one — rate × watermark window rows);
   *  2. streaming session windows (merging state, closed sessions
   *     evicted past the watermark);
@@ -43,7 +43,7 @@ object SoakMain {
       spark.readStream.format("rate")
         .option("rowsPerSecond", rowsPerSec.toString).load()
 
-    // ---- 1. watermarked dedup + fine-grain windows (orders path).
+    // ---- 1. watermarked dedup + status-count windows (orders path).
     // 2000 ev/s (sf0.1's events table per ~50 s, continuously); 10% of
     // event_ids are repeats of the previous id (real duplicate work);
     // dedup state plateaus at rate × 30 s watermark ≈ 60 k rows.
@@ -60,7 +60,7 @@ object SoakMain {
           (col("value") % 8 + 1).cast("int")).as("order_status"))
     val cfg = WindowConfig(windowDuration = "1 minute",
       slideDuration = "30 seconds", watermark = Some("30 seconds"))
-    val fineQ = StreamApp.fineGrainOrders(StreamApp.dedup(orders, cfg), cfg)
+    val fineQ = Processors.statusCounts(StreamApp.dedup(orders, cfg), cfg)
       .writeStream
       .outputMode("append").queryName("soak_fine")
       .option("checkpointLocation", s"$ckpt/fine").format("noop").start()

@@ -57,58 +57,31 @@ object StreamApp {
     EventParser.parse(itemsSrc.load(spark), Schemas.item),
     EventParser.parse(paymentsSrc.load(spark), Schemas.payment))
 
-  /** Fine-grain orders aggregate for the shared topology: ONE stateful
-    * pass at (window × order_status) grain carrying a mergeable HLL
-    * sketch of customers (Spark 4 datasketches) instead of a scalar
-    * approx-distinct — so both the drop-off table (same grain) and the
-    * funnel (coarser grain) derive from it without re-reading or
-    * re-aggregating the stream. At 100 TB this halves source reads and
-    * dedup state for the orders topic (SURVEY §7.4 risk 5). A streaming
-    * `orders` must already carry its watermark (see [[Processors]]). */
-  def fineGrainOrders(orders: DataFrame, cfg: WindowConfig): DataFrame =
-    orders
-      .withColumn("is_dropoff", Processors.isDropOff)
-      .groupBy(cfg.windowCol, col("order_status"))
-      .agg(
-        count(lit(1)).as("status_count"),
-        hll_sketch_agg(col("customer_id")).as("customer_sketch"),
-        first(col("is_dropoff")).as("is_dropoff_status"),
-        slice(sort_array(collect_list(col("order_id"))), 1, 3)
-          .as("sample_order_ids"))
-      .select(
-        col("window.start").as("window_start"),
-        col("window.end").as("window_end"),
-        col("order_status"), col("status_count"), col("customer_sketch"),
-        col("is_dropoff_status"), col("sample_order_ids"))
-
-  /** Funnel rows derived from finalized fine-grain rows (batch re-agg
-    * inside the sink's micro-batch). */
-  def deriveFunnel(fine: DataFrame): DataFrame =
-    fine.groupBy(col("window_start"), col("window_end"))
+  /** Funnel rows derived from finalized [[Processors.statusCounts]]
+    * rows (batch re-agg inside the sink's micro-batch). */
+  def deriveFunnel(counts: DataFrame): DataFrame =
+    counts.groupBy(col("window"))
       .agg(sum(col("status_count")).as("total_orders"),
         Processors.stageCounts(col("status_count")): _*)
-      .select(Processors.funnelRow(col("window_start"), col("window_end")): _*)
-
-  /** Drop-off rows derived 1:1 from fine-grain rows. */
-  def deriveDropOff(fine: DataFrame): DataFrame =
-    fine.select(Processors.dropOffRow(col("window_start"), col("window_end"),
-      hll_sketch_estimate(col("customer_sketch")).as("unique_customers_affected")): _*)
+      .select(Processors.funnelRow: _*)
 
   /** Shared topology (100 TB mode): 3 queries instead of 4 — the orders
-    * topic is read, parsed, and deduped ONCE; funnel + drop-off both
-    * derive from its fine-grain aggregate inside one sink micro-batch.
-    * Requires a watermark (append mode: rows arrive finalized). */
+    * topic is read, parsed, and deduped ONCE, and one query streams its
+    * [[Processors.statusCounts]] aggregate; each finalized micro-batch
+    * of it writes the drop-off table (the reference drop-off's own
+    * select) and the funnel ([[deriveFunnel]]). Requires a watermark
+    * (append mode: rows arrive finalized). */
   private def runShared(spark: SparkSession,
       ordersSrc: EventSource, itemsSrc: EventSource, paymentsSrc: EventSource,
       outRoot: String, cfg: WindowConfig, sink: SinkConfig,
       writer: String => (DataFrame, Long) => Unit): Seq[StreamingQuery] = {
     require(cfg.watermark.isDefined, "shared topology needs a watermark")
     val (o, i, p) = ingest(spark, ordersSrc, itemsSrc, paymentsSrc)
-    val fine = fineGrainOrders(dedup(o, cfg), cfg)
+    val counts = Processors.statusCounts(dedup(o, cfg), cfg)
     Seq(
-      MetricsSink.start(fine, "orders_shared", sink, "append") { (batch, batchId) =>
+      MetricsSink.start(counts, "orders_shared", sink, "append") { (batch, batchId) =>
         writer(s"$outRoot/drop_off_analysis")(
-          deriveDropOff(batch).drop("sample_order_ids"), batchId)
+          batch.select(Processors.dropOffRow: _*), batchId)
         writer(s"$outRoot/real_time_funnel")(deriveFunnel(batch), batchId)
       },
       MetricsSink.start(Processors.gmv(dedup(i, cfg), cfg), "gmv_metrics", sink)(
@@ -120,9 +93,10 @@ object StreamApp {
   /** First-class mode switch: `shared = false` (default) runs the
     * reference's 4 independent queries, the fidelity default;
     * `shared = true` runs the 3-query shared topology (one orders
-    * read/dedup, funnel + drop-off derived from the fine-grain
-    * aggregate — it beats the 4-query reference topology at both
-    * measured scales and halves source reads and dedup state).
+    * read/dedup, funnel + drop-off derived from the one
+    * (window × order_status) aggregate — it beats the 4-query
+    * reference topology at both measured scales and halves source
+    * reads and dedup state).
     * SharedTopologyEquivalenceSpec pins the streamed outputs of the
     * two modes against each other. `writer` builds the sink writer per
     * table path and writes every table of both modes. */

@@ -16,30 +16,28 @@ import graft.sources.FileEventSource
   * adds the re-delivered rows a second time.
   *
   * Each topic's generated events are split at one event-time cutoff
-  * into an early and a late file, and both runs see the same arrival:
-  * the early files, drained, then the late ones. Only the restarted
-  * run stops in between. The split is ordered by event time so that
-  * the late half is not dropped as late, and the windows that span the
-  * cutoff are finished from the restored state. The arrival is the
-  * same because batch boundaries do change results on this input:
-  * generated item events share an `event_id` when their lineitem rows
-  * share (l_orderkey, l_linenumber), and the watermark-bounded ingest
-  * dedup drops such a pair inside one micro-batch but keeps both when
-  * they arrive in two batches further apart than the watermark. */
+  * into an early and a late file. Both runs see the early files,
+  * drained, then the late ones; only the restarted run stops in
+  * between. The split is ordered by event time so that the late half
+  * is not dropped as late, and the windows that span the cutoff are
+  * finished from the restored state. A third run gets all events in
+  * one feed, and its finals equal the two-feed run's: batch boundaries
+  * do not change a table's final values. */
 class RestartEquivalenceSpec extends SparkSpec {
 
   private val topics = Seq("orders", "items", "payments")
 
-  /** `root/{early,late}/<topic>`: each topic's events before and from
-    * the cutoff, one text file each. */
+  /** `root/{early,late,all}/<topic>`: each topic's events before the
+    * cutoff, from it, and all of them, one text file each. */
   private lazy val events: String = {
     val root = Files.createTempDirectory("graft-restart-ev").toString
-    EventGenerator.writeAll(spark, "/root/testdata/sf0.001", s"$root/all", 4)
+    EventGenerator.writeAll(spark, "/root/testdata/sf0.001", s"$root/gen", 4)
     topics.foreach { t =>
-      val ev = spark.read.text(s"$root/all/$t")
+      val ev = spark.read.text(s"$root/gen/$t")
       val early = get_json_object(col("value"), "$.timestamp") < "1995-07-01"
       ev.filter(early).coalesce(1).write.text(s"$root/early/$t")
       ev.filter(!early).coalesce(1).write.text(s"$root/late/$t")
+      ev.coalesce(1).write.text(s"$root/all/$t")
     }
     root
   }
@@ -83,28 +81,51 @@ class RestartEquivalenceSpec extends SparkSpec {
         .foreach(f => Files.deleteIfExists(Paths.get(s"$q/commits/$f")))
     }
 
+  private def rows(root: String, spec: StreamFingerprint.TableSpec) =
+    spark.read.parquet(s"$root/out/${spec.name}")
+
+  /** Every table of the runs under `a` and `b` has the same keys, at
+    * least one, and the same final value per key. */
+  private def assertSameFinals(a: String, b: String): Unit =
+    StreamFingerprint.tables.foreach { spec =>
+      def finals(root: String) = StreamFingerprint.finals(rows(root, spec), spec)
+      val (fa, fb) = (finals(a), finals(b))
+      val keys = fa.count()
+      assert(keys > 0, spec.name)
+      assert(fb.count() == keys, spec.name)
+      assert(StreamFingerprint.fingerprint(fa, spec) ==
+        StreamFingerprint.fingerprint(fb, spec), spec.name)
+    }
+
+  /** The uninterrupted two-feed run of each topology, made once. */
+  private val twoFeed = scala.collection.mutable.Map.empty[Boolean, String]
+  private def twoFeedRun(shared: Boolean): String =
+    twoFeed.getOrElseUpdate(shared, {
+      val root = Files.createTempDirectory("graft-restart-once").toString
+      run(root, shared)("early", "late")
+      root
+    })
+
   Seq("reference" -> false, "shared" -> true).foreach { case (topology, shared) =>
     test(s"$topology topology: a run restarted from its checkpoint ends " +
         "with the uninterrupted run's metric tables") {
-      val once = Files.createTempDirectory("graft-restart-once").toString
-      run(once, shared)("early", "late")
+      val once = twoFeedRun(shared)
       val twice = Files.createTempDirectory("graft-restart-twice").toString
       run(twice, shared)("early")
       uncommitLastBatch(s"$twice/ckpt")
       run(twice, shared)("late")
-
+      // a re-delivered batch rewrites its own rows, never adds to them
       StreamFingerprint.tables.foreach { spec =>
-        def rows(root: String) = spark.read.parquet(s"$root/out/${spec.name}")
-        // a re-delivered batch rewrites its own rows, never adds to them
-        assert(rows(twice).count() == rows(once).count(), spec.name)
-        def finals(root: String) = StreamFingerprint.finals(rows(root), spec)
-        val (a, b) = (finals(once), finals(twice))
-        val keys = a.count()
-        assert(keys > 0, spec.name)
-        assert(b.count() == keys, spec.name)
-        assert(StreamFingerprint.fingerprint(a, spec) ==
-          StreamFingerprint.fingerprint(b, spec), spec.name)
+        assert(rows(twice, spec).count() == rows(once, spec).count(), spec.name)
       }
+      assertSameFinals(once, twice)
+    }
+
+    test(s"$topology topology: one feed of all events ends with the " +
+        "two-feed run's metric tables") {
+      val one = Files.createTempDirectory("graft-restart-one").toString
+      run(one, shared)("all")
+      assertSameFinals(twoFeedRun(shared), one)
     }
   }
 }

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.sql.MetricViews
 import graft.model.Schemas
 import graft.sources.{EventParser, FileEventSource}
 
@@ -12,10 +13,9 @@ import graft.sources.{EventParser, FileEventSource}
   * The 4-query topology's per-sink semantics ARE the batch processors
   * (each query = dedup + processor + sink), so the streamed shared
   * outputs are pinned against the batch processors over the same
-  * parsed input, on the windows the append-mode watermark finalized:
-  * exact columns exactly, HLL uniques within the 10% envelope. gmv and
-  * payment run the identical pipeline in both modes and are checked
-  * the same way.
+  * parsed input, on the windows the append-mode watermark finalized,
+  * exactly. gmv and payment run the identical pipeline in both modes
+  * and are checked the same way.
   */
 class SharedTopologyEquivalenceSpec extends SparkSpec {
   import spark.implicits._
@@ -55,6 +55,33 @@ class SharedTopologyEquivalenceSpec extends SparkSpec {
       .map(t => s"$root/metrics/${t.name}").toSet)
     // nothing reached the output root except through the writer
     assert(!Files.exists(java.nio.file.Paths.get(s"$root/metrics")))
+  }
+
+  test("both topologies write the four tables with the same columns, " +
+      "and the metric views read the shared outputs") {
+    val root = Files.createTempDirectory("graft-mode-schema").toString
+    EventGenerator.writeAll(spark, "/root/testdata/sf0.001", s"$root/ev", 1)
+    def tables(shared: Boolean) = {
+      val out = s"$root/m_$shared"
+      val queries = StreamApp.run(spark,
+        FileEventSource(s"$root/ev/orders"), FileEventSource(s"$root/ev/items"),
+        FileEventSource(s"$root/ev/payments"), out,
+        WindowConfig(watermark = Some("10 minutes")),
+        SinkConfig(triggerInterval = "1 seconds", checkpointRoot = s"$root/ck_$shared"),
+        shared = shared)
+      try queries.foreach(_.processAllAvailable())
+      finally queries.foreach(_.stop())
+      StreamFingerprint.tables.map(t => spark.read.parquet(s"$out/${t.name}"))
+    }
+    val (ref, shared) = (tables(shared = false), tables(shared = true))
+    def columns(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    StreamFingerprint.tables.zip(ref.zip(shared)).foreach { case (t, (r, s)) =>
+      assert(columns(s) == columns(r), t.name)
+    }
+    val Seq(funnel, dropOff, gmv, payment) = shared
+    MetricViews.register(spark, funnel, gmv, dropOff, payment)
+    assert(MetricViews.activeAlerts(spark).columns.contains("sample_order_ids"))
+    MetricViews.activeAlerts(spark).collect()
   }
 
   test("run(shared = true) without a watermark fails before starting a query") {
@@ -106,24 +133,21 @@ class SharedTopologyEquivalenceSpec extends SparkSpec {
       .collect().foreach { got =>
         assert(expectedFunnel(got._1) == got, s"funnel window ${got._1}")
       }
-    // (the one HLL output, the drop-off's unique_customers_affected,
-    // is pinned to its 10% envelope by SharedTopologySpec)
 
-    // drop-off: exact columns equal on every emitted (window, status)
+    // drop-off: equal on every emitted (window, status)
     val dropOff = spark.read.parquet(s"$root/metrics/drop_off_analysis")
     assert(dropOff.count() > 0)
-    val expectedDrop = Processors.dropOff(orders, cfg)
-      .select($"window_start", $"order_status", $"dropped_orders",
-        $"alert_triggered")
-      .as[(java.sql.Timestamp, String, Long, Boolean)]
-      .collect().map(r => (r._1, r._2) -> r).toMap
-    dropOff.select($"window_start", $"order_status", $"dropped_orders",
-        $"alert_triggered")
-      .as[(java.sql.Timestamp, String, Long, Boolean)]
-      .collect().foreach { got =>
-        assert(expectedDrop((got._1, got._2)) == got,
-          s"drop-off ${(got._1, got._2)}")
-      }
+    def dropCols(df: org.apache.spark.sql.DataFrame) =
+      df.select($"window_start", $"order_status", $"dropped_orders",
+          $"unique_customers_affected", $"sample_order_ids", $"alert_triggered")
+        .as[(java.sql.Timestamp, String, Long, Long, Seq[String], Boolean)]
+        .collect()
+    val expectedDrop = dropCols(Processors.dropOff(orders, cfg))
+      .map(r => (r._1, r._2) -> r).toMap
+    dropCols(dropOff).foreach { got =>
+      assert(expectedDrop((got._1, got._2)) == got,
+        s"drop-off ${(got._1, got._2)}")
+    }
 
     // gmv + payment: identical pipelines in both modes; latest
     // refinement per window must equal the batch processor

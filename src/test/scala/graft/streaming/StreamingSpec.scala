@@ -117,6 +117,13 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("generated item events carry one event_id per lineitem row") {
+    // sf0.001: 6000 lineitem rows, 4599 distinct (l_orderkey, l_linenumber)
+    val ids = EventGenerator.itemEvents(spark, "/root/testdata/sf0.001")
+      .select(get_json_object($"value", "$.event_id")).distinct().count()
+    assert(ids == 6000)
+  }
+
   test("corrupt JSON rows are dropped by parse, visible on side channel") {
     val root = Files.createTempDirectory("graft-corrupt").toString
     Files.write(java.nio.file.Paths.get(s"$root/data.txt"),
